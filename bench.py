@@ -223,7 +223,7 @@ def main() -> None:
     def remaining() -> float:
         return budget_s - (time.perf_counter() - t_start)
 
-    from direct_spark_sql_spark.session import Engine
+    from direct_spark_sql_spark.session import Engine, _job_tag, _stage_rollup
 
     engine = (
         Engine.builder()
@@ -254,85 +254,30 @@ def main() -> None:
 
     last_plan_metrics: dict[str, dict[str, int]] = {}
 
-    # JVM-side plan-metric rollup (round 13): compile-if-needed the repo's
-    # helper jar, ADD JAR it, and instantiate org.dss.udf.PlanMetricsRollup
-    # through the session's context classloader (ADD JAR classes are not
-    # visible to the py4j gateway's root classloader).  Any failure —
-    # no javac on the host, classloader quirks — degrades to the Python
-    # walk with identical semantics, never to a missing rollup.
-    _rollup_box: list = []
-
-    def _jvm_rollup():
-        if _rollup_box:
-            return _rollup_box[0]
-        try:
-            from direct_spark_sql_spark.functions.jvm import ensure_udf_jar
-
-            jar = ensure_udf_jar()
-            spark.sql(f"ADD JAR '{jar}'")
-            cl = spark._jvm.java.lang.Thread.currentThread().getContextClassLoader()
-            # Class.newInstance: py4j can't express the zero-arg
-            # getDeclaredConstructor() varargs call
-            inst = cl.loadClass("org.dss.udf.PlanMetricsRollup").newInstance()
-        except Exception:
-            inst = None
-        _rollup_box.append(inst)
-        return inst
-
     def measure(q, runs: int, data_dir: str = None) -> float:
         # A FRESH DataFrame per run: re-collecting the same object lets
         # Spark skip completed shuffle stages and under-reports.
         data_dir = data_dir or sf_dir
         best = float("inf")
-        df = None
+        tag = None
         for _ in range(runs):
             t0 = time.perf_counter()
             df = q.spark_fn(spark, data_dir)
-            materialize(df)
+            with _job_tag(spark.sparkContext) as tag:
+                materialize(df)
             best = min(best, time.perf_counter() - t0)
-        # Executed-plan rollups off the last measured run — shuffle and
-        # spill regressions the wall clock can't see (a plan that starts
+        # Shuffle and spill of the last measured run, summed over its
+        # tagged stages (the same rollup as Engine.last_metrics()) —
+        # regressions the wall clock can't see (a plan that starts
         # shuffling 10x the bytes but hides it in parallelism on 32 local
         # cores would devastate a 1000-executor cluster).
-        if df is not None:
+        if tag is not None:
             try:
-                jplan = df._jdf.queryExecution().executedPlan()
-                rollup = _jvm_rollup()
-                if rollup is not None:
-                    # Round 13: identical walk, done JVM-side in one py4j
-                    # call per metric.  The Python-side node walk cost
-                    # 1-11 s of py4j round trips per query (measured) —
-                    # pure measurement overhead that was starving the
-                    # probe tiers and the noise re-time pass out of the
-                    # wall budget on a slow host.
-                    last_plan_metrics[q.name] = {
-                        "shuffle_bytes_written": int(
-                            rollup.sumMetric(jplan, "shuffleBytesWritten")
-                        ),
-                        "spill_bytes": int(rollup.sumMetric(jplan, "spillSize")),
-                    }
-                else:
-                    from direct_spark_sql_spark.session import _walk_plan_metrics
-
-                    nodes: list = []
-                    _walk_plan_metrics(jplan, nodes)
-
-                    def total(metric):
-                        # v > 0 skips SQLMetric's -1 "unset" sentinel on
-                        # unexecuted nodes — same semantics as the session's
-                        # _compute_metrics rollup, so pins recorded here agree
-                        # with last_metrics() for the same plan
-                        return sum(
-                            v
-                            for n in nodes
-                            if (v := n["metrics"].get(metric)) is not None
-                            and v > 0
-                        )
-
-                    last_plan_metrics[q.name] = {
-                        "shuffle_bytes_written": total("shuffleBytesWritten"),
-                        "spill_bytes": total("spillSize"),
-                    }
+                rollup = _stage_rollup(spark.sparkContext, tag)
+                last_plan_metrics[q.name] = {
+                    "shuffle_bytes_written": rollup["shuffle_bytes_written"],
+                    "spill_bytes": rollup["spill_bytes"],
+                }
             except Exception:
                 pass
         return best
@@ -641,7 +586,7 @@ def main() -> None:
     # (VERDICT r13 #2: dual-report both totals at top level).
     out["uniform_total_sec"] = total
     out["cpus"] = int(cpus) if str(cpus).isdigit() else cpus
-    # base-tier executed-plan rollups (snapshot before the probe tiers
+    # base-tier stage rollups (snapshot before the probe tiers
     # re-run measure() and overwrite per-name entries)
     out["plan_metrics"] = dict(last_plan_metrics)
 

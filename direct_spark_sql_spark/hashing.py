@@ -45,11 +45,6 @@ def h64_sql(expr: str) -> str:
     return f"CAST('0x' || SUBSTR(MD5(CAST({expr} AS VARCHAR)), 1, {_HEX_CHARS}) AS BIGINT)"
 
 
-def h64_spark_sql(expr: str) -> str:
-    """Spark SQL text computing the identical hash of ``expr``."""
-    return f"CAST(CONV(SUBSTRING(MD5(CAST({expr} AS STRING)), 1, {_HEX_CHARS}), 16, 10) AS BIGINT)"
-
-
 def _digest_int(seed: str) -> int:
     """Deterministic python-side integer from a seed string (driver-side only;
     used to derive hash-family constants, never applied per-row)."""

@@ -351,7 +351,7 @@ def dsir_log_weights(
             .agg(F.count(F.lit(1)).cast("long").alias("__ct"))
         )
     lam = _dsir_lambda_from_target_bucket_counts(cr, ct, n_buckets)
-    return _dsir_score_buckets(corp_f, lam, id_col)
+    return _dsir_score_buckets(corp_f, lam, id_col, n_buckets)
 
 
 def _dsir_feat_buckets(
@@ -379,7 +379,7 @@ def _dsir_feat_buckets(
 
 
 def _dsir_score_buckets(
-    feat: DataFrame, lam: DataFrame, id_col: str
+    feat: DataFrame, lam: DataFrame, id_col: str, n_buckets: int
 ) -> DataFrame:
     """Apply a dense λ table to per-document bucket arrays IN-ROW: the λ
     model (exactly n_buckets rows by construction — the dense spine) is
@@ -387,13 +387,29 @@ def _dsir_score_buckets(
     Σ_occurrences λ[bucket] inside the scan — no scoring join, no
     per-doc aggregate, no shuffle at any corpus size.  Identical
     integers to the old (doc, bucket)-grain join + SUM(c·λ): integer
-    addition is order-independent and Σ_f c(f)·λ(f) = Σ_occ λ(bucket)."""
+    addition is order-independent and Σ_f c(f)·λ(f) = Σ_occ λ(bucket).
+
+    The array is indexed by position, so a table missing a bucket row
+    would shift every later λ onto the wrong bucket: the collapse fails
+    the query (in-plan, no extra job) unless it holds n_buckets rows."""
     lam_arr = F.broadcast(
         lam.agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("__b", "__lam"))),
                 lambda s: s["__lam"],
             ).alias("__lam_arr")
+        ).select(
+            F.when(F.size("__lam_arr") == n_buckets, F.col("__lam_arr"))
+            .otherwise(
+                F.raise_error(
+                    F.concat(
+                        F.lit("DSIR λ table has "),
+                        F.size("__lam_arr").cast("string"),
+                        F.lit(f" bucket rows, expected n_buckets={n_buckets}"),
+                    )
+                )
+            )
+            .alias("__lam_arr")
         )
     )
     units = F.aggregate(
@@ -517,24 +533,6 @@ def _dsir_lambda_from_counts(
     return _dsir_lambda_from_target_bucket_counts(cr, ct, n_buckets)
 
 
-def _dsir_score_counts(
-    counts: DataFrame, lam: DataFrame, id_col: str
-) -> DataFrame:
-    """Apply a λ table to per-(doc, bucket) counts: broadcast join + one
-    hash agg on the id — the entire online scoring path."""
-    return (
-        counts.join(F.broadcast(lam), "__b")
-        .groupBy(id_col)
-        .agg(
-            F.sum("__c").cast("long").alias("n_feats"),
-            F.sum(F.col("__c") * F.col("__lam")).cast("long").alias("logw_units"),
-        )
-        .withColumn(
-            "log_weight", F.col("logw_units").cast("double") / F.lit(DSIR_LOG_UNITS)
-        )
-    )
-
-
 def dsir_lambda_table(
     corpus: DataFrame,
     target: DataFrame,
@@ -570,7 +568,7 @@ def dsir_score(
     match the table's fit (the table is dense over the bucket space by
     construction, which is what lets it collapse to an index array)."""
     return _dsir_score_buckets(
-        _dsir_feat_buckets(docs, text_col, id_col, n_buckets), lam, id_col
+        _dsir_feat_buckets(docs, text_col, id_col, n_buckets), lam, id_col, n_buckets
     )
 
 

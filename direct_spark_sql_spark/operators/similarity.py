@@ -382,23 +382,6 @@ def ivf_build(
     _IVF_INDEX_DF.drop_where(lambda k: k[1] == index_path)
 
 
-def ivf_probe_cells(
-    query: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> list[int]:
-    """The ``nprobe`` cell ids nearest the query vector.
-
-    Probing is a K-row problem (K centroids × 1 query) — K is bounded by
-    design (√N cells even at 100 TB is ~10⁵ rows, kilobytes per row), so
-    collecting nprobe ints to the coordinator is the intended pattern
-    (same shape as a FAISS coordinator choosing probe lists), not a
-    driver-side data loop."""
-    return _ivf_probe(query, centroids, nprobe, id_col, emb_col)[0]
-
-
 def _ivf_probe(
     query: DataFrame,
     centroids: DataFrame,
@@ -1702,7 +1685,10 @@ def ivf_pq_topk(
             F.col(emb_col),
             adc_sum.cast(DEC_OUT).cast("double").alias("adc_dist"),
         )
-        .orderBy("adc_dist", id_col)
+        # a ragged vector's ADC estimate is NULL (zip_with pads the short
+        # side); nulls last keeps such rows out of the shortlist while
+        # real candidates remain
+        .orderBy(F.asc_nulls_last("adc_dist"), id_col)
         .limit(shortlist)
     )
     q_lit = _dec_vec(F.lit([float(x) for x in qvec]).cast("array<double>"))

@@ -82,11 +82,6 @@ def _hit_count(toks: Column, lexicon: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("long")
 
 
-def language_scores(col: Column | str = "text") -> list[tuple[str, Column]]:
-    toks = tokens(col)
-    return [(lang, _hit_count(toks, lex)) for lang, lex in LANG_LEXICONS.items()]
-
-
 def _language_hit_struct(
     col: Column | str, finish=None, toks: Column | None = None
 ) -> Column:

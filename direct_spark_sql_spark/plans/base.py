@@ -117,18 +117,6 @@ DEC_QTY = "decimal(12,2)"
 DEC_VALUE = "decimal(14,2)"
 
 
-def dec_price_sql(col: str) -> str:
-    return f"CAST({col} AS DECIMAL(14,2))"
-
-
-def dec_rate_sql(col: str) -> str:
-    return f"CAST({col} AS DECIMAL(7,4))"
-
-
-def dec_qty_sql(col: str) -> str:
-    return f"CAST({col} AS DECIMAL(12,2))"
-
-
 #: revenue term: extendedprice * (1 - discount), exact decimal both engines.
 #: The (1 ± rate) factor is pinned to DECIMAL(8,4): Spark types a bare
 #: integer literal as DECIMAL(10,0), which would widen the product chain

@@ -26,14 +26,18 @@ and per-execution-stable ``now()`` semantics
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 import re
 import sys
 import threading
 import time
+import warnings
 from collections import OrderedDict, deque
 from typing import Any, Iterable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Row, SparkSession, types as T
 
 from direct_spark_sql_spark.datatable import DataTable
@@ -170,8 +174,6 @@ _NONDETERMINISTIC_RE = re.compile(
     r"|\bmonotonically_increasing_id\b",
     re.IGNORECASE,
 )
-#: Backwards-compat alias (pre-round-4 name, time functions only then).
-_TIME_FUNCS_RE = _NONDETERMINISTIC_RE
 
 #: Quoted spans a qualified-name rewrite must not touch: single-quoted SQL
 #: string literals (with '' escapes) and backtick-quoted identifiers.
@@ -241,47 +243,73 @@ def _walk_plan_metrics(jnode, out: list[dict[str, Any]]) -> None:
         node_entry["partial"] = True
 
 
-#: accumulator keys last_metrics() reports as per-call deltas; everything
-#: else in the per-node map stays cumulative (same contract as the Spark
-#: UI's SQL tab for a reused plan object)
-_DELTA_METRIC_KEYS = ("shuffleBytesWritten", "shuffleRecordsWritten", "spillSize")
+#: Process-wide call counter behind the job tags: engines from
+#: new_session() share one SparkContext, so a per-engine counter could hand
+#: two concurrent calls the same tag.
+_CALL_IDS = itertools.count()
 
 
-def _collect_delta_handles(jnode, out: list[tuple[str, Any]]) -> bool:
-    """Collect the java SQLMetric accumulator objects for the delta-reported
-    keys so a pre-execution baseline snapshot costs a handful of py4j value
-    reads (not a full plan walk) on the warm path.
+@contextlib.contextmanager
+def _job_tag(sc):
+    """Tag every Spark job this thread launches inside the block with a
+    fresh tag (yielded).  Job tags are thread-local JVM properties, so
+    concurrent calls on other threads keep their own jobs apart."""
+    tag = f"dss-call-{next(_CALL_IDS)}"
+    sc.addJobTag(tag)
+    try:
+        yield tag
+    finally:
+        sc.removeJobTag(tag)
 
-    Returns True only when the whole walk succeeded.  The same per-section
-    degradation as ``_walk_plan_metrics``: a py4j hiccup on one node loses
-    that node's handles, not the remaining subtree — and the caller must
-    not cache (or silently trust) a truncated handle list, because a
-    baseline that under-counts makes every per-call delta OVER-count."""
-    complete = True
+
+def _stage_rollup(sc, tag: str) -> dict[str, Any]:
+    """Execution rollup of the jobs tagged ``tag``: shuffle output and
+    spill summed over their stages, plus job, stage and task counts.
+
+    Read from Spark's status store, which is always on (also with the UI
+    disabled) and keeps a record per stage of each job, so the values are
+    per call by construction: a stage whose shuffle output an earlier call
+    wrote shows up as SKIPPED, with zero metrics.  ``spill_bytes`` is
+    ``memoryBytesSpilled``, the stage-level twin of the SQL ``spillSize``
+    metric.  The store is filled asynchronously from the listener bus, so
+    the bus is drained first; ``partial`` is True when it stayed busy past
+    Spark's 10 s wait.  The store keeps only the last
+    ``spark.ui.retainedJobs`` jobs: read a call's rollup soon after it."""
+    jsc = sc._jsc.sc()
+    out: dict[str, Any] = {
+        "shuffle_bytes_written": 0,
+        "shuffle_records_written": 0,
+        "spill_bytes": 0,
+        "jobs": 0,
+        "stages_run": 0,
+        "stages_skipped": 0,
+        "tasks": 0,
+        "partial": False,
+    }
     try:
-        it = jnode.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            key = str(kv._1())
-            if key in _DELTA_METRIC_KEYS:
-                out.append((key, kv._2()))
-    except Exception:
-        complete = False
-    try:
-        cls = jnode.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            complete = _collect_delta_handles(jnode.executedPlan(), out) and complete
-        elif "QueryStageExec" in cls:
-            complete = _collect_delta_handles(jnode.plan(), out) and complete
-    except Exception:
-        complete = False
-    try:
-        ch = jnode.children().iterator()
-        while ch.hasNext():
-            complete = _collect_delta_handles(ch.next(), out) and complete
-    except Exception:
-        complete = False
-    return complete
+        jsc.listenerBus().waitUntilEmpty()
+    except Py4JJavaError:  # TimeoutException: the bus stayed busy
+        out["partial"] = True
+    store = jsc.statusStore()
+    for job_id in jsc.statusTracker().getJobIdsForTag(tag):
+        job = store.job(job_id)
+        out["jobs"] += 1
+        out["stages_run"] += job.numCompletedStages()
+        out["stages_skipped"] += job.numSkippedStages()
+        out["tasks"] += job.numCompletedTasks() + job.numFailedTasks()
+        ids = job.stageIds()
+        for i in range(ids.size()):
+            try:
+                stage = store.lastStageAttempt(ids.apply(i))
+            except Py4JJavaError:
+                # NoSuchElementException: past spark.ui.retainedStages the
+                # store evicts SKIPPED stages first, even a moment-old one,
+                # and a skipped stage wrote nothing
+                continue
+            out["shuffle_bytes_written"] += stage.shuffleWriteBytes()
+            out["shuffle_records_written"] += stage.shuffleWriteRecords()
+            out["spill_bytes"] += stage.memoryBytesSpilled()
+    return out
 
 
 class EngineBuilder:
@@ -362,8 +390,16 @@ class EngineBuilder:
 
             try:
                 ship_package(spark)
-            except Exception:
-                pass  # a cluster with pre-installed packages needs nothing
+            except Exception as e:
+                # a cluster with pre-installed packages needs nothing, so
+                # the engine still comes up — but say why shipping failed
+                warnings.warn(
+                    f"could not ship the engine package to executors "
+                    f"({type(e).__name__}: {e}); Python UDFs will fail "
+                    f"unless the package is installed there",
+                    RuntimeWarning,
+                    stacklevel=2,
+                )
         return Engine(spark)
 
 
@@ -462,9 +498,9 @@ class Engine:
         #: unpersist the old storage (reference re-registers freely,
         #: DirectSparkSession.scala:181-219).
         self._materialized_views: dict[str, DataFrame] = {}
-        #: (DataFrame, wall_sec, result_rows, pre_exec_metric_baseline,
-        #: result_cache_hit) of the most recent sql_directly — backs
-        #: last_metrics() (reference: per-execution SQLMetric map,
+        #: (DataFrame, wall_sec, result_rows, job tag, frozen stage
+        #: rollup) of the most recent sql_directly — backs last_metrics()
+        #: (reference: per-execution SQLMetric map,
         #: DirectSQLMetrics.scala:21-72, DirectExecutionContext.scala:45).
         self._last_execution: tuple | None = None
         #: Result cache — the Spark-analogue of the reference's sub-ms
@@ -727,7 +763,7 @@ class Engine:
         """
         # Epoch captured BEFORE the plan-cache lookup: an invalidation
         # that lands anywhere between the lookup and the put (including
-        # during the cacheable check or the metric-baseline py4j reads)
+        # during the cacheable check or the stage-rollup py4j reads)
         # must fail the put check, or a result computed from the displaced
         # plan could poison the cache until the NEXT invalidation.
         epoch = self._invalidation_epoch
@@ -740,9 +776,9 @@ class Engine:
             t0 = time.perf_counter()
             hit = self._result_cache.get(key)
             if hit is not None:
-                schema, rows, hit_df, snap, mutable = hit
+                schema, rows, hit_df, rollup, mutable = hit
                 wall = time.perf_counter() - t0
-                self._last_execution = (hit_df, wall, len(rows), None, True, snap)
+                self._last_execution = (hit_df, wall, len(rows), None, rollup)
                 self._record_call(sql, wall, len(rows), True)
                 # Rows holding mutable containers (arrays/maps/binary) are
                 # copied per hit so no caller can mutate the cached copy;
@@ -750,24 +786,21 @@ class Engine:
                 if mutable:
                     return DataTable(schema, [_copy_containers(r) for r in rows])
                 return DataTable(schema, list(rows))
-        pre = self._metric_baseline(df)
-        t0 = time.perf_counter()
-        table = DataTable.from_dataframe(df)
-        wall = time.perf_counter() - t0
-        df.__dict__["_dss_executed"] = True
-        self._last_execution = (df, wall, len(table.data), pre, False, None)
+        with _job_tag(self.spark.sparkContext) as tag:
+            t0 = time.perf_counter()
+            table = DataTable.from_dataframe(df)
+            wall = time.perf_counter() - t0
+        self._last_execution = (df, wall, len(table.data), tag, None)
         self._record_call(sql, wall, len(table.data), False)
         if (
             cacheable
             and len(table.data) <= self.result_cache_max_rows
             and self._plan_result_cacheable(df)
         ):
-            # Metrics snapshot frozen AT PUT TIME: a later cache hit must
-            # reproduce the materializing execution's metrics even if the
-            # same plan object executed again in between (sql_iterator, a
-            # concurrent thread, a cache-bypassed call) — re-walking the
-            # live accumulators at hit time would count those executions.
-            snap = self._compute_metrics(df, wall, len(table.data), pre, False)
+            # The execution rollup is frozen AT PUT TIME: the status store
+            # evicts old jobs, so a hit long after the put could no longer
+            # read the materializing call's stages.
+            rollup = _stage_rollup(self.spark.sparkContext, tag)
             # epoch re-check and put are atomic w.r.t. the invalidation
             # sweep (which bumps the epoch and drops entries under the
             # same lock), so a result computed against pre-invalidation
@@ -785,7 +818,7 @@ class Engine:
                 if epoch == self._invalidation_epoch:
                     self._result_cache.put(
                         key,
-                        (table.schema, stored, df, snap, mutable),
+                        (table.schema, stored, df, rollup, mutable),
                         nbytes=_approx_rows_bytes(stored),
                     )
         return table
@@ -805,10 +838,10 @@ class Engine:
         """The last ``n`` ``sql_directly`` calls, newest last: statement
         (truncated), wall seconds, result rows, result-cache hit flag,
         unix timestamp.  Always-on and walk-free (unlike
-        :meth:`last_metrics`, which reads plan accumulators), so a
-        long-lived service can expose its recent query log at zero
-        per-call cost — the operational readout the reference's
-        per-execution context map implies but never surfaces
+        :meth:`last_metrics`, which reads the status store and walks the
+        executed plan), so a long-lived service can expose its recent
+        query log at zero per-call cost — the operational readout the
+        reference's per-execution context map implies but never surfaces
         (DirectExecutionContext.scala:45)."""
         if n <= 0:
             return []  # list[-0:] would be the WHOLE history
@@ -886,63 +919,6 @@ class Engine:
             df.__dict__["_dss_result_ok"] = ok
         return ok
 
-    def _metric_baseline(self, df: DataFrame) -> dict[str, int] | None:
-        """Pre-execution snapshot of the delta-reported accumulators.
-
-        ``None`` for a plan's first execution (fresh accumulators — the
-        absolute values ARE that execution's values).  For a re-executed
-        cached plan the SQLMetric accumulators keep counting, so
-        last_metrics() subtracts this snapshot to report per-call values
-        (reference resets its metric map per execution,
-        DirectExecutionContext.scala:45)."""
-        if not df.__dict__.get("_dss_executed"):
-            return None
-        handles = df.__dict__.get("_dss_delta_handles")
-        complete = True
-        if handles is None:
-            handles = []
-            try:
-                complete = _collect_delta_handles(
-                    df._jdf.queryExecution().executedPlan(), handles
-                )
-            except Exception:
-                complete = False
-            if complete:
-                # A partially consumed sql_iterator can leave AQE mid-
-                # flight: the current executedPlan may still re-shape
-                # (new exchanges whose accumulators a pinned handle list
-                # would miss, under-counting every later baseline).  Only
-                # a FINAL adaptive plan's handles are safe to cache.
-                try:
-                    root = df._jdf.queryExecution().executedPlan()
-                    if (
-                        root.getClass().getSimpleName()
-                        == "AdaptiveSparkPlanExec"
-                        and not root.isFinalPlan()
-                    ):
-                        complete = False
-                except Exception:
-                    complete = False
-            if complete:
-                # only a COMPLETE walk is cached on the plan object; a
-                # truncated one is retried next call instead of pinning an
-                # under-counting baseline forever
-                df.__dict__["_dss_delta_handles"] = handles
-        base = dict.fromkeys(_DELTA_METRIC_KEYS, 0)
-        for metric_key, jmetric in handles:
-            try:
-                v = int(jmetric.value())
-            except Exception:
-                complete = False
-                continue
-            if v > 0:
-                base[metric_key] += v
-        if not complete:
-            # surfaced by last_metrics() as partial: true — the deltas
-            # derived from this baseline may over-count
-            base["__partial__"] = 1
-        return base
-
     def sql(self, sql: str) -> DataFrame:
         """Escape hatch: plain lazy Spark SQL, uncached."""
         return self.spark.sql(sql)
@@ -956,12 +932,6 @@ class Engine:
         (plus one being fetched), so a larger-than-driver result can be
         consumed incrementally."""
         df = self.dataframe(sql)
-        # Mark the plan executed BEFORE consuming: toLocalIterator ticks
-        # the same SQLMetric accumulators sql_directly reads, so a later
-        # sql_directly on this cached plan must take a baseline snapshot
-        # rather than treat the accumulated values as its own first run
-        # (unset, they'd be reported — and result-cache-frozen — at ~2x).
-        df.__dict__["_dss_executed"] = True
         for row in df.toLocalIterator(prefetchPartitions=True):
             yield row.asDict(recursive=True)
 
@@ -1010,9 +980,6 @@ class Engine:
 
     def _is_nondeterministic(self, sql: str) -> bool:
         return _NONDETERMINISTIC_RE.search(sql) is not None
-
-    # pre-round-4 name, kept for callers/tests written against it
-    _uses_time = _is_nondeterministic
 
     def _register_function_ddl(
         self, sql: str, name: str, cls: str, jar: str | None
@@ -1088,63 +1055,39 @@ class Engine:
         return out
 
     def last_metrics(self) -> dict[str, Any] | None:
-        """Executed-plan metrics of the most recent ``sql_directly``.
+        """Execution metrics of the most recent ``sql_directly``.
 
         The reference exposes a per-plan-node SQLMetric map
         (DirectSQLMetrics.scala:21-72, wired through DirectPlan.scala:
-        63-77); this is the same readout off Spark's own executed plan:
-        every physical node's metrics (raw numeric accumulator values),
-        plus rolled-up totals an operator would alert on — output rows,
-        shuffle bytes, spill bytes, peak memory — and the driver-side
-        wall time of the materialization.
+        63-77) and resets it on every execution
+        (DirectExecutionContext.scala:45).  Returns ``None`` before any
+        ``sql_directly`` call; otherwise:
 
-        Returns ``None`` before any ``sql_directly`` call.  The rollup
-        keys (``shuffle_*``, ``spill_bytes``) are PER-CALL values: for a
-        plan-cache-hit re-execution they are deltas against a
-        pre-execution accumulator snapshot, matching the reference's
-        reset-per-execution metric map (DirectExecutionContext.scala:45).
-        The per-node ``operators`` list stays raw/cumulative (the Spark
-        UI's contract for a reused plan object), and ``partial: true``
-        flags a truncated plan walk whose rollups may under-count.
-
-        For a result-cache hit the snapshot frozen at put time is
-        returned (with this call's wall time), so intervening executions
-        of the same plan object can never inflate the readout."""
+        - ``wall_sec``, ``output_rows``, ``result_cache_hit``;
+        - the call's own execution rollup, summed over the stages of the
+          jobs Spark launched under the call's job tag (see
+          ``_stage_rollup``): ``shuffle_bytes_written``,
+          ``shuffle_records_written``, ``spill_bytes``, ``jobs``,
+          ``stages_run``, ``stages_skipped``, ``tasks``.  Per call by
+          construction: a re-executed cached plan whose shuffle stages
+          Spark reuses reports them as skipped, not as bytes written
+          again.  A result-cache hit launches no job; it returns the
+          rollup frozen when the result was cached;
+        - ``operators``: every physical node of the executed plan (through
+          AQE final plans and query stages) with its raw SQLMetric values,
+          and ``peak_memory_bytes``, their largest ``peakMemory``.  These
+          are cumulative over every execution of the plan object (the
+          Spark UI's contract for a reused plan), also for a hit;
+        - ``partial``: True when a py4j failure truncated the plan walk or
+          the listener bus could not be drained before the rollup read."""
         if self._last_execution is None:
             return None
-        df, wall, n_rows, pre, cache_hit, snap = self._last_execution
-        if snap is not None:
-            out = dict(snap)
-            out["wall_sec"] = wall
-            out["result_cache_hit"] = True
-            return out
-        return self._compute_metrics(df, wall, n_rows, pre, cache_hit)
-
-    def _compute_metrics(
-        self,
-        df: DataFrame,
-        wall: float,
-        n_rows: int,
-        pre: dict[str, int] | None,
-        cache_hit: bool,
-    ) -> dict[str, Any]:
+        # tag is None for a result-cache hit, which carries its rollup
+        df, wall, n_rows, tag, rollup = self._last_execution
+        if rollup is None:
+            rollup = _stage_rollup(self.spark.sparkContext, tag)
         nodes: list[dict[str, Any]] = []
         _walk_plan_metrics(df._jdf.queryExecution().executedPlan(), nodes)
-
-        def _total(metric: str) -> int:
-            # skip SQLMetric's -1 "unset" sentinel
-            return sum(
-                v
-                for n in nodes
-                if (v := n["metrics"].get(metric)) is not None and v > 0
-            )
-
-        def _per_call(metric: str) -> int:
-            total = _total(metric)
-            if pre is not None:
-                total -= pre.get(metric, 0)
-            return max(0, total)
-
         return {
             "wall_sec": wall,
             # the statement's actual result-row count (counted at the
@@ -1152,15 +1095,7 @@ class Engine:
             # deep operator's count for roots like CollectLimit that
             # carry no metric themselves)
             "output_rows": n_rows,
-            # per-call values: for a re-executed cached plan these are
-            # deltas against the pre-execution accumulator snapshot, the
-            # reference's reset-per-execution contract
-            # (DirectExecutionContext.scala:45); for a result-cache-hit
-            # call they reproduce the metrics of the execution that
-            # materialized the cached rows
-            "shuffle_bytes_written": _per_call("shuffleBytesWritten"),
-            "shuffle_records_written": _per_call("shuffleRecordsWritten"),
-            "spill_bytes": _per_call("spillSize"),
+            **rollup,
             "peak_memory_bytes": max(
                 (
                     n["metrics"]["peakMemory"]
@@ -1169,15 +1104,8 @@ class Engine:
                 ),
                 default=0,
             ),
-            "result_cache_hit": cache_hit,
-            # True when a py4j failure truncated part of the plan walk —
-            # the rollups above may then under- or over-count (ADVICE r4;
-            # a truncated BASELINE walk makes the deltas over-count, so
-            # its marker surfaces here too)
-            "partial": any(n.get("partial") for n in nodes)
-            or bool(pre and pre.get("__partial__")),
-            # raw per-node accumulator values (cumulative across
-            # executions of a reused plan object, like the Spark UI)
+            "result_cache_hit": tag is None,
+            "partial": rollup["partial"] or any(n.get("partial") for n in nodes),
             "operators": nodes,
         }
 

@@ -69,11 +69,6 @@ _TABLE_PLANS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 
-def clear_table_plan_cache() -> None:
-    """Drop every memoized scan plan (tests / dataset-rewrite hooks)."""
-    _TABLE_PLANS.clear()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one parquet table.
 

@@ -188,6 +188,32 @@ def test_quantized_rerank_matches_exact_topk(spark):
     assert len(set(exact) & set(two_stage)) >= 8
 
 
+def test_ivf_pq_ragged_vector_stays_out_of_topk(spark):
+    """A ragged (wrong-dims) vector gets a NULL ADC estimate from the
+    zip_with padding; it must sort after every real candidate, so with a
+    shortlist of exactly k it cannot take a top-k slot."""
+    from direct_spark_sql_spark.operators.similarity import ivf_pq_topk
+
+    vecs = {
+        0: [1.0, 2.0, 3.0, 4.0],  # query
+        1: [1.0, 1.0, 1.0, 1.0],  # centroid / codebook entries
+        2: [4.0, 3.0, 2.0, 1.0],
+    }
+    vecs.update({i: [float(i), 2.0, float(i % 3), 1.0] for i in range(3, 9)})
+    ragged = 9
+    rows = [(i, v) for i, v in vecs.items()] + [(ragged, [1.0, 2.0, 3.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    # every corpus vector in one probed cell, the ragged one included
+    assigned = df.filter("vec_id <> 0").withColumn("cell_id", F.lit(1).cast("long"))
+    got = ivf_pq_topk(
+        df, n_cells=2, nprobe=2, n_codes=2, m=2, dims=4,
+        shortlist=3, k=3, assigned=assigned,
+    ).collect()
+    assert len(got) == 3
+    assert ragged not in [r.vec_id for r in got]
+    assert all(r.adc_dist is not None for r in got)
+
+
 def test_distributed_prefix_sum_equals_serial(spark):
     from direct_spark_sql_spark.operators.packing import token_prefix_sums
 

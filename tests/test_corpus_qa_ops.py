@@ -4,6 +4,7 @@ cross-engine agreement; these pin the intended MEANING)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -1063,6 +1064,27 @@ def test_dsir_score_unseen_buckets_use_smoothed_default(spark):
         row["__lam"] for row in lam.collect() if row["__b"] not in seen
     }
     assert unseen_lams == {default_units}
+
+
+def test_dsir_score_rejects_sparse_lambda_table(spark):
+    """The λ table collapses to an array indexed by bucket position, so a
+    table missing one bucket row would shift every later λ onto the wrong
+    bucket: scoring must fail, not return wrong weights."""
+    from direct_spark_sql_spark.operators.sampling import (
+        dsir_lambda_table,
+        dsir_score,
+    )
+
+    pilot = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta delta")],
+        "doc_id long, text string",
+    )
+    n_buckets = 64
+    lam = dsir_lambda_table(pilot, pilot.filter("doc_id = 1"), n_buckets=n_buckets)
+    sparse = lam.filter("__b <> 5")
+    assert sparse.count() == n_buckets - 1
+    with pytest.raises(Exception, match="63 bucket rows, expected n_buckets=64"):
+        dsir_score(pilot, sparse, n_buckets=n_buckets).collect()
 
 
 def test_span_report_min_span_len_is_excision_policy(spark):

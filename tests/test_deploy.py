@@ -191,3 +191,25 @@ def test_ship_package_zips_importable_source(spark, tmp_path, monkeypatch):
     assert not any(n.endswith(".pyc") for n in names)
     # idempotent: second call reuses the cached zip (mtime-keyed)
     assert deploy.ship_package(FakeSpark()) == zip_path
+
+
+def test_get_or_create_warns_when_shipping_fails(spark, monkeypatch):
+    """A failed ship_package on a non-local master must not be silent:
+    the builder warns with the exception and still returns an Engine (a
+    cluster with the package pre-installed needs no shipping)."""
+    from pyspark.sql import SparkSession
+
+    from direct_spark_sql_spark import deploy
+    from direct_spark_sql_spark.session import Engine
+
+    def boom(_spark):
+        raise OSError("no writable temp dir")
+
+    monkeypatch.setattr(deploy, "ship_package", boom)
+    # hand back the running session untouched (re-applying the builder's
+    # conf would undo a robustness-axis override) and make it look remote
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: spark)
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    with pytest.warns(RuntimeWarning, match="OSError: no writable temp dir"):
+        engine = Engine.builder().get_or_create()
+    assert isinstance(engine, Engine)

@@ -176,6 +176,169 @@ def test_per_call_metrics_not_doubled_on_reexecution(eng):
     assert second["partial"] is False
 
 
+def test_plan_cache_replay_reports_skipped_stages(eng):
+    """A replayed cached plan reuses the shuffle output of its first
+    execution: the replay's own tagged stages show that reuse as skipped
+    stages and write no shuffle bytes."""
+    eng.spark.read.parquet(
+        f"{SF_DIR}/lineitem.parquet"
+    ).createOrReplaceTempView("rc_replay")
+    sql = (
+        "SELECT l_linestatus, count(*) AS n FROM rc_replay "
+        "GROUP BY l_linestatus ORDER BY l_linestatus"
+    )
+    eng.sql_directly(sql)
+    first = eng.last_metrics()
+    assert first["jobs"] >= 1 and first["shuffle_bytes_written"] > 0
+    eng.sql_directly(sql)
+    replay = eng.last_metrics()
+    assert replay["result_cache_hit"] is False
+    assert replay["jobs"] >= 1
+    assert replay["stages_skipped"] >= 1
+    assert replay["shuffle_bytes_written"] == 0
+    assert replay["shuffle_records_written"] == 0
+
+
+_EVICTION_SCRIPT = """
+import json, sys
+from direct_spark_sql_spark.session import Engine
+
+e = (
+    Engine.builder()
+    .master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "1")
+    # a tiny store: every cleanup evicts the newest SKIPPED stages first
+    .config("spark.ui.retainedStages", "4")
+    .get_or_create()
+)
+e.spark.sparkContext.setLogLevel("ERROR")
+e.spark.read.parquet(sys.argv[1] + "/lineitem.parquet").createOrReplaceTempView("li")
+sql = "SELECT l_linestatus, count(*) AS n FROM li GROUP BY l_linestatus ORDER BY 1"
+out = []
+for _ in range(12):
+    e.sql_directly(sql)
+    m = e.last_metrics()
+    out.append([m["jobs"], m["stages_skipped"], m["shuffle_bytes_written"]])
+print("RESULT:" + json.dumps(out))
+e.stop()
+"""
+
+
+def test_stage_rollup_tolerates_evicted_stage_records(tmp_path):
+    """Past ``spark.ui.retainedStages`` the status store drops SKIPPED
+    stage records first, even ones a moment old, while their job still
+    lists them: the rollup must count them as skipped, not fail the call.
+    Subprocess because the store's limits are fixed at context start."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _EVICTION_SCRIPT, SF_DIR],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=dict(os.environ, PYTHONPATH=repo),
+        cwd=str(tmp_path),
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    line = next(l for l in proc.stdout.splitlines() if l.startswith("RESULT:"))
+    first, *replays = json.loads(line[len("RESULT:"):])
+    assert first[0] >= 1 and first[2] > 0
+    for jobs, skipped, shuffle_bytes in replays:
+        assert jobs >= 1 and skipped >= 1 and shuffle_bytes == 0
+
+
+@pytest.mark.parametrize("shape", ["aggregate_sort", "shuffle_join"])
+def test_stage_rollup_matches_plan_walk_on_fresh_plan(eng, shape):
+    """On a plan's first execution every exchange writes its shuffle
+    once, so the tagged-stage rollup must equal the per-node SQLMetric
+    sums of the executed plan."""
+    from pyspark.sql import functions as F
+
+    from direct_spark_sql_spark.session import (
+        _job_tag,
+        _stage_rollup,
+        _walk_plan_metrics,
+    )
+
+    spark = eng.spark
+    facts = spark.range(0, 20_000, 1, 4).select(
+        (F.col("id") % 37).alias("k"), F.col("id").alias("v")
+    )
+    if shape == "aggregate_sort":
+        df = facts.groupBy("k").agg(F.sum("v").alias("s")).orderBy("k")
+    else:
+        dims = spark.range(0, 37, 1, 2).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("w")
+        )
+        df = facts.hint("shuffle_merge").join(dims, "k").groupBy("w").count()
+    with _job_tag(spark.sparkContext) as tag:
+        df.collect()
+    rollup = _stage_rollup(spark.sparkContext, tag)
+    nodes: list = []
+    _walk_plan_metrics(df._jdf.queryExecution().executedPlan(), nodes)
+
+    def walk_total(metric: str) -> int:
+        return sum(
+            v for n in nodes if (v := n["metrics"].get(metric)) is not None and v > 0
+        )
+
+    assert rollup["shuffle_records_written"] > 0
+    assert rollup["shuffle_bytes_written"] == walk_total("shuffleBytesWritten")
+    assert rollup["shuffle_records_written"] == walk_total("shuffleRecordsWritten")
+
+
+def test_concurrent_calls_keep_their_own_stage_rollups(engine):
+    """Job tags are per thread: two engines sharing one SparkContext, each
+    hammered from its own thread, must each read only their own call's
+    stages — a leaked tag would add the other thread's jobs."""
+    import sys
+    import threading
+
+    def fresh_sql(mod: int, i: int) -> str:
+        # the trailing comment makes every call a fresh plan (a new
+        # plan-cache key), so every call writes its shuffle once
+        return (
+            f"SELECT k, count(*) AS n FROM (SELECT id % {mod} AS k "
+            f"FROM range(0, 5000, 1, 4)) GROUP BY k /* {i} */"
+        )
+
+    engines = {mod: engine.new_session() for mod in (7, 13)}
+    expected = {}
+    for mod, e in engines.items():
+        e.result_cache_enabled = False
+        e.sql_directly(fresh_sql(mod, -1))
+        m = e.last_metrics()
+        expected[mod] = (m["jobs"], m["shuffle_records_written"])
+    assert expected[7] != expected[13]
+    seen: dict[int, list] = {7: [], 13: []}
+
+    def worker(mod: int) -> None:
+        e = engines[mod]
+        for i in range(6):
+            e.sql_directly(fresh_sql(mod, i))
+            m = e.last_metrics()
+            seen[mod].append((m["jobs"], m["shuffle_records_written"]))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker, args=(mod,)) for mod in engines]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=240)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    for mod in engines:
+        assert seen[mod] == [expected[mod]] * 6
+
+
 def test_result_cache_hit_reports_materializing_execution_metrics(eng):
     eng.register_table(
         "rc_m", [{"k": i % 5, "v": i} for i in range(1000)], "k INT, v INT"

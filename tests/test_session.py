@@ -236,12 +236,12 @@ def test_qualified_rewrite_identifier_boundaries(people_engine):
 def test_uses_time_word_boundaries(engine):
     """Identifiers containing time-function substrings (``known``) must not
     bypass the plan cache; genuine time functions must."""
-    assert not engine._uses_time("SELECT known FROM t WHERE renowned = 'nowhere'")
-    assert not engine._uses_time("SELECT unix_timestamp(col) FROM t")
-    assert engine._uses_time("SELECT now()")
-    assert engine._uses_time("SELECT unix_timestamp( )")
-    assert engine._uses_time("SELECT CURRENT_DATE")
-    assert engine._uses_time("select current_timestamp() as ts")
+    assert not engine._is_nondeterministic("SELECT known FROM t WHERE renowned = 'nowhere'")
+    assert not engine._is_nondeterministic("SELECT unix_timestamp(col) FROM t")
+    assert engine._is_nondeterministic("SELECT now()")
+    assert engine._is_nondeterministic("SELECT unix_timestamp( )")
+    assert engine._is_nondeterministic("SELECT CURRENT_DATE")
+    assert engine._is_nondeterministic("select current_timestamp() as ts")
     # end-to-end: a 'known'-containing statement is served from the cache
     engine.register_table("known_t", [{"known": 1}], "known int")
     sql = "SELECT known FROM known_t"
