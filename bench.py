@@ -186,18 +186,25 @@ def apply_retimes(
 
 
 def pick_scale_cohort(
-    queries: list, prev_dropped: set, probe_hist: dict, cap: int
+    queries: list,
+    prev_dropped: set,
+    probe_hist: dict,
+    cap: int,
+    reuse: set = frozenset(),
 ) -> tuple[list, list]:
     """Per-round 10× scale-tier cohort (VERDICT r8 #3): probing every
     headline query at 10× each round starved the other tiers out of the
     wall budget, so the tier rotates a capped cohort instead —
     (1) queries the previous run dropped on budget, (2) never probed at
     10× (absent from the history), (3) least-recently probed; stable
-    within a bucket.  Returns (cohort, rotated_out_names) — rotated-out
-    queries are REPORTED, not silently capped, and come back within ~2
-    rounds as the history advances."""
+    within a bucket.  A non-empty ``reuse`` (the previous run's cohort
+    names) limits the candidates to those queries, still in that priority
+    and still cut to ``cap``.  Returns (cohort, rotated_out_names) —
+    rotated-out queries are REPORTED, not silently capped, and come back
+    within ~2 rounds as the history advances."""
+    pool = [q for q in queries if q.name in reuse] if reuse else queries
     ordered = sorted(
-        queries,
+        pool,
         key=lambda q: (q.name not in prev_dropped, probe_hist.get(q.name, 0.0)),
     )
     cohort = ordered[:cap]
@@ -801,15 +808,13 @@ def main() -> None:
             and str(prev_cpus) != str(cpus)
             and bool(prev_scale_names)
         )
-        if cohort_reused:
-            cohort = [q for q in bench_queries if q.name in prev_scale_names]
-            rotated_out = sorted(
-                q.name for q in bench_queries if q.name not in prev_scale_names
-            )
-        else:
-            cohort, rotated_out = pick_scale_cohort(
-                bench_queries, prev_scale_dropped, probe_hist, cap
-            )
+        cohort, rotated_out = pick_scale_cohort(
+            bench_queries,
+            prev_scale_dropped,
+            probe_hist,
+            cap,
+            reuse=prev_scale_names if cohort_reused else frozenset(),
+        )
         s_timings: dict[str, float] = {}
         s_dropped: list[str] = []
         ckpt_bytes: dict[str, int] = {}

@@ -26,15 +26,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-#: Metadata carried with every binary payload.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("source", T.StringType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -378,8 +378,8 @@ def ivf_build(
     # Rebuild-at-same-path: evict coordinator caches keyed on this path, or a
     # later probe would serve the *old* centroid metadata and a DataFrame
     # whose file listing references overwritten files.
-    _IVF_CENTROIDS.drop_where(lambda k: k == index_path)
-    _IVF_INDEX_DF.drop_where(lambda k: k[1] == index_path)
+    _IVF_CENTROIDS.drop_where(lambda k, _: k == index_path)
+    _IVF_INDEX_DF.drop_where(lambda k, _: k[1] == index_path)
 
 
 def _ivf_probe(

@@ -114,7 +114,6 @@ def derive_with_confs(
 DEC_PRICE = "decimal(14,2)"
 DEC_RATE = "decimal(7,4)"
 DEC_QTY = "decimal(12,2)"
-DEC_VALUE = "decimal(14,2)"
 
 
 #: revenue term: extendedprice * (1 - discount), exact decimal both engines.

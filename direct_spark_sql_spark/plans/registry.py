@@ -113,83 +113,39 @@ def _baseline_names() -> frozenset[str]:
         return frozenset()
 
 
-def _guard_skip(module: str, exc: BaseException) -> None:
-    """An optional query module failed to import: WARN LOUDLY.
-
-    These guards exist so a missing optional dependency degrades the
-    registry instead of killing it — but a SILENT skip once hid a
-    circular-import bug that truncated ``QUERIES`` 313 → 297 for the
-    whole process (round 13; see plans/__init__.py docstring).  Any
-    skip now announces exactly what vanished and why, so a truncated
-    registry can never masquerade as a complete one.
-    """
-    import sys
-    import traceback
-
-    print(
-        f"direct_spark_sql_spark: WARNING: query module {module!r} failed to "
-        f"import and its queries are MISSING from the registry: {exc!r}",
-        file=sys.stderr,
-    )
-    traceback.print_exc(file=sys.stderr)
-
-
 def all_queries() -> list[Query]:
-    # Imports are deferred so that a failure in one module (e.g. an optional
-    # dependency) doesn't take down the whole registry.
-    from direct_spark_sql_spark.plans import conformance, conformance_ext, tpch, tpch_extra
+    # Imported here, not at module top: building the registry imports
+    # plans.streaming, which imports the streaming package, so a top-level
+    # import would re-open the cycle described in plans/__init__.py.  Every
+    # module is required; an ImportError propagates rather than silently
+    # shrinking the registry.
+    from direct_spark_sql_spark.plans import (
+        conformance,
+        conformance_ext,
+        tpch,
+        tpch_extra,
+        temporal,
+        pipeline,
+        pipeline_ext,
+        streaming,
+        analytics,
+        mlops,
+        scaleops,
+    )
 
-    queries: list[Query] = []
-    queries += tpch.QUERIES
-    queries += tpch_extra.QUERIES
-    queries += conformance.QUERIES
-    queries += conformance_ext.QUERIES
-
-    from direct_spark_sql_spark.plans import temporal
-
-    queries += temporal.QUERIES
-
-    try:
-        from direct_spark_sql_spark.plans import pipeline
-
-        queries += pipeline.QUERIES
-    except ImportError as exc:  # optional module — degrade LOUDLY
-        _guard_skip("pipeline", exc)
-
-    try:
-        from direct_spark_sql_spark.plans import pipeline_ext
-
-        queries += pipeline_ext.QUERIES
-    except ImportError as exc:  # optional module — degrade LOUDLY
-        _guard_skip("pipeline_ext", exc)
-
-    try:
-        from direct_spark_sql_spark.plans import streaming
-
-        queries += streaming.QUERIES
-    except ImportError as exc:  # optional module — degrade LOUDLY
-        _guard_skip("streaming", exc)
-
-    try:
-        from direct_spark_sql_spark.plans import analytics
-
-        queries += analytics.QUERIES
-    except ImportError as exc:  # optional module — degrade LOUDLY
-        _guard_skip("analytics", exc)
-
-    try:
-        from direct_spark_sql_spark.plans import mlops
-
-        queries += mlops.QUERIES
-    except ImportError as exc:  # optional module — degrade LOUDLY
-        _guard_skip("mlops", exc)
-
-    try:
-        from direct_spark_sql_spark.plans import scaleops
-
-        queries += scaleops.QUERIES
-    except ImportError as exc:  # optional module — degrade LOUDLY
-        _guard_skip("scaleops", exc)
+    queries: list[Query] = [
+        *tpch.QUERIES,
+        *tpch_extra.QUERIES,
+        *conformance.QUERIES,
+        *conformance_ext.QUERIES,
+        *temporal.QUERIES,
+        *pipeline.QUERIES,
+        *pipeline_ext.QUERIES,
+        *streaming.QUERIES,
+        *analytics.QUERIES,
+        *mlops.QUERIES,
+        *scaleops.QUERIES,
+    ]
 
     seen: set[str] = set()
     for q in queries:

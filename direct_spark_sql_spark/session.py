@@ -10,7 +10,10 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
 - ``execute_and_register_temp_view``        (reference :181-219)
 - ``temp_view(name) -> DataTable``          (reference :139-154)
 - ``set_namespace`` / plan+result LRU cache keyed ``namespace + sql``
-  (reference :91-92, :411-415, Guava cache → functools-style OrderedDict LRU)
+  (reference :91-92, :411-415, Guava cache → functools-style OrderedDict LRU);
+  which queries are cached, and which entries a view change drops, is
+  decided from facts of their analyzed plans (``_PlanFacts``), not from
+  the SQL text
 - ``new_session()`` isolation               (reference :81-86)
 
 Execution-model differences are deliberate (SURVEY.md §7.0): where the
@@ -21,7 +24,8 @@ is 100 TB on a cluster, not single-node latency.  What *is* kept from the
 reference's latency story is the cache design: analyzed-plan reuse keyed by
 (namespace, sql), result caching with invalidation on view registration,
 and per-execution-stable ``now()`` semantics
-(DirectExecutionContext.scala:47-58) via literal substitution.
+(DirectExecutionContext.scala:47-58): a plan that reads the current time
+is never reused, so each execution folds its own literal.
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ import threading
 import time
 import warnings
 from collections import OrderedDict, deque
-from typing import Any, Iterable
+from typing import Any, Iterable, NamedTuple
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Row, SparkSession, types as T
@@ -146,35 +150,6 @@ ENGINE_CONF: dict[str, str] = {
     ),
 }
 
-#: Nondeterministic-expression detection (plan-cache bypass).  Two classes
-#: of expression get their value fixed during the FIRST analysis and would
-#: be frozen by a cached analyzed plan:
-#:
-#: - time functions — Spark folds ``current_timestamp``/``current_date``
-#:   to a literal at analysis (the bug the reference built
-#:   DirectCurrentDate/Timestamp to fix, DirectSessionStateBuilder.scala:
-#:   134-155);
-#: - seeded-random expressions — ``rand()``/``randn()``/``shuffle()``/
-#:   ``uuid()`` pick their seed during analysis
-#:   (``ResolveRandomSeed``), and ``monotonically_increasing_id`` depends
-#:   on runtime partition layout, so a cached plan replays identical
-#:   "random" values on every execution.
-#:
-#: Word-boundary anchored so substrings inside identifiers (``known``,
-#: ``nowhere``, ``renowned``, ``operand``) don't spuriously bypass the
-#: cache; ``now``/``unix_timestamp`` only count when called with zero args
-#: (with args unix_timestamp parses a column and is cache-safe); the
-#: random family must look like a call (``rand(``) so a column named
-#: ``rand`` stays cacheable — except ``monotonically_increasing_id``,
-#: callable without parens in SQL.
-_NONDETERMINISTIC_RE = re.compile(
-    r"\bcurrent_date\b|\bcurrent_timestamp\b|\blocaltimestamp\b"
-    r"|\bnow\s*\(\s*\)|\bunix_timestamp\s*\(\s*\)"
-    r"|\brandn?\s*\(|\buuid\s*\(|\bshuffle\s*\(|\brandom\s*\("
-    r"|\bmonotonically_increasing_id\b",
-    re.IGNORECASE,
-)
-
 #: Quoted spans a qualified-name rewrite must not touch: single-quoted SQL
 #: string literals (with '' escapes) and backtick-quoted identifiers.
 _QUOTED_SPAN_RE = re.compile(r"'(?:[^']|'')*'|`(?:[^`]|``)*`")
@@ -205,6 +180,79 @@ _FUNCTION_DDL_RE = re.compile(
     r"(?:\s+USING\s+JAR\s+'(?P<jar>[^']+)')?\s*;?\s*$",
     re.IGNORECASE,
 )
+
+
+#: Analyzed-plan leaf classes whose content cannot change outside the
+#: facade's invalidation hooks.  LocalRelation/LogicalRDD is what
+#: register_table/createDataFrame temp views bind to (driver-local data,
+#: re-bound only through register_table, which sweeps the caches);
+#: InMemoryRelation is a facade-cached materialization.  Everything else —
+#: file scans, streaming sources, and notably LogicalRelation wrapping an
+#: EXTERNAL relation like JDBC — is rejected: that data can change with no
+#: invalidation hook ever firing.  CTERelationRef / UnionLoopRef are
+#: pointers, not sources: their definitions are children of the enclosing
+#: WithCTE / UnionLoop node, so the walk reaches the real leaves anyway.
+_RESULT_CACHE_LEAVES = frozenset(
+    {"LocalRelation", "LogicalRDD", "OneRowRelation", "Range",
+     "InMemoryRelation", "CTERelationRef", "UnionLoopRef"}
+)
+
+
+class _PlanFacts(NamedTuple):
+    """What the caches need to know about one analyzed plan.
+
+    - ``names``: lower-cased name of every ``SubqueryAlias`` — temp views,
+      catalog tables, and the views and tables inside SQL view bodies.
+      Invalidation drops an entry whose names contain the changed view.
+    - ``replayable``: no expression whose value Spark fixes once per
+      analyzed plan — nondeterministic ones (``rand()``, ``uuid()``: the
+      seed is picked during analysis) and current-time ones
+      (``current_timestamp()``, ``current_time()``: folded to a literal on
+      the plan's first optimization; the reference rebuilt
+      DirectCurrentTimestamp for this, DirectSessionStateBuilder.scala:
+      134-155).  Only a replayable plan may be cached and re-executed.
+    - ``in_memory``: every leaf is in ``_RESULT_CACHE_LEAVES``, so the
+      data can only change through the facade's invalidation hooks.
+    """
+
+    names: frozenset
+    replayable: bool
+    in_memory: bool
+
+
+def _plan_facts(df: DataFrame) -> _PlanFacts:
+    """One walk of ``df``'s analyzed plan and of every subquery plan inside
+    it (``subqueriesAll``), which also covers view bodies, since analysis
+    inlines them."""
+    analyzed = df._jdf.queryExecution().analyzed()
+    roots = [analyzed]
+    it = analyzed.subqueriesAll().iterator()
+    while it.hasNext():
+        roots.append(it.next())
+    current_like = (
+        df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
+    )
+    names: set[str] = set()
+    replayable = in_memory = True
+    for root in roots:
+        replayable = (
+            replayable
+            and root.deterministic()
+            and not root.containsPattern(current_like)
+        )
+        stack = [root]
+        while stack:
+            p = stack.pop()
+            node = p.nodeName()
+            if node == "SubqueryAlias":
+                names.add(p.identifier().name().lower())
+            kids = p.children().iterator()
+            leaf = not kids.hasNext()
+            while kids.hasNext():
+                stack.append(kids.next())
+            if leaf and node not in _RESULT_CACHE_LEAVES:
+                in_memory = False
+    return _PlanFacts(frozenset(names), replayable, in_memory)
 
 
 def _walk_plan_metrics(jnode, out: list[dict[str, Any]]) -> None:
@@ -469,8 +517,9 @@ class _LRU:
             self.bytes = 0
 
     def drop_where(self, predicate) -> None:
+        """Evict every entry for which ``predicate(key, value)`` is true."""
         with self._lock:
-            for key in [k for k in self._data if predicate(k)]:
+            for key in [k for k, v in self._data.items() if predicate(k, v)]:
                 self._evict_locked(key)
 
 
@@ -517,9 +566,9 @@ class Engine:
         #: deterministic query over unchanged temp views.  Entries are
         #: dropped by exactly the invalidation that drops cached plans
         #: (view re-register / view DDL / function DDL), and a statement
-        #: is eligible only when the statement text AND the analyzed plan
-        #: are deterministic, non-streaming, and read no files (file data
-        #: can change outside the facade's view of the world).
+        #: is eligible only when its analyzed plan is replayable and reads
+        #: in-memory leaves only (``_PlanFacts``): file or external data can
+        #: change outside the facade's view of the world.
         #: entry cap AND a ~256 MiB approximate byte budget (VERDICT
         #: r11 #7): the row cap alone lets a thousand wide-row results
         #: pin real driver memory.
@@ -614,44 +663,20 @@ class Engine:
         return qualified.replace(".", "__")
 
     def _drop_cached_plans_referencing(self, name: str) -> None:
-        """Evict cached plans whose SQL text references view ``name``.
+        """Evict cached plans and results whose analyzed plan reads view
+        ``name``, directly or through a view body (``_PlanFacts.names``).
 
-        Conservative (over-invalidation re-analyzes, never corrupts) but
-        bounded in two ways the naive ``\\bname\\b`` scan wasn't:
-
-        - *Quoted-span aware*: the name inside a single-quoted string
-          literal in an unrelated cached query is data, not a reference —
-          it no longer evicts.  Backtick-quoted identifiers, by contrast,
-          ARE references, so their inner text is kept for matching (a
-          cached ``SELECT * FROM `v```` must still drop when ``v``
-          changes).
-        - *Spelling-normalized*: the DDL name is stripped of backticks, and
-          a qualified ``db.view`` invalidates on the qualified spelling,
-          the bare view name, and the mangled ``db__view`` rewrite — so a
-          cached query referencing any spelling is dropped regardless of
-          how the DDL spelled it.
+        The name is normalized first: backticks stripped, and a qualified
+        ``db.view`` also matches its bare view name and the mangled
+        ``db__view`` it is registered under, so every spelling of the view
+        drops the entry.  Over-invalidation (an alias or CTE that happens
+        to share the name) re-analyzes; it never corrupts.
         """
-        norm = name.replace("`", "")
-        variants = {norm}
-        if "." in norm:
-            variants.add(norm.rsplit(".", 1)[-1])
-            variants.add(self._mangle(norm))
-        pattern = re.compile(
-            "|".join(rf"\b{re.escape(v)}\b" for v in sorted(variants)),
-            re.IGNORECASE,
-        )
+        norm = name.replace("`", "").lower()
+        variants = {norm, norm.rsplit(".", 1)[-1], self._mangle(norm)}
 
-        def _matchable(key: str) -> str:
-            # Drop string-literal content; unwrap backtick identifiers.
-            return _QUOTED_SPAN_RE.sub(
-                lambda m: f" {m.group(0)[1:-1]} "
-                if m.group(0).startswith("`")
-                else "''",
-                key,
-            )
-
-        def _references(key: str) -> bool:
-            return pattern.search(_matchable(key)) is not None
+        def _references(df: DataFrame) -> bool:
+            return not variants.isdisjoint(df.__dict__["_dss_plan_facts"].names)
 
         # Drop-then-bump, all under the same lock the epoch-guarded puts
         # take (plan cache in dataframe(), result cache in sql_directly).
@@ -670,8 +695,8 @@ class Engine:
         #   capture the new epoch, win the cache lock before the drop,
         #   execute the stale plan, and cache its rows at the new epoch.
         with self._lock:
-            self._plan_cache.drop_where(_references)
-            self._result_cache.drop_where(_references)
+            self._plan_cache.drop_where(lambda _, df: _references(df))
+            self._result_cache.drop_where(lambda _, hit: _references(hit[2]))
             self._invalidation_epoch += 1
 
     def _rewrite_qualified(self, sql: str) -> str:
@@ -710,12 +735,14 @@ class Engine:
     def dataframe(self, sql: str) -> DataFrame:
         """Analyzed (lazy) DataFrame for a SQL text, via the plan cache.
 
-        Time-dependent statements bypass the cache: Spark folds
-        ``current_timestamp``/``current_date`` to a literal during analysis,
-        so re-using an analyzed plan would freeze time across executions —
-        exactly the bug the reference built DirectCurrentTimestamp to avoid
-        (DirectCurrentDate.scala:26-50).  Re-analyzing per call restores
-        one-value-per-execution semantics, stable across the whole plan.
+        A query is analyzed once per cache miss and its plan walked once
+        for its ``_PlanFacts``, memoized on the DataFrame.  Only a
+        replayable plan is cached: re-executing one that reads the current
+        time or a seeded random value would freeze that value across
+        executions — the bug the reference built DirectCurrentTimestamp to
+        avoid (DirectCurrentDate.scala:26-50).  Such a statement is
+        re-analyzed per call, so each execution gets one value, stable
+        across the whole plan.
         """
         ddl = _FUNCTION_DDL_RE.match(sql)
         if ddl:
@@ -731,8 +758,6 @@ class Engine:
             return df
         if not _QUERY_START_RE.match(sql):
             return self.spark.sql(self._rewrite_qualified(sql))
-        if self._is_nondeterministic(sql):
-            return self.spark.sql(self._rewrite_qualified(sql))
         key = self._cache_key(sql)
         df = self._plan_cache.get(key)
         if df is None:
@@ -746,9 +771,11 @@ class Engine:
             # invalidation and feed post-invalidation result caching.
             epoch = self._invalidation_epoch
             df = self.spark.sql(self._rewrite_qualified(sql))
-            with self._lock:
-                if epoch == self._invalidation_epoch:
-                    self._plan_cache.put(key, df)
+            facts = df.__dict__["_dss_plan_facts"] = _plan_facts(df)
+            if facts.replayable:
+                with self._lock:
+                    if epoch == self._invalidation_epoch:
+                        self._plan_cache.put(key, df)
         return df
 
     def sql_directly(self, sql: str) -> DataTable:
@@ -756,20 +783,24 @@ class Engine:
         sqlDirectly, DirectSparkSession.scala:88-127).
 
         Warm repeated queries take the result cache (see ``__init__``):
-        a deterministic, file-free, non-streaming query whose referenced
-        views haven't changed returns its previously materialized rows
+        a replayable query over in-memory leaves only, whose referenced
+        views haven't changed, returns its previously materialized rows
         without re-running the Spark job — the engine's answer to the
         reference's same-thread iterator over a cached single-node plan.
         """
         # Epoch captured BEFORE the plan-cache lookup: an invalidation
         # that lands anywhere between the lookup and the put (including
-        # during the cacheable check or the stage-rollup py4j reads)
-        # must fail the put check, or a result computed from the displaced
-        # plan could poison the cache until the NEXT invalidation.
+        # during the stage-rollup py4j reads) must fail the put check, or
+        # a result computed from the displaced plan could poison the cache
+        # until the NEXT invalidation.
         epoch = self._invalidation_epoch
         df = self.dataframe(sql)  # plan-cache get: stats + invalidation
-        cacheable = self.result_cache_enabled and self._statement_result_cacheable(
-            sql
+        facts = df.__dict__.get("_dss_plan_facts")  # None for a command
+        cacheable = (
+            self.result_cache_enabled
+            and facts is not None
+            and facts.replayable
+            and facts.in_memory
         )
         key = self._cache_key(sql)
         if cacheable:
@@ -792,11 +823,7 @@ class Engine:
             wall = time.perf_counter() - t0
         self._last_execution = (df, wall, len(table.data), tag, None)
         self._record_call(sql, wall, len(table.data), False)
-        if (
-            cacheable
-            and len(table.data) <= self.result_cache_max_rows
-            and self._plan_result_cacheable(df)
-        ):
+        if cacheable and len(table.data) <= self.result_cache_max_rows:
             # The execution rollup is frozen AT PUT TIME: the status store
             # evicts old jobs, so a hit long after the put could no longer
             # read the materializing call's stages.
@@ -846,78 +873,6 @@ class Engine:
         if n <= 0:
             return []  # list[-0:] would be the WHOLE history
         return list(self._call_history)[-n:]
-
-    def _statement_result_cacheable(self, sql: str) -> bool:
-        """Statement-text gate for the result cache: queries only, no
-        time/random functions (same regexes that gate the plan cache)."""
-        return bool(_QUERY_START_RE.match(sql)) and not self._is_nondeterministic(
-            sql
-        )
-
-    #: Analyzed-plan leaf classes whose content cannot change outside the
-    #: facade's invalidation hooks.  LocalRelation/LogicalRDD is what
-    #: register_table/createDataFrame temp views bind to (driver-local
-    #: data, re-bound only through register_table, which sweeps the
-    #: caches); InMemoryRelation is a facade-cached materialization.
-    #: Everything else — notably LogicalRelation, which wraps EXTERNAL
-    #: relations like JDBC with an empty inputFiles() — is rejected: an
-    #: external database can mutate with no invalidation hook ever firing.
-    #: CTERelationRef / UnionLoopRef are pointers, not sources: their
-    #: definitions are children of the enclosing WithCTE / UnionLoop node
-    #: (cteDefs :+ plan), so the walk inspects the real leaves through
-    #: them — the refs themselves carry no external state.
-    _RESULT_CACHE_LEAVES = frozenset(
-        {"LocalRelation", "LogicalRDD", "OneRowRelation", "Range",
-         "InMemoryRelation", "CTERelationRef", "UnionLoopRef"}
-    )
-
-    def _in_memory_leaves_only(self, df: DataFrame) -> bool:
-        """True iff every leaf of the analyzed plan — including leaves
-        inside subquery expressions (``subqueriesAll``) — is a known
-        in-memory relation (see ``_RESULT_CACHE_LEAVES``)."""
-        roots = [df._jdf.queryExecution().analyzed()]
-        it = roots[0].subqueriesAll().iterator()
-        while it.hasNext():
-            roots.append(it.next())
-        for root in roots:
-            stack = [root]
-            while stack:
-                p = stack.pop()
-                kids = p.children().iterator()
-                n = 0
-                while kids.hasNext():
-                    stack.append(kids.next())
-                    n += 1
-                if n == 0 and (
-                    p.getClass().getSimpleName().rstrip("$")
-                    not in self._RESULT_CACHE_LEAVES
-                ):
-                    return False
-        return True
-
-    def _plan_result_cacheable(self, df: DataFrame) -> bool:
-        """Plan-level gate, computed once per cached-plan object: the
-        ANALYZED plan must be fully deterministic (catches rand()/uuid()
-        hidden inside a referenced view body, which the statement regex
-        can't see), non-streaming, read no files (file-backed data can
-        change on disk outside the facade's invalidation hooks), and
-        bottom out ONLY in known in-memory leaf relations — an empty
-        ``inputFiles()`` alone is not proof of immutability, because
-        external relations (e.g. JDBC) report no files yet re-read
-        mutable external state on every execution."""
-        ok = df.__dict__.get("_dss_result_ok")
-        if ok is None:
-            try:
-                ok = (
-                    not df.isStreaming
-                    and not df.inputFiles()
-                    and bool(df._jdf.queryExecution().analyzed().deterministic())
-                    and self._in_memory_leaves_only(df)
-                )
-            except Exception:
-                ok = False
-            df.__dict__["_dss_result_ok"] = ok
-        return ok
 
     def sql(self, sql: str) -> DataFrame:
         """Escape hatch: plain lazy Spark SQL, uncached."""
@@ -977,9 +932,6 @@ class Engine:
                 displaced.unpersist()
         self._drop_cached_plans_referencing(name)
         return count
-
-    def _is_nondeterministic(self, sql: str) -> bool:
-        return _NONDETERMINISTIC_RE.search(sql) is not None
 
     def _register_function_ddl(
         self, sql: str, name: str, cls: str, jar: str | None

@@ -93,16 +93,6 @@ def _balanced_arg(text: str, open_idx: int) -> str | None:
     return None
 
 
-def _sum_args(text: str) -> list[str]:
-    """Balanced argument of every SUM( / sum( call in ``text``."""
-    out = []
-    for m in re.finditer(r"\bsum\s*\(", text, re.IGNORECASE):
-        arg = _balanced_arg(text, m.end() - 1)
-        if arg is not None:
-            out.append(arg.strip())
-    return out
-
-
 def _outermost_cast_type(arg: str) -> str | None:
     """If ``arg``'s outermost construct is CAST(x AS T), return T
     (lowercased, parens stripped); else None."""

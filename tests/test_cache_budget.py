@@ -43,7 +43,7 @@ def test_lru_byte_accounting_through_replace_drop_clear():
     lru.put("k", "v2", nbytes=300)  # replace: old weight released
     assert lru.bytes == 300
     lru.put("x", "v", nbytes=50)
-    lru.drop_where(lambda key: key == "k")
+    lru.drop_where(lambda key, _: key == "k")
     assert lru.bytes == 50
     lru.clear()
     assert lru.bytes == 0 and len(lru._data) == 0

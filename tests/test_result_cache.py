@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import pytest
 
+from direct_spark_sql_spark.session import _plan_facts
 from tests.conftest import SF_DIR
 
 
@@ -59,8 +60,8 @@ def test_nondeterministic_statement_never_result_cached(eng):
 
 
 def test_nondeterministic_view_body_never_result_cached(eng):
-    """rand() hidden inside a view body is invisible to the statement
-    regex — the analyzed-plan determinism gate must catch it."""
+    """rand() hidden inside a view body is invisible in the statement
+    text — the analyzed-plan replayability fact must catch it."""
     eng.register_table(
         "rc_rand_src", eng.spark.sql("SELECT id, rand() AS r FROM range(100)")
     )
@@ -70,7 +71,7 @@ def test_nondeterministic_view_body_never_result_cached(eng):
     # the analyzed-plan gate must have refused to cache: second call is a
     # real execution, not a result-cache hit
     assert eng.last_metrics()["result_cache_hit"] is False
-    assert eng._plan_result_cacheable(eng.dataframe(sql)) is False
+    assert _plan_facts(eng.dataframe(sql)).replayable is False
 
 
 def test_file_backed_query_never_result_cached(eng):
@@ -582,19 +583,17 @@ def test_result_cache_requires_in_memory_leaves(eng):
 
     path = os.path.join(SF_DIR, "region.parquet")
     file_df = eng.spark.read.parquet(path)
-    assert eng._in_memory_leaves_only(file_df) is False
-    assert eng._plan_result_cacheable(file_df) is False
+    assert _plan_facts(file_df).in_memory is False
 
     eng.register_table("rc_mem", [{"a": 1}], "a BIGINT")
     mem_df = eng.spark.sql("SELECT * FROM rc_mem")
-    assert eng._in_memory_leaves_only(mem_df) is True
-    assert eng._plan_result_cacheable(mem_df) is True
+    assert _plan_facts(mem_df) == (frozenset({"rc_mem"}), True, True)
 
     # a non-in-memory leaf hiding inside a scalar subquery is caught too
     sub_df = eng.spark.sql(
         f"SELECT (SELECT count(*) FROM parquet.`{path}`) AS c"
     )
-    assert eng._in_memory_leaves_only(sub_df) is False
+    assert _plan_facts(sub_df).in_memory is False
 
     # CTE refs are pointers, not sources: a CTE over in-memory data stays
     # eligible (the defs are walked through WithCTE), while a CTE over a
@@ -602,12 +601,12 @@ def test_result_cache_requires_in_memory_leaves(eng):
     cte_mem = eng.spark.sql(
         "WITH c AS (SELECT a FROM rc_mem) SELECT count(*) AS n FROM c"
     )
-    assert eng._in_memory_leaves_only(cte_mem) is True
+    assert _plan_facts(cte_mem).in_memory is True
     cte_file = eng.spark.sql(
         f"WITH c AS (SELECT * FROM parquet.`{path}`) "
         "SELECT count(*) AS n FROM c"
     )
-    assert eng._in_memory_leaves_only(cte_file) is False
+    assert _plan_facts(cte_file).in_memory is False
 
 
 def test_metrics_history_zero_and_negative_n(eng):

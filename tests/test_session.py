@@ -15,6 +15,8 @@ from decimal import Decimal
 
 import pytest
 
+from direct_spark_sql_spark.session import _plan_facts
+
 #: reference fixture A1/A2 (DirectExecSuite.scala:31-38)
 PEOPLE = [
     {"name": "a", "age": 2, "genda": 0},
@@ -233,15 +235,32 @@ def test_qualified_rewrite_identifier_boundaries(people_engine):
     assert _rows(t2) == [{"n": 5}]
 
 
+def _register_probe_views(engine):
+    """The small views the replayability probes below read from."""
+    engine.register_table(
+        "t",
+        [{"known": 1, "renowned": "x", "col": "2024-01-01 00:00:00",
+          "operand": 2, "brand": "b", "arr": [1, 2, 3], "x": 3}],
+        "known int, renowned string, col string, operand int, brand string, "
+        "arr array<int>, x int",
+    )
+    engine.register_table("strands", [{"rand": 0.5}], "rand double")
+
+
+def _replayable(engine, sql):
+    return _plan_facts(engine.spark.sql(sql)).replayable
+
+
 def test_uses_time_word_boundaries(engine):
     """Identifiers containing time-function substrings (``known``) must not
     bypass the plan cache; genuine time functions must."""
-    assert not engine._is_nondeterministic("SELECT known FROM t WHERE renowned = 'nowhere'")
-    assert not engine._is_nondeterministic("SELECT unix_timestamp(col) FROM t")
-    assert engine._is_nondeterministic("SELECT now()")
-    assert engine._is_nondeterministic("SELECT unix_timestamp( )")
-    assert engine._is_nondeterministic("SELECT CURRENT_DATE")
-    assert engine._is_nondeterministic("select current_timestamp() as ts")
+    _register_probe_views(engine)
+    assert _replayable(engine, "SELECT known FROM t WHERE renowned = 'nowhere'")
+    assert _replayable(engine, "SELECT unix_timestamp(col) FROM t")
+    assert not _replayable(engine, "SELECT now()")
+    assert not _replayable(engine, "SELECT unix_timestamp( )")
+    assert not _replayable(engine, "SELECT CURRENT_DATE")
+    assert not _replayable(engine, "select current_timestamp() as ts")
     # end-to-end: a 'known'-containing statement is served from the cache
     engine.register_table("known_t", [{"known": 1}], "known int")
     sql = "SELECT known FROM known_t"
@@ -261,6 +280,29 @@ def test_cached_plan_sees_fresh_view_data(engine):
     assert _rows(engine.sql_directly(sql)) == [{"s": 1}]
     engine.register_table("fresh_t", [{"x": 5}, {"x": 6}], "x int")
     assert _rows(engine.sql_directly(sql)) == [{"s": 11}]
+
+
+def test_view_over_reregistered_table_sees_fresh_data(engine):
+    """A SQL view's body is inlined at analysis, so a cached statement over
+    the view has bound the table the body reads: re-registering that
+    table must drop the statement too, though its text never names it."""
+    engine.register_table("vb_base", [{"x": 1}], "x int")
+    engine.sql_directly("CREATE TEMP VIEW vb_v AS SELECT x FROM vb_base")
+    try:
+        sql = "SELECT sum(x) AS s FROM vb_v"
+        assert _rows(engine.sql_directly(sql)) == [{"s": 1}]
+        engine.register_table("vb_base", [{"x": 5}, {"x": 6}], "x int")
+        assert _rows(engine.sql_directly(sql)) == [{"s": 11}]
+    finally:
+        engine.sql_directly("DROP VIEW vb_v")
+
+
+def test_time_function_in_string_literal_is_plan_cached(engine):
+    """A time function's name inside a string literal, and a column
+    aliased ``now``, read no clock: the statement stays plan-cached."""
+    engine.register_table("lit_base", [{"x": 1}], "x int")
+    sql = "SELECT 'current_timestamp()' AS s, x AS now FROM lit_base"
+    assert engine.dataframe(sql) is engine.dataframe(sql)
 
 
 def test_namespace_isolates_cache(engine):
@@ -290,6 +332,43 @@ def test_time_changes_across_executions(engine):
     time.sleep(1.1)
     t2 = _rows(engine.sql_directly("SELECT unix_timestamp() AS ts"))[0]["ts"]
     assert t2 > t1
+
+
+def test_current_time_changes_across_executions(engine):
+    t1 = _rows(engine.sql_directly("SELECT current_time() AS t"))[0]["t"]
+    time.sleep(1.1)
+    t2 = _rows(engine.sql_directly("SELECT current_time() AS t"))[0]["t"]
+    assert t1 != t2
+
+
+def test_time_in_view_body_changes_across_executions(engine):
+    """``current_timestamp()`` inside a view body is invisible in the
+    statement text; the plan must still be re-analyzed, and the result
+    never served from the result cache."""
+    engine.sql_directly(
+        "CREATE OR REPLACE TEMP VIEW tv_now AS SELECT current_timestamp() AS ts"
+    )
+    try:
+        sql = "SELECT ts FROM tv_now"
+        t1 = _rows(engine.sql_directly(sql))[0]["ts"]
+        assert engine.last_metrics()["result_cache_hit"] is False
+        time.sleep(1.2)
+        t2 = _rows(engine.sql_directly(sql))[0]["ts"]
+        assert engine.last_metrics()["result_cache_hit"] is False
+        assert (t2 - t1).total_seconds() > 1
+    finally:
+        engine.sql_directly("DROP VIEW tv_now")
+
+
+def test_rand_in_view_body_changes_across_executions(engine):
+    engine.sql_directly("CREATE OR REPLACE TEMP VIEW tv_rand AS SELECT rand() AS r")
+    try:
+        sql = "SELECT r FROM tv_rand"
+        r1 = _rows(engine.sql_directly(sql))[0]["r"]
+        r2 = _rows(engine.sql_directly(sql))[0]["r"]
+        assert r1 != r2
+    finally:
+        engine.sql_directly("DROP VIEW tv_rand")
 
 
 def test_time_stable_within_execution(engine):
@@ -549,15 +628,16 @@ def test_nondeterministic_statements_bypass_plan_cache(engine):
     would return identical "random" values (the randomness analogue of
     the DirectCurrentDate time bug, DirectSessionStateBuilder.scala:
     134-155)."""
-    # unit level: the detector
-    assert engine._is_nondeterministic("SELECT uuid() AS u")
-    assert engine._is_nondeterministic("SELECT rand() AS r")
-    assert engine._is_nondeterministic("SELECT randn(), x FROM t")
-    assert engine._is_nondeterministic("SELECT shuffle(arr) FROM t")
-    assert engine._is_nondeterministic("SELECT monotonically_increasing_id()")
+    # plan level: the replayability fact
+    _register_probe_views(engine)
+    assert not _replayable(engine, "SELECT uuid() AS u")
+    assert not _replayable(engine, "SELECT rand() AS r")
+    assert not _replayable(engine, "SELECT randn(), x FROM t")
+    assert not _replayable(engine, "SELECT shuffle(arr) FROM t")
+    assert not _replayable(engine, "SELECT monotonically_increasing_id()")
     # identifiers that merely contain the substrings stay cacheable
-    assert not engine._is_nondeterministic("SELECT operand, brand FROM t")
-    assert not engine._is_nondeterministic("SELECT rand FROM strands")
+    assert _replayable(engine, "SELECT operand, brand FROM t")
+    assert _replayable(engine, "SELECT rand FROM strands")
     # end-to-end: two executions differ
     u1 = engine.sql_directly("SELECT uuid() AS u").to_list_of_dicts()[0]["u"]
     u2 = engine.sql_directly("SELECT uuid() AS u").to_list_of_dicts()[0]["u"]

@@ -267,7 +267,8 @@ def test_skew_fragile_folds_into_regression_count():
 def test_scale_cohort_rotation_priority():
     """The 10× scale tier's per-round cohort: last-run-dropped queries
     first, then never-probed, then least-recently probed; everything
-    rotated out is reported by name (no silent caps)."""
+    rotated out is reported by name (no silent caps), also when the
+    previous run's cohort is reused."""
     from types import SimpleNamespace
 
     from bench import pick_scale_cohort
@@ -286,6 +287,13 @@ def test_scale_cohort_rotation_priority():
     # cap >= len: everything probed, nothing rotated out
     cohort, rotated = pick_scale_cohort(qs, set(), hist, cap=10)
     assert len(cohort) == 5 and rotated == []
+    # a reused cohort (previous run at another core count) is still cut
+    # to cap, in priority order, and the cut names are reported
+    cohort, rotated = pick_scale_cohort(
+        qs, {"d"}, hist, cap=2, reuse={"a", "b", "d"}
+    )
+    assert [q.name for q in cohort] == ["d", "b"]
+    assert rotated == ["a", "c", "e"]
 
 
 def test_video_fingerprint_long_video_int64_safe(spark):
