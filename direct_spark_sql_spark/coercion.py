@@ -89,12 +89,14 @@ def coerce_value(value: Any, data_type: T.DataType) -> Any:
     if isinstance(data_type, T.TimestampType):
         if isinstance(value, dt.datetime):
             return value
-        if isinstance(value, (int, float)):  # epoch millis, UTC (see module doc)
-            return (_EPOCH + dt.timedelta(milliseconds=int(value))).replace(tzinfo=None)
+        # Epoch millis become an aware UTC datetime (see module doc): a
+        # naive one would be read as process-local time by toInternal.
+        if isinstance(value, (int, float)):
+            return _EPOCH + dt.timedelta(milliseconds=int(value))
         if isinstance(value, str):
             v = value.strip()
             if v.isdigit():
-                return (_EPOCH + dt.timedelta(milliseconds=int(v))).replace(tzinfo=None)
+                return _EPOCH + dt.timedelta(milliseconds=int(v))
             return dt.datetime.fromisoformat(v)
         raise ValueError(f"cannot coerce {type(value).__name__} to timestamp")
 

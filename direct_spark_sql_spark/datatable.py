@@ -3,6 +3,12 @@
 input/output unit of the session facade's ``sql_directly``, convertible to
 and from list-of-dicts with lenient per-field coercion.
 
+Ingress is Arrow → ``LocalRelation``, the reference's in-plan binding
+(``LocalRelation(schema.toAttributes, rows)``, DirectSparkSession.scala:
+132-135): ``to_dataframe`` builds a ``pyarrow.Table`` from the rows and
+hands it to ``createDataFrame``, so a query over the view scans rows the
+plan already holds and starts no Python worker.
+
 At cluster scale the materialized form is only for *result* surfaces (the
 reference collects every result anyway — DirectSparkSession.scala:118-120);
 pipelines should stay on DataFrames and only land in a DataTable at the
@@ -13,7 +19,10 @@ from __future__ import annotations
 
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from direct_spark_sql_spark.coercion import coerce_row
 
@@ -66,7 +75,29 @@ class DataTable:
             yield row.asDict(recursive=True)
 
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.data, self.schema)
+        """Bind the rows as an in-plan ``LocalRelation`` built from Arrow.
+
+        Each row goes through the steps ``createDataFrame(list[Row])``
+        runs — its verifier (nullability, type, integer range), its
+        converter (structs to tuples, values of STRING fields to ``str``)
+        and ``schema.toInternal`` — so the values are the ones that path
+        stores.  TIMESTAMP columns travel as ``timestamp[us, tz=UTC]``
+        holding those UTC microseconds: a naive datetime keeps meaning
+        process-local time.  Arrow rejects a DECIMAL that would lose
+        digits (``ValueError``)."""
+        verify = _make_type_verifier(self.schema)
+        convert = _create_converter(self.schema)
+        rows = []
+        for row in self.data:
+            verify(row)
+            rows.append(self.schema.toInternal(convert(row)))
+        arrow_schema = to_arrow_schema(self.schema)
+        columns = [
+            pa.array([row[i] for row in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ]
+        table = pa.Table.from_arrays(columns, schema=arrow_schema)
+        return spark.createDataFrame(table, self.schema)
 
     # -- dunder -------------------------------------------------------------
 

@@ -361,7 +361,12 @@ def _dsir_feat_buckets(
     ∪ bigrams, h64 % n_buckets, multiplicity preserved, ONE map-only
     pass (no explode, no aggregate, no shuffle).  Documents with zero
     features are dropped, exactly as the exploded form's empty arrays
-    produced no rows (NULL text → NULL array → also dropped)."""
+    produced no rows (NULL text → NULL array → also dropped).
+
+    Size bound: one entry per feature occurrence, so a document of
+    ``n ≥ 2`` tokens holds ``n`` unigrams + ``n − 1`` bigrams = ``2n − 1``
+    entries (``n`` for ``n < 2``).  The array grows with the document, not
+    with ``n_buckets``; a pathologically long document is one large row."""
     from direct_spark_sql_spark.operators.dedup import token_windows
     from direct_spark_sql_spark.operators.text import tokens
 

@@ -1501,11 +1501,13 @@ def ivf_pq_topk(
     probe (:func:`_ivf_probe` — K-row job, the FAISS-coordinator
     pattern), and :func:`pq_adc_topk`'s encode/ADC arithmetic verbatim.
 
-    ``assigned`` (a (vec_id, cell_id, ...) DataFrame, e.g. the
-    partitioned index :func:`ivf_build` materializes) skips the inline
-    assignment — the build/probe split every repeated query wants: the
-    cell filter then prunes index partitions instead of re-scoring the
-    corpus against every centroid.
+    ``assigned`` (e.g. the partitioned index :func:`ivf_build`
+    materializes) skips the inline assignment — the build/probe split
+    every repeated query wants: the cell filter then prunes index
+    partitions instead of re-scoring the corpus against every centroid.
+    It must carry three columns: ``id_col``, ``cell_id`` and ``emb_col``
+    (the ADC pass reads the vectors from it, not from ``df``).  A missing
+    one raises ``ValueError`` naming it, before any job runs.
 
     100 TB shape: everything downstream of the probe touches only the
     probed cells (at scale the assignment is the partitioned index
@@ -1549,6 +1551,10 @@ def ivf_pq_topk(
     Returns the ``k`` best (vec_id, adc_dist, cosine) by exact cosine
     descending, ties on id.
     """
+    if assigned is not None:
+        missing = [c for c in (id_col, "cell_id", emb_col) if c not in assigned.columns]
+        if missing:
+            raise ValueError(f"ivf_pq_topk: assigned lacks column(s) {missing}")
     sub = dims // m
     mx = max(n_cells, n_codes)
     meta = {

@@ -183,9 +183,10 @@ _FUNCTION_DDL_RE = re.compile(
 
 
 #: Analyzed-plan leaf classes whose content cannot change outside the
-#: facade's invalidation hooks.  LocalRelation/LogicalRDD is what
-#: register_table/createDataFrame temp views bind to (driver-local data,
-#: re-bound only through register_table, which sweeps the caches);
+#: facade's invalidation hooks.  LocalRelation is what register_table
+#: binds list-of-dicts and DataTable input to, LogicalRDD what a
+#: registered ``createDataFrame(list)`` DataFrame binds to (driver-local
+#: data, re-bound only through register_table, which sweeps the caches);
 #: InMemoryRelation is a facade-cached materialization.  Everything else —
 #: file scans, streaming sources, and notably LogicalRelation wrapping an
 #: EXTERNAL relation like JDBC — is rejected: that data can change with no
@@ -629,12 +630,13 @@ class Engine:
                     raise ValueError("schema is required for list-of-dicts input")
                 table = DataTable.from_list_of_dicts(rows, schema)
             df = table.to_dataframe(self.spark)
-            # Driver-local ingress arrives via sc.parallelize, which slices
-            # tiny lists across defaultParallelism (32 on the target rig)
-            # partitions — dozens of near-empty scan tasks per execution.
-            # Right-size to ~50k rows/partition so small reference tables
-            # scan in one task (the dominant term in warm facade latency)
-            # while genuinely large ingress keeps its parallelism.
+            # Driver-local ingress binds an Arrow-built LocalRelation, whose
+            # LocalTableScanExec slices even tiny tables across
+            # defaultParallelism (32 on the target rig) partitions — dozens
+            # of near-empty scan tasks per execution.  Right-size to ~50k
+            # rows/partition so small reference tables scan in one task
+            # (the dominant term in warm facade latency) while genuinely
+            # large ingress keeps its parallelism.
             slices = max(
                 1,
                 min(

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from direct_spark_sql_spark.operators.analytics import cohort_retention, funnel_counts
@@ -212,6 +213,24 @@ def test_ivf_pq_ragged_vector_stays_out_of_topk(spark):
     assert len(got) == 3
     assert ragged not in [r.vec_id for r in got]
     assert all(r.adc_dist is not None for r in got)
+
+
+@pytest.mark.parametrize("drop", ["vec_id", "cell_id", "embedding"])
+def test_ivf_pq_assigned_missing_column_fails_before_any_job(spark, drop):
+    """``assigned`` must carry (id_col, cell_id, emb_col); a slim one fails
+    with a ValueError naming the column, and launches no Spark job."""
+    from direct_spark_sql_spark.operators.similarity import ivf_pq_topk
+    from direct_spark_sql_spark.session import _job_tag, _stage_rollup
+
+    df = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)], "vec_id long, embedding array<double>"
+    )
+    assigned = df.withColumn("cell_id", F.lit(1).cast("long")).drop(drop)
+    with _job_tag(spark.sparkContext) as tag:
+        with pytest.raises(ValueError, match=drop):
+            ivf_pq_topk(df, n_cells=1, nprobe=1, n_codes=2, m=1, dims=2,
+                        assigned=assigned)
+    assert _stage_rollup(spark.sparkContext, tag)["jobs"] == 0
 
 
 def test_distributed_prefix_sum_equals_serial(spark):

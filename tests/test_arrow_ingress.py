@@ -1,0 +1,143 @@
+"""Driver-local ingress binds an Arrow-built ``LocalRelation``.
+
+The reference binds registered rows in-plan (``LocalRelation(schema.
+toAttributes, rows)``, DirectSparkSession.scala:132-135).  These tests pin
+that ``register_table`` does the same — no Python worker in the executed
+lineage — and that the values, errors and empty-input behaviour match the
+``createDataFrame(list[Row])`` path it replaced.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import os
+import time
+from contextlib import contextmanager
+from decimal import Decimal
+
+import pytest
+from pyspark.sql import Row, types as T
+
+from direct_spark_sql_spark.datatable import DataTable
+from direct_spark_sql_spark.session import _plan_facts
+
+
+@contextmanager
+def _process_tz(tz: str | None):
+    """Run the body with the process TZ set to ``tz`` (None: unchanged)."""
+    if tz is None:
+        yield
+        return
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = tz
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
+def _leaf_classes(jplan) -> list[str]:
+    leaves = jplan.collectLeaves()
+    return [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+
+
+def test_registered_rows_lineage_has_no_python_rdd(engine):
+    engine.register_table(
+        "ai_lineage", [{"a": i, "s": str(i)} for i in range(100)], "a INT, s STRING"
+    )
+    qe = engine.spark.table("ai_lineage")._jdf.queryExecution()
+    lineage = qe.executedPlan().execute().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+
+
+def test_registered_rows_bind_a_local_relation(engine):
+    engine.register_table("ai_leaf", [{"a": 1}, {"a": 2}], "a BIGINT")
+    df = engine.spark.sql("SELECT sum(a) AS s FROM ai_leaf")
+    assert _leaf_classes(df._jdf.queryExecution().analyzed()) == ["LocalRelation"]
+    assert _plan_facts(df).in_memory is True
+
+
+MATRIX_SCHEMA = (
+    "id INT, i INT, b BIGINT, sh SHORT, by BYTE, s STRING, bo BOOLEAN, "
+    "d DOUBLE, f FLOAT, dec DECIMAL(12,3), dt DATE, ts TIMESTAMP, "
+    "ntz TIMESTAMP_NTZ, bin BINARY, arr ARRAY<INT>, m MAP<STRING,DOUBLE>, "
+    "st STRUCT<x: INT, tss: ARRAY<TIMESTAMP>>, iv INTERVAL DAY TO SECOND, "
+    "v VOID"
+)
+
+_EDT = dt.timezone(dt.timedelta(hours=-4))
+
+
+def _matrix_rows() -> list[Row]:
+    names = T.StructType.fromDDL(MATRIX_SCHEMA).names
+
+    def row(**kw):
+        return Row(**{f: kw.get(f) for f in names})
+
+    # DST edges: 2021-03-14 02:30 falls in New York's spring-forward gap,
+    # 2021-11-07 01:30 in its ambiguous fall-back hour; ids 2 and 3 are
+    # tz-aware instants at the same edges.
+    return [
+        row(id=0, i=-(2**31), b=2**63 - 1, sh=-(2**15), by=127, s="héllo",
+            bo=True, d=-1.25e300, f=1.5, dec=Decimal("-123456789.125"),
+            dt=dt.date(1900, 1, 1), ts=dt.datetime(2021, 3, 14, 2, 30),
+            ntz=dt.datetime(2021, 3, 14, 2, 30), bin=b"\x00\xff",
+            arr=[1, None, 3], m={"k": 1.0, "n": None},
+            st=Row(x=1, tss=[dt.datetime(2021, 11, 7, 1, 30), None]),
+            iv=dt.timedelta(days=-3, microseconds=7)),
+        row(id=1, s="", bo=False, d=0.0, f=-0.0,
+            ts=dt.datetime(2021, 11, 7, 1, 30),
+            ntz=dt.datetime(2021, 11, 7, 1, 30, 0, 999_999), bin=b"",
+            arr=[], m={}, st=Row(x=None, tss=[]), iv=dt.timedelta(0)),
+        row(id=2, ts=dt.datetime(2021, 3, 14, 6, 59, 59, tzinfo=dt.timezone.utc),
+            st=Row(x=2, tss=[dt.datetime(2021, 3, 14, 3, 0, tzinfo=_EDT)])),
+        row(id=3, ts=dt.datetime(2021, 11, 7, 1, 30, tzinfo=_EDT),
+            dt=dt.date(2038, 1, 19), dec=Decimal("0.001")),
+        row(id=4),  # every field NULL but the key
+    ]
+
+
+@pytest.mark.parametrize("tz", [None, "America/New_York"])
+def test_type_matrix_matches_row_path(engine, tz):
+    with _process_tz(tz):
+        table = DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
+        engine.register_table("ai_matrix", table)
+        got = engine.sql_directly("SELECT * FROM ai_matrix ORDER BY id").data
+        want = engine.spark.createDataFrame(table.data, table.schema).collect()
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([{"a": None}], "a INT NOT NULL"),
+        ([{"a": 2**31}], "a INT"),
+        ([{"d": "1.234"}], "d DECIMAL(10,2)"),
+    ],
+    ids=["null-in-not-null", "int-out-of-range", "decimal-loses-digits"],
+)
+def test_invalid_rows_raise_value_error(engine, rows, schema):
+    with pytest.raises(ValueError):
+        engine.register_table("ai_invalid", rows, schema)
+
+
+def test_empty_list_registers_zero_rows_with_schema(engine):
+    schema = "a INT, s STRING, ts TIMESTAMP, m MAP<STRING,INT>"
+    engine.register_table("ai_empty", [], schema)
+    t = engine.sql_directly("SELECT * FROM ai_empty")
+    assert len(t) == 0
+    assert t.schema == T.StructType.fromDDL(schema)
+
+
+def test_epoch_millis_timestamp_is_utc_under_local_tz(engine):
+    with _process_tz("America/New_York"):
+        engine.register_table(
+            "ai_epoch", [{"ts": 0}, {"ts": "86400000"}], "ts TIMESTAMP"
+        )
+        t = engine.sql_directly("SELECT unix_millis(ts) AS ms FROM ai_epoch ORDER BY ms")
+    assert t.to_list_of_dicts() == [{"ms": 0}, {"ms": 86_400_000}]

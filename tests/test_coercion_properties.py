@@ -33,10 +33,12 @@ def test_double_from_string_roundtrip(x):
 @given(st.integers(min_value=0, max_value=4_102_444_800_000))  # ≤ year 2100
 def test_epoch_millis_timestamp_is_utc(ms):
     got = coerce_value(ms, T.TimestampType())
-    expect = dt.datetime.fromtimestamp(ms / 1000, tz=dt.timezone.utc).replace(
-        tzinfo=None
+    expect = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc) + dt.timedelta(
+        milliseconds=ms
     )
-    assert abs((got - expect).total_seconds()) < 0.001
+    assert got == expect and got.utcoffset() == dt.timedelta(0)
+    # the instant Spark stores does not depend on the process TZ
+    assert T.TimestampType().toInternal(got) == ms * 1000
 
 
 @given(st.integers(min_value=0, max_value=4_102_444_800_000))
