@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from direct_spark_sql_spark.plans.base import Query, sql_query
+from direct_spark_sql_spark.plans.base import Query, derive_with_confs, sql_query
 from direct_spark_sql_spark.sources.registry import load_table
 
 
@@ -226,22 +226,16 @@ def recursive_cte_tree_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     On a real 100 TB corpus the per-iteration frontier still shuffles
     and spills normally; only the cumulative-row guard is widened.
 
-    The widened limit is scoped to THIS query (ADVICE r11): the conf is
-    live only while the recursion executes — the ≤64-row grouped result
-    is materialized eagerly (localCheckpoint) under the raised limit,
-    and the prior value is restored in a finally, so later queries in
-    the shared session keep the runaway-recursion guard the conf exists
-    for.  Timing stays honest: bench measures spark_fn + materialize
-    together, so the eager execution lands inside the measured window."""
-    prior = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
-    spark.conf.set("spark.sql.cteRecursionRowLimit", "2000000000")
-    try:
-        return sql_query(spark, sf_dir, _RECURSIVE_DEPTH_SPARK).localCheckpoint()
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.cteRecursionRowLimit")
-        else:
-            spark.conf.set("spark.sql.cteRecursionRowLimit", prior)
+    The widened limit is scoped to THIS query (ADVICE r11): the plan is
+    derived on a cloned session (plans/base.py:derive_with_confs), and
+    the DataFrame runs there, so the shared session keeps the
+    runaway-recursion guard the conf exists for, also for concurrent
+    queries."""
+    return derive_with_confs(
+        spark,
+        {"spark.sql.cteRecursionRowLimit": "2000000000"},
+        lambda ns: sql_query(ns, sf_dir, _RECURSIVE_DEPTH_SPARK),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -681,15 +675,10 @@ def join_hint_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     The -1 threshold applies only to this query: the plan is derived on a
     cloned session (plans/base.py:derive_with_confs), so concurrent
     queries on the shared session never observe it."""
-    from direct_spark_sql_spark.plans.base import derive_with_confs
-    from direct_spark_sql_spark.sources.registry import register_star_schema
-
-    def build(ns: SparkSession) -> DataFrame:
-        register_star_schema(ns, sf_dir)
-        return ns.sql(_JOIN_HINT_SPARK)
-
     return derive_with_confs(
-        spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}, build
+        spark,
+        {"spark.sql.autoBroadcastJoinThreshold": "-1"},
+        lambda ns: sql_query(ns, sf_dir, _JOIN_HINT_SPARK),
     )
 
 

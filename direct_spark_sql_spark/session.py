@@ -11,9 +11,9 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
 - ``temp_view(name) -> DataTable``          (reference :139-154)
 - ``set_namespace`` / plan+result LRU cache keyed ``namespace + sql``
   (reference :91-92, :411-415, Guava cache → functools-style OrderedDict LRU);
-  which queries are cached, and which entries a view change drops, is
-  decided from facts of their analyzed plans (``_PlanFacts``), not from
-  the SQL text
+  a statement's kind, whether a query is cached, and which entries a view
+  change drops come from its analyzed plan (``TreePattern.COMMAND``,
+  ``_PlanFacts``), not from the SQL text; any other command drops all
 - ``new_session()`` isolation               (reference :81-86)
 
 Execution-model differences are deliberate (SURVEY.md §7.0): where the
@@ -22,8 +22,8 @@ scheduler, this engine keeps Spark's distributed execution — the config
 preset below enables AQE and keeps shuffle parallelism, because the target
 is 100 TB on a cluster, not single-node latency.  What *is* kept from the
 reference's latency story is the cache design: analyzed-plan reuse keyed by
-(namespace, sql), result caching with invalidation on view registration,
-and per-execution-stable ``now()`` semantics
+(namespace, sql), result caching with invalidation on view registration
+and on commands, and per-execution-stable ``now()`` semantics
 (DirectExecutionContext.scala:47-58): a plan that reads the current time
 is never reused, so each execution folds its own literal.
 """
@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import contextlib
 import itertools
-import os
 import re
 import sys
 import threading
@@ -141,13 +140,9 @@ ENGINE_CONF: dict[str, str] = {
     # fires MORE, never less.  64 MB keeps the sf0.1 base tier (11 MB
     # lineitem) bit-identical in plan; the 30× tier measured q10
     # 2.54 → 1.86 s with might_contain pruning lineitem before its
-    # orderkey shuffle.  Env-overridable for probes.
-    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": (
-        os.environ.get("SPARK_GRAFT_BLOOM_CREATION_SIDE", "512MB")
-    ),
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": (
-        os.environ.get("SPARK_GRAFT_BLOOM_APP_SIDE", "64MB")
-    ),
+    # orderkey shuffle.  ``Engine.builder().config(...)`` overrides both.
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "512MB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "64MB",
 }
 
 #: Quoted spans a qualified-name rewrite must not touch: single-quoted SQL
@@ -155,21 +150,15 @@ ENGINE_CONF: dict[str, str] = {
 _QUOTED_SPAN_RE = re.compile(r"'(?:[^']|'')*'|`(?:[^`]|``)*`")
 
 #: View DDL through the SQL surface (CREATE/DROP/ALTER ... VIEW name).
-#: These mutate what a view name resolves to, so cached analyzed plans
-#: referencing the name must be dropped — the same invalidation contract
-#: register_table() applies (NamedLocalRelation.scala:25-44).
+#: Narrows such a command's invalidation to entries reading the named view,
+#: the contract register_table() applies (NamedLocalRelation.scala:25-44);
+#: any other command drops every entry (``Engine.dataframe``).
 _VIEW_DDL_RE = re.compile(
     r"^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW"
     r"|DROP\s+VIEW(?:\s+IF\s+EXISTS)?"
     r"|ALTER\s+VIEW)\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>`[^`]+`|[\w.]+)",
     re.IGNORECASE,
 )
-
-#: Statements whose results are cacheable analyzed plans: queries only.
-#: Everything else (DDL, SET, CACHE TABLE, INSERT, ...) executes uncached —
-#: caching a command's DataFrame would replay side effects unpredictably
-#: and can pin stale analysis.
-_QUERY_START_RE = re.compile(r"^\s*(?:SELECT|WITH|VALUES|TABLE)\b", re.IGNORECASE)
 
 #: The reference's JVM-function registration DDL
 #: (DirectSessionCatalog.scala:72-91): CREATE [TEMPORARY] FUNCTION name
@@ -473,14 +462,19 @@ class _LRU:
         self.hits = 0
         self.misses = 0
 
-    def get(self, key: str) -> Any | None:
+    def get(self, key: str, count_miss: bool = True) -> Any | None:
         with self._lock:
             if key not in self._data:
-                self.misses += 1
+                self.misses += count_miss
                 return None
             self._data.move_to_end(key)
             self.hits += 1
             return self._data[key]
+
+    def note_miss(self) -> None:
+        """Count the miss of a ``get(key, count_miss=False)``."""
+        with self._lock:
+            self.misses += 1
 
     def __contains__(self, key: str) -> bool:
         """Membership probe that does NOT promote recency or count as a
@@ -566,7 +560,7 @@ class Engine:
         #: fast path is caching the *materialized result* of a
         #: deterministic query over unchanged temp views.  Entries are
         #: dropped by exactly the invalidation that drops cached plans
-        #: (view re-register / view DDL / function DDL), and a statement
+        #: (view re-register, view DDL, any other command), and a statement
         #: is eligible only when its analyzed plan is replayable and reads
         #: in-memory leaves only (``_PlanFacts``): file or external data can
         #: change outside the facade's view of the world.
@@ -577,8 +571,8 @@ class Engine:
         self.result_cache_enabled = result_cache_size > 0
         #: rows above this are never result-cached (driver-memory bound)
         self.result_cache_max_rows = 100_000
-        #: bumped on every invalidation event (view re-register, view DDL,
-        #: function DDL).  A result computed against pre-invalidation data
+        #: bumped on every invalidation event (view re-register, any
+        #: command).  A result computed against pre-invalidation data
         #: can finish AFTER the invalidation sweep ran; comparing the epoch
         #: captured before execution against the current one at put() time
         #: keeps that in-flight stale result out of the cache.
@@ -664,9 +658,10 @@ class Engine:
     def _mangle(qualified: str) -> str:
         return qualified.replace(".", "__")
 
-    def _drop_cached_plans_referencing(self, name: str) -> None:
+    def _drop_cached_plans_referencing(self, name: str | None) -> None:
         """Evict cached plans and results whose analyzed plan reads view
-        ``name``, directly or through a view body (``_PlanFacts.names``).
+        ``name``, directly or through a view body (``_PlanFacts.names``);
+        ``None`` evicts every entry.
 
         The name is normalized first: backticks stripped, and a qualified
         ``db.view`` also matches its bare view name and the mangled
@@ -674,11 +669,14 @@ class Engine:
         drops the entry.  Over-invalidation (an alias or CTE that happens
         to share the name) re-analyzes; it never corrupts.
         """
-        norm = name.replace("`", "").lower()
-        variants = {norm, norm.rsplit(".", 1)[-1], self._mangle(norm)}
+        if name is not None:
+            norm = name.replace("`", "").lower()
+            variants = {norm, norm.rsplit(".", 1)[-1], self._mangle(norm)}
 
         def _references(df: DataFrame) -> bool:
-            return not variants.isdisjoint(df.__dict__["_dss_plan_facts"].names)
+            return name is None or not variants.isdisjoint(
+                df.__dict__["_dss_plan_facts"].names
+            )
 
         # Drop-then-bump, all under the same lock the epoch-guarded puts
         # take (plan cache in dataframe(), result cache in sql_directly).
@@ -737,47 +735,53 @@ class Engine:
     def dataframe(self, sql: str) -> DataFrame:
         """Analyzed (lazy) DataFrame for a SQL text, via the plan cache.
 
-        A query is analyzed once per cache miss and its plan walked once
-        for its ``_PlanFacts``, memoized on the DataFrame.  Only a
-        replayable plan is cached: re-executing one that reads the current
-        time or a seeded random value would freeze that value across
-        executions — the bug the reference built DirectCurrentTimestamp to
-        avoid (DirectCurrentDate.scala:26-50).  Such a statement is
-        re-analyzed per call, so each execution gets one value, stable
-        across the whole plan.
+        Only queries are cached, so a hit needs no classification.  On a
+        miss the analyzed plan tells a command (``TreePattern.COMMAND``:
+        DDL, DML, SET, USE, ...) from a query.  ``spark.sql`` has already
+        run a command; it is never cached, and it drops the entries that
+        read the view its view DDL names, or else every entry, since it
+        may have changed data, a conf or the namespace that cached plans
+        bound.  A query's plan is walked once for its ``_PlanFacts``,
+        memoized on the DataFrame.  Only a replayable plan is cached:
+        re-executing one that reads the current time or a seeded random
+        value would freeze that value across executions — the bug the
+        reference built DirectCurrentTimestamp to avoid
+        (DirectCurrentDate.scala:26-50).  Such a statement is re-analyzed
+        per call, so each execution gets one value, stable across the
+        whole plan.
         """
+        key = self._cache_key(sql)
+        df = self._plan_cache.get(key, count_miss=False)
+        if df is not None:
+            return df
         ddl = _FUNCTION_DDL_RE.match(sql)
         if ddl:
             return self._register_function_ddl(
                 sql, ddl.group("name"), ddl.group("cls"), ddl.group("jar")
             )
-        view_ddl = _VIEW_DDL_RE.match(sql)
-        if view_ddl:
-            # commands execute eagerly on spark.sql(); afterwards drop any
-            # cached plan that referenced the (re)defined or dropped view
-            df = self.spark.sql(self._rewrite_qualified(sql))
-            self._drop_cached_plans_referencing(view_ddl.group("name"))
+        # Epoch captured BEFORE analysis: spark.sql() binds the view data
+        # visible NOW, so if an invalidation sweep (view swap + epoch bump
+        # + drop) completes before our put, this plan may hold the
+        # displaced binding.  The put is epoch-guarded and atomic with the
+        # sweep (same lock): a put that passes the check strictly precedes
+        # any bump, whose sweep then evicts it — a stale analyzed plan can
+        # never survive an invalidation and feed post-invalidation result
+        # caching.
+        epoch = self._invalidation_epoch
+        df = self.spark.sql(self._rewrite_qualified(sql))
+        patterns = df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+        if df._jdf.queryExecution().analyzed().containsPattern(patterns.COMMAND()):
+            view_ddl = _VIEW_DDL_RE.match(sql)
+            self._drop_cached_plans_referencing(
+                view_ddl.group("name") if view_ddl else None
+            )
             return df
-        if not _QUERY_START_RE.match(sql):
-            return self.spark.sql(self._rewrite_qualified(sql))
-        key = self._cache_key(sql)
-        df = self._plan_cache.get(key)
-        if df is None:
-            # Epoch captured BEFORE analysis: spark.sql() binds the view
-            # data visible NOW, so if an invalidation sweep (view swap +
-            # epoch bump + drop) completes before our put, this plan may
-            # hold the displaced binding.  The put is epoch-guarded and
-            # atomic with the sweep (same lock): a put that passes the
-            # check strictly precedes any bump, whose sweep then evicts
-            # it — a stale analyzed plan can never survive an
-            # invalidation and feed post-invalidation result caching.
-            epoch = self._invalidation_epoch
-            df = self.spark.sql(self._rewrite_qualified(sql))
-            facts = df.__dict__["_dss_plan_facts"] = _plan_facts(df)
-            if facts.replayable:
-                with self._lock:
-                    if epoch == self._invalidation_epoch:
-                        self._plan_cache.put(key, df)
+        self._plan_cache.note_miss()
+        facts = df.__dict__["_dss_plan_facts"] = _plan_facts(df)
+        if facts.replayable:
+            with self._lock:
+                if epoch == self._invalidation_epoch:
+                    self._plan_cache.put(key, df)
         return df
 
     def sql_directly(self, sql: str) -> DataTable:
@@ -955,17 +959,6 @@ class Engine:
         Returns an empty result like any DDL statement."""
         from direct_spark_sql_spark.functions.jvm import register_java_function
 
-        # a (re)defined function can change any cached result that called
-        # it — and any cached ANALYZED plan, which bound the old
-        # implementation at resolution time (a kept plan would re-execute
-        # the old class and re-poison the just-cleared result cache).
-        # Clearing both is cheap and DDL is rare.  Clear-then-bump, same
-        # reader-race reasoning as _drop_cached_plans_referencing: a
-        # reader observing the new epoch must already see empty caches.
-        with self._lock:
-            self._plan_cache.clear()
-            self._result_cache.clear()
-            self._invalidation_epoch += 1
         try:
             register_java_function(self.spark, name, cls, jar_path=jar)
         except Exception:
@@ -973,6 +966,11 @@ class Engine:
             # delegate to Spark SQL's own function DDL, which resolves
             # Hive-API classes when the session is Hive-enabled.
             self.spark.sql(sql)
+        # a cached ANALYZED plan bound the old implementation at resolution
+        # time and would re-execute it.  Like any command, drop every entry
+        # after the statement ran: a reader seeing the new epoch analyzes
+        # against the new function.  Cheap, and DDL is rare.
+        self._drop_cached_plans_referencing(None)
         return self.spark.sql(
             f"SELECT '{name}' AS function_registered"
         ).limit(0)

@@ -73,19 +73,10 @@ def pruned_scan(
     pruning or the IVF probe's cell list); the data scan itself is a
     normal distributed parquet read over the surviving files with the
     row-level filter re-applied (skipping is an optimization, never a
-    correctness dependency).
+    correctness dependency).  The one-predicate case of
+    :func:`pruned_scan_multi`.
     """
-    idx = spark.read.parquet(index_path)
-    keep = [
-        r["file"]
-        for r in idx.filter(
-            (F.col(f"{col}_max") >= F.lit(lo)) & (F.col(f"{col}_min") <= F.lit(hi))
-        ).collect()
-    ]
-    predicate = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    if not keep:  # nothing can match; empty frame with the table's schema
-        return spark.read.parquet(table_path).filter(predicate).limit(0)
-    return spark.read.parquet(*keep).filter(predicate)
+    return pruned_scan_multi(spark, table_path, index_path, [(col, lo, hi)])
 
 
 def ensure_clustered_table(
@@ -134,6 +125,6 @@ def pruned_scan_multi(
         rf = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
         row_filter = rf if row_filter is None else (row_filter & rf)
     keep = [r["file"] for r in idx.filter(cond).collect()]
-    if not keep:
+    if not keep:  # nothing can match; empty frame with the table's schema
         return spark.read.parquet(table_path).filter(row_filter).limit(0)
     return spark.read.parquet(*keep).filter(row_filter)

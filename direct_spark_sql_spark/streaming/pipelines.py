@@ -23,6 +23,7 @@ Design rules:
 
 from __future__ import annotations
 
+import tempfile
 from typing import Iterable
 
 import pandas as pd
@@ -354,6 +355,26 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
+def _run_foreach_batch(
+    stream: DataFrame, callback, state: dict, result: str
+) -> DataFrame:
+    """Run ``stream`` to completion over the currently-available input
+    (Trigger.AvailableNow) with ``callback`` as its foreachBatch sink,
+    checkpointing into a temporary directory, and return
+    ``state[result]``, which the callback fills."""
+    with tempfile.TemporaryDirectory() as ckpt:
+        q = (
+            stream.writeStream.foreachBatch(callback)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    if state[result] is None:  # explicit: survives python -O (asserts stripped)
+        raise RuntimeError("stream produced no batches")
+    return state[result]
+
+
 def run_foreach_batch_upsert(
     events: DataFrame,
     key_cols: list[str],
@@ -376,11 +397,8 @@ def run_foreach_batch_upsert(
     At cluster scale the state table would instead be a parquet/format
     table rewritten per batch (same merge plan, durable storage).
     """
-    import tempfile
-
     from pyspark.sql import Window
 
-    spark = events.sparkSession
     state: dict[str, DataFrame | None] = {"df": None}
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
@@ -396,17 +414,7 @@ def run_foreach_batch_upsert(
         )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            events.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if state["df"] is None:  # explicit: survives python -O (asserts stripped)
-        raise RuntimeError("stream produced no batches")
-    return state["df"]
+    return _run_foreach_batch(events, merge_batch, state, "df")
 
 
 def run_foreach_batch_dedup(
@@ -431,8 +439,6 @@ def run_foreach_batch_dedup(
 
     Returns the final state: (dup_key, keep_id, group_size).
     """
-    import tempfile
-
     state: dict[str, DataFrame | None] = {"df": None}
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
@@ -455,17 +461,7 @@ def run_foreach_batch_dedup(
         )
         state["df"] = merged.localCheckpoint(eager=True)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            docs.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if state["df"] is None:
-        raise RuntimeError("stream produced no batches")
-    return state["df"]
+    return _run_foreach_batch(docs, merge_batch, state, "df")
 
 
 def run_foreach_batch_lsh_ingest(
@@ -497,8 +493,6 @@ def run_foreach_batch_lsh_ingest(
 
     Returns the accumulated pairs: (id_a, id_b, est_jaccard).
     """
-    import tempfile
-
     from direct_spark_sql_spark.operators.dedup import (
         NUM_PERM,
         _band_table_with_sig,
@@ -553,17 +547,7 @@ def run_foreach_batch_lsh_ingest(
             else state["index"].unionByName(bt).localCheckpoint(eager=True)
         )
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            docs.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    if state["pairs"] is None:
-        raise RuntimeError("stream produced no batches")
-    return state["pairs"]
+    return _run_foreach_batch(docs, merge_batch, state, "pairs")
 
 
 def run_foreach_batch_zonemap_ingest(
@@ -632,8 +616,6 @@ def run_stream_decontam_gate(
     Returns the accumulated flagged documents
     (id, n_shingles, n_hit, contamination).
     """
-    import tempfile
-
     from direct_spark_sql_spark.operators.dedup import (
         SHINGLE_N,
         benchmark_contamination,
@@ -662,19 +644,9 @@ def run_stream_decontam_gate(
         )
 
     try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                docs.writeStream.foreachBatch(score_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        return _run_foreach_batch(docs, score_batch, state, "flagged")
     finally:
         grams.unpersist()
-    if state["flagged"] is None:
-        raise RuntimeError("stream produced no batches")
-    return state["flagged"]
 
 
 def run_stream_dsir_gate(
@@ -697,8 +669,6 @@ def run_stream_dsir_gate(
     checks.
 
     Returns the accumulated (id, n_feats, logw_units, log_weight)."""
-    import tempfile
-
     from direct_spark_sql_spark.operators.sampling import dsir_score
 
     lam_c = lam.cache()
@@ -715,16 +685,6 @@ def run_stream_dsir_gate(
         )
 
     try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                docs.writeStream.foreachBatch(score_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        return _run_foreach_batch(docs, score_batch, state, "scored")
     finally:
         lam_c.unpersist()
-    if state["scored"] is None:
-        raise RuntimeError("stream produced no batches")
-    return state["scored"]

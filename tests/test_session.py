@@ -580,6 +580,96 @@ def test_non_query_statements_bypass_plan_cache(engine):
     assert (after["hits"], after["misses"]) == (before["hits"], before["misses"])
 
 
+# -- statement kind from the analyzed plan: every command runs and invalidates
+
+def test_with_prefixed_insert_runs_every_call(engine, tmp_path):
+    """A WITH-led INSERT is a command: each call inserts again instead of
+    replaying a cached plan that already ran."""
+    engine.sql_directly(
+        f"CREATE TABLE cmd_ins (a INT) USING parquet LOCATION '{tmp_path}/t'"
+    )
+    try:
+        for _ in range(3):
+            engine.sql_directly(
+                "WITH s AS (SELECT 1 AS a) INSERT INTO cmd_ins SELECT a FROM s"
+            )
+        n = engine.sql_directly("SELECT CAST(COUNT(*) AS INT) AS n FROM cmd_ins")
+        assert _rows(n) == [{"n": 3}]
+    finally:
+        engine.sql_directly("DROP TABLE IF EXISTS cmd_ins")
+
+
+def test_comment_prefixed_view_ddl_invalidates(engine):
+    engine.sql_directly("CREATE OR REPLACE TEMP VIEW cmt_v AS SELECT 1 AS a")
+    assert _rows(engine.sql_directly("SELECT a FROM cmt_v")) == [{"a": 1}]
+    engine.sql_directly(
+        "-- redefine\nCREATE OR REPLACE TEMP VIEW cmt_v AS SELECT 2 AS a"
+    )
+    assert _rows(engine.sql_directly("SELECT a FROM cmt_v")) == [{"a": 2}]
+    engine.sql_directly("DROP VIEW cmt_v")
+
+
+def test_drop_table_on_temp_view_invalidates(engine):
+    from pyspark.errors import AnalysisException
+
+    engine.register_table("drop_tv", [{"a": 1}], "a INT")
+    q = "SELECT a FROM drop_tv"
+    assert _rows(engine.sql_directly(q)) == [{"a": 1}]
+    engine.sql_directly("DROP TABLE drop_tv")
+    with pytest.raises(AnalysisException):
+        engine.sql_directly(q)
+
+
+def test_set_session_time_zone_invalidates(engine):
+    key = "spark.sql.session.timeZone"
+    prior = engine.spark.conf.get(key)
+    utc = dt.timezone.utc
+    engine.register_table(
+        "tz_v", [{"ts": dt.datetime(2024, 1, 1, 12, tzinfo=utc)}], "ts TIMESTAMP"
+    )
+    q = "SELECT CAST(ts AS STRING) AS s FROM tz_v"
+    try:
+        engine.sql_directly(f"SET {key}=UTC")
+        assert _rows(engine.sql_directly(q)) == [{"s": "2024-01-01 12:00:00"}]
+        engine.sql_directly(f"SET {key}=America/New_York")
+        assert _rows(engine.sql_directly(q)) == [{"s": "2024-01-01 07:00:00"}]
+    finally:
+        engine.sql_directly(f"SET {key}={prior}")
+
+
+def test_use_database_re_resolves_tables(engine, tmp_path):
+    engine.sql_directly(f"CREATE DATABASE use_d2 LOCATION '{tmp_path}/d2'")
+    try:
+        for db, x in (("default", 1), ("use_d2", 2)):
+            engine.sql_directly(
+                f"CREATE TABLE {db}.use_ut USING parquet "
+                f"LOCATION '{tmp_path}/{db}_ut' AS SELECT {x} AS x"
+            )
+        q = "SELECT x FROM use_ut"
+        assert _rows(engine.sql_directly(q)) == [{"x": 1}]
+        engine.sql_directly("USE use_d2")
+        assert _rows(engine.sql_directly(q)) == [{"x": 2}]
+    finally:
+        engine.sql_directly("USE default")
+        engine.sql_directly("DROP TABLE IF EXISTS default.use_ut")
+        engine.sql_directly("DROP DATABASE IF EXISTS use_d2 CASCADE")
+
+
+@pytest.mark.parametrize(
+    "q", ["-- lead\nSELECT a FROM lead_v", "(SELECT a FROM lead_v)"]
+)
+def test_comment_or_paren_select_is_plan_cached(engine, q):
+    """Queries are told from commands by their plan, not by a leading
+    SELECT keyword, so these are plan-cached too."""
+    engine.register_table("lead_v", [{"a": 1}], "a INT")
+    engine.sql_directly(q)
+    before = engine.cache_stats()
+    assert _rows(engine.sql_directly(q)) == [{"a": 1}]
+    after = engine.cache_stats()
+    assert after["hits"] == before["hits"] + 1
+    assert after["misses"] == before["misses"]
+
+
 def test_non_temp_view_ddl_invalidates_cached_plans(engine):
     # regression: CREATE OR REPLACE VIEW (no TEMPORARY) must also drop
     # cached plans referencing the view
