@@ -35,10 +35,6 @@ def coerce_value(value: Any, data_type: T.DataType) -> Any:
         return None
 
     if isinstance(data_type, T.StringType):
-        if isinstance(value, str):
-            return value
-        if isinstance(value, float) and value.is_integer():
-            return str(value)
         return str(value)
 
     if isinstance(data_type, T.BooleanType):

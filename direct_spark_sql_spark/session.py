@@ -5,9 +5,9 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
 *composed* (not subclassed) SparkSession:
 
 - ``sql_directly(sql) -> DataTable``        (reference :88-127)
-- ``register_table(name, rows, schema)``    (reference :129-137, db-qualified
-  names via a side registry like DirectSessionCatalog.directTempViews)
-- ``execute_and_register_temp_view``        (reference :181-219)
+- ``register_table`` (reference :129-137) and ``execute_and_register_temp_view``
+  (:181-219) bind names through one ``_bind_view``, db-qualified ones via a
+  side registry like DirectSessionCatalog.directTempViews
 - ``temp_view(name) -> DataTable``          (reference :139-154)
 - ``set_namespace`` / plan+result LRU cache keyed ``namespace + sql``
   (reference :91-92, :411-415, Guava cache → functools-style OrderedDict LRU);
@@ -15,6 +15,8 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
   change drops come from its analyzed plan (``TreePattern.COMMAND``,
   ``_PlanFacts``), not from the SQL text; any other command drops all
 - ``new_session()`` isolation               (reference :81-86)
+- ``explain(sql)`` issues Spark's EXPLAIN statement, so nothing is run;
+  ``engine.spark`` is the raw session, and commands on it bypass the caches
 
 Execution-model differences are deliberate (SURVEY.md §7.0): where the
 reference rebuilt a single-threaded iterator engine to avoid the DAG
@@ -639,19 +641,38 @@ class Engine:
                 ),
             )
             df = df.coalesce(slices)
+        self._bind_view(name, df)
 
-        if "." in name:
-            # db-qualified temp view: keep it in a python-side registry and
-            # also register a mangled global name so SQL can reach it.
-            self._qualified_views[name] = df
-            df.createOrReplaceTempView(self._mangle(name))
-        else:
-            df.createOrReplaceTempView(name)
-        # The reference's cache contract is plan-by-name, data-re-read-at-
-        # execution (NamedLocalRelation.scala:25-44).  A cached *analyzed*
-        # DataFrame has already bound the previous LocalRelation, so any
-        # cached statement that references this view must be dropped; it
-        # re-analyzes (and re-binds fresh data) on its next execution.
+    def _bind_view(self, name: str, df: DataFrame, cached: bool = False) -> None:
+        """The only code that binds a view name (reference: createTempView,
+        DirectSparkSession.scala:129-137, 181-219); a db-qualified one also
+        goes to the side registry (DirectSessionCatalog.scala:130-145).
+        Storage materialized under the name is released; ``cached`` marks
+        ``df`` as the new one."""
+        with self._lock:
+            displaced = self._materialized_views.pop(name, None)
+            if "." in name:
+                self._qualified_views[name] = df
+            df.createOrReplaceTempView(self._mangle(name))  # identity if bare
+            if cached:
+                self._materialized_views[name] = df
+        # CacheManager keys by canonicalized plan: a displaced DataFrame
+        # sharing the survivor's cache entry (a concurrent re-register of
+        # the same statement) must not be unpersisted.
+        if displaced is not None and displaced is not df:
+            try:
+                shares_cache_entry = (
+                    displaced._jdf.queryExecution()
+                    .analyzed()
+                    .sameResult(df._jdf.queryExecution().analyzed())
+                )
+            except Exception:
+                shares_cache_entry = True  # keep: never uncache survivor
+            if not shares_cache_entry:
+                displaced.unpersist()
+        # Cached analyzed plans bound the old data, where the reference
+        # re-reads by name (NamedLocalRelation.scala:25-44): drop them, so
+        # they re-analyze.  Outside the lock: _lock is not reentrant.
         self._drop_cached_plans_referencing(name)
 
     @staticmethod
@@ -707,16 +728,17 @@ class Engine:
         match continues into a longer identifier or deeper qualifier, and
         quoted spans (string literals, backtick identifiers) are skipped.
         """
-        if not self._qualified_views:
+        with self._lock:  # one snapshot: _bind_view writes under this lock
+            names = sorted(self._qualified_views, key=len, reverse=True)
+        if not names:
             return sql
-        names = sorted(self._qualified_views, key=len, reverse=True)
         pattern = re.compile(
             "|".join(rf"(?<![\w.$]){re.escape(n)}(?![\w.$])" for n in names),
             re.IGNORECASE,
         )
         # Map lowercase registered name -> mangled form for case-insensitive
         # resolution (Spark identifiers are case-insensitive by default).
-        mangled = {n.lower(): self._mangle(n) for n in self._qualified_views}
+        mangled = {n.lower(): self._mangle(n) for n in names}
 
         def _rewrite_segment(segment: str) -> str:
             return pattern.sub(lambda m: mangled[m.group(0).lower()], segment)
@@ -880,10 +902,6 @@ class Engine:
             return []  # list[-0:] would be the WHOLE history
         return list(self._call_history)[-n:]
 
-    def sql(self, sql: str) -> DataFrame:
-        """Escape hatch: plain lazy Spark SQL, uncached."""
-        return self.spark.sql(sql)
-
     def sql_iterator(self, sql: str):
         """Execute SQL and stream the result rows as dicts WITHOUT
         materializing the full result on the driver — the pull-based
@@ -897,23 +915,17 @@ class Engine:
             yield row.asDict(recursive=True)
 
     def execute_and_register_temp_view(self, sql: str, name: str) -> int:
-        """Materialize a query into a new temp view; returns the row count
-        (reference: DirectSparkSession.scala:181-219).  Spark-first: the
-        result is cached (memory-and-disk) rather than collected to the
-        driver, so multi-step pipelines stay distributed.
+        """Materialize a query into a new (possibly db-qualified) temp view;
+        returns the row count (reference: DirectSparkSession.scala:181-219).
+        Spark-first: the result is cached (memory-and-disk) rather than
+        collected to the driver, so multi-step pipelines stay distributed.
 
-        Re-registration semantics: the replaced DataFrame is unpersisted
-        BEFORE the new statement materializes — so re-running the SAME
-        statement re-reads fresh source data (a re-register is a refresh,
-        matching the reference's collect-a-new-snapshot behavior) and a
-        long-lived service loop never leaks one cached RDD per call.
-        Spark's CacheManager keys by canonicalized plan, so the
-        unpersist-first ordering is what makes the refresh work: caching
-        the new identical plan AFTER the old entry is gone materializes
-        anew instead of silently reusing stale cached rows.  If a
-        concurrent re-register of the same name races us, the displaced
-        DataFrame's storage is dropped only when it doesn't share the
-        survivor's cache entry (conservative: on doubt, keep).
+        Re-registering unpersists the replaced DataFrame BEFORE the new
+        statement materializes.  Spark's CacheManager keys by canonicalized
+        plan, so only this order makes re-running the SAME statement
+        materialize anew from fresh source data (a refresh, like the
+        reference's new snapshot) instead of reusing the stale cached rows;
+        and a long-lived service loop leaks no cached RDD per call.
         """
         with self._lock:
             old = self._materialized_views.pop(name, None)
@@ -921,22 +933,7 @@ class Engine:
             old.unpersist()
         df = self.spark.sql(self._rewrite_qualified(sql)).cache()
         count = df.count()
-        with self._lock:
-            displaced = self._materialized_views.get(name)
-            df.createOrReplaceTempView(name)
-            self._materialized_views[name] = df
-        if displaced is not None and displaced is not df:
-            try:
-                shares_cache_entry = (
-                    displaced._jdf.queryExecution()
-                    .analyzed()
-                    .sameResult(df._jdf.queryExecution().analyzed())
-                )
-            except Exception:
-                shares_cache_entry = True  # keep: never uncache survivor
-            if not shares_cache_entry:
-                displaced.unpersist()
-        self._drop_cached_plans_referencing(name)
+        self._bind_view(name, df, cached=True)
         return count
 
     def _register_function_ddl(
@@ -1062,13 +1059,14 @@ class Engine:
         }
 
     def explain(self, sql: str, mode: str = "formatted") -> str:
-        """Formatted plan text for a SQL statement (debugging surface; goes
-        through the same qualified-view rewrite as execution).  Modes:
-        simple | extended | codegen | cost | formatted."""
-        df = self.spark.sql(self._rewrite_qualified(sql))
-        jvm = df._sc._jvm  # type: ignore[attr-defined]
-        mode_obj = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
-        return df._jdf.queryExecution().explainString(mode_obj)  # type: ignore[attr-defined]
+        """Plan text for a SQL statement, which is never run: Spark's
+        ``EXPLAIN [EXTENDED|CODEGEN|COST|FORMATTED]`` over the qualified-view
+        rewrite.  Not through ``dataframe()``, where EXPLAIN is a command
+        that would drop every cached entry.  Modes: simple | extended |
+        codegen | cost | formatted."""
+        keyword = "" if mode.lower() == "simple" else mode
+        plan = self.spark.sql(f"EXPLAIN {keyword} {self._rewrite_qualified(sql)}")
+        return plan.collect()[0][0]
 
     def temp_view(self, name: str) -> DataTable:
         """Read a registered view back out (reference:
@@ -1083,8 +1081,12 @@ class Engine:
         ``*``-wildcard pattern (``'|'``-separated alternatives), matching
         the reference's listTables override
         (DirectSessionCatalog.scala:185-201, StringUtils.filterPattern)."""
-        names = set(t.name for t in self.spark.catalog.listTables())
-        names |= set(self._qualified_views)
+        with self._lock:
+            qualified = set(self._qualified_views)
+        # a mangled db__view is how SQL reaches a qualified view, not a view
+        mangled = {self._mangle(n).lower() for n in qualified}
+        names = {t.name for t in self.spark.catalog.listTables()}
+        names = qualified | {n for n in names if n.lower() not in mangled}
         if pattern is not None:
             regexes = [
                 re.compile("(?i)^" + ".*".join(map(re.escape, p.split("*"))) + "$")

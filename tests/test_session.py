@@ -9,6 +9,7 @@ star schema.
 from __future__ import annotations
 
 import datetime as dt
+import sys
 import threading
 import time
 from decimal import Decimal
@@ -490,6 +491,25 @@ def test_cache_stats_and_explain(engine):
     assert "Physical Plan" in plan and "HashAggregate" in plan
 
 
+def test_explain_plans_without_running(engine, tmp_path):
+    """explain issues Spark's EXPLAIN statement: an INSERT is planned, not
+    run, and the cached plans stay (EXPLAIN is not a facade command)."""
+    engine.sql_directly(
+        f"CREATE TABLE expl_ins (a INT) USING parquet LOCATION '{tmp_path}/t'"
+    )
+    try:
+        q = "SELECT CAST(COUNT(*) AS INT) AS n FROM expl_ins"
+        assert _rows(engine.sql_directly(q)) == [{"n": 0}]
+        plan = engine.explain("INSERT INTO expl_ins VALUES (1)")
+        assert "InsertIntoHadoopFsRelationCommand" in plan
+        assert engine.spark.table("expl_ins").count() == 0
+        before = engine.cache_stats()
+        assert _rows(engine.sql_directly(q)) == [{"n": 0}]
+        assert engine.cache_stats()["hits"] == before["hits"] + 1
+    finally:
+        engine.sql_directly("DROP TABLE IF EXISTS expl_ins")
+
+
 def test_view_ddl_invalidates_cached_plans(engine):
     engine.sql_directly("CREATE OR REPLACE TEMPORARY VIEW v_ddl AS SELECT 5 AS a")
     assert engine.sql_directly("SELECT a FROM v_ddl").to_list_of_dicts() == [{"a": 5}]
@@ -547,6 +567,7 @@ def test_list_tables_merges_qualified_and_filters(engine):
     engine.register_table("lt_plain", [{"x": 1}], "x int")
     names = engine.list_tables()
     assert "catdb.lt_q" in names and "lt_plain" in names
+    assert "catdb__lt_q" not in names  # the mangled name SQL reaches it by
     assert engine.list_tables("lt_*") == ["lt_plain"]
     assert engine.list_tables("catdb.*|lt_pl*") == ["catdb.lt_q", "lt_plain"]
 
@@ -775,6 +796,81 @@ def test_execute_and_register_invalidates_cached_plans(engine):
     assert engine.sql_directly(sql).to_list_of_dicts() == [{"s": 1}]
     engine.execute_and_register_temp_view("SELECT 7 AS v", "mat_inval_t")
     assert engine.sql_directly(sql).to_list_of_dicts() == [{"s": 7}]
+
+
+def test_execute_and_register_qualified_name(people_engine):
+    """A db-qualified name binds like register_table's (reference:
+    DirectSessionCatalog.scala:130-145)."""
+    n = people_engine.execute_and_register_temp_view(
+        "SELECT name FROM people WHERE genda = 1", "matdb.ones"
+    )
+    assert n == 3
+    t = people_engine.sql_directly("SELECT COUNT(*) AS n FROM matdb.ones")
+    assert _rows(t) == [{"n": 3}]
+    back = _rows(people_engine.temp_view("matdb.ones"))
+    assert sorted(r["name"] for r in back) == ["bbb", "ddd", "e"]
+
+
+def test_register_table_over_materialized_view_releases_storage(engine, spark):
+    """Rebinding a materialized name through register_table unpersists the
+    storage materialized under it."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()  # context-global: delta-based
+    engine.execute_and_register_temp_view(
+        "SELECT id AS rebind_id FROM range(10)", "rebind_t"
+    )
+    mat = engine._materialized_views["rebind_t"]
+    assert mat.storageLevel.useMemory
+    engine.register_table("rebind_t", [{"rebind_id": 7}], "rebind_id bigint")
+    assert not mat.storageLevel.useMemory
+    grew = jsc.getPersistentRDDs().size() - before
+    assert grew <= 0, f"{grew} persistent RDDs still held after the rebind"
+    got = engine.sql_directly("SELECT rebind_id FROM rebind_t")
+    assert _rows(got) == [{"rebind_id": 7}]
+
+
+def test_qualified_registry_read_races_registration(engine):
+    """Rewrites that race registrations of new qualified names read one
+    snapshot of the registry, not the dict being written."""
+    eng = engine.new_session()
+    df = eng.spark.range(1)
+    for i in range(20):
+        eng.register_table(f"racedb.seed{i}", df)
+
+    def mangle(name):
+        time.sleep(0)  # yield mid-iteration, so a registration lands there
+        return name.replace(".", "__")
+
+    eng._mangle = mangle
+    stop = threading.Event()
+    errors: list[Exception] = []
+
+    def reader():
+        try:
+            while not stop.is_set():
+                eng._rewrite_qualified("SELECT id FROM racedb.seed0")
+        except Exception as e:
+            errors.append(e)
+
+    readers = [threading.Thread(target=reader) for _ in range(2)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in readers:
+            th.start()
+        deadline = time.monotonic() + 2
+        i = 0
+        while time.monotonic() < deadline and not errors:
+            eng.register_table(f"racedb.w{i}", df)
+            i += 1
+    finally:
+        stop.set()
+        for th in readers:
+            th.join(timeout=10)
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in readers)
+    assert errors == []
+    assert _rows(eng.sql_directly("SELECT COUNT(*) AS n FROM racedb.w0")) == [{"n": 1}]
 
 
 def test_last_metrics_readout(engine):
