@@ -24,11 +24,12 @@ nondeterministic float summation.
 from __future__ import annotations
 
 import hashlib
+import sys
 
 from pyspark.sql import Column, DataFrame, functions as F
 
 from direct_spark_sql_spark.operators.text import let_once
-from direct_spark_sql_spark.session import _LRU, _approx_value_bytes
+from direct_spark_sql_spark.session import _LRU
 
 DEC_ELEM = "decimal(12,9)"
 #: Accumulator is (28,18), NOT (38,18): Spark's decimal addition at the
@@ -442,13 +443,12 @@ _IVF_INDEX_DF = _LRU(capacity=64)
 
 
 def _centroids_nbytes(cents: list[tuple[int, list, float]]) -> int:
-    """Approximate byte weight of one index's centroid metadata — exact
-    walk of the first entry (all centroids share a dimensionality)
-    extrapolated across K, the same sample-then-extrapolate shape as the
-    result cache's _approx_rows_bytes."""
+    """Approximate byte weight of one index's centroid metadata: the objects
+    of the first ``(id, vector, norm)`` entry, times K (one dimensionality)."""
     if not cents:
         return 64
-    return 64 + len(cents) * _approx_value_bytes(cents[0])
+    cid, vec, norm = cents[0]
+    return 64 + len(cents) * sum(map(sys.getsizeof, (cents[0], cid, vec, norm, *vec)))
 
 
 def _collect_centroids(

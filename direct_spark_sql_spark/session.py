@@ -35,7 +35,6 @@ from __future__ import annotations
 import contextlib
 import itertools
 import re
-import sys
 import threading
 import time
 import warnings
@@ -43,78 +42,9 @@ from collections import OrderedDict, deque
 from typing import Any, Iterable, NamedTuple
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Row, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from direct_spark_sql_spark.datatable import DataTable
-
-
-def _schema_has_containers(schema: T.StructType) -> bool:
-    """True iff any field (at any struct depth) is an array, map, or
-    binary — the Python-side representations (list / dict / bytearray)
-    are MUTABLE, so cached result rows containing them must be copied on
-    every cache hit or one caller's in-place edit would poison the rows
-    every later hit returns.  Scalar/struct-only schemas (the common
-    facade shape) skip the copy entirely."""
-
-    def walk(dt: T.DataType) -> bool:
-        if isinstance(dt, (T.ArrayType, T.MapType, T.BinaryType)):
-            return True
-        if isinstance(dt, T.StructType):
-            return any(walk(f.dataType) for f in dt.fields)
-        return False
-
-    return any(walk(f.dataType) for f in schema.fields)
-
-
-def _copy_containers(value: Any) -> Any:
-    """Deep-copy just the mutable containers inside a result value; Rows
-    are rebuilt (tuples are immutable but their elements may not be) and
-    scalars pass through untouched."""
-    if isinstance(value, list):
-        return [_copy_containers(v) for v in value]
-    if isinstance(value, dict):
-        return {k: _copy_containers(v) for k, v in value.items()}
-    if isinstance(value, Row):
-        fresh = Row(*[_copy_containers(v) for v in value])
-        fresh.__fields__ = list(value.__fields__)
-        return fresh
-    if isinstance(value, bytearray):
-        return bytearray(value)
-    return value
-
-
-def _approx_value_bytes(value: Any) -> int:
-    """Approximate in-memory weight of one result cell: getsizeof for
-    scalars, shallow-recursive for the container shapes result rows can
-    hold (list/dict/Row/bytes).  An estimate, not an audit — the byte
-    budget needs the right order of magnitude, not allocator truth."""
-    if isinstance(value, (list, tuple, Row)):
-        return sys.getsizeof(value) + sum(_approx_value_bytes(v) for v in value)
-    if isinstance(value, dict):
-        return sys.getsizeof(value) + sum(
-            _approx_value_bytes(k) + _approx_value_bytes(v)
-            for k, v in value.items()
-        )
-    return sys.getsizeof(value)
-
-
-def _approx_rows_bytes(rows: tuple) -> int:
-    """Approximate byte weight of a cached result: exact walk of a
-    bounded sample, extrapolated — wide/tall results are exactly the
-    ones worth bounding, and a full walk of a 100k-row result on every
-    put would tax the facade's hot path.  The sample is the first 32 +
-    last 32 rows, not a head-only slice: a result sorted by payload
-    size (small rows first) would skew a head sample to a fraction of
-    the true weight and quietly bust the byte budget (ADVICE r12)."""
-    n = len(rows)
-    if n == 0:
-        return 0
-    if n <= 64:
-        sample = rows
-    else:
-        sample = rows[:32] + rows[-32:]
-    sampled = sum(_approx_value_bytes(r) for r in sample)
-    return int(sampled * (n / len(sample)))
 
 
 #: Config preset — the cluster-friendly analogue of the reference's pinned
@@ -202,7 +132,9 @@ class _PlanFacts(NamedTuple):
       (``current_timestamp()``, ``current_time()``: folded to a literal on
       the plan's first optimization; the reference rebuilt
       DirectCurrentTimestamp for this, DirectSessionStateBuilder.scala:
-      134-155).  Only a replayable plan may be cached and re-executed.
+      134-155) — and no catalog-table leaf, whose file listing analysis
+      fixes, so a replay would miss a write made through ``engine.spark``.
+      Only a replayable plan may be cached and re-executed.
     - ``in_memory``: every leaf is in ``_RESULT_CACHE_LEAVES``, so the
       data can only change through the facade's invalidation hooks.
     """
@@ -244,6 +176,10 @@ def _plan_facts(df: DataFrame) -> _PlanFacts:
                 stack.append(kids.next())
             if leaf and node not in _RESULT_CACHE_LEAVES:
                 in_memory = False
+                if node == "HiveTableRelation" or (
+                    node == "LogicalRelation" and p.catalogTable().isDefined()
+                ):
+                    replayable = False
     return _PlanFacts(frozenset(names), replayable, in_memory)
 
 
@@ -447,12 +383,12 @@ class _LRU:
     """Tiny thread-safe LRU (reference: Guava cache, max "direct.plan.cache.size"
     entries, DirectSparkSession.scala:411-415).
 
-    Optionally byte-budgeted (VERDICT r11 #7): entry and row caps alone
-    let a thousand wide-row results pin real driver memory, so ``put``
-    accepts the entry's approximate byte weight and eviction also runs
-    while the tracked total exceeds ``max_bytes``.  An entry that alone
-    exceeds the whole budget is refused outright (caching it would just
-    evict everything else and still bust the budget)."""
+    Optionally byte-budgeted (VERDICT r11 #7): an entry cap alone lets a
+    thousand wide results pin real driver memory, so ``put`` accepts the
+    entry's byte weight and eviction also runs while the tracked total
+    exceeds ``max_bytes``.  An entry that alone exceeds the whole budget
+    is refused outright (caching it would just evict everything else and
+    still bust the budget)."""
 
     def __init__(self, capacity: int = 1000, max_bytes: int | None = None):
         self.capacity = capacity
@@ -549,30 +485,17 @@ class Engine:
         #: (reference: per-execution SQLMetric map,
         #: DirectSQLMetrics.scala:21-72, DirectExecutionContext.scala:45).
         self._last_execution: tuple | None = None
-        #: Result cache — the Spark-analogue of the reference's sub-ms
-        #: repeated-query class.  The reference re-executes a cached
-        #: single-node plan same-thread (DirectPlan.scala:79-83), which
-        #: costs microseconds; Spark's distributed execution has a
-        #: ~30 ms-per-job floor (measured: plan-cache lookup is 11 µs,
-        #: the rest is stage scheduling — a cProfile of the warm
-        #: recompute path shows >90% of wall inside the blocking socket
-        #: read that waits on the JVM job, with all Python-side work
-        #: under 2 ms/call, so the floor is structural, not facade
-        #: overhead), so the semantically-equivalent
-        #: fast path is caching the *materialized result* of a
-        #: deterministic query over unchanged temp views.  Entries are
-        #: dropped by exactly the invalidation that drops cached plans
-        #: (view re-register, view DDL, any other command), and a statement
-        #: is eligible only when its analyzed plan is replayable and reads
-        #: in-memory leaves only (``_PlanFacts``): file or external data can
-        #: change outside the facade's view of the world.
-        #: entry cap AND a ~256 MiB approximate byte budget (VERDICT
-        #: r11 #7): the row cap alone lets a thousand wide-row results
-        #: pin real driver memory.
+        #: Result cache — the Spark analogue of the reference's sub-ms
+        #: repeated query, a cached single-node plan re-run on the calling
+        #: thread (DirectPlan.scala:79-83).  A Spark job has a ~30 ms floor
+        #: of stage scheduling, so the fast path keeps the materialized
+        #: result of a replayable query over in-memory leaves only
+        #: (``_PlanFacts``), dropped by exactly the invalidation that drops
+        #: cached plans.  An entry is the result's immutable Arrow table,
+        #: shared by every hit and weighed by its exact ``nbytes``: the
+        #: entry cap and the byte budget bound the cache; no row cap.
         self._result_cache = _LRU(result_cache_size, result_cache_max_bytes)
         self.result_cache_enabled = result_cache_size > 0
-        #: rows above this are never result-cached (driver-memory bound)
-        self.result_cache_max_rows = 100_000
         #: bumped on every invalidation event (view re-register, any
         #: command).  A result computed against pre-invalidation data
         #: can finish AFTER the invalidation sweep ran; comparing the epoch
@@ -617,31 +540,21 @@ class Engine:
         the lenient list-of-dicts coercion of DirectDataTable.fromJavaMapList.
         """
         if isinstance(rows, DataFrame):
-            df = rows
-        else:
-            if isinstance(rows, DataTable):
-                table = rows
-            else:
-                if schema is None:
-                    raise ValueError("schema is required for list-of-dicts input")
-                table = DataTable.from_list_of_dicts(rows, schema)
-            df = table.to_dataframe(self.spark)
-            # Driver-local ingress binds an Arrow-built LocalRelation, whose
-            # LocalTableScanExec slices even tiny tables across
-            # defaultParallelism (32 on the target rig) partitions — dozens
-            # of near-empty scan tasks per execution.  Right-size to ~50k
-            # rows/partition so small reference tables scan in one task
-            # (the dominant term in warm facade latency) while genuinely
-            # large ingress keeps its parallelism.
-            slices = max(
-                1,
-                min(
-                    self.spark.sparkContext.defaultParallelism,
-                    len(table.data) // 50_000,
-                ),
-            )
-            df = df.coalesce(slices)
-        self._bind_view(name, df)
+            return self._bind_view(name, rows)
+        if not isinstance(rows, DataTable):
+            if schema is None:
+                raise ValueError("schema is required for list-of-dicts input")
+            rows = DataTable.from_list_of_dicts(rows, schema)
+        # Driver-local ingress binds an Arrow-built LocalRelation, whose
+        # LocalTableScanExec slices even tiny tables across
+        # defaultParallelism (32 on the target rig) partitions — dozens
+        # of near-empty scan tasks per execution.  Right-size to ~50k
+        # rows/partition so small reference tables scan in one task
+        # (the dominant term in warm facade latency) while genuinely
+        # large ingress keeps its parallelism.
+        parallelism = self.spark.sparkContext.defaultParallelism
+        slices = max(1, min(parallelism, len(rows) // 50_000))
+        self._bind_view(name, rows.to_dataframe(self.spark).coalesce(slices))
 
     def _bind_view(self, name: str, df: DataFrame, cached: bool = False) -> None:
         """The only code that binds a view name (reference: createTempView,
@@ -765,12 +678,13 @@ class Engine:
         may have changed data, a conf or the namespace that cached plans
         bound.  A query's plan is walked once for its ``_PlanFacts``,
         memoized on the DataFrame.  Only a replayable plan is cached:
-        re-executing one that reads the current time or a seeded random
-        value would freeze that value across executions — the bug the
-        reference built DirectCurrentTimestamp to avoid
+        re-executing one that reads a catalog table would miss writes made
+        through ``engine.spark``, and one that reads the current time or a
+        seeded random value would freeze that value across executions —
+        the bug the reference built DirectCurrentTimestamp to avoid
         (DirectCurrentDate.scala:26-50).  Such a statement is re-analyzed
-        per call, so each execution gets one value, stable across the
-        whole plan.
+        per call, so each execution sees the table as it is and gets one
+        time or seed, stable across the whole plan.
         """
         key = self._cache_key(sql)
         df = self._plan_cache.get(key, count_miss=False)
@@ -812,7 +726,7 @@ class Engine:
 
         Warm repeated queries take the result cache (see ``__init__``):
         a replayable query over in-memory leaves only, whose referenced
-        views haven't changed, returns its previously materialized rows
+        views haven't changed, returns its previously materialized result
         without re-running the Spark job — the engine's answer to the
         reference's same-thread iterator over a cached single-node plan.
         """
@@ -835,46 +749,32 @@ class Engine:
             t0 = time.perf_counter()
             hit = self._result_cache.get(key)
             if hit is not None:
-                schema, rows, hit_df, rollup, mutable = hit
+                # the Arrow table is immutable: a fresh DataTable shares it,
+                # and builds its own rows if the caller reads them
+                schema, arrow, hit_df, rollup = hit
                 wall = time.perf_counter() - t0
-                self._last_execution = (hit_df, wall, len(rows), None, rollup)
-                self._record_call(sql, wall, len(rows), True)
-                # Rows holding mutable containers (arrays/maps/binary) are
-                # copied per hit so no caller can mutate the cached copy;
-                # scalar rows (the common shape) skip the copy.
-                if mutable:
-                    return DataTable(schema, [_copy_containers(r) for r in rows])
-                return DataTable(schema, list(rows))
+                self._last_execution = (hit_df, wall, arrow.num_rows, None, rollup)
+                self._record_call(sql, wall, arrow.num_rows, True)
+                return DataTable(schema, arrow)
         with _job_tag(self.spark.sparkContext) as tag:
             t0 = time.perf_counter()
             table = DataTable.from_dataframe(df)
             wall = time.perf_counter() - t0
-        self._last_execution = (df, wall, len(table.data), tag, None)
-        self._record_call(sql, wall, len(table.data), False)
-        if cacheable and len(table.data) <= self.result_cache_max_rows:
+        self._last_execution = (df, wall, len(table), tag, None)
+        self._record_call(sql, wall, len(table), False)
+        if cacheable:
             # The execution rollup is frozen AT PUT TIME: the status store
             # evicts old jobs, so a hit long after the put could no longer
             # read the materializing call's stages.
             rollup = _stage_rollup(self.spark.sparkContext, tag)
-            # epoch re-check and put are atomic w.r.t. the invalidation
-            # sweep (which bumps the epoch and drops entries under the
-            # same lock), so a result computed against pre-invalidation
-            # view data can never land after the sweep and survive
-            # Rows holding mutable containers are copied at PUT (so the
-            # materializing caller's own table can't poison the cache) and
-            # again on every HIT (see above); scalar rows skip both.
-            mutable = _schema_has_containers(table.schema)
-            stored = (
-                tuple(_copy_containers(r) for r in table.data)
-                if mutable
-                else tuple(table.data)
-            )
+            # atomic with the invalidation sweep, which drops entries and
+            # bumps the epoch under the same lock
             with self._lock:
                 if epoch == self._invalidation_epoch:
                     self._result_cache.put(
                         key,
-                        (table.schema, stored, df, rollup, mutable),
-                        nbytes=_approx_rows_bytes(stored),
+                        (table.schema, table.arrow, df, rollup),
+                        nbytes=table.arrow.nbytes,
                     )
         return table
 
@@ -1075,16 +975,20 @@ class Engine:
             return DataTable.from_dataframe(self._qualified_views[name])
         return DataTable.from_dataframe(self.spark.table(name))
 
+    def _qualified_names(self) -> tuple[set[str], set[str]]:
+        """The registered db-qualified view names, and the lower-cased
+        ``db__view`` names SQL reaches them by, which are no views of their own."""
+        with self._lock:
+            qualified = set(self._qualified_views)
+        return qualified, {self._mangle(n).lower() for n in qualified}
+
     def list_tables(self, pattern: str | None = None) -> list[str]:
         """All visible table/view names — Spark's catalog merged with the
         engine's db-qualified temp-view registry, optionally filtered by a
         ``*``-wildcard pattern (``'|'``-separated alternatives), matching
         the reference's listTables override
         (DirectSessionCatalog.scala:185-201, StringUtils.filterPattern)."""
-        with self._lock:
-            qualified = set(self._qualified_views)
-        # a mangled db__view is how SQL reaches a qualified view, not a view
-        mangled = {self._mangle(n).lower() for n in qualified}
+        qualified, mangled = self._qualified_names()
         names = {t.name for t in self.spark.catalog.listTables()}
         names = qualified | {n for n in names if n.lower() not in mangled}
         if pattern is not None:
@@ -1098,9 +1002,13 @@ class Engine:
     def is_temporary_table(self, name: str) -> bool:
         """Whether ``name`` resolves to a temporary view — Spark's own temp
         views plus the db-qualified registry, mirroring the reference's
-        isTemporaryTable override (DirectSessionCatalog.scala:173-183)."""
-        if name in self._qualified_views:
+        isTemporaryTable override (DirectSessionCatalog.scala:173-183); a
+        mangled ``db__view`` name is hidden, as in :meth:`list_tables`."""
+        qualified, mangled = self._qualified_names()
+        if name in qualified:
             return True
+        if name.lower() in mangled:
+            return False
         try:
             if "." in name:
                 db, tbl = name.rsplit(".", 1)
@@ -1124,8 +1032,7 @@ class Engine:
         (reference: DirectSparkSession.scala:81-86).  The child inherits
         the parent's cache sizing AND runtime toggles — an engine built
         with result caching disabled must not hand out children that
-        silently re-enable it (each entry can pin up to
-        ``result_cache_max_rows`` materialized rows on the driver)."""
+        silently re-enable it."""
         child = Engine(
             self.spark.newSession(),
             self._plan_cache.capacity,
@@ -1133,7 +1040,6 @@ class Engine:
             result_cache_max_bytes=self._result_cache.max_bytes,
         )
         child.result_cache_enabled = self.result_cache_enabled
-        child.result_cache_max_rows = self.result_cache_max_rows
         return child
 
     def stop(self) -> None:

@@ -17,8 +17,9 @@ from decimal import Decimal
 
 import pytest
 from pyspark.sql import Row, types as T
+from pyspark.sql.types import VariantVal
 
-from direct_spark_sql_spark.datatable import DataTable
+from direct_spark_sql_spark.datatable import DataTable, _fetches_rows
 from direct_spark_sql_spark.session import _plan_facts
 
 
@@ -141,3 +142,101 @@ def test_epoch_millis_timestamp_is_utc_under_local_tz(engine):
         )
         t = engine.sql_directly("SELECT unix_millis(ts) AS ms FROM ai_epoch ORDER BY ms")
     assert t.to_list_of_dicts() == [{"ms": 0}, {"ms": 86_400_000}]
+
+
+# -- egress: sql_directly(q).data is what spark.sql(q).collect() gives ------
+
+
+def _same(got, want) -> bool:
+    """Equal value for value, with equal value types and ``fold``."""
+    if type(got) is not type(want):
+        return False
+    if isinstance(got, VariantVal):  # compares by identity
+        return _same(got.value, want.value) and _same(got.metadata, want.metadata)
+    if isinstance(got, dt.datetime) and got.fold != want.fold:
+        return False
+    if isinstance(got, (tuple, list)):
+        return (
+            len(got) == len(want)
+            and getattr(got, "__fields__", None) == getattr(want, "__fields__", None)
+            and all(_same(g, w) for g, w in zip(got, want))
+        )
+    if isinstance(got, dict):
+        return got.keys() == want.keys() and all(_same(got[k], want[k]) for k in got)
+    return got == want
+
+
+def _assert_egress_parity(engine, sql, fetches_rows):
+    """``fetches_rows``: whether the result comes from ``collect()``
+    rather than ``toArrow()``."""
+    assert _fetches_rows(engine.dataframe(sql)) is fetches_rows, sql
+    got = engine.sql_directly(sql).data
+    want = engine.spark.sql(sql).collect()
+    assert _same(got, want), (sql, got, want)
+
+
+@pytest.mark.parametrize("tz", [None, "America/New_York"])
+def test_type_matrix_egress_matches_collect(engine, tz):
+    with _process_tz(tz):
+        engine.register_table(
+            "eg_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
+        )
+        sql = "SELECT * FROM eg_matrix ORDER BY id"
+        _assert_egress_parity(engine, sql, False)
+        _assert_egress_parity(engine, sql + " LIMIT 4", True)
+
+
+def test_repeated_dst_hour_keeps_fold(engine):
+    """The second 01:30 of 2021-11-07 in New York is ``fold=1``."""
+    with _process_tz("America/New_York"):
+        engine.register_table(
+            "eg_fold",
+            [{"ts": ms} for ms in (1636263000000, 1636266600000, 1636270200000)],
+            "ts TIMESTAMP",
+        )
+        sql = "SELECT ts FROM eg_fold ORDER BY ts"
+        _assert_egress_parity(engine, sql, False)
+        _assert_egress_parity(engine, sql + " LIMIT 2", True)
+        got = engine.sql_directly(sql).data
+    assert [(r.ts.hour, r.ts.fold) for r in got] == [(1, 0), (1, 1), (2, 0)]
+
+
+@pytest.mark.parametrize(
+    "select, repeats",
+    [
+        ("cast(concat('b', id) AS BINARY) AS b, array(cast('c' AS BINARY)) AS bs", False),
+        ("parse_json(concat('{\"x\": [', id, ']}')) AS v", False),
+        ("named_struct('a', id, 'a', id + 1) AS s", True),
+        ("id FROM eg_src WHERE id < 0", False),
+    ],
+    ids=["binary", "variant", "repeated-struct-field", "empty"],
+)
+def test_egress_matches_collect(engine, select, repeats):
+    engine.register_table("eg_src", [{"id": i} for i in range(3)], "id INT")
+    sql = f"SELECT {select}" if " FROM " in select else f"SELECT {select} FROM eg_src"
+    _assert_egress_parity(engine, sql, repeats)
+    _assert_egress_parity(engine, sql + " LIMIT 2", True)
+
+
+@pytest.mark.parametrize("sql", ["SET spark.sql.ansi.enabled", "SHOW TABLES"])
+def test_command_egress_matches_collect(engine, sql):
+    _assert_egress_parity(engine, sql, True)
+
+
+@pytest.mark.parametrize(
+    "sql, counts",
+    [
+        ("SELECT id FROM eg_r8 LIMIT 20", (1, 1, 1)),
+        ("SELECT id FROM eg_r8 ORDER BY id DESC LIMIT 20", (1, 1, 8)),
+        ("SET spark.sql.ansi.enabled", (0, 0, 0)),
+    ],
+    ids=["limit", "order-by-limit", "set"],
+)
+def test_specialized_collects_keep_their_jobs(engine, sql, counts):
+    """A root CollectLimit or TakeOrderedAndProject, and a command, are
+    fetched as ``collect()`` fetches them: Arrow egress would add a stage
+    and a job's tasks."""
+    engine.register_table("eg_r8", engine.spark.range(0, 1000, 1, 8))
+    engine.sql_directly(sql)
+    m = engine.last_metrics()
+    assert (m["jobs"], m["stages_run"], m["tasks"]) == counts

@@ -1,11 +1,7 @@
 """Round-12 session additions: result-cache byte budget (VERDICT r11 #7)
 and EngineBuilder.config typed/dict overloads (VERDICT r11 #8)."""
 
-from direct_spark_sql_spark.session import (
-    EngineBuilder,
-    _LRU,
-    _approx_rows_bytes,
-)
+from direct_spark_sql_spark.session import EngineBuilder, _LRU
 
 
 def test_lru_evicts_on_byte_budget_under_row_cap():
@@ -49,12 +45,23 @@ def test_lru_byte_accounting_through_replace_drop_clear():
     assert lru.bytes == 0 and len(lru._data) == 0
 
 
-def test_approx_rows_bytes_scales_and_extrapolates():
-    rows = tuple(("x" * 100, i) for i in range(1000))
-    small = _approx_rows_bytes(rows[:10])
-    big = _approx_rows_bytes(rows)
-    assert big > small * 50  # extrapolation tracks row count
-    assert _approx_rows_bytes(()) == 0
+def test_result_bytes_are_the_cached_tables_nbytes(spark):
+    """Each result-cache entry weighs its Arrow table's exact nbytes."""
+    from direct_spark_sql_spark.session import Engine
+
+    e = Engine(spark.newSession())
+    e.register_table(
+        "tn",
+        [{"s": "y" * (i + 1), "i": i, "xs": list(range(i))} for i in range(20)],
+        "s string, i long, xs array<int>",
+    )
+    tables = [
+        e.sql_directly(f"SELECT * FROM tn WHERE i <= {k} ORDER BY i")
+        for k in (0, 5, 19)
+    ]
+    st = e.cache_stats()
+    assert st["result_entries"] == 3
+    assert st["result_bytes"] == sum(t.arrow.nbytes for t in tables) > 0
 
 
 def test_engine_result_cache_respects_byte_budget(spark):

@@ -128,16 +128,22 @@ def test_nested_struct_and_binary_mutation_isolated(eng):
     assert bytes(t3.data[0].b) == b"ab"
 
 
-def test_scalar_only_results_skip_the_copy(eng):
-    """The copy-on-hit path is gated on the schema actually containing
-    mutable containers — scalar results must return the SAME cached row
-    objects (zero-copy fast path)."""
-    eng.register_table("rc_scalar", [{"a": 3}], "a BIGINT")
-    sql = "SELECT a, a * 2 AS b FROM rc_scalar"
-    t1 = eng.sql_directly(sql)
-    t2 = eng.sql_directly(sql)
-    t3 = eng.sql_directly(sql)
-    assert t2.data[0] is t3.data[0]  # no per-hit rebuild for scalars
+def test_hits_share_one_arrow_table(eng):
+    """A hit copies nothing: every hit wraps the one immutable Arrow table
+    the materializing call cached, whether or not the schema holds
+    containers, and builds its own rows only when they are read."""
+    eng.register_table("rc_share", [{"a": 3}], "a BIGINT")
+    for sql in (
+        "SELECT a, a * 2 AS b FROM rc_share",
+        "SELECT array(a) AS arr, map('k', a) AS m, cast('x' AS BINARY) AS bin "
+        "FROM rc_share",
+    ):
+        t1 = eng.sql_directly(sql)
+        t2 = eng.sql_directly(sql)
+        t3 = eng.sql_directly(sql)
+        assert eng.last_metrics()["result_cache_hit"] is True
+        assert t1.arrow is t2.arrow is t3.arrow
+        assert t2.data == t3.data and t2.data is not t3.data
 
 
 def test_mixed_namespaces_do_not_cross_hit(eng):
@@ -364,17 +370,14 @@ def test_small_ingress_scans_in_one_task(eng):
 
 
 def test_oversized_result_not_cached(eng):
-    eng.result_cache_max_rows = 10
-    try:
-        eng.register_table(
-            "rc_big", [{"a": i} for i in range(50)], "a BIGINT"
-        )
-        sql = "SELECT a FROM rc_big ORDER BY a"
-        eng.sql_directly(sql)
-        eng.sql_directly(sql)
-        assert eng.last_metrics()["result_cache_hit"] is False
-    finally:
-        eng.result_cache_max_rows = 100_000
+    from direct_spark_sql_spark.session import Engine
+
+    small = Engine(eng.spark.newSession(), result_cache_max_bytes=256)
+    small.register_table("rc_big", [{"a": i} for i in range(50)], "a BIGINT")
+    sql = "SELECT a FROM rc_big ORDER BY a"
+    assert small.sql_directly(sql).arrow.nbytes > 256
+    small.sql_directly(sql)
+    assert small.last_metrics()["result_cache_hit"] is False
 
 
 def test_soak_result_cache_vs_reregister(eng):
@@ -480,7 +483,6 @@ def test_new_session_inherits_result_cache_config(engine):
     child2 = engine.new_session()
     assert child2.result_cache_enabled == engine.result_cache_enabled
     assert child2._result_cache.capacity == engine._result_cache.capacity
-    assert child2.result_cache_max_rows == engine.result_cache_max_rows
 
 
 # -- round-5 self-review regression tests ---------------------------------

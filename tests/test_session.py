@@ -17,6 +17,7 @@ from decimal import Decimal
 import pytest
 
 from direct_spark_sql_spark.session import _plan_facts
+from tests.conftest import SF_DIR
 
 #: reference fixture A1/A2 (DirectExecSuite.scala:31-38)
 PEOPLE = [
@@ -500,11 +501,16 @@ def test_explain_plans_without_running(engine, tmp_path):
     try:
         q = "SELECT CAST(COUNT(*) AS INT) AS n FROM expl_ins"
         assert _rows(engine.sql_directly(q)) == [{"n": 0}]
+        # a catalog-table plan is never plan-cached: watch an in-memory one
+        engine.register_table("expl_mem", [{"a": 1}], "a INT")
+        cached = "SELECT a FROM expl_mem"
+        engine.sql_directly(cached)
         plan = engine.explain("INSERT INTO expl_ins VALUES (1)")
         assert "InsertIntoHadoopFsRelationCommand" in plan
         assert engine.spark.table("expl_ins").count() == 0
-        before = engine.cache_stats()
         assert _rows(engine.sql_directly(q)) == [{"n": 0}]
+        before = engine.cache_stats()
+        engine.sql_directly(cached)
         assert engine.cache_stats()["hits"] == before["hits"] + 1
     finally:
         engine.sql_directly("DROP TABLE IF EXISTS expl_ins")
@@ -578,6 +584,7 @@ def test_is_temporary_table(engine):
     engine.register_table("catdb.itt_q", [{"x": 1}], "x int")
     engine.register_table("itt_plain", [{"x": 1}], "x int")
     assert engine.is_temporary_table("catdb.itt_q")
+    assert not engine.is_temporary_table("catdb__itt_q")  # hidden, as in list_tables
     assert engine.is_temporary_table("itt_plain")
     assert not engine.is_temporary_table("no_such_table")
     assert not engine.is_temporary_table("nodb.no_such_table")
@@ -591,6 +598,24 @@ def test_temp_view_java_list_of_dicts(engine):
     )
     rows = sorted(engine.temp_view_java("tvj"), key=lambda r: r["a"])
     assert rows == [{"a": 1, "b": "x"}, {"a": 2, "b": None}]
+
+
+def test_catalog_table_plan_sees_writes_made_on_spark(engine, tmp_path):
+    """Analysis fixes a catalog table's file listing, and an INSERT through
+    ``engine.spark`` fires no facade hook: a plan over such a table is not
+    plan-cached, while one over a parquet-path view still is."""
+    spark = engine.spark
+    spark.sql(f"CREATE TABLE cat_pt (a INT) USING parquet LOCATION '{tmp_path}'")
+    try:
+        sql = "SELECT CAST(COUNT(*) AS INT) AS n FROM cat_pt"
+        assert engine.sql_directly(sql).to_list_of_dicts() == [{"n": 0}]
+        spark.sql("INSERT INTO cat_pt VALUES (1)")
+        assert engine.sql_directly(sql).to_list_of_dicts() == [{"n": 1}]
+        assert spark.table("cat_pt").count() == 1
+    finally:
+        spark.sql("DROP TABLE IF EXISTS cat_pt")
+    path_view = spark.read.parquet(f"{SF_DIR}/region.parquet")
+    assert _plan_facts(path_view).replayable is True
 
 
 def test_non_query_statements_bypass_plan_cache(engine):
