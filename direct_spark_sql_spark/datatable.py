@@ -131,15 +131,21 @@ def _arrow_to_rows(schema: T.StructType, table: pa.Table) -> list[Row]:
     """The rows ``collect()`` gives for ``table``: each column cast to
     ``_STORAGE`` and read as internal values, then ``schema.fromInternal``
     per row, the call ``collect()`` makes (so a repeated local hour keeps
-    its ``fold``)."""
+    its ``fold``).  A flat, null-free column without a converter is read
+    through NumPy, many times faster than ``to_pylist()`` and equal in value
+    and type; NumPy would read an int column with nulls as floats and a
+    list column as arrays."""
     columns = []
     for field, column in zip(schema.fields, table.columns):
         storage = _map_leaves(field.dataType, lambda t: _STORAGE.get(type(t), t))
         if storage != field.dataType:
             column = column.cast(PT.to_arrow_type(PT._deduplicate_field_names(storage)))
-        values = column.to_pylist()
         conv = _internal_converter(field.dataType)
-        columns.append(values if conv is None else [conv(v) for v in values])
+        if conv is None and column.null_count == 0 and not pa.types.is_nested(column.type):
+            columns.append(column.to_numpy(zero_copy_only=False).tolist())
+        else:
+            values = column.to_pylist()
+            columns.append(values if conv is None else [conv(v) for v in values])
     internal = zip(*columns) if columns else [()] * table.num_rows
     return [schema.fromInternal(values) for values in internal]
 

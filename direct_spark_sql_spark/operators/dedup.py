@@ -892,58 +892,41 @@ def cdc_chunk_table(
     parallel per position.)
 
     Shape: per-character work runs as one vectorized int64 windowed dot
-    product per document inside Arrow-batched ``mapInPandas`` — JVM
-    expression trees pay interpreted/codegen cost *per position* here
-    (measured 6-8 s at sf0.1 for both the per-position-explode MD5 and
-    the array-HOF forms vs well under 1 s for this), and no per-character
-    row ever materializes.  Map-only: the operator adds no shuffle; at
-    100 TB parallelism comes from the input file splits.
+    product per document inside the Arrow-batched ``mapInPandas`` of
+    ``multimodal.map_rows`` — JVM expression trees pay interpreted/codegen
+    cost *per position* here (measured 6-8 s at sf0.1 for both the
+    per-position-explode MD5 and the array-HOF forms vs well under 1 s for
+    this), and no per-character row ever materializes.  Map-only: the
+    operator adds no shuffle; at 100 TB parallelism comes from the input
+    file splits.
     """
     import numpy as np
-    import pandas as pd
     from numpy.lib.stride_tricks import sliding_window_view
+    from pyspark.sql import types as T
+
+    from direct_spark_sql_spark.operators.multimodal import map_rows
 
     coeffs = np.array(CDC_COEFFS, dtype=np.int64)
     w, div = CDC_WINDOW, CDC_DIVISOR
 
-    def gen(batches):
-        for pdf in batches:
-            ids: list = []
-            lens: list = []
-            chunks: list = []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                n = len(text)
-                if n < min_len or n > max_len:
-                    continue
-                # utf-32-le bytes reinterpret as one uint32 codepoint per
-                # char — the same value SQL ascii(substr(text, i, 1))
-                # yields, without a per-char Python loop
-                cp = np.frombuffer(
-                    text.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                h = sliding_window_view(cp, w) @ coeffs  # exact int64
-                ends = (np.nonzero(h % div == 0)[0] + w).tolist()
-                if not ends or ends[-1] != n:
-                    ends.append(n)
-                prev = 0
-                for e in ends:
-                    ids.append(did)
-                    lens.append(e - prev)
-                    chunks.append(text[prev:e])
-                    prev = e
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "chunk_len": pd.Series(lens, dtype="int64"),
-                    "chunk": pd.Series(chunks, dtype="object"),
-                }
-            )
+    def chunks(did, text):
+        if text is None or not min_len <= len(text) <= max_len:
+            return
+        # utf-32-le bytes reinterpret as one uint32 codepoint per char —
+        # the same value SQL ascii(substr(text, i, 1)) yields, without a
+        # per-char Python loop
+        cp = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+        h = sliding_window_view(cp, w) @ coeffs  # exact int64
+        ends = (np.nonzero(h % div == 0)[0] + w).tolist()
+        if not ends or ends[-1] != len(text):
+            ends.append(len(text))
+        prev = 0
+        for e in ends:
+            yield did, e - prev, text[prev:e]
+            prev = e
 
-    return df.select(id_col, text_col).mapInPandas(
-        gen, f"{id_col} long, chunk_len long, chunk string"
-    )
+    schema = T.StructType.fromDDL(f"{id_col} long, chunk_len long, chunk string")
+    return map_rows(df, [id_col, text_col], schema, chunks)
 
 
 # ---------------------------------------------------------------------------

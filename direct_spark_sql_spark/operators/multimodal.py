@@ -1,15 +1,15 @@
 """Multimodal column handling: opaque binary payloads + typed metadata.
 
 Media bytes (image/audio/video) travel as a ``binary`` column next to a
-metadata struct; decode / feature-extraction / frame-sampling run as
-Arrow-batched ``mapInPandas`` operators so each task processes whole
-record batches without per-row Python overhead.  Image decode is REAL for
+metadata struct.  Synthesis, decode, feature extraction and frame
+sampling all run executor-side through one seam, :func:`map_rows`: an
+Arrow-batched ``mapInPandas`` that hands a per-row function plain Python
+values and builds each output batch from the tuples it yields, so each
+task processes whole record batches.  Image decode is REAL for
 PPM / BMP / PNG via the pure-stdlib codecs in
 :mod:`direct_spark_sql_spark.operators.imagecodec` and for baseline JPEG
 via :mod:`direct_spark_sql_spark.operators.jpegcodec`; formats needing
 external libraries would slot in behind the same ``decode_image`` seam.
-``fake=True`` keeps the deterministic byte-statistics path for opaque
-(non-image) payloads.
 
 Scale: mapInPandas preserves partitioning (no shuffle); batch size follows
 ``spark.sql.execution.arrow.maxRecordsPerBatch``.  For 100 TB of media the
@@ -20,23 +20,12 @@ so one batch of decoded frames fits executor memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("byte_sum", T.LongType()),
-        T.StructField("byte_min", T.IntegerType()),
-        T.StructField("byte_max", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -45,6 +34,46 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("chunk_bytes", T.BinaryType()),
     ]
 )
+
+
+def map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    schema: T.StructType,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """``df``'s ``cols`` through ``fn`` in one Arrow-batched ``mapInPandas``.
+
+    ``fn`` is called once per row with that row's values as plain Python
+    values (``Series.tolist()``: ``int``, ``str``, ``bytes``, None) and
+    yields zero or more tuples in ``schema`` field order, so the same
+    helper serves 1:1 and flat-map operators.  A batch that yields no
+    tuple emits no frame."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            columns = (series.tolist() for _, series in pdf.items())
+            rows = [out for values in zip(*columns) for out in fn(*values)]
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(run, schema)
+
+
+def _pixels(buf: bytes, *shape: int) -> np.ndarray:
+    """``buf``'s unsigned bytes as an int64 array of ``shape``."""
+    return np.frombuffer(buf, dtype=np.uint8).astype(np.int64).reshape(shape)
+
+
+def _synthesize(
+    df: DataFrame, id_col: str, media_col: str, payload: Callable[[int], bytes]
+) -> DataFrame:
+    """One ``(id, media)`` row per input id, ``media = payload(id)``."""
+    schema = T.StructType(
+        [T.StructField(id_col, T.LongType()), T.StructField(media_col, T.BinaryType())]
+    )
+    return map_rows(df, [id_col], schema, lambda i: [(i, payload(i))])
 
 
 def attach_binary(df: DataFrame, payload_col: str, mime: str, source_col: str) -> DataFrame:
@@ -59,28 +88,6 @@ def attach_binary(df: DataFrame, payload_col: str, mime: str, source_col: str) -
             F.col(source_col).alias("source"),
         ).alias("media_meta"),
     )
-
-
-def _decode_image_bytes(payload: bytes, fake: bool) -> tuple[int, int, int, int, int]:
-    """Decode step behind :func:`extract_features`.
-
-    ``fake=False`` runs the REAL pure-stdlib decode (PPM/BMP/PNG) and
-    returns pixel-level stats + true dimensions; unrecognized payloads
-    raise ValueError.  ``fake=True`` computes deterministic byte statistics
-    instead, for opaque (non-image) payloads and plumbing tests."""
-    n = len(payload)
-    if n == 0:
-        return 0, 0, 0, 0, 0
-    if not fake:
-        from direct_spark_sql_spark.operators.imagecodec import decode_image
-
-        _fmt, width, height, rgb = decode_image(payload)
-        return sum(rgb), min(rgb), max(rgb), width, height
-    byte_sum = sum(payload)
-    # fake "dimensions": a deterministic function of the payload length
-    width = int(n**0.5) or 1
-    height = (n + width - 1) // width
-    return byte_sum, min(payload), max(payload), width, height
 
 
 IMAGE_FEATURE_SCHEMA = T.StructType(
@@ -108,8 +115,7 @@ def synthesize_images(
     ``(x*7 + y*13 + id*31) % 256`` (grayscale, so GIF's 256-entry palette
     always suffices), and the container format cycles ppm/bmp/png/gif by
     ``id % 4`` — all four lossless, so the decode-side stats stay exact.
-    Encoding happens executor-side in Arrow-batched mapInPandas — the
-    driver never sees a payload."""
+    Encoding happens executor-side — the driver never sees a payload."""
     from direct_spark_sql_spark.operators.gifcodec import encode_gif
     from direct_spark_sql_spark.operators.imagecodec import (
         encode_bmp,
@@ -118,48 +124,33 @@ def synthesize_images(
     )
 
     encoders = {0: encode_ppm, 1: encode_bmp, 2: encode_png, 3: encode_gif}
-    schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField(media_col, T.BinaryType())]
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 4 + i % 13, 3 + i % 11
-                rgb = bytes(
-                    (x * 7 + y * 13 + i * 31) % 256
-                    for y in range(h)
-                    for x in range(w)
-                    for _c in range(3)
-                )
-                rows.append((i, encoders[i % 4](w, h, rgb)))
-            yield pd.DataFrame(rows, columns=[id_col, media_col])
+    def image(i: int) -> bytes:
+        w, h = 4 + i % 13, 3 + i % 11
+        rgb = bytes(
+            (x * 7 + y * 13 + i * 31) % 256
+            for y in range(h)
+            for x in range(w)
+            for _c in range(3)
+        )
+        return encoders[i % 4](w, h, rgb)
 
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synthesize(df, id_col, media_col, image)
 
 
 def extract_image_features(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
-    """REAL image decode via Arrow-batched mapInPandas: sniff + decode each
-    payload (PPM/BMP/PNG), emit true dimensions and pixel statistics."""
+    """REAL image decode: sniff + decode each payload (PPM/BMP/PNG/GIF/JPEG),
+    emit true dimensions and pixel statistics; an unrecognized payload
+    raises ValueError."""
     from direct_spark_sql_spark.operators.imagecodec import decode_image
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                fmt, w, h, rgb = decode_image(bytes(payload))
-                rows.append(
-                    (int(doc_id), fmt, w, h, w * h, sum(rgb), min(rgb), max(rgb))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in IMAGE_FEATURE_SCHEMA.fields]
-            )
+    def features(doc_id, payload):
+        fmt, w, h, rgb = decode_image(payload)
+        yield doc_id, fmt, w, h, w * h, sum(rgb), min(rgb), max(rgb)
 
-    return df.select(id_col, media_col).mapInPandas(run, IMAGE_FEATURE_SCHEMA)
+    return map_rows(df, [id_col, media_col], IMAGE_FEATURE_SCHEMA, features)
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -187,37 +178,22 @@ def resize_images_box2(
     are exactly integer-replayable by the oracle.  Degenerate sources
     too small to halve emit zero stats.
 
-    Runs as Arrow-batched ``mapInPandas`` with the block sums vectorized
-    in numpy (strided slicing — no Python per-pixel loop); like the
-    other codec ops, no shuffle: map-only at any corpus size."""
-    import numpy as np
-
+    The block sums are vectorized in numpy (strided slicing — no Python
+    per-pixel loop); like the other codec ops, no shuffle: map-only at
+    any corpus size."""
     from direct_spark_sql_spark.operators.imagecodec import decode_image
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                fmt, w, h, rgb = decode_image(bytes(payload))
-                rw, rh = w // 2, h // 2
-                if rw == 0 or rh == 0:
-                    rows.append((int(doc_id), fmt, w, h, rw, rh, 0, 0, 0))
-                    continue
-                a = (
-                    np.frombuffer(rgb, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w, 3)[: rh * 2, : rw * 2]
-                )
-                r = (
-                    a[0::2, 0::2] + a[0::2, 1::2] + a[1::2, 0::2] + a[1::2, 1::2]
-                ) // 4
-                rows.append(
-                    (int(doc_id), fmt, w, h, rw, rh,
-                     int(r.sum()), int(r.min()), int(r.max()))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
+    def resized(doc_id, payload):
+        fmt, w, h, rgb = decode_image(payload)
+        rw, rh = w // 2, h // 2
+        if rw == 0 or rh == 0:
+            yield doc_id, fmt, w, h, rw, rh, 0, 0, 0
+            return
+        a = _pixels(rgb, h, w, 3)[: rh * 2, : rw * 2]
+        r = (a[0::2, 0::2] + a[0::2, 1::2] + a[1::2, 0::2] + a[1::2, 1::2]) // 4
+        yield doc_id, fmt, w, h, rw, rh, int(r.sum()), int(r.min()), int(r.max())
 
-    return df.select(id_col, media_col).mapInPandas(run, RESIZE_SCHEMA)
+    return map_rows(df, [id_col, media_col], RESIZE_SCHEMA, resized)
 
 
 AHASH_SCHEMA = T.StructType(
@@ -240,6 +216,26 @@ AHASH_GX, AHASH_GY = 4, 3
 VFP_MAX_PACKED = 5
 
 
+def _ahash(plane: np.ndarray) -> int:
+    """All-integer 4×3 average hash of one (h, w) int64 intensity plane:
+    the plane is bucketed into the grid by floor mapping
+    (``bx = x * 4 // w``), each cell's value is the floor mean of its
+    pixels, the threshold is the floor mean of the 12 cell values, and
+    bit ``by * 4 + bx`` is set iff its cell exceeds the threshold."""
+    h, w = plane.shape
+    xs = np.arange(w) * AHASH_GX // w  # floor bucket per col
+    ys = np.arange(h) * AHASH_GY // h  # floor bucket per row
+    cell = np.zeros((AHASH_GY, AHASH_GX), dtype=np.int64)
+    cnt = np.zeros((AHASH_GY, AHASH_GX), dtype=np.int64)
+    np.add.at(cell, (ys[:, None], xs[None, :]), plane)
+    np.add.at(cnt, (ys[:, None], xs[None, :]), 1)
+    means = cell // cnt
+    thr = means.sum() // (AHASH_GX * AHASH_GY)
+    bits = (means > thr).astype(np.int64)
+    idx = np.arange(AHASH_GY)[:, None] * AHASH_GX + np.arange(AHASH_GX)[None, :]
+    return int((bits << idx).sum())
+
+
 def image_ahash(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
@@ -247,49 +243,21 @@ def image_ahash(
     image-dedup primitive (brightness-shift tolerant: two images with the
     same spatial pattern hash identically even when one is uniformly
     lighter, as long as no channel wraps): grayscale = per-pixel integer
-    mean of RGB, the image is bucketed into a 4×3 grid by floor mapping
-    (``bx = x * 4 // w``), each cell's value is the floor mean of its
-    pixels, the threshold is the floor mean of the 12 cell values, and
-    bit ``by * 4 + bx`` is set iff its cell exceeds the threshold.
+    mean of RGB, hashed by :func:`_ahash`.
 
     All-integer arithmetic end to end, so the DuckDB oracle recomputes
     every hash from the source pixel formula; equal hashes are the
     near-duplicate buckets (an equi-groupBy — the image analogue of the
     MinHash band bucket, no pairwise compare at any corpus size).
-    Arrow-batched mapInPandas with numpy bucketed sums; map-only."""
-    import numpy as np
-
+    Map-only."""
     from direct_spark_sql_spark.operators.imagecodec import decode_image
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                fmt, w, h, rgb = decode_image(bytes(payload))
-                a = (
-                    np.frombuffer(rgb, dtype=np.uint8)
-                    .astype(np.int64)
-                    .reshape(h, w, 3)
-                )
-                gray = a.sum(axis=2) // 3  # (h, w) integer grayscale
-                xs = np.arange(w) * AHASH_GX // w  # floor bucket per col
-                ys = np.arange(h) * AHASH_GY // h  # floor bucket per row
-                cell = np.zeros((AHASH_GY, AHASH_GX), dtype=np.int64)
-                cnt = np.zeros((AHASH_GY, AHASH_GX), dtype=np.int64)
-                np.add.at(cell, (ys[:, None], xs[None, :]), gray)
-                np.add.at(cnt, (ys[:, None], xs[None, :]), 1)
-                means = cell // cnt
-                thr = means.sum() // (AHASH_GX * AHASH_GY)
-                bits = (means > thr).astype(np.int64)
-                idx = (
-                    np.arange(AHASH_GY)[:, None] * AHASH_GX
-                    + np.arange(AHASH_GX)[None, :]
-                )
-                ahash = int((bits << idx).sum())
-                rows.append((int(doc_id), fmt, w, h, ahash))
-            yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA.fields])
+    def hashed(doc_id, payload):
+        fmt, w, h, rgb = decode_image(payload)
+        gray = _pixels(rgb, h, w, 3).sum(axis=2) // 3  # (h, w) integer grayscale
+        yield doc_id, fmt, w, h, _ahash(gray)
 
-    return df.select(id_col, media_col).mapInPandas(run, AHASH_SCHEMA)
+    return map_rows(df, [id_col, media_col], AHASH_SCHEMA, hashed)
 
 
 JPEG_ROUNDTRIP_SCHEMA = T.StructType(
@@ -316,14 +284,12 @@ def jpeg_encode_decode_verify(
     against the regenerated formula.  JPEG is lossy, so unlike the
     ppm/bmp/png path an oracle cannot predict exact pixel sums; a caller
     asserts a tolerance bound instead (smooth ramps reconstruct within a
-    few counts at quality 90).  Everything runs inside one Arrow-batched
-    mapInPandas — no payload ever reaches the driver."""
-    import numpy as np
-
+    few counts at quality 90).  Everything runs executor-side — no
+    payload ever reaches the driver."""
     from direct_spark_sql_spark.operators.imagecodec import decode_image
     from direct_spark_sql_spark.operators.jpegcodec import encode_jpeg
 
-    def synth(i: int) -> "np.ndarray":
+    def synth(i: int) -> np.ndarray:
         w, h = 8 + i % 17, 6 + i % 13
         y, x = np.mgrid[0:h, 0:w]
         return np.stack(
@@ -335,47 +301,19 @@ def jpeg_encode_decode_verify(
             axis=-1,
         ).astype(np.uint8)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                img = synth(i)
-                h, w = img.shape[:2]
-                payload = encode_jpeg(
-                    w, h, img.tobytes(), quality=quality,
-                    subsampling="444" if i % 2 == 0 else "420",
-                )
-                fmt, gw, gh, rgb = decode_image(payload)
-                got = np.frombuffer(rgb, np.uint8).reshape(gh, gw, 3).astype(int)
-                err = int(np.abs(got - img.astype(int)).max()) if (gw, gh) == (w, h) else 255
-                rows.append((i, fmt, gw, gh, err))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JPEG_ROUNDTRIP_SCHEMA.fields]
-            )
+    def audit(i):
+        img = synth(i)
+        h, w = img.shape[:2]
+        payload = encode_jpeg(
+            w, h, img.tobytes(), quality=quality,
+            subsampling="444" if i % 2 == 0 else "420",
+        )
+        fmt, gw, gh, rgb = decode_image(payload)
+        got = _pixels(rgb, gh, gw, 3)
+        err = int(np.abs(got - img.astype(int)).max()) if (gw, gh) == (w, h) else 255
+        yield i, fmt, gw, gh, err
 
-    return df.select(id_col).mapInPandas(run, JPEG_ROUNDTRIP_SCHEMA)
-
-
-def extract_features(
-    df: DataFrame, id_col: str = "doc_id", media_col: str = "media", fake: bool = True
-) -> DataFrame:
-    """Per-payload feature extraction via Arrow-batched mapInPandas."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                payload = bytes(payload) if payload is not None else b""
-                byte_sum, bmin, bmax, width, height = _decode_image_bytes(payload, fake)
-                rows.append(
-                    (int(doc_id), len(payload), byte_sum, bmin, bmax, width, height)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURE_SCHEMA.fields]
-            )
-
-    return df.select(id_col, media_col).mapInPandas(run, FEATURE_SCHEMA)
+    return map_rows(df, [id_col], JPEG_ROUNDTRIP_SCHEMA, audit)
 
 
 def chunk_binary(
@@ -386,24 +324,19 @@ def chunk_binary(
 ) -> DataFrame:
     """Split each binary payload into ``n_chunks`` contiguous byte ranges —
     the blob-sharding step a pipeline needs before shipping oversized
-    payloads through per-record size limits.  One row per chunk;
-    flatMap-shaped output through Arrow-batched mapInPandas.  (Video
+    payloads through per-record size limits.  One row per chunk (a null
+    or empty payload yields none): flatMap-shaped output.  (Video
     *keyframe* sampling is the separate real decoder,
     :func:`sample_video_frames`.)"""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                payload = bytes(payload) if payload is not None else b""
-                if not payload:
-                    continue
-                step = max(len(payload) // n_chunks, 1)
-                for i in range(min(n_chunks, len(payload))):
-                    rows.append((int(doc_id), i, payload[i * step : (i + 1) * step]))
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA.fields])
+    def chunks(doc_id, payload):
+        if not payload:
+            return
+        step = max(len(payload) // n_chunks, 1)
+        for i in range(min(n_chunks, len(payload))):
+            yield doc_id, i, payload[i * step : (i + 1) * step]
 
-    return df.select(id_col, media_col).mapInPandas(run, CHUNK_SCHEMA)
+    return map_rows(df, [id_col, media_col], CHUNK_SCHEMA, chunks)
 
 
 AUDIO_FEATURE_SCHEMA = T.StructType(
@@ -430,30 +363,22 @@ def synthesize_audio(
     8000/16000/22050 by ``id % 3``, ``channels = 1 + id % 2``,
     ``n_frames = 64 + id % 37``, and sample (frame i, channel c) is
     ``((i*(3 + id%5) + c*11 + id*17) % 65536) - 32768``.  Encoding happens
-    executor-side in Arrow-batched mapInPandas."""
+    executor-side."""
     from direct_spark_sql_spark.operators.audiocodec import encode_wav
 
     rates = (8000, 16000, 22050)
-    schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField(media_col, T.BinaryType())]
-    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                rate, channels, n = rates[i % 3], 1 + i % 2, 64 + i % 37
-                step = 3 + i % 5
-                samples = [
-                    ((f * step + c * 11 + i * 17) % 65536) - 32768
-                    for f in range(n)
-                    for c in range(channels)
-                ]
-                rows.append((i, encode_wav(rate, channels, samples)))
-            yield pd.DataFrame(rows, columns=[id_col, media_col])
+    def wav(i: int) -> bytes:
+        rate, channels, n = rates[i % 3], 1 + i % 2, 64 + i % 37
+        step = 3 + i % 5
+        samples = [
+            ((f * step + c * 11 + i * 17) % 65536) - 32768
+            for f in range(n)
+            for c in range(channels)
+        ]
+        return encode_wav(rate, channels, samples)
 
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synthesize(df, id_col, media_col, wav)
 
 
 AUDIO_FP_SCHEMA = T.StructType(
@@ -490,65 +415,49 @@ def audio_fingerprint(
     Equal fingerprints are the near-duplicate buckets (equi-groupBy — no
     pairwise compare at any corpus size), mirroring image_ahash for the
     audio modality; the oracle recomputes every fingerprint from the
-    synthesis formula.  Arrow-batched mapInPandas, map-only."""
-    import numpy as np
-
+    synthesis formula.  Map-only."""
     from direct_spark_sql_spark.operators.audiocodec import decode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                rate, channels, samples = decode_wav(bytes(payload))
-                arr = np.asarray(samples, dtype=np.int64).reshape(-1, channels)
-                n = arr.shape[0]
-                mono = arr.sum(axis=1)  # channel sum, stays integer
-                wb = np.arange(n) * AUDIO_FP_WINDOWS // n
-                energy = np.zeros(AUDIO_FP_WINDOWS, dtype=np.int64)
-                np.add.at(energy, wb, mono * mono)
-                bits = (energy[1:] > energy[:-1]).astype(np.int64)
-                afp = int((bits << np.arange(AUDIO_FP_WINDOWS - 1)).sum())
-                loud = (energy * AUDIO_FP_WINDOWS > energy.sum()).astype(np.int64)
-                afp += int(
-                    (loud << (np.arange(AUDIO_FP_WINDOWS) + AUDIO_FP_WINDOWS - 1)).sum()
-                )
-                rows.append((int(doc_id), rate, channels, n, afp))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FP_SCHEMA.fields]
-            )
+    def fingerprint(doc_id, payload):
+        rate, channels, samples = decode_wav(payload)
+        arr = np.asarray(samples, dtype=np.int64).reshape(-1, channels)
+        n = arr.shape[0]
+        mono = arr.sum(axis=1)  # channel sum, stays integer
+        wb = np.arange(n) * AUDIO_FP_WINDOWS // n
+        energy = np.zeros(AUDIO_FP_WINDOWS, dtype=np.int64)
+        np.add.at(energy, wb, mono * mono)
+        bits = (energy[1:] > energy[:-1]).astype(np.int64)
+        afp = int((bits << np.arange(AUDIO_FP_WINDOWS - 1)).sum())
+        loud = (energy * AUDIO_FP_WINDOWS > energy.sum()).astype(np.int64)
+        afp += int((loud << (np.arange(AUDIO_FP_WINDOWS) + AUDIO_FP_WINDOWS - 1)).sum())
+        yield doc_id, rate, channels, n, afp
 
-    return df.select(id_col, media_col).mapInPandas(run, AUDIO_FP_SCHEMA)
+    return map_rows(df, [id_col, media_col], AUDIO_FP_SCHEMA, fingerprint)
 
 
 def extract_audio_features(
     df: DataFrame, id_col: str = "doc_id", media_col: str = "media"
 ) -> DataFrame:
-    """REAL audio decode via Arrow-batched mapInPandas: parse each WAV
-    container (chunk walk, PCM16) and emit format + amplitude statistics.
-    All outputs are integers, so the oracle match is exact."""
+    """REAL audio decode: parse each WAV container (chunk walk, PCM16) and
+    emit format + amplitude statistics.  All outputs are integers, so the
+    oracle match is exact."""
     from direct_spark_sql_spark.operators.audiocodec import decode_wav
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                rate, channels, samples = decode_wav(bytes(payload))
-                n_frames = len(samples) // channels
-                rows.append(
-                    (
-                        int(doc_id),
-                        rate,
-                        channels,
-                        n_frames,
-                        n_frames * 1_000_000 // rate,
-                        min(samples),
-                        max(samples),
-                        sum(abs(s) for s in samples),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields])
+    def features(doc_id, payload):
+        rate, channels, samples = decode_wav(payload)
+        n_frames = len(samples) // channels
+        yield (
+            doc_id,
+            rate,
+            channels,
+            n_frames,
+            n_frames * 1_000_000 // rate,
+            min(samples),
+            max(samples),
+            sum(abs(s) for s in samples),
+        )
 
-    return df.select(id_col, media_col).mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return map_rows(df, [id_col, media_col], AUDIO_FEATURE_SCHEMA, features)
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -592,47 +501,22 @@ def video_fingerprint(
     spatial layout and temporal evolution.
     Equal fingerprints are the near-dup buckets (equi-groupBy), the
     video sibling of image/audio perceptual dedup; the oracle recomputes
-    every fingerprint from the synthesis formula.  Arrow-batched
-    mapInPandas, map-only."""
-    import numpy as np
-
+    every fingerprint from the synthesis formula.  Map-only."""
     from direct_spark_sql_spark.operators.videocodec import decode_y4m
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, frames = decode_y4m(bytes(payload))
-                vfp = 0
-                for idx in range(0, len(frames), every_k):
-                    y = (
-                        np.frombuffer(frames[idx][0], dtype=np.uint8)
-                        .astype(np.int64)
-                        .reshape(h, w)
-                    )
-                    xs = np.arange(w) * AHASH_GX // w
-                    ys = np.arange(h) * AHASH_GY // h
-                    cell = np.zeros((AHASH_GY, AHASH_GX), dtype=np.int64)
-                    cnt = np.zeros((AHASH_GY, AHASH_GX), dtype=np.int64)
-                    np.add.at(cell, (ys[:, None], xs[None, :]), y)
-                    np.add.at(cnt, (ys[:, None], xs[None, :]), 1)
-                    means = cell // cnt
-                    thr = means.sum() // (AHASH_GX * AHASH_GY)
-                    bits = (means > thr).astype(np.int64)
-                    bidx = (
-                        np.arange(AHASH_GY)[:, None] * AHASH_GX
-                        + np.arange(AHASH_GX)[None, :]
-                    )
-                    ahash = int((bits << bidx).sum())
-                    pos = idx // every_k
-                    if pos < VFP_MAX_PACKED:
-                        vfp += ahash << (12 * pos)
-                    else:  # beyond the 5 positional slots: sign-safe fold
-                        vfp ^= (ahash * (2 * pos + 1)) & ((1 << 60) - 1)
-                rows.append((int(doc_id), w, h, len(frames), vfp))
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FP_SCHEMA.fields])
+    def fingerprint(doc_id, payload):
+        w, h, frames = decode_y4m(payload)
+        vfp = 0
+        for idx in range(0, len(frames), every_k):
+            ahash = _ahash(_pixels(frames[idx][0], h, w))
+            pos = idx // every_k
+            if pos < VFP_MAX_PACKED:
+                vfp += ahash << (12 * pos)
+            else:  # beyond the 5 positional slots: sign-safe fold
+                vfp ^= (ahash * (2 * pos + 1)) & ((1 << 60) - 1)
+        yield doc_id, w, h, len(frames), vfp
 
-    return df.select(id_col, media_col).mapInPandas(run, VIDEO_FP_SCHEMA)
+    return map_rows(df, [id_col, media_col], VIDEO_FP_SCHEMA, fingerprint)
 
 
 def synthesize_videos(
@@ -646,30 +530,21 @@ def synthesize_videos(
     constant ``(f*5 + id) % 256`` / ``(f*9 + id) % 256``."""
     from direct_spark_sql_spark.operators.videocodec import encode_y4m
 
-    schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField(media_col, T.BinaryType())]
-    )
+    def video(i: int) -> bytes:
+        w, h, n = 4 + 2 * (i % 5), 4 + 2 * (i % 4), 3 + i % 4
+        frames = []
+        for f in range(n):
+            y = bytes(
+                (x * 3 + yy * 7 + f * 11 + i * 13) % 256
+                for yy in range(h)
+                for x in range(w)
+            )
+            u = bytes([(f * 5 + i) % 256]) * ((w // 2) * (h // 2))
+            v = bytes([(f * 9 + i) % 256]) * ((w // 2) * (h // 2))
+            frames.append((y, u, v))
+        return encode_y4m(w, h, frames)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h, n = 4 + 2 * (i % 5), 4 + 2 * (i % 4), 3 + i % 4
-                frames = []
-                for f in range(n):
-                    y = bytes(
-                        (x * 3 + yy * 7 + f * 11 + i * 13) % 256
-                        for yy in range(h)
-                        for x in range(w)
-                    )
-                    u = bytes([(f * 5 + i) % 256]) * ((w // 2) * (h // 2))
-                    v = bytes([(f * 9 + i) % 256]) * ((w // 2) * (h // 2))
-                    frames.append((y, u, v))
-                rows.append((i, encode_y4m(w, h, frames)))
-            yield pd.DataFrame(rows, columns=[id_col, media_col])
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synthesize(df, id_col, media_col, video)
 
 
 def sample_video_frames(
@@ -680,19 +555,13 @@ def sample_video_frames(
 ) -> DataFrame:
     """REAL video frame sampling: parse each Y4M stream, keep every k-th
     frame, emit per-frame luma statistics — the keyframe-sampling step of
-    a video-training pipeline, flatMap-shaped through mapInPandas."""
+    a video-training pipeline, flatMap-shaped."""
     from direct_spark_sql_spark.operators.videocodec import decode_y4m
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[media_col]):
-                w, h, frames = decode_y4m(bytes(payload))
-                for idx in range(0, len(frames), every_k):
-                    y = frames[idx][0]
-                    rows.append(
-                        (int(doc_id), idx, w, h, sum(y), min(y), max(y))
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FRAME_SCHEMA.fields])
+    def sampled(doc_id, payload):
+        w, h, frames = decode_y4m(payload)
+        for idx in range(0, len(frames), every_k):
+            y = frames[idx][0]
+            yield doc_id, idx, w, h, sum(y), min(y), max(y)
 
-    return df.select(id_col, media_col).mapInPandas(run, VIDEO_FRAME_SCHEMA)
+    return map_rows(df, [id_col, media_col], VIDEO_FRAME_SCHEMA, sampled)

@@ -1841,7 +1841,7 @@ def multimodal_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # NOTE (ADVICE r8): this oracle implements ONLY the positional packing
 # SUM(ah << 12*(f//2)) — it does not replay video_fingerprint's XOR fold
-# for sample positions >= VFP_MAX_PACKED (operators/multimodal.py:249).
+# for sample positions >= VFP_MAX_PACKED (operators/multimodal.py).
 # Parity therefore DEPENDS on synthesize_videos capping n_frames at
 # 3 + id%4 <= 6 (3 sampled frames < VFP_MAX_PACKED = 5); bumping the
 # synthesis frame count past 2*VFP_MAX_PACKED-1 requires adding the XOR

@@ -1,5 +1,5 @@
 """Multimodal plumbing tests beyond the registry's rows-only check: the
-mapInPandas operators must produce schema-exact, content-correct output
+``map_rows`` operators must produce schema-exact, content-correct output
 (verified against a driver-side recomputation on a small sample), handle
 null/empty payloads, and reassemble frames back into the payload prefix.
 """
@@ -28,24 +28,11 @@ def test_metadata_struct(media):
     assert row.media_meta.source.startswith("src")
 
 
-def test_feature_extract_matches_local_recompute(spark, media):
-    feats = {r.doc_id: r for r in mm.extract_features(media, fake=True).collect()}
-    src = {r.doc_id: bytes(r.media) for r in media.select("doc_id", "media").collect()}
-    assert feats.keys() == src.keys()
-    for doc_id, payload in src.items():
-        r = feats[doc_id]
-        assert r.n_bytes == len(payload)
-        assert r.byte_sum == sum(payload)
-        assert r.byte_min == min(payload)
-        assert r.byte_max == max(payload)
-        assert r.width * r.height >= len(payload)
-
-
 def test_feature_extract_real_decode_rejects_non_image(spark, media):
-    """fake=False now runs the REAL decode; opaque text payloads must be
-    rejected (ValueError via the codec sniffer), not silently faked."""
+    """Opaque text payloads are rejected by the real decode (ValueError via
+    the codec sniffer), not silently faked."""
     with pytest.raises(Exception) as exc_info:
-        mm.extract_features(media, fake=False).collect()
+        mm.extract_image_features(media).collect()
     assert "unrecognized image payload" in str(exc_info.value)
 
 
@@ -70,26 +57,6 @@ def test_real_decode_round_trip_all_formats(spark):
         assert (r.px_min, r.px_max) == (min(vals), max(vals))
 
 
-def test_extract_features_fake_false_on_real_images(spark):
-    """The legacy feature extractor's non-fake path decodes real images:
-    byte stats are over decoded RGB, dimensions are true."""
-    ids = spark.range(0, 6).selectExpr("id AS doc_id")
-    feats = {
-        r.doc_id: r
-        for r in mm.extract_features(
-            mm.synthesize_images(ids), fake=False
-        ).collect()
-    }
-    for i in range(6):
-        w, h = 4 + i % 13, 3 + i % 11
-        vals = [
-            (x * 7 + y * 13 + i * 31) % 256 for y in range(h) for x in range(w)
-        ]
-        r = feats[i]
-        assert (r.width, r.height) == (w, h)
-        assert r.byte_sum == 3 * sum(vals)
-
-
 def test_chunk_binary_reassembles_prefix(spark, media):
     chunks = mm.chunk_binary(media, n_chunks=4).collect()
     src = {r.doc_id: bytes(r.media) for r in media.select("doc_id", "media").collect()}
@@ -109,17 +76,22 @@ def test_null_payload_handling(spark):
     df = spark.createDataFrame(
         [(1, b"abc"), (2, None), (3, b"")], "doc_id long, media binary"
     )
-    feats = {r.doc_id: r for r in mm.extract_features(df, fake=True).collect()}
-    assert feats[2].n_bytes == 0 and feats[2].byte_sum == 0
-    assert feats[3].n_bytes == 0
     chunks = mm.chunk_binary(df).collect()
     assert {r.doc_id for r in chunks} == {1}
+    # every payload null or empty: no batch yields a row, the result is
+    # empty and keeps CHUNK_SCHEMA
+    empty = spark.createDataFrame(
+        [(i, None if i % 2 else b"") for i in range(6)], "doc_id long, media binary"
+    ).repartition(3)
+    chunks = mm.chunk_binary(empty)
+    assert chunks.collect() == []
+    assert chunks.schema == mm.CHUNK_SCHEMA
 
 
 def test_binary_file_source_ingestion(spark, tmp_path):
     """The real ingestion path for image corpora: files on disk read via
     Spark's binaryFile source (path/length/content columns), then decoded
-    by the same mapInPandas feature extractor — stats must match the
+    by the same executor-side feature extractor — stats must match the
     synthesizer's closed-form pixel formula."""
     from direct_spark_sql_spark.operators.imagecodec import (
         encode_bmp,

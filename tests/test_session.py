@@ -943,6 +943,22 @@ def test_datatable_to_local_iterator(engine):
     assert rows == [{"id": i} for i in range(5)]
 
 
+@pytest.mark.parametrize(
+    "select", ["INTERVAL '1' YEAR AS ym", "make_interval(1, 2) AS ci"],
+    ids=["year-month", "calendar"],
+)
+def test_interval_results_raise(engine, select):
+    """Neither Arrow nor ``collect()`` carries a YEAR-MONTH or calendar
+    INTERVAL to Python: ``sql_directly`` raises rather than return a table."""
+    from pyspark.errors import PySparkNotImplementedError, PySparkTypeError
+
+    sql = f"SELECT {select}"
+    with pytest.raises(PySparkTypeError, match="UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION"):
+        engine.sql_directly(sql)
+    with pytest.raises(PySparkNotImplementedError, match="NOT_IMPLEMENTED"):
+        engine.spark.sql(sql).collect()
+
+
 def test_reregister_same_sql_keeps_materialization(engine, spark):
     """CacheManager keys by canonicalized plan: re-registering the SAME
     statement must not unpersist the shared cache entry out from under
