@@ -1845,7 +1845,8 @@ def multimodal_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parity therefore DEPENDS on synthesize_videos capping n_frames at
 # 3 + id%4 <= 6 (3 sampled frames < VFP_MAX_PACKED = 5); bumping the
 # synthesis frame count past 2*VFP_MAX_PACKED-1 requires adding the XOR
-# branch here (tests/test_multimodal_av.py pins the cap).
+# branch here (tests/test_multimodal.py::
+# test_synthesized_videos_stay_within_packed_frame_slots pins the cap).
 VIDEO_DEDUP_ORACLE = """
 WITH d AS (
   SELECT doc_id, 4 + 2 * (doc_id % 5) AS w, 4 + 2 * (doc_id % 4) AS h,

@@ -7,13 +7,15 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
 - ``sql_directly(sql) -> DataTable``        (reference :88-127)
 - ``register_table`` (reference :129-137) and ``execute_and_register_temp_view``
   (:181-219) bind names through one ``_bind_view``, db-qualified ones via a
-  side registry like DirectSessionCatalog.directTempViews
+  case-insensitive side registry like DirectSessionCatalog.directTempViews,
+  which SQL reaches at the table references Spark's parser places
 - ``temp_view(name) -> DataTable``          (reference :139-154)
 - ``set_namespace`` / plan+result LRU cache keyed ``namespace + sql``
   (reference :91-92, :411-415, Guava cache → functools-style OrderedDict LRU);
   a statement's kind, whether a query is cached, and which entries a view
-  change drops come from its analyzed plan (``TreePattern.COMMAND``,
-  ``_PlanFacts``), not from the SQL text; any other command drops all
+  change drops come from its parsed and analyzed plans
+  (``TreePattern.COMMAND``, ``_PlanFacts``, ``_view_ddl_name``), not from
+  the SQL text; any other command drops all
 - ``new_session()`` isolation               (reference :81-86)
 - ``explain(sql)`` issues Spark's EXPLAIN statement, so nothing is run;
   ``engine.spark`` is the raw session, and commands on it bypass the caches
@@ -77,32 +79,6 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "64MB",
 }
 
-#: Quoted spans a qualified-name rewrite must not touch: single-quoted SQL
-#: string literals (with '' escapes) and backtick-quoted identifiers.
-_QUOTED_SPAN_RE = re.compile(r"'(?:[^']|'')*'|`(?:[^`]|``)*`")
-
-#: View DDL through the SQL surface (CREATE/DROP/ALTER ... VIEW name).
-#: Narrows such a command's invalidation to entries reading the named view,
-#: the contract register_table() applies (NamedLocalRelation.scala:25-44);
-#: any other command drops every entry (``Engine.dataframe``).
-_VIEW_DDL_RE = re.compile(
-    r"^\s*(?:CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW"
-    r"|DROP\s+VIEW(?:\s+IF\s+EXISTS)?"
-    r"|ALTER\s+VIEW)\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>`[^`]+`|[\w.]+)",
-    re.IGNORECASE,
-)
-
-#: The reference's JVM-function registration DDL
-#: (DirectSessionCatalog.scala:72-91): CREATE [TEMPORARY] FUNCTION name
-#: AS 'class' [USING JAR 'path'].  Routed to registerJavaFunction.
-_FUNCTION_DDL_RE = re.compile(
-    r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?FUNCTION\s+"
-    r"(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.]+)\s+AS\s+'(?P<cls>[\w.$]+)'"
-    r"(?:\s+USING\s+JAR\s+'(?P<jar>[^']+)')?\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
 #: Analyzed-plan leaf classes whose content cannot change outside the
 #: facade's invalidation hooks.  LocalRelation is what register_table
 #: binds list-of-dicts and DataTable input to, LogicalRDD what a
@@ -144,15 +120,19 @@ class _PlanFacts(NamedTuple):
     in_memory: bool
 
 
+def _each(seq):
+    """The elements of a Scala collection, read through py4j."""
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 def _plan_facts(df: DataFrame) -> _PlanFacts:
     """One walk of ``df``'s analyzed plan and of every subquery plan inside
     it (``subqueriesAll``), which also covers view bodies, since analysis
     inlines them."""
     analyzed = df._jdf.queryExecution().analyzed()
-    roots = [analyzed]
-    it = analyzed.subqueriesAll().iterator()
-    while it.hasNext():
-        roots.append(it.next())
+    roots = [analyzed, *_each(analyzed.subqueriesAll())]
     current_like = (
         df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
     )
@@ -170,17 +150,37 @@ def _plan_facts(df: DataFrame) -> _PlanFacts:
             node = p.nodeName()
             if node == "SubqueryAlias":
                 names.add(p.identifier().name().lower())
-            kids = p.children().iterator()
-            leaf = not kids.hasNext()
-            while kids.hasNext():
-                stack.append(kids.next())
-            if leaf and node not in _RESULT_CACHE_LEAVES:
+            kids = list(_each(p.children()))
+            stack.extend(kids)
+            if not kids and node not in _RESULT_CACHE_LEAVES:
                 in_memory = False
                 if node == "HiveTableRelation" or (
                     node == "LogicalRelation" and p.catalogTable().isDefined()
                 ):
                     replayable = False
     return _PlanFacts(frozenset(names), replayable, in_memory)
+
+
+#: Parsed view DDL naming its view by its first child: an
+#: ``UnresolvedIdentifier`` (CREATE/DROP VIEW) or ``UnresolvedView`` (ALTER VIEW).
+_VIEW_DDL = frozenset(
+    {"CreateView", "DropView", "AlterViewAs", "AlterViewSchemaBinding",
+     "SetViewProperties", "UnsetViewProperties"}
+)
+
+
+def _view_ddl_name(parsed) -> str | None:
+    """The dotted name of the view a parsed view DDL names; None for any
+    other statement, and for an IDENTIFIER(...) name, bound by analysis."""
+    if parsed.nodeName() == "CreateViewCommand":  # temp-view DDL
+        return parsed.name().unquotedString()
+    if parsed.nodeName() in _VIEW_DDL:
+        ident = parsed.children().head()
+        if ident.nodeName() == "UnresolvedIdentifier":
+            return ident.nameParts().mkString(".")
+        if ident.nodeName() == "UnresolvedView":
+            return ident.multipartIdentifier().mkString(".")
+    return None
 
 
 def _walk_plan_metrics(jnode, out: list[dict[str, Any]]) -> None:
@@ -190,12 +190,9 @@ def _walk_plan_metrics(jnode, out: list[dict[str, Any]]) -> None:
     node_entry: dict[str, Any] = {"operator": "<unreadable>", "metrics": {}}
     try:
         node_entry["operator"] = str(jnode.nodeName())
-        metrics: dict[str, int] = {}
-        it = jnode.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            metrics[str(kv._1())] = kv._2().value()
-        node_entry["metrics"] = metrics
+        node_entry["metrics"] = {
+            str(kv._1()): kv._2().value() for kv in _each(jnode.metrics())
+        }
     except Exception:
         # a node without the metrics surface (or a py4j hiccup) degrades to
         # ONE partial entry — the walk still descends, so a single bad node
@@ -212,9 +209,8 @@ def _walk_plan_metrics(jnode, out: list[dict[str, Any]]) -> None:
     except Exception:
         node_entry["partial"] = True
     try:
-        ch = jnode.children().iterator()
-        while ch.hasNext():
-            _walk_plan_metrics(ch.next(), out)
+        for child in _each(jnode.children()):
+            _walk_plan_metrics(child, out)
     except Exception:
         node_entry["partial"] = True
 
@@ -273,10 +269,9 @@ def _stage_rollup(sc, tag: str) -> dict[str, Any]:
         out["stages_run"] += job.numCompletedStages()
         out["stages_skipped"] += job.numSkippedStages()
         out["tasks"] += job.numCompletedTasks() + job.numFailedTasks()
-        ids = job.stageIds()
-        for i in range(ids.size()):
+        for stage_id in _each(job.stageIds()):
             try:
-                stage = store.lastStageAttempt(ids.apply(i))
+                stage = store.lastStageAttempt(stage_id)
             except Py4JJavaError:
                 # NoSuchElementException: past spark.ui.retainedStages the
                 # store evicts SKIPPED stages first, even a moment-old one,
@@ -467,13 +462,15 @@ class Engine:
         result_cache_max_bytes: int = 256 << 20,
     ):
         self.spark = spark
+        #: Spark's SQL parser: a plan-cache miss parses once (``dataframe``)
+        self._parser = spark._jsparkSession.sessionState().sqlParser()
         self._namespace = ""
         #: (namespace+sql) -> analyzed DataFrame; re-executes lazily with
         #: fresh view data, mirroring the reference's plan-cache-with-late-
         #: bound-scan design (NamedLocalRelation.scala:25-44).
         self._plan_cache = _LRU(plan_cache_size)
-        #: db-qualified temp views, reference: DirectSessionCatalog.directTempViews
-        #: (DirectSessionCatalog.scala:55).
+        #: db-qualified temp views by lower-cased name, reference:
+        #: DirectSessionCatalog.directTempViews (DirectSessionCatalog.scala:55).
         self._qualified_views: dict[str, DataFrame] = {}
         #: name -> the .cache()d DataFrame backing an
         #: execute_and_register_temp_view result, so replacing it can
@@ -561,14 +558,15 @@ class Engine:
         DirectSparkSession.scala:129-137, 181-219); a db-qualified one also
         goes to the side registry (DirectSessionCatalog.scala:130-145).
         Storage materialized under the name is released; ``cached`` marks
-        ``df`` as the new one."""
+        ``df`` as the new one.  Names are case-insensitive, as in SQL."""
+        key = name.lower()
         with self._lock:
-            displaced = self._materialized_views.pop(name, None)
-            if "." in name:
-                self._qualified_views[name] = df
-            df.createOrReplaceTempView(self._mangle(name))  # identity if bare
+            displaced = self._materialized_views.pop(key, None)
+            if "." in key:
+                self._qualified_views[key] = df
+            df.createOrReplaceTempView(self._mangle(key))  # identity if bare
             if cached:
-                self._materialized_views[name] = df
+                self._materialized_views[key] = df
         # CacheManager keys by canonicalized plan: a displaced DataFrame
         # sharing the survivor's cache entry (a concurrent re-register of
         # the same statement) must not be unpersisted.
@@ -633,54 +631,57 @@ class Engine:
             self._result_cache.drop_where(lambda _, hit: _references(hit[2]))
             self._invalidation_epoch += 1
 
-    def _rewrite_qualified(self, sql: str) -> str:
-        """Rewrite ``db.table`` references for registered qualified views.
-
-        Identifier-boundary aware: longest name first (so ``db.tab`` never
-        clobbers a ``db.table2`` reference), anchored so neither side of the
-        match continues into a longer identifier or deeper qualifier, and
-        quoted spans (string literals, backtick identifiers) are skipped.
-        """
+    def _rewrite_qualified(self, sql: str, parsed=None) -> str:
+        """``sql`` with the mangled name spliced over each reference to a
+        registered qualified view: an ``UnresolvedRelation`` of ``parsed``
+        (parsed here if not given), found through ``children`` (a view
+        DDL's body too), ``innerChildren`` (expression subqueries, CTE
+        definitions) and an INSERT's target.  Its ``origin`` bounds are inclusive
+        offsets into ``sql``.  Literals and comments are no relations."""
         with self._lock:  # one snapshot: _bind_view writes under this lock
-            names = sorted(self._qualified_views, key=len, reverse=True)
+            names = list(self._qualified_views)
         if not names:
             return sql
-        pattern = re.compile(
-            "|".join(rf"(?<![\w.$]){re.escape(n)}(?![\w.$])" for n in names),
-            re.IGNORECASE,
-        )
-        # Map lowercase registered name -> mangled form for case-insensitive
-        # resolution (Spark identifiers are case-insensitive by default).
-        mangled = {n.lower(): self._mangle(n) for n in names}
-
-        def _rewrite_segment(segment: str) -> str:
-            return pattern.sub(lambda m: mangled[m.group(0).lower()], segment)
-
-        out: list[str] = []
-        pos = 0
-        for span in _QUOTED_SPAN_RE.finditer(sql):
-            out.append(_rewrite_segment(sql[pos : span.start()]))
-            out.append(span.group(0))
-            pos = span.end()
-        out.append(_rewrite_segment(sql[pos:]))
-        return "".join(out)
+        mangled = {n: self._mangle(n) for n in names}
+        if parsed is None:
+            parsed = self._parser.parsePlan(sql)
+        spans: dict[tuple[int, int], str] = {}
+        stack = [parsed]
+        while stack:
+            p = stack.pop()
+            node = p.nodeName()
+            if node == "UnresolvedRelation":
+                name = p.multipartIdentifier().mkString(".").lower()
+                if name in mangled:
+                    origin = p.origin()
+                    span = (origin.startIndex().get(), origin.stopIndex().get())
+                    spans[span] = mangled[name]
+            elif node == "InsertIntoStatement":
+                stack.append(p.table())
+            stack.extend(_each(p.children()))
+            stack.extend(_each(p.innerChildren()))
+        for (start, stop), name in sorted(spans.items(), reverse=True):
+            sql = sql[:start] + name + sql[stop + 1 :]
+        return sql
 
     # -- query --------------------------------------------------------------
 
     def dataframe(self, sql: str) -> DataFrame:
         """Analyzed (lazy) DataFrame for a SQL text, via the plan cache.
 
-        Only queries are cached, so a hit needs no classification.  On a
-        miss the analyzed plan tells a command (``TreePattern.COMMAND``:
-        DDL, DML, SET, USE, ...) from a query.  ``spark.sql`` has already
-        run a command; it is never cached, and it drops the entries that
-        read the view its view DDL names, or else every entry, since it
-        may have changed data, a conf or the namespace that cached plans
-        bound.  A query's plan is walked once for its ``_PlanFacts``,
-        memoized on the DataFrame.  Only a replayable plan is cached:
-        re-executing one that reads a catalog table would miss writes made
-        through ``engine.spark``, and one that reads the current time or a
-        seeded random value would freeze that value across executions —
+        Only queries are cached, so a hit parses nothing.  A miss parses
+        once; the parsed plan routes function DDL, places qualified view
+        names and names a view DDL's view.  The analyzed plan tells a
+        command (``TreePattern.COMMAND``: DDL, DML, SET, USE, ...) from a
+        query.  ``spark.sql`` has already run a command; it is never
+        cached, and it drops the entries that read the view its view DDL
+        names, or else every entry, since it may have changed data, a conf
+        or the namespace that cached plans bound.  A query's plan is
+        walked once for its ``_PlanFacts``, memoized on the DataFrame.
+        Only a replayable plan is cached: re-executing one that reads a
+        catalog table would miss writes made through ``engine.spark``,
+        and one that reads the current time or a seeded random value
+        would freeze that value across executions —
         the bug the reference built DirectCurrentTimestamp to avoid
         (DirectCurrentDate.scala:26-50).  Such a statement is re-analyzed
         per call, so each execution sees the table as it is and gets one
@@ -690,11 +691,9 @@ class Engine:
         df = self._plan_cache.get(key, count_miss=False)
         if df is not None:
             return df
-        ddl = _FUNCTION_DDL_RE.match(sql)
-        if ddl:
-            return self._register_function_ddl(
-                sql, ddl.group("name"), ddl.group("cls"), ddl.group("jar")
-            )
+        parsed = self._parser.parsePlan(sql)
+        if parsed.nodeName() in ("CreateFunctionCommand", "CreateFunction"):
+            return self._register_function_ddl(sql, parsed)
         # Epoch captured BEFORE analysis: spark.sql() binds the view data
         # visible NOW, so if an invalidation sweep (view swap + epoch bump
         # + drop) completes before our put, this plan may hold the
@@ -704,13 +703,10 @@ class Engine:
         # never survive an invalidation and feed post-invalidation result
         # caching.
         epoch = self._invalidation_epoch
-        df = self.spark.sql(self._rewrite_qualified(sql))
+        df = self.spark.sql(self._rewrite_qualified(sql, parsed))
         patterns = df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
         if df._jdf.queryExecution().analyzed().containsPattern(patterns.COMMAND()):
-            view_ddl = _VIEW_DDL_RE.match(sql)
-            self._drop_cached_plans_referencing(
-                view_ddl.group("name") if view_ddl else None
-            )
+            self._drop_cached_plans_referencing(_view_ddl_name(parsed))
             return df
         self._plan_cache.note_miss()
         facts = df.__dict__["_dss_plan_facts"] = _plan_facts(df)
@@ -828,7 +824,7 @@ class Engine:
         and a long-lived service loop leaks no cached RDD per call.
         """
         with self._lock:
-            old = self._materialized_views.pop(name, None)
+            old = self._materialized_views.pop(name.lower(), None)
         if old is not None:
             old.unpersist()
         df = self.spark.sql(self._rewrite_qualified(sql)).cache()
@@ -836,11 +832,10 @@ class Engine:
         self._bind_view(name, df, cached=True)
         return count
 
-    def _register_function_ddl(
-        self, sql: str, name: str, cls: str, jar: str | None
-    ) -> DataFrame:
+    def _register_function_ddl(self, sql: str, parsed) -> DataFrame:
         """JVM UDF DDL surface (reference: CREATE FUNCTION ... AS 'class',
         DirectSessionCatalog.scala:72-91; DirectExecSuite.scala:159-178).
+        ``parsed`` is its ``CreateFunctionCommand`` or ``CreateFunction``.
 
         Two class contracts are accepted:
 
@@ -856,8 +851,15 @@ class Engine:
         Returns an empty result like any DDL statement."""
         from direct_spark_sql_spark.functions.jvm import register_java_function
 
+        if parsed.nodeName() == "CreateFunction":
+            name = parsed.child().nameParts().mkString(".")
+        else:
+            name = parsed.identifier().unquotedString()
         try:
-            register_java_function(self.spark, name, cls, jar_path=jar)
+            for r in _each(parsed.resources()):
+                if r.resourceType().resourceType() == "jar":
+                    self.spark.sql(f"ADD JAR '{r.uri()}'")
+            register_java_function(self.spark, name, parsed.className())
         except Exception:
             # Not a Spark Java UDF interface (or not loadable as one):
             # delegate to Spark SQL's own function DDL, which resolves
@@ -971,16 +973,15 @@ class Engine:
     def temp_view(self, name: str) -> DataTable:
         """Read a registered view back out (reference:
         DirectSparkSession.scala:139-154)."""
-        if name in self._qualified_views:
-            return DataTable.from_dataframe(self._qualified_views[name])
-        return DataTable.from_dataframe(self.spark.table(name))
+        df = self._qualified_views.get(name.lower())
+        return DataTable.from_dataframe(self.spark.table(name) if df is None else df)
 
     def _qualified_names(self) -> tuple[set[str], set[str]]:
-        """The registered db-qualified view names, and the lower-cased
+        """The registered db-qualified view names, lower-cased, and the
         ``db__view`` names SQL reaches them by, which are no views of their own."""
         with self._lock:
             qualified = set(self._qualified_views)
-        return qualified, {self._mangle(n).lower() for n in qualified}
+        return qualified, {self._mangle(n) for n in qualified}
 
     def list_tables(self, pattern: str | None = None) -> list[str]:
         """All visible table/view names — Spark's catalog merged with the
@@ -1005,10 +1006,8 @@ class Engine:
         isTemporaryTable override (DirectSessionCatalog.scala:173-183); a
         mangled ``db__view`` name is hidden, as in :meth:`list_tables`."""
         qualified, mangled = self._qualified_names()
-        if name in qualified:
-            return True
-        if name.lower() in mangled:
-            return False
+        if name.lower() in qualified | mangled:
+            return name.lower() in qualified
         try:
             if "." in name:
                 db, tbl = name.rsplit(".", 1)

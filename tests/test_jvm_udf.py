@@ -70,6 +70,20 @@ def test_create_or_replace_and_no_jar_variant(jvm_engine):
     assert rows == [{"r": "ababab", "clamped": "xxxxxxxx"}]
 
 
+def test_comment_prefixed_function_ddl_is_callable(jvm_engine):
+    """Function DDL is recognised from its parsed plan, so a leading
+    comment still routes a ``UDF1`` class through registerJavaFunction."""
+    jar = ensure_udf_jar()
+    jvm_engine.sql_directly(
+        f"-- note\nCREATE TEMPORARY FUNCTION cmt_vowels "
+        f"AS 'org.dss.udf.VowelCount' USING JAR '{jar}'"
+    )
+    rows = jvm_engine.sql_directly(
+        "SELECT cmt_vowels('banana') AS n"
+    ).to_list_of_dicts()
+    assert rows == [{"n": 3}]
+
+
 def test_builtin_java_udfs_registered(spark):
     reg = register_builtin_java_udfs(spark)
     assert reg == BUILTIN_JAVA_UDFS

@@ -152,3 +152,16 @@ def test_resize_box2_matches_local_recompute(spark):
         assert (r.width, r.height, r.r_width, r.r_height) == (w, h, rw, rh)
         assert r.r_sum == 3 * sum(vals)  # identical RGB channels
         assert (r.r_min, r.r_max) == (min(vals), max(vals))
+
+
+def test_synthesized_videos_stay_within_packed_frame_slots(spark):
+    """VIDEO_DEDUP_ORACLE (plans/analytics.py) replays only the positional
+    packing of video_fingerprint, so it holds only while every video that
+    multimodal_video_dedup synthesizes (doc_id < 100) has ``3 + id % 4``
+    frames, each sampled at a position below VFP_MAX_PACKED."""
+    ids = spark.range(0, 100).selectExpr("id AS doc_id")
+    videos = mm.synthesize_videos(ids)
+    n_frames = {r.doc_id: r.n_frames for r in mm.video_fingerprint(videos).collect()}
+    assert n_frames == {i: 3 + i % 4 for i in range(100)}
+    sampled = mm.sample_video_frames(videos, every_k=2).select("frame_idx").collect()
+    assert max(r.frame_idx // 2 for r in sampled) < mm.VFP_MAX_PACKED

@@ -237,6 +237,73 @@ def test_qualified_rewrite_identifier_boundaries(people_engine):
     assert _rows(t2) == [{"n": 5}]
 
 
+@pytest.mark.parametrize(
+    "sql, expected",
+    [
+        # Spark reads "..." as a string literal: data, not a reference
+        ('SELECT "see db.t" AS note FROM db.t', [{"note": "see db.t"}]),
+        # column t of the subquery aliased db, not the registered view
+        ("SELECT db.t FROM (SELECT 7 AS t) AS db", [{"t": 7}]),
+        ("SELECT COUNT(*) AS n FROM `db`.`t`", [{"n": 1}]),
+    ],
+)
+def test_qualified_names_placed_by_the_parser(engine, sql, expected):
+    engine.register_table("db.t", [{"x": 1}], "x int")
+    assert _rows(engine.sql_directly(sql)) == expected
+
+
+def test_qualified_rewrite_splices_every_relation_only(engine):
+    """Subqueries (IN, EXISTS, scalar), nested WITH, UNION, TABLE, a view
+    DDL's body and an INSERT target are rewritten in any quoting or case;
+    comments and literals stay as written."""
+    engine.register_table("db.t", [{"x": 1}], "x int")
+    query = (
+        "-- db.t\nWITH c AS (WITH d AS (SELECT x FROM {up}) SELECT x FROM d) "
+        "SELECT x FROM c WHERE x IN (SELECT x FROM {t}) "
+        "AND EXISTS (SELECT 1 FROM {bt}) AND x = (SELECT MAX(x) FROM {t}) "
+        "AND 'db.t' = \"db.t\" UNION ALL TABLE {t}"
+    )
+    written = dict(t="db.t", up="DB.T", bt="`db`.`t`")
+    for tpl in (
+        query,
+        "CREATE TEMP VIEW splice_v AS SELECT x FROM {up}",
+        "INSERT INTO {bt} SELECT x FROM {t}",
+    ):
+        spliced = engine._rewrite_qualified(tpl.format(**written))
+        assert spliced == tpl.format(t="db__t", up="db__t", bt="db__t")
+    assert _rows(engine.sql_directly(query.format(**written))) == [{"x": 1}] * 2
+
+
+def test_qualified_names_are_case_insensitive(engine):
+    """The registry keys names as SQL resolves them: a case variant
+    re-binds the same view for SQL, temp_view and list_tables alike."""
+    engine.register_table("CI.T", [{"x": 1}], "x int")
+    engine.register_table("ci.t", [{"x": 2}], "x int")
+    assert _rows(engine.sql_directly("SELECT x FROM Ci.T")) == [{"x": 2}]
+    assert _rows(engine.temp_view("CI.T")) == [{"x": 2}]
+    assert [n for n in engine.list_tables() if n.lower() == "ci.t"] == ["ci.t"]
+    assert engine.is_temporary_table("CI.T")
+
+
+def test_view_ddl_over_qualified_name_raises_and_keeps_view(engine):
+    """Temp-view DDL takes a single-part name: Spark's parser refuses
+    ``q.v``, and the registered view keeps answering its rows."""
+    from pyspark.errors import ParseException
+
+    engine.register_table("q.v", [{"x": 1}], "x int")
+    with pytest.raises(ParseException, match="TEMP_VIEW_NAME_TOO_MANY_NAME_PARTS"):
+        engine.sql_directly("CREATE OR REPLACE TEMP VIEW q.v AS SELECT 9 AS x")
+    assert _rows(engine.sql_directly("SELECT x FROM q.v")) == [{"x": 1}]
+    assert _rows(engine.temp_view("q.v")) == [{"x": 1}]
+
+
+def test_syntax_error_raises_parse_exception(engine):
+    from pyspark.errors import ParseException
+
+    with pytest.raises(ParseException, match="PARSE_SYNTAX_ERROR"):
+        engine.sql_directly("SELEC 1")
+
+
 def _register_probe_views(engine):
     """The small views the replayability probes below read from."""
     engine.register_table(
