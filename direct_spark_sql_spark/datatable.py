@@ -4,9 +4,10 @@ input/output unit of the session facade's ``sql_directly``, convertible to
 and from list-of-dicts with lenient per-field coercion.
 
 A DataTable is its ``schema`` and one immutable ``pyarrow.Table``,
-``arrow``, fetched with ``toArrow()`` or, where Spark specializes it,
-``collect()``.  Rows enter as ``createDataFrame(list[Row])`` takes them
-(verifier, converter, ``toInternal``: a naive datetime is process-local).
+``arrow``, fetched with ``toArrow()``, on the calling thread without a
+job (``direct.py``), or, where Spark specializes it, ``collect()``.  Rows
+enter as ``createDataFrame(list[Row])`` takes them (verifier, converter,
+``toInternal``: a naive datetime is process-local).
 ``to_dataframe`` binds the table in-plan, starting no Python worker, as
 the reference does (DirectSparkSession.scala:132-135).  ``data`` builds
 ``Row``s on first read, as ``collect()`` gives them, kept on that object
@@ -162,8 +163,16 @@ class DataTable:
     # -- constructors -------------------------------------------------------
 
     @classmethod
-    def from_dataframe(cls, df: DataFrame) -> "DataTable":
-        return cls(df.schema, df.collect() if _fetches_rows(df) else df.toArrow())
+    def from_dataframe(
+        cls, df: DataFrame, direct: Callable[[DataFrame], pa.Table | None] | None = None
+    ) -> "DataTable":
+        """``df``'s result, fetched with ``collect()`` where Spark specializes
+        it, else with ``direct`` (a ``direct.DirectFetch``) when it runs the
+        plan on the calling thread, else with ``toArrow()``."""
+        if _fetches_rows(df):
+            return cls(df.schema, df.collect())
+        table = None if direct is None else direct(df)
+        return cls(df.schema, df.toArrow() if table is None else table)
 
     @classmethod
     def from_list_of_dicts(

@@ -1,0 +1,96 @@
+"""Direct execution: a facade result fetched on the calling thread.
+
+The reference evaluates its physical plan as an iterator on the caller's
+thread, "without RDDs, without the DAG scheduler" (DirectPlan.scala:79-83).
+Here ``sql_directly`` does the same for the plans where a Spark job buys
+nothing: every leaf in memory (``_PlanFacts.in_memory``), a result that
+``toArrow()`` fetches, no shuffle exchange, no Python-evaluation node, and
+one partition in the final RDD (``register_table`` binds inputs under 100k
+rows as one slice).  The Java helper ``org.dss.direct.DirectExec`` (compiled
+by ``functions.jvm.ensure_udf_jar``) executes the plan, drains that
+partition under a private ``TaskContext`` and serves Arrow batches on a
+local socket; the result enters the same ``DataTable`` as ``toArrow()``'s.
+Every other plan runs as a Spark job, as before.
+
+What a direct call does not have:
+
+- a job of its own: a broadcast build or a scalar subquery inside
+  ``execute()`` still launches one, and ``last_metrics()`` counts only those;
+- cancellation: ``SparkContext.cancelJobsWithTag`` stops the jobs it
+  launched, not the drain, which runs to completion or error;
+- a slot: it runs on the caller's thread whatever the master's core count,
+  so N concurrent callers run N plans at once.
+"""
+
+from __future__ import annotations
+
+import warnings
+
+import pyarrow as pa
+from pyspark.serializers import NoOpSerializer
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.util import _load_from_socket
+
+HELPER_CLASS = "org.dss.direct.DirectExec"
+
+
+def load_helper(spark: SparkSession):
+    """One ``DirectExec`` instance for ``spark``'s JVM, loaded through the
+    session's jar class loader (``ADD JAR`` would also ship the jar to
+    executors, and its class is visible only on the thread that ran it);
+    None, with a warning, when the jar cannot be built, which leaves every
+    fetch on the job path."""
+    from direct_spark_sql_spark.functions.jvm import ensure_udf_jar
+
+    try:
+        jar = ensure_udf_jar()
+    except Exception as e:  # no JDK, or sources that do not compile
+        warnings.warn(
+            f"direct execution is off: cannot build its helper jar "
+            f"({type(e).__name__}: {e})",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+        return None
+    jvm = spark.sparkContext._jvm
+    loader = spark._jsparkSession.sharedState().jarClassLoader()
+    loader.addURL(jvm.java.io.File(jar).toURI().toURL())
+    return jvm.java.lang.Class.forName(HELPER_CLASS, True, loader).newInstance()
+
+
+class DirectFetch:
+    """One attempt to fetch a DataFrame's result on the calling thread.
+
+    Called with the DataFrame, it returns the result's Arrow table, cast to
+    the schema ``toArrow()`` casts to, or None when the plan must run as a
+    job.  Afterwards ``ran`` says whether the fetch was direct, and
+    ``launched_jobs`` whether any Spark job was submitted meanwhile (False
+    means this call certainly ran none)."""
+
+    __slots__ = ("_helper", "ran", "launched_jobs")
+
+    def __init__(self, helper) -> None:
+        self._helper = helper
+        self.ran = False
+        self.launched_jobs = False
+
+    def __call__(self, df: DataFrame) -> pa.Table | None:
+        served = self._helper.serveArrow(df._jdf)
+        if served is None:
+            return None
+        conn, secret, launched_jobs, large_types = served.rsplit(" ", 3)
+        sock_info = (int(conn) if conn.isdigit() else conn, secret)
+        frames = list(_load_from_socket(sock_info, NoOpSerializer()))
+        if not frames or frames.pop() != b"":  # the end marker
+            raise ConnectionError("the direct result stream ended early")
+        self.ran, self.launched_jobs = True, launched_jobs == "true"
+        schema = to_arrow_schema(
+            df.schema,
+            error_on_duplicated_field_names_in_struct=True,
+            prefers_large_types=large_types == "true",
+        )
+        # each frame is one IPC stream: the schema, then one batch
+        batches = [b for frame in frames for b in pa.ipc.open_stream(frame)]
+        table = pa.Table.from_batches(batches) if batches else schema.empty_table()
+        return table.cast(schema)

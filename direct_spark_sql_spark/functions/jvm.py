@@ -7,10 +7,12 @@ The reference registers JVM function classes into its session catalog via
 385-393).  The PySpark-native equivalent implemented here:
 
 - Java sources under ``javasrc/`` implementing
-  ``org.apache.spark.sql.api.java.UDF1..UDF22`` are compiled ON DEMAND with
+  ``org.apache.spark.sql.api.java.UDF1..UDF22`` are compiled with
   the JDK's ``javac`` against the installed Spark jars and packaged into a
   jar (:func:`ensure_udf_jar`) — the artifact a user's JAR-packaged UDFs
-  would arrive as.
+  would arrive as.  The same jar carries the driver-side helper of direct
+  execution (``org.dss.direct.DirectExec``, see ``direct.py``), so every
+  ``Engine`` builds it when it starts, if it is not current.
 - :func:`register_java_function` runs ``ADD JAR`` + ``spark.udf
   .registerJavaFunction`` (return type inferred from the UDF generic
   signature when not given) so the function is callable from SQL text.
@@ -33,6 +35,7 @@ from __future__ import annotations
 import glob
 import os
 import subprocess
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -65,7 +68,10 @@ def ensure_udf_jar(jar_path: str | None = None) -> str:
     """Compile ``javasrc/`` and package the jar if not already current.
 
     The jar lands in the repo's gitignored warehouse dir by default; a
-    rebuild happens only when a source file is newer than the jar."""
+    rebuild happens only when a source file is newer than the jar.  A build
+    compiles into its own temporary directory and renames the finished jar
+    over ``jar_path``, so a concurrent reader (another thread or process)
+    sees the old jar or the new one, never a half-written one."""
     if jar_path is None:
         repo_root = os.path.dirname(os.path.dirname(_PKG_DIR))
         jar_path = os.path.join(
@@ -81,18 +87,21 @@ def ensure_udf_jar(jar_path: str | None = None) -> str:
     ):
         return jar_path
     out_dir = os.path.dirname(jar_path)
-    classes_dir = os.path.join(out_dir, "classes")
-    os.makedirs(classes_dir, exist_ok=True)
-    subprocess.run(
-        ["javac", "-cp", _spark_jars_glob(), "-d", classes_dir, *sources],
-        check=True,
-        capture_output=True,
-    )
-    subprocess.run(
-        ["jar", "cf", jar_path, "-C", classes_dir, "."],
-        check=True,
-        capture_output=True,
-    )
+    os.makedirs(out_dir, exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=out_dir, prefix=".build-") as build:
+        classes_dir = os.path.join(build, "classes")
+        subprocess.run(
+            ["javac", "-cp", _spark_jars_glob(), "-d", classes_dir, *sources],
+            check=True,
+            capture_output=True,
+        )
+        built = os.path.join(build, "udfs.jar")
+        subprocess.run(
+            ["jar", "cf", built, "-C", classes_dir, "."],
+            check=True,
+            capture_output=True,
+        )
+        os.replace(built, jar_path)
     return jar_path
 
 

@@ -20,12 +20,14 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
 - ``explain(sql)`` issues Spark's EXPLAIN statement, so nothing is run;
   ``engine.spark`` is the raw session, and commands on it bypass the caches
 
-Execution-model differences are deliberate (SURVEY.md §7.0): where the
-reference rebuilt a single-threaded iterator engine to avoid the DAG
-scheduler, this engine keeps Spark's distributed execution — the config
-preset below enables AQE and keeps shuffle parallelism, because the target
-is 100 TB on a cluster, not single-node latency.  What *is* kept from the
-reference's latency story is the cache design: analyzed-plan reuse keyed by
+Execution model (SURVEY.md §7.0): the reference rebuilt a single-threaded
+iterator engine to avoid the DAG scheduler.  This engine runs the plans
+that need a cluster as Spark jobs — the config preset below enables AQE and
+keeps shuffle parallelism, because the target is 100 TB on a cluster — and
+runs the small ones as the reference does: ``sql_directly`` drains a
+single-partition, shuffle-free plan over in-memory leaves on the calling
+thread, without a job (``direct.py``).  Kept from the reference's latency
+story as well is the cache design: analyzed-plan reuse keyed by
 (namespace, sql), result caching with invalidation on view registration
 and on commands, and per-execution-stable ``now()`` semantics
 (DirectExecutionContext.scala:47-58): a plan that reads the current time
@@ -47,6 +49,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from direct_spark_sql_spark.datatable import DataTable
+from direct_spark_sql_spark.direct import DirectFetch, load_helper
 
 
 #: Config preset — the cluster-friendly analogue of the reference's pinned
@@ -234,6 +237,20 @@ def _job_tag(sc):
         sc.removeJobTag(tag)
 
 
+def _empty_rollup() -> dict[str, Any]:
+    """The execution rollup of a call that launched no job."""
+    return {
+        "shuffle_bytes_written": 0,
+        "shuffle_records_written": 0,
+        "spill_bytes": 0,
+        "jobs": 0,
+        "stages_run": 0,
+        "stages_skipped": 0,
+        "tasks": 0,
+        "partial": False,
+    }
+
+
 def _stage_rollup(sc, tag: str) -> dict[str, Any]:
     """Execution rollup of the jobs tagged ``tag``: shuffle output and
     spill summed over their stages, plus job, stage and task counts.
@@ -248,16 +265,7 @@ def _stage_rollup(sc, tag: str) -> dict[str, Any]:
     Spark's 10 s wait.  The store keeps only the last
     ``spark.ui.retainedJobs`` jobs: read a call's rollup soon after it."""
     jsc = sc._jsc.sc()
-    out: dict[str, Any] = {
-        "shuffle_bytes_written": 0,
-        "shuffle_records_written": 0,
-        "spill_bytes": 0,
-        "jobs": 0,
-        "stages_run": 0,
-        "stages_skipped": 0,
-        "tasks": 0,
-        "partial": False,
-    }
+    out = _empty_rollup()
     try:
         jsc.listenerBus().waitUntilEmpty()
     except Py4JJavaError:  # TimeoutException: the bus stayed busy
@@ -478,15 +486,17 @@ class Engine:
         #: DirectSparkSession.scala:181-219).
         self._materialized_views: dict[str, DataFrame] = {}
         #: (DataFrame, wall_sec, result_rows, job tag, frozen stage
-        #: rollup) of the most recent sql_directly — backs last_metrics()
+        #: rollup, direct) of the most recent sql_directly — backs last_metrics()
         #: (reference: per-execution SQLMetric map,
         #: DirectSQLMetrics.scala:21-72, DirectExecutionContext.scala:45).
         self._last_execution: tuple | None = None
         #: Result cache — the Spark analogue of the reference's sub-ms
         #: repeated query, a cached single-node plan re-run on the calling
-        #: thread (DirectPlan.scala:79-83).  A Spark job has a ~30 ms floor
-        #: of stage scheduling, so the fast path keeps the materialized
-        #: result of a replayable query over in-memory leaves only
+        #: thread (DirectPlan.scala:79-83).  A cold call pays parsing,
+        #: analysis, optimization and planning, plus a job's ~30 ms floor
+        #: of stage scheduling unless it runs direct (``_direct``), so the
+        #: fast path keeps the materialized result of a replayable query
+        #: over in-memory leaves only
         #: (``_PlanFacts``), dropped by exactly the invalidation that drops
         #: cached plans.  An entry is the result's immutable Arrow table,
         #: shared by every hit and weighed by its exact ``nbytes``: the
@@ -503,6 +513,11 @@ class Engine:
         #: cheap always-on sibling of last_metrics()); see metrics_history()
         self._call_history: deque = deque(maxlen=200)
         self._lock = threading.Lock()
+        #: the driver-side helper that fetches single-partition in-memory
+        #: results on the calling thread (``direct.py``); built here, so a
+        #: first javac run lands in Engine start, not in a call.  None when
+        #: its jar cannot be built: every fetch then runs as a job.
+        self._direct = load_helper(spark)
         #: UDF surface (reference: DirectSessionCatalog.scala:62-112 Hive
         #: UDF registration): engine functions callable from SQL text.
         from direct_spark_sql_spark.functions import register_udfs
@@ -637,7 +652,10 @@ class Engine:
         (parsed here if not given), found through ``children`` (a view
         DDL's body too), ``innerChildren`` (expression subqueries, CTE
         definitions) and an INSERT's target.  Its ``origin`` bounds are inclusive
-        offsets into ``sql``.  Literals and comments are no relations."""
+        offsets into ``sql``.  Literals and comments are no relations.
+        A ``DROP VIEW`` of a registered qualified view drops the mangled
+        view (its identifier's ``origin`` spans the whole statement, so the
+        statement is rebuilt, not spliced)."""
         with self._lock:  # one snapshot: _bind_view writes under this lock
             names = list(self._qualified_views)
         if not names:
@@ -645,6 +663,11 @@ class Engine:
         mangled = {n: self._mangle(n) for n in names}
         if parsed is None:
             parsed = self._parser.parsePlan(sql)
+        if parsed.nodeName() == "DropView":
+            view = (_view_ddl_name(parsed) or "").lower()
+            if view in mangled:
+                exists = "IF EXISTS " if parsed.ifExists() else ""
+                return f"DROP VIEW {exists}`{mangled[view]}`"
         spans: dict[tuple[int, int], str] = {}
         stack = [parsed]
         while stack:
@@ -706,7 +729,11 @@ class Engine:
         df = self.spark.sql(self._rewrite_qualified(sql, parsed))
         patterns = df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
         if df._jdf.queryExecution().analyzed().containsPattern(patterns.COMMAND()):
-            self._drop_cached_plans_referencing(_view_ddl_name(parsed))
+            view = _view_ddl_name(parsed)
+            if view is not None and parsed.nodeName() == "DropView":
+                with self._lock:  # a dropped qualified view leaves the registry
+                    self._qualified_views.pop(view.lower(), None)
+            self._drop_cached_plans_referencing(view)
             return df
         self._plan_cache.note_miss()
         facts = df.__dict__["_dss_plan_facts"] = _plan_facts(df)
@@ -723,8 +750,10 @@ class Engine:
         Warm repeated queries take the result cache (see ``__init__``):
         a replayable query over in-memory leaves only, whose referenced
         views haven't changed, returns its previously materialized result
-        without re-running the Spark job — the engine's answer to the
-        reference's same-thread iterator over a cached single-node plan.
+        without re-running it.  A cold query over in-memory leaves whose
+        plan has one partition and no shuffle or Python node runs on the
+        calling thread, without a Spark job (``direct.py``), the
+        reference's same-thread iterator; any other runs as a job.
         """
         # Epoch captured BEFORE the plan-cache lookup: an invalidation
         # that lands anywhere between the lookup and the put (including
@@ -747,29 +776,41 @@ class Engine:
             if hit is not None:
                 # the Arrow table is immutable: a fresh DataTable shares it,
                 # and builds its own rows if the caller reads them
-                schema, arrow, hit_df, rollup = hit
+                schema, arrow, hit_df, rollup, direct = hit
                 wall = time.perf_counter() - t0
-                self._last_execution = (hit_df, wall, arrow.num_rows, None, rollup)
+                self._last_execution = (
+                    hit_df, wall, arrow.num_rows, None, rollup, direct
+                )
                 self._record_call(sql, wall, arrow.num_rows, True)
                 return DataTable(schema, arrow)
+        fetch = (
+            DirectFetch(self._direct)
+            if self._direct is not None and facts is not None and facts.in_memory
+            else None
+        )
         with _job_tag(self.spark.sparkContext) as tag:
             t0 = time.perf_counter()
-            table = DataTable.from_dataframe(df)
+            table = DataTable.from_dataframe(df, fetch)
             wall = time.perf_counter() - t0
-        self._last_execution = (df, wall, len(table), tag, None)
+        direct = fetch is not None and fetch.ran
+        # a direct call during which no job was submitted has nothing to
+        # read from the status store, so skip the listener-bus drain
+        rollup = _empty_rollup() if direct and not fetch.launched_jobs else None
+        self._last_execution = (df, wall, len(table), tag, rollup, direct)
         self._record_call(sql, wall, len(table), False)
         if cacheable:
             # The execution rollup is frozen AT PUT TIME: the status store
             # evicts old jobs, so a hit long after the put could no longer
             # read the materializing call's stages.
-            rollup = _stage_rollup(self.spark.sparkContext, tag)
+            if rollup is None:
+                rollup = _stage_rollup(self.spark.sparkContext, tag)
             # atomic with the invalidation sweep, which drops entries and
             # bumps the epoch under the same lock
             with self._lock:
                 if epoch == self._invalidation_epoch:
                     self._result_cache.put(
                         key,
-                        (table.schema, table.arrow, df, rollup),
+                        (table.schema, table.arrow, df, rollup, direct),
                         nbytes=table.arrow.nbytes,
                     )
         return table
@@ -915,6 +956,10 @@ class Engine:
         ``sql_directly`` call; otherwise:
 
         - ``wall_sec``, ``output_rows``, ``result_cache_hit``;
+        - ``direct``: True when the result was drained on the calling
+          thread without a Spark job (``direct.py``).  Such a call runs
+          whatever the master's core count, and ``cancelJobsWithTag``
+          cannot stop it, only the jobs it launched;
         - the call's own execution rollup, summed over the stages of the
           jobs Spark launched under the call's job tag (see
           ``_stage_rollup``): ``shuffle_bytes_written``,
@@ -922,19 +967,23 @@ class Engine:
           ``stages_run``, ``stages_skipped``, ``tasks``.  Per call by
           construction: a re-executed cached plan whose shuffle stages
           Spark reuses reports them as skipped, not as bytes written
-          again.  A result-cache hit launches no job; it returns the
-          rollup frozen when the result was cached;
+          again.  A direct call counts only the jobs ``execute()``
+          launched, such as a broadcast build; one that launched none
+          reads zeros without draining the listener bus.  A result-cache
+          hit launches no job; it returns the rollup and ``direct`` flag
+          frozen when the result was cached;
         - ``operators``: every physical node of the executed plan (through
           AQE final plans and query stages) with its raw SQLMetric values,
-          and ``peak_memory_bytes``, their largest ``peakMemory``.  These
-          are cumulative over every execution of the plan object (the
-          Spark UI's contract for a reused plan), also for a hit;
+          and ``peak_memory_bytes``, their largest ``peakMemory``.  Each
+          execution resets them first, as Spark's actions do, so they
+          describe the plan's last execution, also for a hit; a direct
+          drain merges its task copy's metrics into the plan's own;
         - ``partial``: True when a py4j failure truncated the plan walk or
           the listener bus could not be drained before the rollup read."""
         if self._last_execution is None:
             return None
         # tag is None for a result-cache hit, which carries its rollup
-        df, wall, n_rows, tag, rollup = self._last_execution
+        df, wall, n_rows, tag, rollup, direct = self._last_execution
         if rollup is None:
             rollup = _stage_rollup(self.spark.sparkContext, tag)
         nodes: list[dict[str, Any]] = []
@@ -956,6 +1005,7 @@ class Engine:
                 default=0,
             ),
             "result_cache_hit": tag is None,
+            "direct": direct,
             "partial": rollup["partial"] or any(n.get("partial") for n in nodes),
             "operators": nodes,
         }

@@ -1,0 +1,293 @@
+"""Direct execution: ``sql_directly`` drains a single-partition in-memory
+plan on the calling thread, without a Spark job (``direct.py``), and gives
+what the job path gives.
+
+Both paths are driven on the same DataFrame through
+``DataTable.from_dataframe``: with a ``DirectFetch`` (direct) and without
+(``toArrow()``, a job).  ``tests/test_facade_job_path.py`` runs the facade
+suites again with the direct path off.
+"""
+
+from __future__ import annotations
+
+import threading
+
+import pytest
+from pyspark.errors import PySparkException
+from pyspark.sql import types as T
+
+import direct_spark_sql_spark.session as session_mod
+from direct_spark_sql_spark.datatable import DataTable
+from direct_spark_sql_spark.direct import DirectFetch
+from tests.test_arrow_ingress import MATRIX_SCHEMA, _matrix_rows, _process_tz, _same
+
+
+def _jvm(engine):
+    return engine.spark.sparkContext._jvm
+
+
+def _next_job_id(engine) -> int:
+    # the scheduler's AtomicInteger; py4j hands a Number over as its value
+    return engine.spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _both(engine, sql) -> tuple[DataTable, DataTable]:
+    """``sql``'s result fetched direct, then as a job, then direct again,
+    all from one DataFrame; the two direct fetches must have run direct."""
+    df = engine.dataframe(sql)
+    first = DirectFetch(engine._direct)
+    direct = DataTable.from_dataframe(df, first)
+    job = DataTable.from_dataframe(df)
+    again = DirectFetch(engine._direct)
+    direct_again = DataTable.from_dataframe(df, again)
+    assert first.ran and again.ran, sql
+    assert direct_again.arrow.equals(direct.arrow), sql
+    return direct, job
+
+
+def _assert_parity(engine, sql) -> DataTable:
+    direct, job = _both(engine, sql)
+    assert direct.arrow.schema == job.arrow.schema, sql
+    assert direct.arrow.equals(job.arrow), (sql, direct.arrow, job.arrow)
+    assert _same(direct.data, job.data), sql
+    return direct
+
+
+# -- parity -------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("tz", [None, "America/New_York"])
+def test_type_matrix_direct_matches_job(engine, tz):
+    with _process_tz(tz):
+        engine.register_table(
+            "dx_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
+        )
+        _assert_parity(engine, "SELECT * FROM dx_matrix ORDER BY id")
+
+
+def test_repeated_dst_hour_direct_matches_job(engine):
+    with _process_tz("America/New_York"):
+        engine.register_table(
+            "dx_fold",
+            [{"ts": ms} for ms in (1636263000000, 1636266600000, 1636270200000)],
+            "ts TIMESTAMP",
+        )
+        got = _assert_parity(engine, "SELECT ts FROM dx_fold ORDER BY ts").data
+    assert [(r.ts.hour, r.ts.fold) for r in got] == [(1, 0), (1, 1), (2, 0)]
+
+
+@pytest.mark.parametrize(
+    "select",
+    [
+        "CAST(id AS DECIMAL(20,4)) / 3 AS d, sum(id) OVER () AS w",
+        "cast(concat('b', id) AS BINARY) AS b, array(cast('c' AS BINARY)) AS bs",
+        "parse_json(concat('{\"x\": [', id, ']}')) AS v",
+        "id FROM dx_src WHERE id < 0",
+    ],
+    ids=["decimal", "binary", "variant", "empty"],
+)
+def test_value_types_direct_match_job(engine, select):
+    engine.register_table("dx_src", [{"id": i} for i in range(3)], "id INT")
+    sql = f"SELECT {select}" if " FROM " in select else f"SELECT {select} FROM dx_src"
+    _assert_parity(engine, sql)
+
+
+def _register_pid_views(engine):
+    engine.register_table(
+        "dx_pid", [{"id": i, "k": i % 3} for i in range(50)], "id INT, k INT"
+    )
+    engine.register_table(
+        "dx_tags", [{"k": k, "tag": f"t{k}"} for k in range(3)], "k INT, tag STRING"
+    )
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT spark_partition_id() AS p, monotonically_increasing_id() AS m, id "
+        "FROM dx_pid",
+        "SELECT spark_partition_id() AS p, monotonically_increasing_id() AS m, "
+        "d.id, t.tag FROM dx_pid d JOIN dx_tags t ON d.k = t.k",
+        "SELECT spark_partition_id() AS p, monotonically_increasing_id() AS m, id "
+        "FROM dx_pid WHERE id < 0",
+    ],
+    ids=["view", "broadcast-join", "no-rows"],
+)
+def test_partition_ids_match_job(engine, sql):
+    """The drained partition has the index a job's only task has."""
+    _register_pid_views(engine)
+    got = _assert_parity(engine, sql)
+    assert {r.p for r in got.data} <= {0}
+    if "JOIN" in sql:
+        plan = engine.dataframe(sql)._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, plan
+
+
+@pytest.mark.parametrize("expr", ["10 DIV (a - a)", "raise_error('boom')"])
+def test_runtime_error_raises_what_the_job_raises(engine, expr):
+    engine.register_table("dx_err", [{"a": 1}, {"a": 2}], "a INT")
+    df = engine.dataframe(f"SELECT {expr} AS x FROM dx_err")
+    first_job = _next_job_id(engine)
+    with pytest.raises(PySparkException) as direct_err:
+        DataTable.from_dataframe(df, DirectFetch(engine._direct))
+    assert _next_job_id(engine) == first_job  # the error came from the drain
+    with pytest.raises(PySparkException) as job_err:
+        DataTable.from_dataframe(df)
+    assert type(direct_err.value) is type(job_err.value)
+    assert direct_err.value.getCondition() == job_err.value.getCondition()
+
+
+def test_failed_drain_releases_task_state(engine):
+    """A drain that fails midway leaves no task context on the thread, no
+    task registered with the block manager, no block read lock and no
+    execution memory."""
+    engine.register_table(
+        "dx_rel", [{"k": i % 7, "v": i} for i in range(2000)], "k INT, v INT"
+    )
+    engine.execute_and_register_temp_view("SELECT * FROM dx_rel WHERE v >= 0", "dx_mat")
+    jvm = _jvm(engine)
+    env = jvm.org.apache.spark.SparkEnv.get()
+    locks = env.blockManager().blockInfoManager()
+    registered = locks.getNumberOfMapEntries()
+    for sql in (
+        "SELECT 10 DIV (k - k) AS x FROM dx_mat",
+        "SELECT k, sum(v) AS s FROM dx_mat GROUP BY k "
+        "HAVING raise_error('boom') IS NULL",
+    ):
+        with pytest.raises(PySparkException):
+            DataTable.from_dataframe(engine.dataframe(sql), DirectFetch(engine._direct))
+        assert jvm.org.apache.spark.TaskContext.get() is None
+        # tasks of the materializing job may still be unregistering
+        assert locks.getNumberOfMapEntries() <= registered
+        entries = locks.entries()
+        while entries.hasNext():
+            assert entries.next()._2().readerCount() == 0
+        assert env.memoryManager().executionMemoryUsed() == 0
+    # the same plans still run as a job, and direct once the error is gone
+    ok = "SELECT k, sum(v) AS s FROM dx_mat GROUP BY k ORDER BY k"
+    assert len(_assert_parity(engine, ok)) == 7
+
+
+# -- the gate -----------------------------------------------------------------
+
+
+def test_ineligible_plans_run_as_jobs(engine):
+    """A shuffle, a Python UDF and a multi-partition final RDD keep the job
+    path, with the right answer."""
+    engine.spark.udf.register("dx_plus1", lambda x: x + 1, "int")
+    engine.register_table("dx_wide", engine.spark.range(0, 100, 1, 4))
+    engine.register_table("dx_one", [{"a": 1}, {"a": 2}], "a INT")
+    engine.result_cache_enabled = False
+    try:
+        cases = {
+            "SELECT id % 3 AS k, count(*) AS n FROM dx_wide GROUP BY 1 ORDER BY 1":
+                [(0, 34), (1, 33), (2, 33)],
+            "SELECT dx_plus1(a) AS b FROM dx_one ORDER BY b": [(2,), (3,)],
+            "SELECT sum(id) AS s FROM dx_wide WHERE id < 10": [(45,)],
+        }
+        for sql, want in cases.items():
+            assert [tuple(r) for r in engine.sql_directly(sql).data] == want, sql
+            m = engine.last_metrics()
+            assert m["direct"] is False and m["jobs"] >= 1, (sql, m["jobs"])
+    finally:
+        engine.result_cache_enabled = True
+
+
+# -- threads ------------------------------------------------------------------
+
+
+def _run_threads(target, n=2):
+    errors: list[BaseException] = []
+
+    def run(i):
+        try:
+            target(i)
+        except BaseException as e:  # noqa: BLE001 -- reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(n)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=120)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+
+
+def _sum_by_key(eng, view):
+    sql = f"SELECT k, sum(v) AS s FROM {view} GROUP BY k ORDER BY k"
+    rows = [tuple(r) for r in eng.sql_directly(sql).data]
+    assert eng.last_metrics()["direct"] is True
+    return rows
+
+
+def test_threads_on_own_sessions(engine):
+    def work(i):
+        eng = engine.new_session()
+        eng.result_cache_enabled = False
+        rows = [{"k": j % 4, "v": j * (i + 1)} for j in range(400)]
+        eng.register_table("dx_mine", rows, "k INT, v INT")
+        want = [(k, sum(r["v"] for r in rows if r["k"] == k)) for k in range(4)]
+        for _ in range(10):
+            assert _sum_by_key(eng, "dx_mine") == want
+        assert _jvm(eng).org.apache.spark.TaskContext.get() is None
+
+    _run_threads(work)
+
+
+def test_threads_sharing_one_engine(engine):
+    """Two threads drain the same cached plan at once: each drain runs its
+    own copy of the plan's RDD."""
+    eng = engine.new_session()
+    eng.result_cache_enabled = False
+    rows = [{"k": j % 5, "v": j} for j in range(1000)]
+    eng.register_table("dx_shared", rows, "k INT, v INT")
+    want = [(k, sum(r["v"] for r in rows if r["k"] == k)) for k in range(5)]
+
+    def work(_):
+        for _ in range(10):
+            assert _sum_by_key(eng, "dx_shared") == want
+        assert _jvm(eng).org.apache.spark.TaskContext.get() is None
+
+    _run_threads(work)
+
+
+# -- last_metrics ---------------------------------------------------------------
+
+
+def test_last_metrics_of_a_direct_call(engine):
+    engine.register_table(
+        "dx_m", [{"k": i % 3, "v": i} for i in range(90)], "k INT, v INT"
+    )
+    engine.sql_directly("SELECT k, sum(v) AS s FROM dx_m GROUP BY k")
+    m = engine.last_metrics()
+    assert m["direct"] is True and m["result_cache_hit"] is False
+    assert (m["jobs"], m["stages_run"], m["tasks"]) == (0, 0, 0)
+    aggs = [n["metrics"] for n in m["operators"] if n["operator"] == "HashAggregate"]
+    # the final aggregate emits the 3 groups; the drain updated the plan's metrics
+    assert aggs and aggs[0]["numOutputRows"] == 3
+    # a hit reports the materializing call's flag
+    engine.sql_directly("SELECT k, sum(v) AS s FROM dx_m GROUP BY k")
+    hit = engine.last_metrics()
+    assert hit["result_cache_hit"] is True and hit["direct"] is True
+
+
+def test_direct_join_counts_only_its_broadcast_job(engine):
+    _register_pid_views(engine)
+    engine.sql_directly(
+        "SELECT t.tag, count(*) AS n FROM dx_pid d JOIN dx_tags t ON d.k = t.k "
+        "GROUP BY t.tag"
+    )
+    m = engine.last_metrics()
+    assert m["direct"] is True
+    assert (m["jobs"], m["stages_run"], m["tasks"]) == (1, 1, 1)
+
+
+def test_direct_call_without_jobs_skips_the_rollup(engine, monkeypatch):
+    def no_rollup(sc, tag):
+        raise AssertionError("a direct call without jobs read the status store")
+
+    monkeypatch.setattr(session_mod, "_stage_rollup", no_rollup)
+    engine.register_table("dx_nr", [{"a": i} for i in range(10)], "a INT")
+    assert engine.sql_directly("SELECT sum(a) AS s FROM dx_nr").data[0].s == 45
+    assert engine.last_metrics()["jobs"] == 0

@@ -8,6 +8,7 @@ registerJavaFunction, with javac-compiled UDF1/UDF2 classes
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 
@@ -30,6 +31,51 @@ def test_jar_builds_and_is_cached(tmp_path):
     mtime = os.path.getmtime(jar)
     assert ensure_udf_jar() == jar
     assert os.path.getmtime(jar) == mtime  # second call is a no-op
+
+
+def _assert_loadable(spark, jar):
+    """A fresh class loader over ``jar`` loads the direct-execution helper."""
+    jvm = spark.sparkContext._jvm
+    urls = spark.sparkContext._gateway.new_array(jvm.java.net.URL, 1)
+    urls[0] = jvm.java.io.File(jar).toURI().toURL()
+    loader = jvm.java.net.URLClassLoader(urls, jvm.java.lang.ClassLoader.getSystemClassLoader())
+    try:
+        cls = jvm.java.lang.Class.forName("org.dss.direct.DirectExec", True, loader)
+        assert cls.getName() == "org.dss.direct.DirectExec"
+    finally:
+        loader.close()
+
+
+def test_stale_jar_is_rebuilt(spark, tmp_path):
+    jar = str(tmp_path / "udfs.jar")
+    assert ensure_udf_jar(jar) == jar
+    os.utime(jar, (0, 0))  # older than every source
+    assert ensure_udf_jar(jar) == jar
+    assert os.path.getmtime(jar) > 0
+    _assert_loadable(spark, jar)
+    assert os.listdir(tmp_path) == ["udfs.jar"]  # no build directory left
+
+
+def test_concurrent_builds_leave_a_loadable_jar(spark, tmp_path):
+    """Two builds of one jar at once each rename a finished jar into
+    place, so both return a jar that loads."""
+    jar = str(tmp_path / "udfs.jar")
+    results, errors = [], []
+
+    def build():
+        try:
+            results.append(ensure_udf_jar(jar))
+        except Exception as e:  # noqa: BLE001 -- reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build) for _ in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert errors == [] and results == [jar, jar]
+    _assert_loadable(spark, jar)
+    assert os.listdir(tmp_path) == ["udfs.jar"]
 
 
 def test_create_function_ddl_roundtrip(jvm_engine):

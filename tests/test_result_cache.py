@@ -362,7 +362,9 @@ def test_result_cache_hit_reports_materializing_execution_metrics(eng):
 
 def test_small_ingress_scans_in_one_task(eng):
     """Driver-local lists must not shard across defaultParallelism — a
-    5k-row reference table is one partition (one scan task per job)."""
+    5k-row reference table is one partition, so a query over it drains
+    on the calling thread without a job (``direct.py``), or scans in one
+    task where it runs as a job."""
     eng.register_table(
         "rc_small", [{"a": i} for i in range(5000)], "a BIGINT"
     )

@@ -297,6 +297,23 @@ def test_view_ddl_over_qualified_name_raises_and_keeps_view(engine):
     assert _rows(engine.temp_view("q.v")) == [{"x": 1}]
 
 
+@pytest.mark.parametrize("ddl", ["DROP VIEW q_drop.v", "DROP VIEW IF EXISTS q_drop.v"])
+def test_drop_view_drops_registered_qualified_view(engine, ddl):
+    """View DDL naming a registered qualified view drops the view SQL and
+    ``temp_view`` read, not a catalog view of that name."""
+    from pyspark.errors import AnalysisException
+
+    engine.register_table("q_drop.v", [{"x": 1}], "x int")
+    assert _rows(engine.sql_directly("SELECT x FROM q_drop.v")) == [{"x": 1}]
+    engine.sql_directly(ddl)
+    with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+        engine.sql_directly("SELECT x FROM q_drop.v")
+    with pytest.raises(AnalysisException):
+        engine.temp_view("q_drop.v")
+    assert "q_drop.v" not in engine.list_tables()
+    assert not engine.is_temporary_table("q_drop.v")
+
+
 def test_syntax_error_raises_parse_exception(engine):
     from pyspark.errors import ParseException
 
