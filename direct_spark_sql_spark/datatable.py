@@ -204,7 +204,10 @@ class DataTable:
             yield row.asDict(recursive=True)
 
     def to_dataframe(self, spark: SparkSession) -> DataFrame:
-        """Bind the table as an in-plan ``LocalRelation`` built from Arrow."""
+        """The table as ``createDataFrame`` binds its Arrow: a ``LocalRelation``,
+        or above ``spark.sql.execution.arrow.localRelationThreshold`` a
+        ``LogicalRDD``, built in the JVM (``Engine.register_table`` re-binds
+        either as a row-free leaf)."""
         return spark.createDataFrame(self.arrow, self.schema)
 
     # -- dunder -------------------------------------------------------------

@@ -6,8 +6,9 @@ Here ``sql_directly`` does the same for the plans where a Spark job buys
 nothing: every leaf in memory (``_PlanFacts.in_memory``), a result that
 ``toArrow()`` fetches, no shuffle exchange, no Python-evaluation node, and
 one partition in the final RDD (``register_table`` binds inputs under 100k
-rows as one slice).  The Java helper ``org.dss.direct.DirectExec`` (compiled
-by ``functions.jvm.ensure_udf_jar``) executes the plan, drains that
+rows as a one-slice ``LogicalRDD`` with ``SinglePartition``).  The Java
+helper ``org.dss.direct.DirectExec`` (compiled by
+``functions.jvm.ensure_udf_jar``) executes the plan, drains that
 partition under a private ``TaskContext`` and serves Arrow batches on a
 local socket; the result enters the same ``DataTable`` as ``toArrow()``'s.
 Every other plan runs as a Spark job, as before.

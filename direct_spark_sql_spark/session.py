@@ -45,6 +45,7 @@ import warnings
 from collections import OrderedDict, deque
 from typing import Any, Iterable, NamedTuple
 
+from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -83,11 +84,12 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 #: Analyzed-plan leaf classes whose content cannot change outside the
-#: facade's invalidation hooks.  LocalRelation is what register_table
-#: binds list-of-dicts and DataTable input to, LogicalRDD what a
+#: facade's invalidation hooks.  LogicalRDD is what register_table binds
+#: list-of-dicts and DataTable input to (``_rows_relation``), and what a
 #: registered ``createDataFrame(list)`` DataFrame binds to (driver-local
 #: data, re-bound only through register_table, which sweeps the caches);
-#: InMemoryRelation is a facade-cached materialization.  Everything else —
+#: LocalRelation is an inline ``VALUES`` or a registered DataFrame's local
+#: rows; InMemoryRelation is a facade-cached materialization.  Everything else —
 #: file scans, streaming sources, and notably LogicalRelation wrapping an
 #: EXTERNAL relation like JDBC — is rejected: that data can change with no
 #: invalidation hook ever firing.  CTERelationRef / UnionLoopRef are
@@ -128,6 +130,85 @@ def _each(seq):
     it = seq.iterator()
     while it.hasNext():
         yield it.next()
+
+
+def _jvm_class(jvm, fqn: str):
+    """The JVM class ``fqn``, or for a Scala object, ``Name$``, its instance
+    (``MODULE$``).  ``jvm.a.b.Name`` asks the JVM about every dotted
+    segment; a ``JavaClass`` makes no round trip until a member is used."""
+    cls = JavaClass(fqn, jvm._gateway_client)
+    return getattr(cls, "MODULE$") if fqn.endswith("$") else cls
+
+
+def _statistics(jvm, size_in_bytes: int, row_count: int):
+    """Catalyst's ``Statistics(size_in_bytes, Some(row_count))``.  py4j hands
+    every ``java.lang.Number`` back as a Python int, Scala's ``BigInt`` too,
+    so each BigInt is parsed in the JVM, which returns it in an ``Option``,
+    and the constructor is invoked reflectively on an argument array built
+    in the JVM: sizeInBytes, rowCount, no column statistics, not runtime."""
+    parse = _jvm_class(jvm, "scala.math.Numeric$BigIntIsIntegral$").parseString
+    stats = _jvm_class(jvm, "org.apache.spark.sql.catalyst.plans.logical.Statistics")
+    args = (
+        parse(str(size_in_bytes)).toList()
+        .appended(parse(str(row_count)))
+        .appended(getattr(stats, "apply$default$3")())
+        .appended(False)
+    )
+    any_ref = _jvm_class(jvm, "scala.reflect.ClassTag$").AnyRef()
+    return stats._java_lang_class.getConstructors()[0].newInstance(args.toArray(any_ref))
+
+
+def _rows_relation(spark: SparkSession, df: DataFrame, rows: int, slices: int) -> DataFrame:
+    """``df``, the Arrow ingress of ``rows`` driver-local rows, bound as a
+    row-free ``LogicalRDD`` leaf over the same JVM rows in ``slices``
+    partitions, so Catalyst's rules do not walk the rows of every statement
+    that reads them, as they walk a ``LocalRelation``'s (the reference keeps
+    them behind a name, NamedLocalRelation.scala:25-44).
+
+    ``createDataFrame`` gives a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold`` and a ``LogicalRDD``
+    with ``spark.sql.defaultSizeInBytes`` statistics above it; both leave here
+    as one leaf, with the statistics a ``LocalRelation`` of the rows reports
+    (``getSizePerRow(output) * rows``, ``rows``), so broadcast and exchange
+    decisions are the ``LocalRelation``'s, and with ``SinglePartition`` for one
+    slice, so an aggregate plans without an Exchange."""
+    jvm = spark.sparkContext._jvm
+    none = _jvm_class(jvm, "scala.None$")
+    leaf = df._jdf.logicalPlan()
+    output = leaf.output()
+    if leaf.nodeName() == "LocalRelation":
+        row_class = _jvm_class(jvm, "org.apache.spark.sql.catalyst.InternalRow")
+        tag = _jvm_class(jvm, "scala.reflect.ClassTag$").apply(
+            row_class._java_lang_class
+        )
+        rdd = spark._jsparkSession.sparkContext().parallelize(leaf.data(), slices, tag)
+    else:
+        rdd = leaf.rdd().coalesce(slices, False, none, None)
+    physical = "org.apache.spark.sql.catalyst.plans.physical."
+    partitioning = (
+        _jvm_class(jvm, physical + "SinglePartition$")
+        if slices == 1
+        else _jvm_class(jvm, physical + "UnknownPartitioning")(0)
+    )
+    estimation = _jvm_class(
+        jvm, "org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils"
+    )
+    per_row = estimation.getSizePerRow(output, getattr(estimation, "getSizePerRow$default$2")())
+    stats = _statistics(jvm, per_row * rows, rows)
+    logical_rdd = _jvm_class(jvm, "org.apache.spark.sql.execution.LogicalRDD")
+    relation = logical_rdd(
+        output,
+        rdd,
+        partitioning,
+        getattr(logical_rdd, "apply$default$4")(),  # no output ordering
+        False,  # isStreaming
+        none,  # stream
+        spark._jsparkSession,
+        _jvm_class(jvm, "scala.Some")(stats),
+        none,  # constraints
+    )
+    dataset = _jvm_class(jvm, "org.apache.spark.sql.classic.Dataset")
+    return DataFrame(dataset.ofRows(spark._jsparkSession, relation), spark)
 
 
 def _plan_facts(df: DataFrame) -> _PlanFacts:
@@ -557,16 +638,14 @@ class Engine:
             if schema is None:
                 raise ValueError("schema is required for list-of-dicts input")
             rows = DataTable.from_list_of_dicts(rows, schema)
-        # Driver-local ingress binds an Arrow-built LocalRelation, whose
-        # LocalTableScanExec slices even tiny tables across
-        # defaultParallelism (32 on the target rig) partitions — dozens
-        # of near-empty scan tasks per execution.  Right-size to ~50k
-        # rows/partition so small reference tables scan in one task
-        # (the dominant term in warm facade latency) while genuinely
-        # large ingress keeps its parallelism.
+        # The rows are parallelized once, here, at ~50k rows per partition:
+        # a small reference table scans as one partition, which a cold call
+        # drains on its own thread (direct.py) or scans in one task, while
+        # large ingress keeps up to defaultParallelism partitions.
         parallelism = self.spark.sparkContext.defaultParallelism
         slices = max(1, min(parallelism, len(rows) // 50_000))
-        self._bind_view(name, rows.to_dataframe(self.spark).coalesce(slices))
+        df = rows.to_dataframe(self.spark)
+        self._bind_view(name, _rows_relation(self.spark, df, len(rows), slices))
 
     def _bind_view(self, name: str, df: DataFrame, cached: bool = False) -> None:
         """The only code that binds a view name (reference: createTempView,
@@ -582,24 +661,32 @@ class Engine:
             df.createOrReplaceTempView(self._mangle(key))  # identity if bare
             if cached:
                 self._materialized_views[key] = df
-        # CacheManager keys by canonicalized plan: a displaced DataFrame
-        # sharing the survivor's cache entry (a concurrent re-register of
-        # the same statement) must not be unpersisted.
-        if displaced is not None and displaced is not df:
-            try:
-                shares_cache_entry = (
-                    displaced._jdf.queryExecution()
-                    .analyzed()
-                    .sameResult(df._jdf.queryExecution().analyzed())
-                )
-            except Exception:
-                shares_cache_entry = True  # keep: never uncache survivor
-            if not shares_cache_entry:
-                displaced.unpersist()
+        self._release(displaced, df)
         # Cached analyzed plans bound the old data, where the reference
         # re-reads by name (NamedLocalRelation.scala:25-44): drop them, so
         # they re-analyze.  Outside the lock: _lock is not reentrant.
         self._drop_cached_plans_referencing(name)
+
+    def _release(self, displaced: DataFrame | None, bound: DataFrame | None = None) -> None:
+        """Unpersist ``displaced``, the storage a name no longer binds, unless
+        a DataFrame still bound shares its cache entry: ``bound``, the new
+        binding of the name, or another materialized view.  CacheManager
+        keys by canonicalized plan, so unpersisting ``displaced`` would also
+        uncache the survivor (a concurrent re-register of the same
+        statement, or the same statement materialized under two names)."""
+        if displaced is None or displaced is bound:
+            return
+        with self._lock:
+            survivors = [*self._materialized_views.values()]
+        if bound is not None:
+            survivors.append(bound)
+        try:
+            plan = displaced._jdf.queryExecution().analyzed()
+            if any(plan.sameResult(s._jdf.queryExecution().analyzed()) for s in survivors):
+                return
+        except Exception:
+            return  # keep: never uncache a survivor
+        displaced.unpersist()
 
     @staticmethod
     def _mangle(qualified: str) -> str:
@@ -731,8 +818,10 @@ class Engine:
         if df._jdf.queryExecution().analyzed().containsPattern(patterns.COMMAND()):
             view = _view_ddl_name(parsed)
             if view is not None and parsed.nodeName() == "DropView":
-                with self._lock:  # a dropped qualified view leaves the registry
+                with self._lock:  # a dropped view leaves the registries
                     self._qualified_views.pop(view.lower(), None)
+                    dropped = self._materialized_views.pop(view.lower(), None)
+                self._release(dropped)
             self._drop_cached_plans_referencing(view)
             return df
         self._plan_cache.note_miss()

@@ -1,10 +1,14 @@
-"""Driver-local ingress binds an Arrow-built ``LocalRelation``.
+"""Driver-local ingress binds the Arrow-built rows as a row-free leaf.
 
 The reference binds registered rows in-plan (``LocalRelation(schema.
-toAttributes, rows)``, DirectSparkSession.scala:132-135).  These tests pin
-that ``register_table`` does the same — no Python worker in the executed
-lineage — and that the values, errors and empty-input behaviour match the
-``createDataFrame(list[Row])`` path it replaced.
+toAttributes, rows)``, DirectSparkSession.scala:132-135) and keeps plans
+over them cacheable by holding the rows behind a name
+(NamedLocalRelation.scala:25-44).  ``register_table`` builds the rows in
+the JVM from Arrow, with no Python worker in the executed lineage, and
+binds them as a ``LogicalRDD`` that carries the statistics a
+``LocalRelation`` of the same rows reports, so Catalyst never walks them.
+These tests pin that leaf and that the values, errors and empty-input
+behaviour match the ``createDataFrame(list[Row])`` path it replaced.
 """
 
 from __future__ import annotations
@@ -56,11 +60,75 @@ def test_registered_rows_lineage_has_no_python_rdd(engine):
     assert "PythonRDD" not in lineage, lineage
 
 
-def test_registered_rows_bind_a_local_relation(engine):
-    engine.register_table("ai_leaf", [{"a": 1}, {"a": 2}], "a BIGINT")
+def _stats(jplan) -> tuple[int, int]:
+    stats = jplan.stats()
+    return stats.sizeInBytes(), stats.rowCount().get()
+
+
+def test_registered_rows_bind_a_row_free_leaf(engine):
+    """The analyzed leaf is an in-memory ``LogicalRDD`` whose statistics are
+    the ``LocalRelation``'s of the same rows, and no rows enter the
+    optimized plan (the lineage is pinned above)."""
+    rows = DataTable.from_list_of_dicts(
+        [{"a": i, "s": "x" * i} for i in range(5)], "a BIGINT, s STRING"
+    )
+    engine.register_table("ai_leaf", rows)
     df = engine.spark.sql("SELECT sum(a) AS s FROM ai_leaf")
-    assert _leaf_classes(df._jdf.queryExecution().analyzed()) == ["LocalRelation"]
+    qe = df._jdf.queryExecution()
+    assert _leaf_classes(qe.analyzed()) == ["LogicalRDD"]
     assert _plan_facts(df).in_memory is True
+    local = rows.to_dataframe(engine.spark)._jdf.logicalPlan()
+    assert local.nodeName() == "LocalRelation"
+    assert _stats(qe.analyzed().collectLeaves().head()) == _stats(local)
+    projected = engine.spark.sql("SELECT a + 1 AS b FROM ai_leaf WHERE a > 1")
+    assert _leaf_classes(projected._jdf.queryExecution().optimizedPlan()) == [
+        "LogicalRDD"
+    ]
+
+
+def test_rows_over_the_local_relation_threshold_bind_the_same_leaf(engine):
+    """Above ``spark.sql.execution.arrow.localRelationThreshold`` the Arrow
+    ingress is a ``LogicalRDD`` with default statistics; ``register_table``
+    binds it as the same leaf, with the same statistics and results."""
+    child = engine.new_session()
+    child.spark.conf.set("spark.sql.execution.arrow.localRelationThreshold", "1024")
+    rows = [{"k": i % 4, "s": f"row-{i}"} for i in range(3000)]
+    schema = "k INT, s STRING"
+    table = DataTable.from_list_of_dicts(rows, schema)
+    assert table.to_dataframe(child.spark)._jdf.logicalPlan().nodeName() == "LogicalRDD"
+    engine.register_table("ai_big", rows, schema)
+    child.register_table("ai_big", rows, schema)
+    leaves = [
+        e.spark.table("ai_big")._jdf.queryExecution().analyzed().collectLeaves().head()
+        for e in (engine, child)
+    ]
+    assert [leaf.nodeName() for leaf in leaves] == ["LogicalRDD", "LogicalRDD"]
+    local = table.to_dataframe(engine.spark)._jdf.logicalPlan()
+    assert _stats(leaves[1]) == _stats(leaves[0]) == _stats(local)
+    for sql in (
+        "SELECT k, count(*) AS n, max(s) AS m FROM ai_big GROUP BY k ORDER BY k",
+        "SELECT s FROM ai_big WHERE k = 3 ORDER BY s",
+        "SELECT count(*) AS n FROM ai_big a JOIN ai_big b ON a.s = b.s",
+    ):
+        want = engine.sql_directly(sql)
+        got = child.sql_directly(sql)
+        assert got.arrow.equals(want.arrow), sql
+
+
+def test_one_slice_aggregate_plans_no_exchange(engine):
+    engine.register_table("ai_agg", [{"k": i % 3, "v": i} for i in range(30)], "k INT, v INT")
+    plan = engine.dataframe("SELECT k, sum(v) AS s FROM ai_agg GROUP BY k")
+    physical = plan._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate" in physical and "Exchange" not in physical, physical
+
+
+def test_large_registration_scans_in_two_partitions(engine):
+    engine.register_table("ai_100k", [{"a": i} for i in range(100_000)], "a INT")
+    scan = engine.spark.table("ai_100k")._jdf.queryExecution().toRdd()
+    parallelism = engine.spark.sparkContext.defaultParallelism
+    assert scan.getNumPartitions() == min(parallelism, 2)
+    t = engine.sql_directly("SELECT count(*) AS n, sum(a) AS s FROM ai_100k")
+    assert t.to_list_of_dicts() == [{"n": 100_000, "s": 4_999_950_000}]
 
 
 MATRIX_SCHEMA = (

@@ -123,6 +123,34 @@ def test_partition_ids_match_job(engine, sql):
         assert "BroadcastHashJoin" in plan, plan
 
 
+def test_join_of_registered_views_broadcasts_without_a_shuffle(engine):
+    """Registered views carry their rows' statistics and one partition, so
+    a join of two broadcasts the small side and aggregates without an
+    Exchange, and the call runs direct."""
+    _register_pid_views(engine)
+    engine.sql_directly(
+        "SELECT t.tag, sum(d.id) AS s FROM dx_pid d JOIN dx_tags t ON d.k = t.k "
+        "GROUP BY t.tag"
+    )
+    m = engine.last_metrics()
+    operators = {n["operator"] for n in m["operators"]}
+    assert "BroadcastHashJoin" in operators and "Exchange" not in operators, operators
+    assert m["direct"] is True
+
+
+@pytest.mark.parametrize(
+    "sql, want",
+    [
+        ("SELECT count(*) AS n FROM dx_empty", [(0,)]),
+        ("SELECT a, count(*) AS n FROM dx_empty GROUP BY a", []),
+    ],
+    ids=["count", "group-by"],
+)
+def test_zero_row_view_direct_matches_job(engine, sql, want):
+    engine.register_table("dx_empty", [], "a INT")
+    assert [tuple(r) for r in _assert_parity(engine, sql).data] == want
+
+
 @pytest.mark.parametrize("expr", ["10 DIV (a - a)", "raise_error('boom')"])
 def test_runtime_error_raises_what_the_job_raises(engine, expr):
     engine.register_table("dx_err", [{"a": 1}, {"a": 2}], "a INT")

@@ -938,6 +938,33 @@ def test_register_table_over_materialized_view_releases_storage(engine, spark):
     assert _rows(got) == [{"rebind_id": 7}]
 
 
+@pytest.mark.parametrize("name", ["drop_mv_t", "dropdb.mv_t"])
+def test_drop_view_releases_materialized_storage(engine, spark, name):
+    """``DROP VIEW`` of a materialized view unpersists its storage and
+    forgets it, for a bare and for a qualified name."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()  # context-global: delta-based
+    engine.execute_and_register_temp_view(
+        f"SELECT id * 3 AS x, '{name}' AS n FROM range(10)", name
+    )
+    assert jsc.getPersistentRDDs().size() == before + 1
+    engine.sql_directly(f"DROP VIEW {name}")
+    assert jsc.getPersistentRDDs().size() == before
+    assert name not in engine._materialized_views
+
+
+def test_drop_view_keeps_storage_another_view_shares(engine, spark):
+    """The same statement materialized under two names shares one cache
+    entry, which dropping one of them must not uncache."""
+    sql = "SELECT id * 5 AS x FROM range(12)"
+    engine.execute_and_register_temp_view(sql, "drop_share_a")
+    engine.execute_and_register_temp_view(sql, "drop_share_b")
+    engine.sql_directly("DROP VIEW drop_share_a")
+    assert engine._materialized_views["drop_share_b"].storageLevel.useMemory
+    got = engine.sql_directly("SELECT count(*) AS n FROM drop_share_b")
+    assert _rows(got) == [{"n": 12}]
+
+
 def test_qualified_registry_read_races_registration(engine):
     """Rewrites that race registrations of new qualified names read one
     snapshot of the registry, not the dict being written."""
