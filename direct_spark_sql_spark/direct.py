@@ -5,8 +5,12 @@ thread, "without RDDs, without the DAG scheduler" (DirectPlan.scala:79-83).
 Here ``sql_directly`` does the same for the plans where a Spark job buys
 nothing: every leaf in memory (``_PlanFacts.in_memory``), a result that
 ``toArrow()`` fetches, no shuffle exchange, no Python-evaluation node, and
-one partition in the final RDD (``register_table`` binds inputs under 100k
-rows as a one-slice ``LogicalRDD`` with ``SinglePartition``).  The Java
+one partition in the final RDD.  ``register_table`` binds inputs under 100k
+rows as a one-slice ``LogicalRDD`` with ``SinglePartition`` over a
+``BlockRDD``, whose one partition is a block of the driver's
+``BlockManager``; it has no dependencies, so its lineage passes, and the
+drain reads the block the name holds when it runs, also after a
+re-registration swapped the rows in place.  The Java
 helper ``org.dss.direct.DirectExec`` (compiled by
 ``functions.jvm.ensure_udf_jar``) executes the plan, drains that
 partition under a private ``TaskContext`` and serves Arrow batches on a

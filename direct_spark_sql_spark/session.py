@@ -8,7 +8,11 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
 - ``register_table`` (reference :129-137) and ``execute_and_register_temp_view``
   (:181-219) bind names through one ``_bind_view``, db-qualified ones via a
   case-insensitive side registry like DirectSessionCatalog.directTempViews,
-  which SQL reaches at the table references Spark's parser places
+  which SQL reaches at the table references Spark's parser places;
+  registered rows sit in the driver's BlockManager behind a ``BlockRDD``
+  leaf (``_RowView``), so a same-shape re-registration swaps them in place
+  and keeps the cached plans that re-read them (``_swap_rows``), the
+  reference's NamedLocalRelation handle (NamedLocalRelation.scala:25-44)
 - ``temp_view(name) -> DataTable``          (reference :139-154)
 - ``set_namespace`` / plan+result LRU cache keyed ``namespace + sql``
   (reference :91-92, :411-415, Guava cache → functools-style OrderedDict LRU);
@@ -140,6 +144,9 @@ def _jvm_class(jvm, fqn: str):
     return getattr(cls, "MODULE$") if fqn.endswith("$") else cls
 
 
+_TREE_PATTERN = "org.apache.spark.sql.catalyst.trees.TreePattern"
+
+
 def _statistics(jvm, size_in_bytes: int, row_count: int):
     """Catalyst's ``Statistics(size_in_bytes, Some(row_count))``.  py4j hands
     every ``java.lang.Number`` back as a Python int, Scala's ``BigInt`` too,
@@ -158,36 +165,121 @@ def _statistics(jvm, size_in_bytes: int, row_count: int):
     return stats._java_lang_class.getConstructors()[0].newInstance(args.toArray(any_ref))
 
 
-def _rows_relation(spark: SparkSession, df: DataFrame, rows: int, slices: int) -> DataFrame:
-    """``df``, the Arrow ingress of ``rows`` driver-local rows, bound as a
-    row-free ``LogicalRDD`` leaf over the same JVM rows in ``slices``
-    partitions, so Catalyst's rules do not walk the rows of every statement
-    that reads them, as they walk a ``LocalRelation``'s (the reference keeps
-    them behind a name, NamedLocalRelation.scala:25-44).
+def _row_tag(jvm):
+    """Scala's ``ClassTag[InternalRow]``."""
+    row_class = _jvm_class(jvm, "org.apache.spark.sql.catalyst.InternalRow")
+    return _jvm_class(jvm, "scala.reflect.ClassTag$").apply(row_class._java_lang_class)
 
-    ``createDataFrame`` gives a ``LocalRelation`` below
-    ``spark.sql.execution.arrow.localRelationThreshold`` and a ``LogicalRDD``
-    with ``spark.sql.defaultSizeInBytes`` statistics above it; both leave here
-    as one leaf, with the statistics a ``LocalRelation`` of the rows reports
+
+def _block_manager(jvm):
+    """The driver's ``BlockManager``; None once the SparkContext stopped."""
+    env = _jvm_class(jvm, "org.apache.spark.SparkEnv").get()
+    return None if env is None else env.blockManager()
+
+
+def _ingress_rows(df: DataFrame):
+    """The output attributes and the JVM rows, as a Scala ``Seq``, of ``df``,
+    an Arrow ingress.  ``createDataFrame`` gives a ``LocalRelation`` below
+    ``spark.sql.execution.arrow.localRelationThreshold``, whose rows are
+    already in the driver, and a ``LogicalRDD`` over Arrow batches above it,
+    whose rows one ``executeCollect`` job decodes into the driver."""
+    leaf = df._jdf.logicalPlan()
+    if leaf.nodeName() == "LocalRelation":
+        return leaf.output(), leaf.data()
+    rows = df._jdf.queryExecution().executedPlan().executeCollect()
+    array_seq = _jvm_class(df._sc._jvm, "scala.collection.immutable.ArraySeq$")
+    return leaf.output(), array_seq.unsafeWrapArray(rows)
+
+
+#: Process-wide numbering of view storage: engines from new_session() share
+#: one BlockManager, and two engines may share one SparkSession.
+_VIEW_IDS = itertools.count()
+
+
+class _RowView:
+    """The rows a ``register_table`` name binds, in the driver's
+    ``BlockManager``: one ``MEMORY_AND_DISK`` block per slice, read through
+    one ``BlockRDD`` whose partitions are those blocks.  Block ids are
+    ``CacheId(sessionUUID, ...)``, Spark Connect's ids for cached local
+    relations.  ``put`` with ``replace`` stores new rows under the same ids,
+    so every plan whose leaf is ``rdd`` reads them on its next execution, as
+    the reference's ``DynamicLocalTableScanExec`` reads its name's current
+    rows (NamedLocalRelation.scala:25-44)."""
+
+    __slots__ = ("schema", "slices", "rows", "block_ids", "rdd", "binding", "_jvm", "_tag")
+
+    def __init__(self, spark: SparkSession, schema: T.StructType, slices: int):
+        jvm = self._jvm = spark.sparkContext._jvm
+        cache_id = _jvm_class(jvm, "org.apache.spark.storage.CacheId")
+        uuid = spark._jsparkSession.sessionUUID()
+        view = next(_VIEW_IDS)
+        self.schema, self.slices, self.rows = schema, slices, 0
+        #: ``Some(leaf)`` of the leaf ``_rows_relation`` built last, as the
+        #: catalog's temp-view entry holds it
+        self.binding = None
+        self.block_ids = [cache_id(uuid, f"dss-view-{view}-{i}") for i in range(slices)]
+        ids = spark.sparkContext._gateway.new_array(
+            _jvm_class(jvm, "org.apache.spark.storage.BlockId"), slices
+        )
+        for i, block_id in enumerate(self.block_ids):
+            ids[i] = block_id
+        self._tag = _row_tag(jvm)
+        self.rdd = _jvm_class(jvm, "org.apache.spark.rdd.BlockRDD")(
+            spark._jsparkSession.sparkContext(), ids, self._tag
+        )
+
+    def put(self, rows, n: int, replace: bool = False) -> None:
+        """Store ``rows``, a Scala ``Seq`` of ``n`` rows, one slice per
+        block, cut where ``parallelize`` cuts; ``replace`` removes the
+        blocks stored before."""
+        blocks = _block_manager(self._jvm)
+        storage_level = _jvm_class(self._jvm, "org.apache.spark.storage.StorageLevel")
+        level = storage_level.MEMORY_AND_DISK()
+        for i, block_id in enumerate(self.block_ids):
+            if replace:
+                blocks.removeBlock(block_id, True)
+            part = rows.slice(i * n // self.slices, (i + 1) * n // self.slices)
+            if not blocks.putIterator(block_id, part.iterator(), level, True, self._tag):
+                raise RuntimeError(f"could not store view block {block_id.name()}")
+        self.rows = n
+
+    def remove(self) -> None:
+        blocks = _block_manager(self._jvm)
+        if blocks is not None:  # a stopped context took its blocks along
+            for block_id in self.block_ids:
+                blocks.removeBlock(block_id, True)
+
+    def nbytes(self) -> int:
+        """Memory plus disk bytes of the blocks, as the BlockManager holds them."""
+        blocks = _block_manager(self._jvm)
+        if blocks is None:
+            return 0
+        total = 0
+        for block_id in self.block_ids:
+            status = blocks.getStatus(block_id)
+            if status.isDefined():
+                total += status.get().memSize() + status.get().diskSize()
+        return total
+
+
+def _rows_relation(spark: SparkSession, view: _RowView, output, rows: int) -> DataFrame:
+    """A row-free ``LogicalRDD`` leaf with ``output`` over ``view``'s
+    ``BlockRDD``, which holds ``rows`` rows, so Catalyst's rules do not walk
+    the rows of every statement that reads them, as they walk a
+    ``LocalRelation``'s (the reference keeps them behind a name,
+    NamedLocalRelation.scala:25-44).
+
+    The leaf carries the statistics a ``LocalRelation`` of the rows reports
     (``getSizePerRow(output) * rows``, ``rows``), so broadcast and exchange
-    decisions are the ``LocalRelation``'s, and with ``SinglePartition`` for one
-    slice, so an aggregate plans without an Exchange."""
+    decisions are the ``LocalRelation``'s, and ``SinglePartition`` for one
+    slice, so an aggregate plans without an Exchange.  ``view.binding``
+    becomes the new leaf."""
     jvm = spark.sparkContext._jvm
     none = _jvm_class(jvm, "scala.None$")
-    leaf = df._jdf.logicalPlan()
-    output = leaf.output()
-    if leaf.nodeName() == "LocalRelation":
-        row_class = _jvm_class(jvm, "org.apache.spark.sql.catalyst.InternalRow")
-        tag = _jvm_class(jvm, "scala.reflect.ClassTag$").apply(
-            row_class._java_lang_class
-        )
-        rdd = spark._jsparkSession.sparkContext().parallelize(leaf.data(), slices, tag)
-    else:
-        rdd = leaf.rdd().coalesce(slices, False, none, None)
     physical = "org.apache.spark.sql.catalyst.plans.physical."
     partitioning = (
         _jvm_class(jvm, physical + "SinglePartition$")
-        if slices == 1
+        if view.slices == 1
         else _jvm_class(jvm, physical + "UnknownPartitioning")(0)
     )
     estimation = _jvm_class(
@@ -198,7 +290,7 @@ def _rows_relation(spark: SparkSession, df: DataFrame, rows: int, slices: int) -
     logical_rdd = _jvm_class(jvm, "org.apache.spark.sql.execution.LogicalRDD")
     relation = logical_rdd(
         output,
-        rdd,
+        view.rdd,
         partitioning,
         getattr(logical_rdd, "apply$default$4")(),  # no output ordering
         False,  # isStreaming
@@ -207,6 +299,7 @@ def _rows_relation(spark: SparkSession, df: DataFrame, rows: int, slices: int) -
         _jvm_class(jvm, "scala.Some")(stats),
         none,  # constraints
     )
+    view.binding = _jvm_class(jvm, "scala.Some")(relation)
     dataset = _jvm_class(jvm, "org.apache.spark.sql.classic.Dataset")
     return DataFrame(dataset.ofRows(spark._jsparkSession, relation), spark)
 
@@ -217,9 +310,7 @@ def _plan_facts(df: DataFrame) -> _PlanFacts:
     inlines them."""
     analyzed = df._jdf.queryExecution().analyzed()
     roots = [analyzed, *_each(analyzed.subqueriesAll())]
-    current_like = (
-        df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()
-    )
+    current_like = _jvm_class(df._sc._jvm, _TREE_PATTERN).CURRENT_LIKE()
     names: set[str] = set()
     replayable = in_memory = True
     for root in roots:
@@ -245,10 +336,67 @@ def _plan_facts(df: DataFrame) -> _PlanFacts:
     return _PlanFacts(frozenset(names), replayable, in_memory)
 
 
+def _leaf_rdd_ids(df: DataFrame) -> set[int]:
+    """The ids of the RDDs under the ``LogicalRDD`` leaves of ``df``'s
+    analyzed plan and of its subquery plans; memoized on ``df``."""
+    ids = df.__dict__.get("_dss_rdd_ids")
+    if ids is None:
+        analyzed = df._jdf.queryExecution().analyzed()
+        ids = {
+            leaf.rdd().id()
+            for root in (analyzed, *_each(analyzed.subqueriesAll()))
+            for leaf in _each(root.collectLeaves())
+            if leaf.nodeName() == "LogicalRDD"
+        }
+        df.__dict__["_dss_rdd_ids"] = ids
+    return ids
+
+
+def _reexecutes_afresh(df: DataFrame) -> bool:
+    """Whether a re-execution of ``df``'s physical plan reads every leaf
+    again: no node keeps a result across executions, as an exchange
+    (broadcast relation, shuffle files), an AQE query stage other than the
+    one that wraps the result, a subquery and a cached-relation scan do.
+    Walks the executed plan once; the answer is memoized on ``df``."""
+    memo = df.__dict__.get("_dss_afresh")
+    if memo is not None:
+        return memo
+    afresh = True
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack and afresh:
+        p = stack.pop()
+        node = p.nodeName()
+        if node == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+            continue
+        if node == "ResultQueryStage":
+            stack.append(p.plan())
+            continue
+        afresh = not (
+            "Exchange" in node
+            or "QueryStage" in node
+            or node == "InMemoryTableScan"
+            or p.subqueries().nonEmpty()
+        )
+        stack.extend(_each(p.children()))
+    df.__dict__["_dss_afresh"] = afresh
+    return afresh
+
+
+def _reads_new_rows(df: DataFrame) -> bool:
+    """Whether a cached plan may stay cached across a row swap of a view it
+    reads: its last ``sql_directly`` fetch ran direct and launched no job,
+    and a re-execution reads every leaf again (``_reexecutes_afresh``).  A
+    broadcast or subquery built from the old rows would answer from them
+    (``BroadcastExchangeExec.relationFuture`` is computed once per plan)."""
+    return df.__dict__.get("_dss_direct_clean", False) and _reexecutes_afresh(df)
+
+
 #: Parsed view DDL naming its view by its first child: an
-#: ``UnresolvedIdentifier`` (CREATE/DROP VIEW) or ``UnresolvedView`` (ALTER VIEW).
+#: ``UnresolvedIdentifier`` (CREATE/DROP VIEW, and DROP TABLE, which also
+#: drops a temp view) or ``UnresolvedView`` (ALTER VIEW).
 _VIEW_DDL = frozenset(
-    {"CreateView", "DropView", "AlterViewAs", "AlterViewSchemaBinding",
+    {"CreateView", "DropView", "DropTable", "AlterViewAs", "AlterViewSchemaBinding",
      "SetViewProperties", "UnsetViewProperties"}
 )
 
@@ -264,6 +412,25 @@ def _view_ddl_name(parsed) -> str | None:
             return ident.nameParts().mkString(".")
         if ident.nodeName() == "UnresolvedView":
             return ident.multipartIdentifier().mkString(".")
+    return None
+
+
+def _unbound_view(parsed) -> str | None:
+    """The temp view a parsed statement takes its binding from: the name a
+    DROP VIEW or DROP TABLE drops (also a registered qualified one, which
+    ``_rewrite_qualified`` points at its mangled view), and the bare name a
+    CREATE OR REPLACE TEMP VIEW or ALTER VIEW ... AS binds to a new plan;
+    None for any other statement."""
+    name = _view_ddl_name(parsed)
+    node = parsed.nodeName()
+    if name is None or node in ("DropView", "DropTable"):
+        return name
+    if "." in name:
+        return None
+    if node == "AlterViewAs" or (
+        node == "CreateViewCommand" and parsed.viewType().toString() == "LocalTempView"
+    ):
+        return name
     return None
 
 
@@ -539,6 +706,77 @@ class _LRU:
             for key in [k for k, v in self._data.items() if predicate(k, v)]:
                 self._evict_locked(key)
 
+    def values(self) -> list:
+        """A snapshot of the values, without promoting or counting."""
+        with self._lock:
+            return list(self._data.values())
+
+
+class _ViewLock:
+    """Readers-writer lock over the rows of registered views.
+
+    A facade execution holds the read side while it runs a plan, so it
+    reads one version of every view; swapping a view's rows, rebinding a
+    view name and dropping a view hold the write side.  Writers are
+    preferred: once one waits, new readers wait behind it, so a steady
+    stream of calls cannot starve a refresh.  A thread that holds the read
+    side reads again without waiting (``sql_directly`` inside a
+    ``sql_iterator`` loop), and the writer may read and write again; a
+    reader that asks for the write side raises ``RuntimeError``, as it
+    would wait for itself forever.  Holds are counted per thread."""
+
+    def __init__(self) -> None:
+        self._cond = threading.Condition(threading.Lock())
+        self._readers: dict[int, int] = {}  # thread id -> read holds
+        self._writer: int | None = None
+        self._writes = 0  # the writer's holds
+        self._waiting = 0  # writers waiting
+
+    @contextlib.contextmanager
+    def read(self):
+        me = threading.get_ident()
+        with self._cond:
+            if me != self._writer and me not in self._readers:
+                while self._writer is not None or self._waiting:
+                    self._cond.wait()
+            self._readers[me] = self._readers.get(me, 0) + 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._readers[me] -= 1
+                if not self._readers[me]:
+                    del self._readers[me]
+                    self._cond.notify_all()
+
+    @contextlib.contextmanager
+    def write(self):
+        me = threading.get_ident()
+        with self._cond:
+            if me != self._writer:
+                if me in self._readers:
+                    raise RuntimeError(
+                        "cannot change a registered view while this thread "
+                        "reads views (inside a sql_iterator loop?)"
+                    )
+                self._waiting += 1
+                try:
+                    while self._writer is not None or self._readers:
+                        self._cond.wait()
+                finally:
+                    self._waiting -= 1
+                    self._cond.notify_all()  # readers held back by this writer
+                self._writer = me
+            self._writes += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._writes -= 1
+                if not self._writes:
+                    self._writer = None
+                    self._cond.notify_all()
+
 
 class Engine:
     """PySpark-native engine session with the reference's API surface."""
@@ -553,6 +791,9 @@ class Engine:
         self.spark = spark
         #: Spark's SQL parser: a plan-cache miss parses once (``dataframe``)
         self._parser = spark._jsparkSession.sessionState().sqlParser()
+        #: the temp views' catalog and Spark's cache registry, read by row swaps
+        self._catalog = spark._jsparkSession.sessionState().catalog()
+        self._cache_manager = spark._jsparkSession.sharedState().cacheManager()
         self._namespace = ""
         #: (namespace+sql) -> analyzed DataFrame; re-executes lazily with
         #: fresh view data, mirroring the reference's plan-cache-with-late-
@@ -566,6 +807,20 @@ class Engine:
         #: unpersist the old storage (reference re-registers freely,
         #: DirectSparkSession.scala:181-219).
         self._materialized_views: dict[str, DataFrame] = {}
+        #: name -> the block storage of rows register_table bound to it;
+        #: a same-shape re-registration swaps the rows in place
+        #: (``_swap_rows``), any other rebind or drop removes them.
+        self._row_views: dict[str, _RowView] = {}
+        #: row storage no name binds that a materialized view still reads:
+        #: rebinding or dropping a view makes Spark uncache the cached plans
+        #: over it, which then recompute from these rows (``_retire``)
+        self._retired_rows: list[_RowView] = []
+        #: materializations counted but not yet bound to their name
+        self._materializing: list[DataFrame] = []
+        #: read by facade executions, written by row swaps, rebinds, drops
+        self._views = _ViewLock()
+        #: plan-cache entries kept across row swaps, summed over swaps
+        self._plans_kept = 0
         #: (DataFrame, wall_sec, result_rows, job tag, frozen stage
         #: rollup, direct) of the most recent sql_directly — backs last_metrics()
         #: (reference: per-execution SQLMetric map,
@@ -631,6 +886,14 @@ class Engine:
 
         Reference: registerTempView (DirectSparkSession.scala:129-137) with
         the lenient list-of-dicts coercion of DirectDataTable.fromJavaMapList.
+
+        Rows are stored in the driver's ``BlockManager`` behind one
+        ``BlockRDD`` (``_RowView``).  Re-registering a name with rows of the
+        same schema and slice count swaps the rows in place
+        (``_swap_rows``), so cached plans that cannot hold the old rows stay
+        cached; otherwise the name is rebound and the old rows removed.
+        Either way this takes the write side of the view lock, so it raises
+        ``RuntimeError`` inside a ``sql_iterator`` loop.
         """
         if isinstance(rows, DataFrame):
             return self._bind_view(name, rows)
@@ -638,34 +901,126 @@ class Engine:
             if schema is None:
                 raise ValueError("schema is required for list-of-dicts input")
             rows = DataTable.from_list_of_dicts(rows, schema)
-        # The rows are parallelized once, here, at ~50k rows per partition:
-        # a small reference table scans as one partition, which a cold call
+        # The rows are sliced once, here, at ~50k rows per partition: a
+        # small reference table scans as one partition, which a cold call
         # drains on its own thread (direct.py) or scans in one task, while
         # large ingress keeps up to defaultParallelism partitions.
         parallelism = self.spark.sparkContext.defaultParallelism
         slices = max(1, min(parallelism, len(rows) // 50_000))
-        df = rows.to_dataframe(self.spark)
-        self._bind_view(name, _rows_relation(self.spark, df, len(rows), slices))
+        output, jrows = _ingress_rows(rows.to_dataframe(self.spark))
+        with self._lock:
+            view = self._row_views.get(name.lower())
+        same_shape = view is not None and (view.schema, view.slices) == (rows.schema, slices)
+        if same_shape and self._swap_rows(name, view, output, jrows, len(rows)):
+            return
+        view = _RowView(self.spark, rows.schema, slices)
+        view.put(jrows, len(rows))
+        relation = _rows_relation(self.spark, view, output, len(rows))
+        self._bind_view(name, relation, rows=view)
 
-    def _bind_view(self, name: str, df: DataFrame, cached: bool = False) -> None:
+    def _swap_rows(self, name: str, view: _RowView, output, jrows, n: int) -> bool:
+        """Replace ``view``'s rows with ``jrows`` in place.  When the row
+        count changed, rebind ``name`` to a leaf over the same ``BlockRDD``
+        with the new statistics, so new analyses plan from the new size;
+        the statistics depend on nothing else, so with an equal count the
+        binding stays, unless a statement on ``engine.spark`` rebound or
+        dropped the view.  Cached results that read the name drop; a cached
+        plan stays when a re-execution reads the new rows
+        (``_reads_new_rows``).
+
+        False, with nothing changed, when ``name`` no longer binds ``view``
+        or Spark's CacheManager holds any entry: ``LogicalRDD.sameResult``
+        compares ``rdd.id``, which a swap keeps, so a cached plan over the
+        old rows would answer new queries."""
+        key = name.lower()
+        with self._views.write():
+            with self._lock:
+                if self._row_views.get(key) is not view:
+                    return False
+            if not self._cache_manager.isEmpty():
+                return False
+            raw = self._catalog.getRawTempView(self._mangle(key))
+            bound = raw.isDefined() and raw.get().plan().equals(view.binding)
+            # plans analyzed while a foreign binding held the name drop
+            keep = _reads_new_rows if bound else None
+            resized = n != view.rows
+            view.put(jrows, n, replace=True)
+            if resized or not bound:
+                relation = _rows_relation(self.spark, view, output, n)
+                self._bind_view(name, relation, rows=view, keep=keep)
+            else:
+                self._drop_cached_plans_referencing(name, keep)
+        return True
+
+    def _bind_view(
+        self,
+        name: str,
+        df: DataFrame,
+        cached: bool = False,
+        rows: _RowView | None = None,
+        keep=None,
+    ) -> None:
         """The only code that binds a view name (reference: createTempView,
         DirectSparkSession.scala:129-137, 181-219); a db-qualified one also
         goes to the side registry (DirectSessionCatalog.scala:130-145).
-        Storage materialized under the name is released; ``cached`` marks
-        ``df`` as the new one.  Names are case-insensitive, as in SQL."""
+        Storage held under the name is released unless it is ``rows``;
+        ``cached`` marks ``df`` as materialized storage, ``rows`` as the
+        block storage of ``df``'s leaf.  Cached plans and results that read
+        the name drop, except plans ``keep(df)`` holds.  Runs under the
+        write side of the view lock.  Names are case-insensitive, as in SQL."""
+        key = name.lower()
+        with self._views.write():
+            with self._lock:
+                displaced = self._materialized_views.pop(key, None)
+                old_rows = self._row_views.pop(key, None)
+                if "." in key:
+                    self._qualified_views[key] = df
+                df.createOrReplaceTempView(self._mangle(key))  # identity if bare
+                if cached:
+                    self._materialized_views[key] = df
+                if rows is not None:
+                    self._row_views[key] = rows
+            self._release(displaced, df)
+            # Cached analyzed plans bound the old binding: drop them, so
+            # they re-analyze.  Outside the lock: _lock is not reentrant.
+            self._drop_cached_plans_referencing(name, keep)
+            self._retire(old_rows if old_rows is not rows else None)
+
+    def _unbind(self, name: str) -> None:
+        """Forget the storage of a view name that view DDL dropped or
+        rebound (``_unbound_view``), under the write side of the view lock."""
         key = name.lower()
         with self._lock:
-            displaced = self._materialized_views.pop(key, None)
-            if "." in key:
-                self._qualified_views[key] = df
-            df.createOrReplaceTempView(self._mangle(key))  # identity if bare
-            if cached:
-                self._materialized_views[key] = df
-        self._release(displaced, df)
-        # Cached analyzed plans bound the old data, where the reference
-        # re-reads by name (NamedLocalRelation.scala:25-44): drop them, so
-        # they re-analyze.  Outside the lock: _lock is not reentrant.
-        self._drop_cached_plans_referencing(name)
+            self._qualified_views.pop(key, None)
+            dropped = self._materialized_views.pop(key, None)
+            rows = self._row_views.pop(key, None)
+        self._release(dropped)
+        self._retire(rows)
+
+    def _retire(self, rows: _RowView | None) -> None:
+        """Remove the blocks of ``rows``, storage no name binds any more, and
+        of every earlier retired storage, except those a materialized view
+        reads: Spark uncaches a cached plan over a view that is rebound or
+        dropped, so the view's materialization recomputes from them."""
+        with self._lock:
+            if rows is not None:
+                self._retired_rows.append(rows)
+            retired = self._retired_rows
+            self._retired_rows = []
+            materialized = [*self._materialized_views.values(), *self._materializing]
+        if not retired:
+            return
+        read = set()
+        for df in materialized:
+            read |= _leaf_rdd_ids(df)
+        kept = []
+        for view in retired:
+            if view.rdd.id() in read:
+                kept.append(view)
+            else:
+                view.remove()
+        with self._lock:
+            self._retired_rows.extend(kept)
 
     def _release(self, displaced: DataFrame | None, bound: DataFrame | None = None) -> None:
         """Unpersist ``displaced``, the storage a name no longer binds, unless
@@ -692,10 +1047,11 @@ class Engine:
     def _mangle(qualified: str) -> str:
         return qualified.replace(".", "__")
 
-    def _drop_cached_plans_referencing(self, name: str | None) -> None:
+    def _drop_cached_plans_referencing(self, name: str | None, keep=None) -> None:
         """Evict cached plans and results whose analyzed plan reads view
         ``name``, directly or through a view body (``_PlanFacts.names``);
-        ``None`` evicts every entry.
+        ``None`` evicts every entry.  A plan for which ``keep(df)`` holds
+        stays cached (a row swap's ``_reads_new_rows``); its result drops.
 
         The name is normalized first: backticks stripped, and a qualified
         ``db.view`` also matches its bare view name and the mangled
@@ -728,10 +1084,20 @@ class Engine:
         #   has every put rejected.  Bumping FIRST would let a reader
         #   capture the new epoch, win the cache lock before the drop,
         #   execute the stale plan, and cache its rows at the new epoch.
+        # keep() may walk a plan over py4j, so it is asked before the lock;
+        # a plan put after this snapshot is not in ``kept``, so it drops
+        kept = {
+            id(df): df
+            for df in (self._plan_cache.values() if keep else ())
+            if _references(df) and keep(df)
+        }
         with self._lock:
-            self._plan_cache.drop_where(lambda _, df: _references(df))
+            self._plan_cache.drop_where(
+                lambda _, df: _references(df) and id(df) not in kept
+            )
             self._result_cache.drop_where(lambda _, hit: _references(hit[2]))
             self._invalidation_epoch += 1
+            self._plans_kept += len(kept)
 
     def _rewrite_qualified(self, sql: str, parsed=None) -> str:
         """``sql`` with the mangled name spliced over each reference to a
@@ -740,9 +1106,9 @@ class Engine:
         DDL's body too), ``innerChildren`` (expression subqueries, CTE
         definitions) and an INSERT's target.  Its ``origin`` bounds are inclusive
         offsets into ``sql``.  Literals and comments are no relations.
-        A ``DROP VIEW`` of a registered qualified view drops the mangled
-        view (its identifier's ``origin`` spans the whole statement, so the
-        statement is rebuilt, not spliced)."""
+        A ``DROP VIEW`` or ``DROP TABLE`` of a registered qualified view
+        drops the mangled view (its identifier's ``origin`` spans the whole
+        statement, so the statement is rebuilt, not spliced)."""
         with self._lock:  # one snapshot: _bind_view writes under this lock
             names = list(self._qualified_views)
         if not names:
@@ -750,11 +1116,12 @@ class Engine:
         mangled = {n: self._mangle(n) for n in names}
         if parsed is None:
             parsed = self._parser.parsePlan(sql)
-        if parsed.nodeName() == "DropView":
+        if parsed.nodeName() in ("DropView", "DropTable"):
             view = (_view_ddl_name(parsed) or "").lower()
             if view in mangled:
+                kind = "VIEW" if parsed.nodeName() == "DropView" else "TABLE"
                 exists = "IF EXISTS " if parsed.ifExists() else ""
-                return f"DROP VIEW {exists}`{mangled[view]}`"
+                return f"DROP {kind} {exists}`{mangled[view]}`"
         spans: dict[tuple[int, int], str] = {}
         stack = [parsed]
         while stack:
@@ -796,6 +1163,10 @@ class Engine:
         (DirectCurrentDate.scala:26-50).  Such a statement is re-analyzed
         per call, so each execution sees the table as it is and gets one
         time or seed, stable across the whole plan.
+
+        View DDL that drops or rebinds a view name (``_unbound_view``) runs
+        under the write side of the view lock and releases the storage held
+        under the name: materialized rows and registered row blocks.
         """
         key = self._cache_key(sql)
         df = self._plan_cache.get(key, count_miss=False)
@@ -804,6 +1175,13 @@ class Engine:
         parsed = self._parser.parsePlan(sql)
         if parsed.nodeName() in ("CreateFunctionCommand", "CreateFunction"):
             return self._register_function_ddl(sql, parsed)
+        unbound = _unbound_view(parsed)
+        if unbound is not None:
+            with self._views.write():
+                df = self.spark.sql(self._rewrite_qualified(sql, parsed))
+                self._unbind(unbound)
+                self._drop_cached_plans_referencing(unbound)
+            return df
         # Epoch captured BEFORE analysis: spark.sql() binds the view data
         # visible NOW, so if an invalidation sweep (view swap + epoch bump
         # + drop) completes before our put, this plan may hold the
@@ -814,15 +1192,9 @@ class Engine:
         # caching.
         epoch = self._invalidation_epoch
         df = self.spark.sql(self._rewrite_qualified(sql, parsed))
-        patterns = df._sc._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
-        if df._jdf.queryExecution().analyzed().containsPattern(patterns.COMMAND()):
-            view = _view_ddl_name(parsed)
-            if view is not None and parsed.nodeName() == "DropView":
-                with self._lock:  # a dropped view leaves the registries
-                    self._qualified_views.pop(view.lower(), None)
-                    dropped = self._materialized_views.pop(view.lower(), None)
-                self._release(dropped)
-            self._drop_cached_plans_referencing(view)
+        command = _jvm_class(df._sc._jvm, _TREE_PATTERN).COMMAND()
+        if df._jdf.queryExecution().analyzed().containsPattern(command):
+            self._drop_cached_plans_referencing(_view_ddl_name(parsed))
             return df
         self._plan_cache.note_miss()
         facts = df.__dict__["_dss_plan_facts"] = _plan_facts(df)
@@ -843,6 +1215,9 @@ class Engine:
         plan has one partition and no shuffle or Python node runs on the
         calling thread, without a Spark job (``direct.py``), the
         reference's same-thread iterator; any other runs as a job.
+
+        The fetch holds the read side of the view lock, so it reads one
+        version of every registered view.
         """
         # Epoch captured BEFORE the plan-cache lookup: an invalidation
         # that lands anywhere between the lookup and the put (including
@@ -852,12 +1227,7 @@ class Engine:
         epoch = self._invalidation_epoch
         df = self.dataframe(sql)  # plan-cache get: stats + invalidation
         facts = df.__dict__.get("_dss_plan_facts")  # None for a command
-        cacheable = (
-            self.result_cache_enabled
-            and facts is not None
-            and facts.replayable
-            and facts.in_memory
-        )
+        cacheable = self._cacheable(facts)
         key = self._cache_key(sql)
         if cacheable:
             t0 = time.perf_counter()
@@ -872,16 +1242,27 @@ class Engine:
                 )
                 self._record_call(sql, wall, arrow.num_rows, True)
                 return DataTable(schema, arrow)
-        fetch = (
-            DirectFetch(self._direct)
-            if self._direct is not None and facts is not None and facts.in_memory
-            else None
-        )
-        with _job_tag(self.spark.sparkContext) as tag:
-            t0 = time.perf_counter()
-            table = DataTable.from_dataframe(df, fetch)
-            wall = time.perf_counter() - t0
+        with self._views.read():
+            if facts is not None and epoch != self._invalidation_epoch:
+                # A view changed after the lookup, and a plan dropped by a
+                # row swap may hold a broadcast of the old rows: look the
+                # plan up again, now that no swap can land before the fetch.
+                epoch = self._invalidation_epoch
+                df = self.dataframe(sql)
+                facts = df.__dict__["_dss_plan_facts"]
+                cacheable = self._cacheable(facts)
+            fetch = (
+                DirectFetch(self._direct)
+                if self._direct is not None and facts is not None and facts.in_memory
+                else None
+            )
+            with _job_tag(self.spark.sparkContext) as tag:
+                t0 = time.perf_counter()
+                table = DataTable.from_dataframe(df, fetch)
+                wall = time.perf_counter() - t0
         direct = fetch is not None and fetch.ran
+        if facts is not None:  # read by a row swap's _reads_new_rows
+            df.__dict__["_dss_direct_clean"] = direct and not fetch.launched_jobs
         # a direct call during which no job was submitted has nothing to
         # read from the status store, so skip the listener-bus drain
         rollup = _empty_rollup() if direct and not fetch.launched_jobs else None
@@ -903,6 +1284,16 @@ class Engine:
                         nbytes=table.arrow.nbytes,
                     )
         return table
+
+    def _cacheable(self, facts: _PlanFacts | None) -> bool:
+        """Whether the result of a plan with ``facts`` may be cached: a
+        replayable query over in-memory leaves only."""
+        return (
+            self.result_cache_enabled
+            and facts is not None
+            and facts.replayable
+            and facts.in_memory
+        )
 
     def _record_call(self, sql: str, wall: float, rows: int, hit: bool) -> None:
         self._call_history.append(
@@ -935,10 +1326,20 @@ class Engine:
         (DirectPlan.scala:81-83).  Backed by ``toLocalIterator`` with
         partition prefetch: one partition is in driver memory at a time
         (plus one being fetched), so a larger-than-driver result can be
-        consumed incrementally."""
+        consumed incrementally.
+
+        The iteration holds the read side of the view lock until the
+        generator is exhausted or closed: re-registering a view inside the
+        loop raises ``RuntimeError``, and on another thread it waits."""
+        epoch = self._invalidation_epoch
         df = self.dataframe(sql)
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            yield row.asDict(recursive=True)
+        with self._views.read():
+            if "_dss_plan_facts" in df.__dict__:
+                if epoch != self._invalidation_epoch:  # as in sql_directly
+                    df = self.dataframe(sql)
+                df.__dict__["_dss_direct_clean"] = False  # runs as a job
+            for row in df.toLocalIterator(prefetchPartitions=True):
+                yield row.asDict(recursive=True)
 
     def execute_and_register_temp_view(self, sql: str, name: str) -> int:
         """Materialize a query into a new (possibly db-qualified) temp view;
@@ -957,9 +1358,16 @@ class Engine:
             old = self._materialized_views.pop(name.lower(), None)
         if old is not None:
             old.unpersist()
-        df = self.spark.sql(self._rewrite_qualified(sql)).cache()
-        count = df.count()
-        self._bind_view(name, df, cached=True)
+        with self._views.read():  # materializes one version of each view
+            df = self.spark.sql(self._rewrite_qualified(sql)).cache()
+            count = df.count()
+            with self._lock:  # its rows must outlive a rebind before the bind
+                self._materializing.append(df)
+        try:
+            self._bind_view(name, df, cached=True)
+        finally:
+            with self._lock:
+                self._materializing = [m for m in self._materializing if m is not df]
         return count
 
     def _register_function_ddl(self, sql: str, parsed) -> DataFrame:
@@ -1012,7 +1420,10 @@ class Engine:
         on this cache (Guava stats were reachable but unexposed,
         DirectSparkSession.scala:411-415); operating a shared engine
         without a hit-rate signal means flying blind, so the rebuild
-        exposes it."""
+        exposes it.  Also the result cache's counts and bytes,
+        ``view_bytes``, the memory plus disk bytes the BlockManager holds
+        for this engine's registered rows, and ``plans_kept``, the plan
+        entries kept across row swaps, summed over swaps."""
         c = self._plan_cache
         with c._lock:
             out = {
@@ -1033,6 +1444,10 @@ class Engine:
                     "result_max_bytes": r.max_bytes,
                 }
             )
+        with self._lock:
+            views = list(self._row_views.values())
+            out["plans_kept"] = self._plans_kept
+        out["view_bytes"] = sum(v.nbytes() for v in views)
         return out
 
     def last_metrics(self) -> dict[str, Any] | None:
@@ -1113,7 +1528,8 @@ class Engine:
         """Read a registered view back out (reference:
         DirectSparkSession.scala:139-154)."""
         df = self._qualified_views.get(name.lower())
-        return DataTable.from_dataframe(self.spark.table(name) if df is None else df)
+        with self._views.read():
+            return DataTable.from_dataframe(self.spark.table(name) if df is None else df)
 
     def _qualified_names(self) -> tuple[set[str], set[str]]:
         """The registered db-qualified view names, lower-cased, and the
@@ -1181,4 +1597,12 @@ class Engine:
         return child
 
     def stop(self) -> None:
+        """Remove this engine's registered row blocks, then stop Spark."""
+        with self._views.write():
+            with self._lock:
+                views = [*self._row_views.values(), *self._retired_rows]
+                self._row_views.clear()
+                self._retired_rows.clear()
+            for view in views:
+                view.remove()
         self.spark.stop()

@@ -16,7 +16,7 @@ from decimal import Decimal
 
 import pytest
 
-from direct_spark_sql_spark.session import _plan_facts
+from direct_spark_sql_spark.session import _block_manager, _plan_facts
 from tests.conftest import SF_DIR
 
 #: reference fixture A1/A2 (DirectExecSuite.scala:31-38)
@@ -951,6 +951,45 @@ def test_drop_view_releases_materialized_storage(engine, spark, name):
     engine.sql_directly(f"DROP VIEW {name}")
     assert jsc.getPersistentRDDs().size() == before
     assert name not in engine._materialized_views
+
+
+@pytest.mark.parametrize(
+    "ddl", ["CREATE OR REPLACE TEMP VIEW {} AS SELECT 1 AS x", "DROP TABLE {}"]
+)
+def test_view_ddl_releases_materialized_storage(engine, spark, ddl):
+    """A view DDL that replaces or drops a materialized view unpersists its
+    storage and forgets it, as ``DROP VIEW`` does."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()  # context-global: delta-based
+    engine.execute_and_register_temp_view("SELECT id * 11 AS x FROM range(9)", "ddl_mv")
+    assert jsc.getPersistentRDDs().size() == before + 1
+    engine.sql_directly(ddl.format("ddl_mv"))
+    assert jsc.getPersistentRDDs().size() == before
+    assert "ddl_mv" not in engine._materialized_views
+
+
+@pytest.mark.parametrize(
+    "ddl",
+    ["DROP VIEW {}", "DROP TABLE {}", "CREATE OR REPLACE TEMP VIEW {} AS SELECT 1 AS x"],
+)
+@pytest.mark.parametrize("name", ["ddl_rows", "ddldb.rows"])
+def test_view_ddl_removes_registered_row_blocks(engine, ddl, name):
+    """Dropping or replacing a registered view removes its row blocks from
+    the BlockManager and forgets them, for a bare and a qualified name (a
+    qualified name cannot be a temp view's, so CREATE raises)."""
+    from pyspark.errors import ParseException
+
+    engine.register_table(name, [{"x": i} for i in range(5)], "x int")
+    view = engine._row_views[name]
+    if ddl.startswith("CREATE") and "." in name:
+        with pytest.raises(ParseException):
+            engine.sql_directly(ddl.format(name))
+        assert engine._row_views[name] is view
+        return
+    engine.sql_directly(ddl.format(name))
+    assert name not in engine._row_views
+    blocks = _block_manager(engine.spark.sparkContext._jvm)
+    assert all(blocks.getStatus(b).isEmpty() for b in view.block_ids)
 
 
 def test_drop_view_keeps_storage_another_view_shares(engine, spark):
