@@ -46,6 +46,7 @@ import re
 import threading
 import time
 import warnings
+import weakref
 from collections import OrderedDict, deque
 from typing import Any, Iterable, NamedTuple
 
@@ -206,7 +207,9 @@ class _RowView:
     the reference's ``DynamicLocalTableScanExec`` reads its name's current
     rows (NamedLocalRelation.scala:25-44)."""
 
-    __slots__ = ("schema", "slices", "rows", "block_ids", "rdd", "binding", "_jvm", "_tag")
+    __slots__ = (
+        "schema", "slices", "rows", "block_ids", "rdd", "rdd_id", "binding", "_jvm", "_tag"
+    )
 
     def __init__(self, spark: SparkSession, schema: T.StructType, slices: int):
         jvm = self._jvm = spark.sparkContext._jvm
@@ -227,6 +230,7 @@ class _RowView:
         self.rdd = _jvm_class(jvm, "org.apache.spark.rdd.BlockRDD")(
             spark._jsparkSession.sparkContext(), ids, self._tag
         )
+        self.rdd_id = self.rdd.id()
 
     def put(self, rows, n: int, replace: bool = False) -> None:
         """Store ``rows``, a Scala ``Seq`` of ``n`` rows, one slice per
@@ -260,6 +264,23 @@ class _RowView:
             if status.isDefined():
                 total += status.get().memSize() + status.get().diskSize()
         return total
+
+
+def _remove_rows_later(row_views: dict[str, _RowView], retired: list[_RowView]) -> None:
+    """Remove, on a new thread, every block of the registered rows of an
+    engine the garbage collector took: those its names bound and the
+    retired ones.  The collector may run inside a py4j call of this thread,
+    whose connection cannot carry another command (py4j hands its own
+    object releases to a worker for the same reason).  Best effort: a
+    gateway that has shut down took the blocks along."""
+    views = [*row_views.values(), *retired]
+
+    def remove() -> None:
+        with contextlib.suppress(Exception):
+            for view in views:
+                view.remove()
+
+    threading.Thread(target=remove, name="dss-view-release", daemon=True).start()
 
 
 def _rows_relation(spark: SparkSession, view: _RowView, output, rows: int) -> DataFrame:
@@ -354,42 +375,42 @@ def _leaf_rdd_ids(df: DataFrame) -> set[int]:
 
 def _reexecutes_afresh(df: DataFrame) -> bool:
     """Whether a re-execution of ``df``'s physical plan reads every leaf
-    again: no node keeps a result across executions, as an exchange
-    (broadcast relation, shuffle files), an AQE query stage other than the
-    one that wraps the result, a subquery and a cached-relation scan do.
-    Walks the executed plan once; the answer is memoized on ``df``."""
+    again, so a cached plan may stay cached across a row swap of a view it
+    reads: no node keeps a result across executions, as an exchange (a
+    broadcast relation, ``BroadcastExchangeExec.relationFuture``, is
+    computed once per plan; a replayed shuffle reuses its files), an AQE
+    query stage other than the one that wraps the result, a subquery and a
+    cached-relation scan do.  Any other physical plan builds a new RDD chain
+    over the leaf's ``BlockRDD`` on every ``execute()``, whether it ran on
+    the calling thread or as a job.  Walks the executed plan once (planning
+    a plan that never ran); the answer is memoized on ``df``.  False when
+    the plan cannot be walked: the plan then drops, which is always safe."""
     memo = df.__dict__.get("_dss_afresh")
     if memo is not None:
         return memo
     afresh = True
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack and afresh:
-        p = stack.pop()
-        node = p.nodeName()
-        if node == "AdaptiveSparkPlan":
-            stack.append(p.executedPlan())
-            continue
-        if node == "ResultQueryStage":
-            stack.append(p.plan())
-            continue
-        afresh = not (
-            "Exchange" in node
-            or "QueryStage" in node
-            or node == "InMemoryTableScan"
-            or p.subqueries().nonEmpty()
-        )
-        stack.extend(_each(p.children()))
+    try:
+        stack = [df._jdf.queryExecution().executedPlan()]
+        while stack and afresh:
+            p = stack.pop()
+            node = p.nodeName()
+            if node == "AdaptiveSparkPlan":
+                stack.append(p.executedPlan())
+                continue
+            if node == "ResultQueryStage":
+                stack.append(p.plan())
+                continue
+            afresh = not (
+                "Exchange" in node
+                or "QueryStage" in node
+                or node == "InMemoryTableScan"
+                or p.subqueries().nonEmpty()
+            )
+            stack.extend(_each(p.children()))
+    except Exception:
+        afresh = False
     df.__dict__["_dss_afresh"] = afresh
     return afresh
-
-
-def _reads_new_rows(df: DataFrame) -> bool:
-    """Whether a cached plan may stay cached across a row swap of a view it
-    reads: its last ``sql_directly`` fetch ran direct and launched no job,
-    and a re-execution reads every leaf again (``_reexecutes_afresh``).  A
-    broadcast or subquery built from the old rows would answer from them
-    (``BroadcastExchangeExec.relationFuture`` is computed once per plan)."""
-    return df.__dict__.get("_dss_direct_clean", False) and _reexecutes_afresh(df)
 
 
 #: Parsed view DDL naming its view by its first child: an
@@ -399,6 +420,24 @@ _VIEW_DDL = frozenset(
     {"CreateView", "DropView", "DropTable", "AlterViewAs", "AlterViewSchemaBinding",
      "SetViewProperties", "UnsetViewProperties"}
 )
+
+
+def _runs_in_analysis(parsed, command) -> bool:
+    """Whether ``spark.sql`` runs the parsed statement ``parsed`` as it
+    analyzes it: a command (``command`` is ``TreePattern.COMMAND``), or an
+    INSERT, which stays a parsed statement until analysis, also under a
+    WITH or as one branch of a multi-insert."""
+    if parsed.containsPattern(command):
+        return True
+    stack = [parsed]
+    while stack:
+        p = stack.pop()
+        node = p.nodeName()
+        if node in ("InsertIntoStatement", "InsertIntoDir"):
+            return True
+        if node in ("UnresolvedWith", "Union"):
+            stack.extend(_each(p.children()))
+    return False
 
 
 def _view_ddl_name(parsed) -> str | None:
@@ -821,6 +860,13 @@ class Engine:
         self._views = _ViewLock()
         #: plan-cache entries kept across row swaps, summed over swaps
         self._plans_kept = 0
+        #: the rows live as long as the engine: an engine dropped without
+        #: ``stop()`` (a ``new_session()`` child) removes its blocks when
+        #: collected; at interpreter exit the JVM takes them along
+        self._release_rows = weakref.finalize(
+            self, _remove_rows_later, self._row_views, self._retired_rows
+        )
+        self._release_rows.atexit = False
         #: (DataFrame, wall_sec, result_rows, job tag, frozen stage
         #: rollup, direct) of the most recent sql_directly — backs last_metrics()
         #: (reference: per-execution SQLMetric map,
@@ -926,7 +972,7 @@ class Engine:
         binding stays, unless a statement on ``engine.spark`` rebound or
         dropped the view.  Cached results that read the name drop; a cached
         plan stays when a re-execution reads the new rows
-        (``_reads_new_rows``).
+        (``_reexecutes_afresh``).
 
         False, with nothing changed, when ``name`` no longer binds ``view``
         or Spark's CacheManager holds any entry: ``LogicalRDD.sameResult``
@@ -942,7 +988,7 @@ class Engine:
             raw = self._catalog.getRawTempView(self._mangle(key))
             bound = raw.isDefined() and raw.get().plan().equals(view.binding)
             # plans analyzed while a foreign binding held the name drop
-            keep = _reads_new_rows if bound else None
+            keep = _reexecutes_afresh if bound else None
             resized = n != view.rows
             view.put(jrows, n, replace=True)
             if resized or not bound:
@@ -986,6 +1032,24 @@ class Engine:
             self._drop_cached_plans_referencing(name, keep)
             self._retire(old_rows if old_rows is not rows else None)
 
+    def _stores(self, name: str) -> bool:
+        """Whether the engine holds rows or a registry entry under view
+        ``name``, which view DDL that drops or rebinds it must release."""
+        key = name.lower()
+        with self._lock:
+            return (
+                key in self._row_views
+                or key in self._materialized_views
+                or key in self._qualified_views
+            )
+
+    def _reads_stored_rows(self, df: DataFrame) -> bool:
+        """Whether ``df`` reads registered row blocks of this engine, also
+        through a materialized view's plan."""
+        with self._lock:
+            stored = {v.rdd_id for v in (*self._row_views.values(), *self._retired_rows)}
+        return not stored.isdisjoint(_leaf_rdd_ids(df))
+
     def _unbind(self, name: str) -> None:
         """Forget the storage of a view name that view DDL dropped or
         rebound (``_unbound_view``), under the write side of the view lock."""
@@ -1005,8 +1069,8 @@ class Engine:
         with self._lock:
             if rows is not None:
                 self._retired_rows.append(rows)
-            retired = self._retired_rows
-            self._retired_rows = []
+            retired = self._retired_rows[:]
+            self._retired_rows.clear()  # in place: the finalizer holds the list
             materialized = [*self._materialized_views.values(), *self._materializing]
         if not retired:
             return
@@ -1015,7 +1079,7 @@ class Engine:
             read |= _leaf_rdd_ids(df)
         kept = []
         for view in retired:
-            if view.rdd.id() in read:
+            if view.rdd_id in read:
                 kept.append(view)
             else:
                 view.remove()
@@ -1051,7 +1115,7 @@ class Engine:
         """Evict cached plans and results whose analyzed plan reads view
         ``name``, directly or through a view body (``_PlanFacts.names``);
         ``None`` evicts every entry.  A plan for which ``keep(df)`` holds
-        stays cached (a row swap's ``_reads_new_rows``); its result drops.
+        stays cached (a row swap's ``_reexecutes_afresh``); its result drops.
 
         The name is normalized first: backticks stripped, and a qualified
         ``db.view`` also matches its bare view name and the mangled
@@ -1164,9 +1228,12 @@ class Engine:
         per call, so each execution sees the table as it is and gets one
         time or seed, stable across the whole plan.
 
-        View DDL that drops or rebinds a view name (``_unbound_view``) runs
-        under the write side of the view lock and releases the storage held
-        under the name: materialized rows and registered row blocks.
+        A command runs inside ``spark.sql``, under the read side of the
+        view lock (``_runs_in_analysis``); a query is analyzed outside it,
+        since analysis reads no rows.  View DDL that drops or rebinds a
+        name under which the engine stores rows (``_unbound_view``,
+        ``_stores``) runs under the write side instead and releases that
+        storage: materialized rows and registered row blocks.
         """
         key = self._cache_key(sql)
         df = self._plan_cache.get(key, count_miss=False)
@@ -1176,7 +1243,7 @@ class Engine:
         if parsed.nodeName() in ("CreateFunctionCommand", "CreateFunction"):
             return self._register_function_ddl(sql, parsed)
         unbound = _unbound_view(parsed)
-        if unbound is not None:
+        if unbound is not None and self._stores(unbound):
             with self._views.write():
                 df = self.spark.sql(self._rewrite_qualified(sql, parsed))
                 self._unbind(unbound)
@@ -1191,8 +1258,12 @@ class Engine:
         # never survive an invalidation and feed post-invalidation result
         # caching.
         epoch = self._invalidation_epoch
-        df = self.spark.sql(self._rewrite_qualified(sql, parsed))
-        command = _jvm_class(df._sc._jvm, _TREE_PATTERN).COMMAND()
+        # spark.sql runs a command as it analyzes it: one that reads views
+        # (CTAS, INSERT ... SELECT, CACHE TABLE ... AS) reads one version
+        command = _jvm_class(self.spark.sparkContext._jvm, _TREE_PATTERN).COMMAND()
+        runs = _runs_in_analysis(parsed, command)
+        with self._views.read() if runs else contextlib.nullcontext():
+            df = self.spark.sql(self._rewrite_qualified(sql, parsed))
         if df._jdf.queryExecution().analyzed().containsPattern(command):
             self._drop_cached_plans_referencing(_view_ddl_name(parsed))
             return df
@@ -1261,8 +1332,6 @@ class Engine:
                 table = DataTable.from_dataframe(df, fetch)
                 wall = time.perf_counter() - t0
         direct = fetch is not None and fetch.ran
-        if facts is not None:  # read by a row swap's _reads_new_rows
-            df.__dict__["_dss_direct_clean"] = direct and not fetch.launched_jobs
         # a direct call during which no job was submitted has nothing to
         # read from the status store, so skip the listener-bus drain
         rollup = _empty_rollup() if direct and not fetch.launched_jobs else None
@@ -1328,16 +1397,19 @@ class Engine:
         (plus one being fetched), so a larger-than-driver result can be
         consumed incrementally.
 
-        The iteration holds the read side of the view lock until the
-        generator is exhausted or closed: re-registering a view inside the
-        loop raises ``RuntimeError``, and on another thread it waits."""
+        An iteration that reads registered rows holds the read side of the
+        view lock until the generator is exhausted or closed, so it reads
+        one version of them: re-registering or dropping such a view inside
+        the loop raises ``RuntimeError``, and on another thread it waits,
+        as do the cold calls queued behind that writer."""
         epoch = self._invalidation_epoch
         df = self.dataframe(sql)
-        with self._views.read():
-            if "_dss_plan_facts" in df.__dict__:
-                if epoch != self._invalidation_epoch:  # as in sql_directly
-                    df = self.dataframe(sql)
-                df.__dict__["_dss_direct_clean"] = False  # runs as a job
+        with contextlib.ExitStack() as held:
+            held.enter_context(self._views.read())
+            if "_dss_plan_facts" in df.__dict__ and epoch != self._invalidation_epoch:
+                df = self.dataframe(sql)  # as in sql_directly
+            if not self._reads_stored_rows(df):
+                held.close()  # no row change touches it: let writers run
             for row in df.toLocalIterator(prefetchPartitions=True):
                 yield row.asDict(recursive=True)
 
@@ -1597,12 +1669,18 @@ class Engine:
         return child
 
     def stop(self) -> None:
-        """Remove this engine's registered row blocks, then stop Spark."""
-        with self._views.write():
-            with self._lock:
-                views = [*self._row_views.values(), *self._retired_rows]
-                self._row_views.clear()
-                self._retired_rows.clear()
-            for view in views:
-                view.remove()
-        self.spark.stop()
+        """Remove this engine's registered row blocks, then stop Spark.
+
+        Takes no view lock, so it also stops an engine whose ``sql_iterator``
+        is still open: that iteration then fails, as any Spark job does on a
+        stopped context."""
+        try:
+            if self._release_rows.detach() is not None:
+                with self._lock:
+                    views = [*self._row_views.values(), *self._retired_rows]
+                    self._row_views.clear()
+                    self._retired_rows.clear()
+                for view in views:
+                    view.remove()
+        finally:
+            self.spark.stop()

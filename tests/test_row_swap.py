@@ -11,16 +11,18 @@ the rows of the version the statement must read.
 
 from __future__ import annotations
 
+import gc
 import random
 import sys
 import threading
+import time
 
 import duckdb
 import pandas as pd
 import pytest
 
 from direct_spark_sql_spark.datatable import DataTable
-from direct_spark_sql_spark.session import Engine, _block_manager
+from direct_spark_sql_spark.session import Engine, _block_manager, _RowView
 
 SCHEMA = "id BIGINT, account INT, kind STRING, amount BIGINT, flagged BOOLEAN"
 ACCOUNTS_SCHEMA = "account INT, tier STRING"
@@ -197,15 +199,22 @@ def test_refused_swaps_rebind_and_answer_new_rows(eng, spark, change):
 
 def test_large_swap_keeps_two_partitions(eng):
     """100k-row views scan in min(defaultParallelism, 2) partitions before
-    and after a swap."""
+    and after a swap.  A plan without exchange that ran as a job stays
+    cached across the swap and replays over the new rows."""
     sql = "SELECT count(*) AS n, sum(amount) AS s FROM fresh"
+    scan = "SELECT id, amount FROM fresh WHERE amount > 9990"
     parallelism = eng.spark.sparkContext.defaultParallelism
+    eng.result_cache_enabled = False
     for seed in (6, 7):
         rows = _batch(seed, n=100_000)
         eng.register_table("fresh", rows, SCHEMA)
-        scan = eng.spark.table("fresh")._jdf.queryExecution().toRdd()
-        assert scan.getNumPartitions() == min(parallelism, 2)
+        partitions = eng.spark.table("fresh")._jdf.queryExecution().toRdd()
+        assert partitions.getNumPartitions() == min(parallelism, 2)
         assert _answer(eng, sql) == _oracle(rows, sql)
+        hits = eng.cache_stats()["hits"]
+        assert _answer(eng, scan) == _oracle(rows, scan)
+        assert eng.cache_stats()["hits"] == hits + (seed == 7)
+        assert eng.last_metrics()["direct"] is (parallelism < 2)
 
 
 def test_materialized_view_keeps_its_snapshot(eng, spark):
@@ -253,6 +262,41 @@ def test_register_inside_sql_iterator_raises(eng):
     assert len(list(it)) == 49
     eng.register_table("fresh", _batch(14, 50), SCHEMA)
     assert _answer(eng, "SELECT count(*) FROM fresh") == [(50,)]
+
+
+def test_sql_iterator_holds_views_only_when_it_reads_registered_rows(eng):
+    """An iteration over other data lets the same thread change a view, and
+    view DDL about a name with no registered rows runs inside any loop."""
+    eng.register_table("fresh", _batch(24, 50), SCHEMA)
+    it = eng.sql_iterator("SELECT id FROM range(3)")
+    next(it)
+    eng.register_table("fresh", _batch(25, 50), SCHEMA)
+    assert len(list(it)) == 2
+    it = eng.sql_iterator("SELECT id FROM fresh")
+    next(it)
+    eng.sql_directly("DROP TABLE IF EXISTS swap_unrelated")
+    with pytest.raises(RuntimeError):
+        eng.sql_directly("DROP VIEW fresh")
+    assert len(list(it)) == 49
+    assert _answer(eng, "SELECT count(*) FROM fresh") == [(50,)]
+
+
+def test_dropped_engine_removes_its_blocks(eng, spark):
+    """An engine dropped without ``stop()`` removes its row blocks when the
+    garbage collector takes it; the shared SparkContext keeps running."""
+    child = eng.new_session()
+    child.register_table("fresh", _batch(26, 50), SCHEMA)
+    block_ids = list(child._row_views["fresh"].block_ids)
+    blocks = _block_manager(spark.sparkContext._jvm)
+    assert all(blocks.getStatus(b).isDefined() for b in block_ids)
+    del child
+    gc.collect()
+    deadline = time.monotonic() + 60
+    while not all(blocks.getStatus(b).isEmpty() for b in block_ids):
+        assert time.monotonic() < deadline, "blocks of a dropped engine stayed"
+        time.sleep(0.05)
+    eng.register_table("fresh", _batch(27, 5), SCHEMA)
+    assert _answer(eng, "SELECT count(*) FROM fresh") == [(5,)]
 
 
 def test_cache_stats_report_view_bytes_and_kept_plans(eng):
@@ -306,3 +350,68 @@ def test_concurrent_swaps_answer_one_version(spark):
     assert not th.is_alive()
     assert not errors, errors
     assert eng.cache_stats()["plans_kept"] > 0
+
+
+@pytest.mark.parametrize("command", ["insert", "ctas"])
+def test_commands_read_one_version_during_swaps(spark, tmp_path, monkeypatch, command):
+    """A command that reads a view runs inside ``spark.sql``: an INSERT ...
+    SELECT or a CREATE TABLE ... AS SELECT over ``fresh`` while another
+    thread swaps its rows writes one version's rows, and never fails on a
+    block being replaced.  Each swap
+    pauses between removing the old blocks and storing the new ones, so a
+    read that is not ordered against it meets the gap."""
+    put = _RowView.put
+
+    def slow_put(view, rows, n, replace=False):
+        if replace:
+            view.remove()
+            time.sleep(0.05)
+        put(view, rows, n, replace)
+
+    monkeypatch.setattr(_RowView, "put", slow_put)
+    spark.catalog.clearCache()
+    eng = Engine(spark.newSession(), result_cache_size=0)
+    versions = (_batch(28), _batch(29))
+    select = "SELECT kind, count(*) AS n, sum(amount) AS cents FROM fresh GROUP BY kind"
+    want = [_oracle(v, select) for v in versions]
+    eng.register_table("fresh", versions[0], SCHEMA)
+    if command == "insert":
+        eng.sql_directly(
+            f"CREATE TABLE swap_snap (kind STRING, n BIGINT, cents BIGINT) "
+            f"USING parquet LOCATION '{tmp_path}/snap'"
+        )
+    errors: list[BaseException] = []
+    done = threading.Event()
+
+    def writer():
+        try:
+            for i in range(20):
+                eng.register_table("fresh", versions[(i + 1) % 2], SCHEMA)
+        except BaseException as e:
+            errors.append(e)
+        finally:
+            done.set()
+
+    th = threading.Thread(target=writer)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    inserts = 0
+    try:
+        th.start()
+        while not done.is_set() or inserts < 2:
+            if command == "insert":
+                eng.sql_directly(f"INSERT OVERWRITE TABLE swap_snap {select}")
+            else:
+                eng.sql_directly("DROP TABLE IF EXISTS swap_snap")
+                eng.sql_directly(
+                    f"CREATE TABLE swap_snap USING parquet "
+                    f"LOCATION '{tmp_path}/snap{inserts}' AS {select}"
+                )
+            assert _answer(eng, "SELECT * FROM swap_snap") in want
+            inserts += 1
+    finally:
+        th.join(timeout=300)
+        sys.setswitchinterval(interval)
+        eng.sql_directly("DROP TABLE IF EXISTS swap_snap")
+    assert not th.is_alive()
+    assert not errors, errors
