@@ -274,6 +274,8 @@ def _remove_rows_later(row_views: dict[str, _RowView], retired: list[_RowView]) 
     object releases to a worker for the same reason).  Best effort: a
     gateway that has shut down took the blocks along."""
     views = [*row_views.values(), *retired]
+    if not views:
+        return
 
     def remove() -> None:
         with contextlib.suppress(Exception):
