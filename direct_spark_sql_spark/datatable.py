@@ -51,16 +51,22 @@ def as_struct_type(schema: T.StructType | str) -> T.StructType:
 def _fetches_rows(df: DataFrame) -> bool:
     """Whether ``df``'s result comes from ``collect()``: its plan root, also
     inside ``AdaptiveSparkPlanExec``, is in ``_COLLECT_ROOTS``, or a struct
-    repeats a field name, which ``toArrow()`` refuses."""
-    try:
-        PT.to_arrow_schema(df.schema, error_on_duplicated_field_names_in_struct=True)
-    except UnsupportedOperationException:
-        return True
-    root = df._jdf.queryExecution().executedPlan()
-    name = root.nodeName()
-    if name == "AdaptiveSparkPlan":
-        name = root.inputPlan().nodeName()
-    return name in _COLLECT_ROOTS
+    repeats a field name, which ``toArrow()`` refuses.  Memoized on ``df``:
+    both are facts about its plan."""
+    memo = df.__dict__.get("_dss_fetches_rows")
+    if memo is None:
+        try:
+            PT.to_arrow_schema(df.schema, error_on_duplicated_field_names_in_struct=True)
+        except UnsupportedOperationException:
+            memo = True
+        else:
+            root = df._jdf.queryExecution().executedPlan()
+            name = root.nodeName()
+            if name == "AdaptiveSparkPlan":
+                name = root.inputPlan().nodeName()
+            memo = name in _COLLECT_ROOTS
+        df.__dict__["_dss_fetches_rows"] = memo
+    return memo
 
 
 def _map_leaves(dt: T.DataType, fn: Callable[[T.DataType], T.DataType]) -> T.DataType:
@@ -163,16 +169,13 @@ class DataTable:
     # -- constructors -------------------------------------------------------
 
     @classmethod
-    def from_dataframe(
-        cls, df: DataFrame, direct: Callable[[DataFrame], pa.Table | None] | None = None
-    ) -> "DataTable":
-        """``df``'s result, fetched with ``collect()`` where Spark specializes
-        it, else with ``direct`` (a ``direct.DirectFetch``) when it runs the
-        plan on the calling thread, else with ``toArrow()``."""
+    def from_dataframe(cls, df: DataFrame) -> "DataTable":
+        """``df``'s result, fetched as Spark jobs: with ``collect()`` where
+        Spark specializes it, else with ``toArrow()`` (``direct.DirectFetch``
+        fetches on the calling thread instead)."""
         if _fetches_rows(df):
             return cls(df.schema, df.collect())
-        table = None if direct is None else direct(df)
-        return cls(df.schema, df.toArrow() if table is None else table)
+        return cls(df.schema, df.toArrow())
 
     @classmethod
     def from_list_of_dicts(

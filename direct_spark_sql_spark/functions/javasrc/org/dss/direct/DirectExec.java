@@ -1,6 +1,7 @@
 package org.dss.direct;
 
 import java.nio.ByteBuffer;
+import java.nio.charset.StandardCharsets;
 import java.util.ArrayList;
 import java.util.IdentityHashMap;
 import java.util.List;
@@ -46,10 +47,11 @@ import scala.reflect.ClassTag$;
  * Spark job: the reference's "without RDDs, without the DAG scheduler"
  * execution (DirectPlan.scala:79-83), on top of Spark's own RDD iterator.
  *
- * {@link #serveArrow} executes the plan (a broadcast build or a scalar
- * subquery inside {@code execute()} still runs its own job), drains the one
- * partition under a private task context and serves the result as Arrow IPC
- * streams, one per batch, on a local socket, as {@code toArrow()} does.
+ * {@link #fetch} executes the plan (a broadcast build or a scalar subquery
+ * inside {@code execute()} still runs its own job), drains the one
+ * partition under a private task context and returns the result as Arrow
+ * IPC streams, one per batch: inline when they are small, else served on a
+ * local socket, as {@code toArrow()} serves them.
  * Like a task, the drain runs a deserialized copy of the final RDD: an
  * operator keeps per-execution state in its plan node (SortExec's sorter),
  * which would make the shared plan unserializable for a later job and
@@ -66,39 +68,82 @@ public final class DirectExec {
    */
   private static final AtomicLong TASK_ATTEMPT_IDS = new AtomicLong(-(1L << 20));
 
+  /** Results whose Arrow frames total at most this many bytes return inline. */
+  static final int INLINE_BYTES = 64 << 10;
+
+  /** Bits of the flags byte that leads every payload {@link #fetch} returns. */
+  static final int LAUNCHED_JOBS = 1;
+  static final int LARGE_VAR_TYPES = 2;
+  static final int ON_SOCKET = 4;
+
   /**
-   * Serves the result of {@code ds} and returns {@code "<port> <secret>
-   * <launchedJobs> <largeVarTypes>"}, one string, so the caller reads it in
-   * one py4j round trip; null when the plan is not eligible and must run
-   * as a job: its physical plan has a shuffle exchange or a
-   * Python-evaluation node, or its final RDD has more than one partition,
-   * a shuffle dependency or a Python RDD in its lineage.
-   * {@code launchedJobs} is false when no job at all was submitted during
-   * the call. The served frames are the Arrow streams, then one empty
-   * frame that marks the end, so a truncated read is detected without
-   * another round trip to the serving thread.
+   * Fetches the result of {@code ds} in one py4j round trip; null when the
+   * plan is not eligible and must run as a job: its physical plan has a
+   * shuffle exchange or a Python-evaluation node, or its final RDD has more
+   * than one partition, a shuffle dependency or a Python RDD in its lineage.
+   * Every job the call launches (a broadcast build) carries {@code tag},
+   * which is added on the calling thread and removed before it returns.
+   *
+   * <p>The payload is a flags byte ({@link #LAUNCHED_JOBS}: a job was
+   * submitted during the call; {@link #LARGE_VAR_TYPES}: the session's
+   * {@code arrowUseLargeVarTypes}), then the Arrow IPC streams, one per
+   * batch, each framed as a 4-byte big-endian length and the stream, and
+   * an empty frame that marks the end, so a truncated payload is detected.
+   * When the streams total more than {@link #INLINE_BYTES}, they are
+   * served on a local socket, as {@code toArrow()} serves them, in the same
+   * framing, and the payload is the flags byte with {@link #ON_SOCKET} set,
+   * then {@code "<port> <secret>"}.
    */
-  public String serveArrow(Dataset<?> ds) {
-    SparkPlan plan = ds.queryExecution().executedPlan();
-    if (!eligible(plan)) {
-      return null;
-    }
+  public byte[] fetch(Dataset<?> ds, String tag) {
     SparkSession session = ds.sparkSession();
     SparkContext sc = session.sparkContext();
-    int firstJobId = sc.dagScheduler().nextJobId().get();
-    List<byte[]> batches = SQLExecution$.MODULE$.withSQLConfPropagated(
-        session, () -> session.withActive(() -> drain(session, plan, ds)));
-    if (batches == null) {
-      return null;
+    sc.addJobTag(tag);
+    try {
+      SparkPlan plan = ds.queryExecution().executedPlan();
+      if (!eligible(plan)) {
+        return null;
+      }
+      int firstJobId = sc.dagScheduler().nextJobId().get();
+      List<byte[]> frames = SQLExecution$.MODULE$.withSQLConfPropagated(
+          session, () -> session.withActive(() -> drain(session, plan, ds)));
+      if (frames == null) {
+        return null;
+      }
+      int flags = (sc.dagScheduler().nextJobId().get() != firstJobId ? LAUNCHED_JOBS : 0)
+          | (session.sessionState().conf().arrowUseLargeVarTypes() ? LARGE_VAR_TYPES : 0);
+      long size = 0;
+      for (byte[] frame : frames) {
+        size += frame.length;
+      }
+      frames.add(new byte[0]);
+      return size <= INLINE_BYTES ? inline(flags, frames) : serve(flags, frames);
+    } finally {
+      sc.removeJobTag(tag);
     }
-    boolean launchedJobs = sc.dagScheduler().nextJobId().get() != firstJobId;
-    batches.add(new byte[0]);
+  }
+
+  /** The flags byte, then every frame with its length. */
+  private static byte[] inline(int flags, List<byte[]> frames) {
+    int size = 1;
+    for (byte[] frame : frames) {
+      size += 4 + frame.length;
+    }
+    ByteBuffer out = ByteBuffer.allocate(size);  // big-endian
+    out.put((byte) flags);
+    for (byte[] frame : frames) {
+      out.putInt(frame.length).put(frame);
+    }
+    return out.array();
+  }
+
+  /** Serves the frames on a local socket; the flags byte, then where. */
+  private static byte[] serve(int flags, List<byte[]> frames) {
     @SuppressWarnings("unchecked")
     Iterator<Object> items = (Iterator<Object>) (Iterator<?>)
-        scala.jdk.javaapi.CollectionConverters.asScala(batches.iterator());
+        scala.jdk.javaapi.CollectionConverters.asScala(frames.iterator());
     Object[] served = PythonRDD$.MODULE$.serveIterator(items, "serve-direct-Arrow");
-    return served[0] + " " + served[1] + " " + launchedJobs + " "
-        + session.sessionState().conf().arrowUseLargeVarTypes();
+    byte[] where = (served[0] + " " + served[1]).getBytes(StandardCharsets.UTF_8);
+    return ByteBuffer.allocate(1 + where.length).put((byte) (flags | ON_SOCKET)).put(where).array();
   }
 
   /** No shuffle exchange and no Python-evaluation node in the plan. */

@@ -375,44 +375,59 @@ def _leaf_rdd_ids(df: DataFrame) -> set[int]:
     return ids
 
 
-def _reexecutes_afresh(df: DataFrame) -> bool:
-    """Whether a re-execution of ``df``'s physical plan reads every leaf
-    again, so a cached plan may stay cached across a row swap of a view it
-    reads: no node keeps a result across executions, as an exchange (a
-    broadcast relation, ``BroadcastExchangeExec.relationFuture``, is
-    computed once per plan; a replayed shuffle reuses its files), an AQE
-    query stage other than the one that wraps the result, a subquery and a
-    cached-relation scan do.  Any other physical plan builds a new RDD chain
-    over the leaf's ``BlockRDD`` on every ``execute()``, whether it ran on
-    the calling thread or as a job.  Walks the executed plan once (planning
-    a plan that never ran); the answer is memoized on ``df``.  False when
-    the plan cannot be walked: the plan then drops, which is always safe."""
-    memo = df.__dict__.get("_dss_afresh")
-    if memo is not None:
-        return memo
-    afresh = True
+def _held_rdd_ids(df: DataFrame) -> frozenset[int] | None:
+    """The ids of the RDDs that ``df``'s physical plan reads under a node
+    that keeps a result across executions, or None when the plan must
+    never be kept across a row swap: it scans a cached relation, or it
+    cannot be walked.  A cached plan may stay across a swap of a view whose
+    ``BlockRDD`` is not among them: any other node builds a new RDD chain
+    over the leaf on every ``execute()``, so a replay reads the new rows.
+
+    The nodes that keep a result are an exchange (a broadcast relation,
+    ``BroadcastExchangeExec.relationFuture``, is computed once per plan; a
+    replayed shuffle reuses its files), an AQE query stage other than the
+    one that wraps the result, and a subquery (its result is computed once
+    per plan).  ``ReusedExchange`` and ``ReusedSubquery`` keep their
+    original's result: their ``child()`` is not among their ``children()``,
+    nor is a query stage's ``plan()`` or an AQE plan's ``executedPlan()``.
+    Walks the executed plan once; the answer is memoized on ``df``, unless
+    an AQE plan in it has not run yet, whose final plan may differ."""
+    if "_dss_held_rdds" in df.__dict__:
+        return df.__dict__["_dss_held_rdds"]
+    held: set[int] | None = set()
+    final = True
     try:
-        stack = [df._jdf.queryExecution().executedPlan()]
-        while stack and afresh:
-            p = stack.pop()
+        stack = [(df._jdf.queryExecution().executedPlan(), False)]
+        while stack:
+            p, keeps = stack.pop()
             node = p.nodeName()
+            if node == "InMemoryTableScan":
+                held = None
+                break
             if node == "AdaptiveSparkPlan":
-                stack.append(p.executedPlan())
+                final = final and p.isFinalPlan()
+                stack.append((p.executedPlan(), keeps))
                 continue
             if node == "ResultQueryStage":
-                stack.append(p.plan())
+                stack.append((p.plan(), keeps))
                 continue
-            afresh = not (
-                "Exchange" in node
-                or "QueryStage" in node
-                or node == "InMemoryTableScan"
-                or p.subqueries().nonEmpty()
-            )
-            stack.extend(_each(p.children()))
+            if "QueryStage" in node:
+                stack.append((p.plan(), True))
+                continue
+            if node in ("ReusedExchange", "ReusedSubquery"):
+                stack.append((p.child(), True))
+                continue
+            if keeps and node.startswith("Scan ExistingRDD"):
+                held.add(p.rdd().id())
+            keeps = keeps or "Exchange" in node
+            stack.extend((q, True) for q in _each(p.subqueries()))
+            stack.extend((c, keeps) for c in _each(p.children()))
     except Exception:
-        afresh = False
-    df.__dict__["_dss_afresh"] = afresh
-    return afresh
+        held, final = None, True
+    out = None if held is None else frozenset(held)
+    if final:
+        df.__dict__["_dss_held_rdds"] = out
+    return out
 
 
 #: Parsed view DDL naming its view by its first child: an
@@ -513,12 +528,17 @@ def _walk_plan_metrics(jnode, out: list[dict[str, Any]]) -> None:
 _CALL_IDS = itertools.count()
 
 
+def _call_tag() -> str:
+    return f"dss-call-{next(_CALL_IDS)}"
+
+
 @contextlib.contextmanager
-def _job_tag(sc):
-    """Tag every Spark job this thread launches inside the block with a
-    fresh tag (yielded).  Job tags are thread-local JVM properties, so
-    concurrent calls on other threads keep their own jobs apart."""
-    tag = f"dss-call-{next(_CALL_IDS)}"
+def _job_tag(sc, tag: str | None = None):
+    """Tag every Spark job this thread launches inside the block with
+    ``tag``, a fresh one by default (yielded).  Job tags are thread-local
+    JVM properties, so concurrent calls on other threads keep their own
+    jobs apart."""
+    tag = tag or _call_tag()
     sc.addJobTag(tag)
     try:
         yield tag
@@ -973,8 +993,9 @@ class Engine:
         the statistics depend on nothing else, so with an equal count the
         binding stays, unless a statement on ``engine.spark`` rebound or
         dropped the view.  Cached results that read the name drop; a cached
-        plan stays when a re-execution reads the new rows
-        (``_reexecutes_afresh``).
+        plan stays when no node of it that keeps a result across executions
+        reads the view (``_held_rdd_ids``), so a re-execution reads the new
+        rows.
 
         False, with nothing changed, when ``name`` no longer binds ``view``
         or Spark's CacheManager holds any entry: ``LogicalRDD.sameResult``
@@ -989,8 +1010,14 @@ class Engine:
                 return False
             raw = self._catalog.getRawTempView(self._mangle(key))
             bound = raw.isDefined() and raw.get().plan().equals(view.binding)
-            # plans analyzed while a foreign binding held the name drop
-            keep = _reexecutes_afresh if bound else None
+
+            def keep(df: DataFrame) -> bool:
+                # plans analyzed while a foreign binding held the name drop
+                if not bound:
+                    return False
+                held = _held_rdd_ids(df)
+                return held is not None and view.rdd_id not in held
+
             resized = n != view.rows
             view.put(jrows, n, replace=True)
             if resized or not bound:
@@ -1117,7 +1144,7 @@ class Engine:
         """Evict cached plans and results whose analyzed plan reads view
         ``name``, directly or through a view body (``_PlanFacts.names``);
         ``None`` evicts every entry.  A plan for which ``keep(df)`` holds
-        stays cached (a row swap's ``_reexecutes_afresh``); its result drops.
+        stays cached (a row swap's ``_held_rdd_ids`` rule); its result drops.
 
         The name is normalized first: backticks stripped, and a qualified
         ``db.view`` also matches its bare view name and the mangled
@@ -1329,10 +1356,16 @@ class Engine:
                 if self._direct is not None and facts is not None and facts.in_memory
                 else None
             )
-            with _job_tag(self.spark.sparkContext) as tag:
-                t0 = time.perf_counter()
-                table = DataTable.from_dataframe(df, fetch)
-                wall = time.perf_counter() - t0
+            tag = _call_tag()
+            t0 = time.perf_counter()
+            # a direct fetch tags its jobs in the helper, in its one round trip
+            arrow = None if fetch is None else fetch(df, tag)
+            if arrow is None:
+                with _job_tag(self.spark.sparkContext, tag):
+                    table = DataTable.from_dataframe(df)
+            else:
+                table = DataTable(df.schema, arrow)
+            wall = time.perf_counter() - t0
         direct = fetch is not None and fetch.ran
         # a direct call during which no job was submitted has nothing to
         # read from the status store, so skip the listener-bus drain

@@ -2,9 +2,10 @@
 plan on the calling thread, without a Spark job (``direct.py``), and gives
 what the job path gives.
 
-Both paths are driven on the same DataFrame through
-``DataTable.from_dataframe``: with a ``DirectFetch`` (direct) and without
-(``toArrow()``, a job).  ``tests/test_facade_job_path.py`` runs the facade
+Both paths are driven on the same DataFrame: through a ``DirectFetch``
+(direct) and through ``DataTable.from_dataframe`` (``toArrow()``, a job).
+A direct result up to 64 KiB returns inline, a larger one on a socket;
+both are checked.  ``tests/test_facade_job_path.py`` runs the facade
 suites again with the direct path off.
 """
 
@@ -16,6 +17,7 @@ import pytest
 from pyspark.errors import PySparkException
 from pyspark.sql import types as T
 
+import direct_spark_sql_spark.direct as direct_mod
 import direct_spark_sql_spark.session as session_mod
 from direct_spark_sql_spark.datatable import DataTable
 from direct_spark_sql_spark.direct import DirectFetch
@@ -31,17 +33,21 @@ def _next_job_id(engine) -> int:
     return engine.spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
+def _direct(engine, df) -> DataTable:
+    """``df``'s result fetched direct; the fetch must not decline."""
+    fetch = DirectFetch(engine._direct)
+    table = fetch(df, "dx-test")
+    assert fetch.ran and table is not None
+    return DataTable(df.schema, table)
+
+
 def _both(engine, sql) -> tuple[DataTable, DataTable]:
     """``sql``'s result fetched direct, then as a job, then direct again,
-    all from one DataFrame; the two direct fetches must have run direct."""
+    all from one DataFrame."""
     df = engine.dataframe(sql)
-    first = DirectFetch(engine._direct)
-    direct = DataTable.from_dataframe(df, first)
+    direct = _direct(engine, df)
     job = DataTable.from_dataframe(df)
-    again = DirectFetch(engine._direct)
-    direct_again = DataTable.from_dataframe(df, again)
-    assert first.ran and again.ran, sql
-    assert direct_again.arrow.equals(direct.arrow), sql
+    assert _direct(engine, df).arrow.equals(direct.arrow), sql
     return direct, job
 
 
@@ -53,16 +59,74 @@ def _assert_parity(engine, sql) -> DataTable:
     return direct
 
 
+@pytest.fixture()
+def socket_reads(monkeypatch) -> list[int]:
+    """One entry per direct result read from a socket rather than inline."""
+    reads: list[int] = []
+    load = direct_mod._load_from_socket
+
+    def counting(*args):
+        reads.append(1)
+        return load(*args)
+
+    monkeypatch.setattr(direct_mod, "_load_from_socket", counting)
+    return reads
+
+
 # -- parity -------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("tz", [None, "America/New_York"])
-def test_type_matrix_direct_matches_job(engine, tz):
+def test_type_matrix_direct_matches_job(engine, tz, socket_reads):
     with _process_tz(tz):
         engine.register_table(
             "dx_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
         )
         _assert_parity(engine, "SELECT * FROM dx_matrix ORDER BY id")
+    assert socket_reads == []
+
+
+@pytest.mark.parametrize("tz", [None, "America/New_York"])
+def test_type_matrix_on_the_socket_matches_job(engine, tz, socket_reads):
+    """The matrix repeated past 64 KiB is served on the socket."""
+    with _process_tz(tz):
+        engine.register_table(
+            "dx_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
+        )
+        engine.register_table("dx_copies", [{"c": c} for c in range(400)], "c INT")
+        got = _assert_parity(
+            engine, "SELECT m.*, c FROM dx_matrix m CROSS JOIN dx_copies ORDER BY c, id"
+        )
+    assert len(got) == 2000 and len(socket_reads) == 2
+
+
+@pytest.mark.parametrize(
+    "rows, on_socket", [(7_600, False), (8_400, True)], ids=["under-64KiB", "over-64KiB"]
+)
+def test_results_either_side_of_64_kib_match_job(engine, rows, on_socket, socket_reads):
+    """A BIGINT column's Arrow frames grow by 8 bytes a row: 7 600 rows
+    are about 62 KB and return inline, 8 400 rows about 69 KB and are
+    served on the socket."""
+    engine.register_table("dx_pad", [{"id": i} for i in range(9_000)], "id BIGINT")
+    got = _assert_parity(engine, f"SELECT id FROM dx_pad WHERE id < {rows}")
+    assert len(got) == rows
+    assert socket_reads == ([1, 1] if on_socket else [])
+
+
+@pytest.mark.parametrize("cut", [1, 4, 9], ids=["in-end-marker", "end-marker", "in-batch"])
+def test_truncated_inline_payload_raises(engine, cut):
+    engine.register_table("dx_cut", [{"a": i} for i in range(10)], "a INT")
+    df = engine.dataframe("SELECT a FROM dx_cut")
+    helper = engine._direct
+
+    class Truncating:
+        def fetch(self, jdf, tag):
+            payload = helper.fetch(jdf, tag)
+            assert not payload[0] & direct_mod._ON_SOCKET
+            return payload[:-cut]
+
+    with pytest.raises(ConnectionError):
+        DirectFetch(Truncating())(df, "dx-test")
 
 
 def test_repeated_dst_hour_direct_matches_job(engine):
@@ -157,7 +221,7 @@ def test_runtime_error_raises_what_the_job_raises(engine, expr):
     df = engine.dataframe(f"SELECT {expr} AS x FROM dx_err")
     first_job = _next_job_id(engine)
     with pytest.raises(PySparkException) as direct_err:
-        DataTable.from_dataframe(df, DirectFetch(engine._direct))
+        _direct(engine, df)
     assert _next_job_id(engine) == first_job  # the error came from the drain
     with pytest.raises(PySparkException) as job_err:
         DataTable.from_dataframe(df)
@@ -183,7 +247,7 @@ def test_failed_drain_releases_task_state(engine):
         "HAVING raise_error('boom') IS NULL",
     ):
         with pytest.raises(PySparkException):
-            DataTable.from_dataframe(engine.dataframe(sql), DirectFetch(engine._direct))
+            _direct(engine, engine.dataframe(sql))
         assert jvm.org.apache.spark.TaskContext.get() is None
         # tasks of the materializing job may still be unregistering
         assert locks.getNumberOfMapEntries() <= registered

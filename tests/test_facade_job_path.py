@@ -26,4 +26,4 @@ def engine(spark):
 
 @pytest.fixture(autouse=True)
 def _job_path_only(monkeypatch):
-    monkeypatch.setattr(DirectFetch, "__call__", lambda self, df: None)
+    monkeypatch.setattr(DirectFetch, "__call__", lambda self, df, tag: None)

@@ -4,9 +4,11 @@
 behind one ``BlockRDD`` (session.py ``_RowView``).  Registering the same
 name again with the same schema and slice count replaces the blocks and
 keeps the cached plans whose re-execution reads them afresh, as the
-reference's name-bound scan does (NamedLocalRelation.scala:25-44); any
-other rebind drops them.  Every answer here is checked against DuckDB over
-the rows of the version the statement must read.
+reference's name-bound scan does (NamedLocalRelation.scala:25-44): those
+whose nodes that keep a result across executions (a broadcast, a
+subquery) read only other views.  Any other rebind drops them.  Every
+answer here is checked against DuckDB over the rows of the version the
+statement must read.
 """
 
 from __future__ import annotations
@@ -16,13 +18,20 @@ import random
 import sys
 import threading
 import time
+from types import SimpleNamespace
 
 import duckdb
 import pandas as pd
 import pytest
 
 from direct_spark_sql_spark.datatable import DataTable
-from direct_spark_sql_spark.session import Engine, _block_manager, _RowView
+from direct_spark_sql_spark.session import (
+    Engine,
+    _block_manager,
+    _each,
+    _held_rdd_ids,
+    _RowView,
+)
 
 SCHEMA = "id BIGINT, account INT, kind STRING, amount BIGINT, flagged BOOLEAN"
 ACCOUNTS_SCHEMA = "account INT, tier STRING"
@@ -58,11 +67,11 @@ def _batch(seed: int, n: int = 2000) -> list[dict]:
 ACCOUNTS = [{"account": a, "tier": "gold" if a % 3 == 0 else "basic"} for a in range(40)]
 
 
-def _oracle(rows: list[dict], sql: str) -> list[tuple]:
+def _oracle(rows: list[dict], sql: str, accounts: list[dict] = ACCOUNTS) -> list[tuple]:
     con = duckdb.connect()
     try:
         con.register("fresh", pd.DataFrame(rows))
-        con.register("accounts", pd.DataFrame(ACCOUNTS))
+        con.register("accounts", pd.DataFrame(accounts))
         return sorted(con.execute(sql).fetchall())
     finally:
         con.close()
@@ -86,9 +95,9 @@ def eng(spark):
 
 
 def test_swap_keeps_direct_plans_and_answers_new_rows(eng):
-    """A statement that ran direct without a job stays cached across a swap
-    and replays as a plan-cache hit over the new rows; the join, whose
-    broadcast is a job, re-plans."""
+    """Every statement stays cached across a swap and replays as a
+    plan-cache hit over the new rows, the join too: its broadcast holds
+    only the unchanged ``accounts``."""
     v1, v2 = _batch(1), _batch(2)
     eng.register_table("fresh", v1, SCHEMA)
     view = eng._row_views["fresh"]
@@ -97,12 +106,151 @@ def test_swap_keeps_direct_plans_and_answers_new_rows(eng):
     kept0 = eng.cache_stats()["plans_kept"]
     eng.register_table("fresh", v2, SCHEMA)
     assert eng._row_views["fresh"] is view  # swapped in place
-    assert eng.cache_stats()["plans_kept"] == kept0 + 3
+    assert eng.cache_stats()["plans_kept"] == kept0 + 4
     for sql in AGGREGATES:
         hits = eng.cache_stats()["hits"]
         assert _answer(eng, sql) == _oracle(v2, sql), sql
-        kept = sql != AGGREGATES[1]
-        assert eng.cache_stats()["hits"] == hits + kept, sql
+        assert eng.cache_stats()["hits"] == hits + 1, sql
+        assert eng.last_metrics()["jobs"] == 0, sql
+
+
+def test_kept_replay_is_one_round_trip(eng, monkeypatch):
+    """After a swap each statement replays direct in one py4j command from
+    the calling thread, and its result-cache hit sends none.  py4j's
+    finalizer thread releases dead Java objects with commands of its own,
+    which are not counted."""
+    eng.register_table("fresh", _batch(48), SCHEMA)
+    for sql in AGGREGATES:
+        _answer(eng, sql)
+    v2 = _batch(49)
+    eng.register_table("fresh", v2, SCHEMA)
+    client = eng.spark.sparkContext._gateway._gateway_client
+    send, caller, sent = client.send_command, threading.get_ident(), []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    for sql in AGGREGATES:
+        sent.clear()
+        replay = eng.sql_directly(sql)
+        replay_commands = len(sent)
+        eng.sql_directly(sql)
+        assert (replay_commands, len(sent) - replay_commands) == (1, 0), (sql, sent)
+        assert sorted(tuple(r) for r in replay.data) == _oracle(v2, sql), sql
+
+
+def _replays(eng: Engine, sql: str) -> bool:
+    """Whether the next call of ``sql`` is a plan-cache hit."""
+    return eng._cache_key(sql) in eng._plan_cache
+
+
+TIERS = [{"account": a, "tier": "platinum" if a % 2 else "basic"} for a in range(40)]
+
+
+def test_swap_of_the_broadcast_side_drops_the_join(eng):
+    """The join's broadcast holds the old ``accounts`` rows: swapping
+    ``accounts`` drops the plan, and the join answers the new tiers."""
+    sql = AGGREGATES[1]
+    rows = _batch(40)
+    eng.register_table("fresh", rows, SCHEMA)
+    assert _answer(eng, sql) == _oracle(rows, sql)
+    plan = eng.dataframe(sql)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    view = eng._row_views["accounts"]
+    eng.register_table("accounts", TIERS, ACCOUNTS_SCHEMA)
+    assert eng._row_views["accounts"] is view  # swapped in place
+    assert not _replays(eng, sql)
+    assert _answer(eng, sql) == _oracle(rows, sql, TIERS)
+    eng.register_table("fresh", _batch(41), SCHEMA)
+    assert _replays(eng, sql)
+    assert _answer(eng, sql) == _oracle(_batch(41), sql, TIERS)
+
+
+def test_swap_drops_a_self_join_that_broadcasts_the_view(eng):
+    v1, v2 = _batch(42), _batch(43)
+    eng.register_table("fresh", v1, SCHEMA)
+    assert _answer(eng, SELF_JOIN) == _oracle(v1, SELF_JOIN)
+    plan = eng.dataframe(SELF_JOIN)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    eng.register_table("fresh", v2, SCHEMA)
+    assert not _replays(eng, SELF_JOIN)
+    assert _answer(eng, SELF_JOIN) == _oracle(v2, SELF_JOIN)
+
+
+def test_swap_keeps_a_subquery_over_an_unchanged_view(eng):
+    """A scalar subquery keeps its result across executions: a plan whose
+    subquery reads ``accounts`` stays across a swap of ``fresh``, and one
+    whose subquery reads ``fresh`` drops."""
+    over_accounts = (
+        "SELECT kind, count(*) AS n, sum(amount) AS cents FROM fresh WHERE account < "
+        "(SELECT max(account) FROM accounts WHERE tier = 'gold') GROUP BY kind"
+    )
+    over_fresh = (
+        "SELECT tier, count(*) AS n FROM accounts "
+        "WHERE account * 100 < (SELECT max(amount) FROM fresh) GROUP BY tier"
+    )
+    v1 = _batch(44)
+    v2 = [dict(r, amount=r["amount"] // 4) for r in _batch(45)]
+    eng.register_table("fresh", v1, SCHEMA)
+    for sql in (over_accounts, over_fresh):
+        assert _answer(eng, sql) == _oracle(v1, sql), sql
+        plan = eng.dataframe(sql)._jdf.queryExecution().executedPlan().toString()
+        assert "Subquery" in plan, plan
+    eng.register_table("fresh", v2, SCHEMA)
+    assert _replays(eng, over_accounts) and not _replays(eng, over_fresh)
+    for sql in (over_accounts, over_fresh):
+        assert _answer(eng, sql) == _oracle(v2, sql), sql
+    assert _oracle(v1, over_fresh) != _oracle(v2, over_fresh)
+
+
+def _find_node(plan, name: str):
+    """The first node called ``name`` in a physical plan, looking inside
+    AQE plans and query stages."""
+    stack = [plan]
+    while stack:
+        p = stack.pop()
+        node = p.nodeName()
+        if node == name:
+            return p
+        if node == "AdaptiveSparkPlan":
+            stack.append(p.executedPlan())
+        elif "QueryStage" in node:
+            stack.append(p.plan())
+        stack.extend(_each(p.children()))
+    raise AssertionError(f"no {name} in {plan.toString()}")
+
+
+def test_reused_exchange_is_walked_through_its_child(eng):
+    """The second broadcast of ``accounts`` reuses the first; the walk
+    follows ``ReusedExchange.child()``, which ``children()`` omits."""
+    sql = (
+        "SELECT a.tier, b.tier AS tier2, count(*) AS n FROM fresh f "
+        "JOIN accounts a ON f.account = a.account "
+        "JOIN accounts b ON f.account + 1 = b.account GROUP BY a.tier, b.tier"
+    )
+    v1, v2 = _batch(46), _batch(47)
+    eng.register_table("fresh", v1, SCHEMA)
+    assert _answer(eng, sql) == _oracle(v1, sql)
+    df = eng.dataframe(sql)
+    accounts = {eng._row_views["accounts"].rdd_id}
+    assert _held_rdd_ids(df) == accounts
+    # walked alone, the reused exchange reaches the scan only through child()
+    reused = _find_node(df._jdf.queryExecution().executedPlan(), "ReusedExchange")
+    plan_only = SimpleNamespace(
+        _jdf=SimpleNamespace(
+            queryExecution=lambda: SimpleNamespace(executedPlan=lambda: reused)
+        )
+    )
+    assert _held_rdd_ids(plan_only) == accounts
+    eng.register_table("fresh", v2, SCHEMA)
+    assert _replays(eng, sql)
+    assert _answer(eng, sql) == _oracle(v2, sql)
+    eng.register_table("accounts", TIERS, ACCOUNTS_SCHEMA)
+    assert not _replays(eng, sql)
+    assert _answer(eng, sql) == _oracle(v2, sql, TIERS)
 
 
 def test_swap_drops_a_plan_that_broadcast_the_old_rows(eng):
