@@ -9,8 +9,9 @@ SparkSession driving everything, DirectSparkSession.scala), rebuilt on a
   (:181-219) bind names through one ``_bind_view``, db-qualified ones via a
   case-insensitive side registry like DirectSessionCatalog.directTempViews,
   which SQL reaches at the table references Spark's parser places;
-  registered rows sit in the driver's BlockManager behind a ``BlockRDD``
-  leaf (``_RowView``), so a same-shape re-registration swaps them in place
+  registered rows and materialized results sit in the driver's
+  BlockManager behind a ``BlockRDD`` leaf (``_RowView``, ``_store_rows``),
+  so a same-shape re-registration swaps them in place
   and keeps the cached plans that re-read them (``_swap_rows``), the
   reference's NamedLocalRelation handle (NamedLocalRelation.scala:25-44)
 - ``temp_view(name) -> DataTable``          (reference :139-154)
@@ -90,11 +91,13 @@ ENGINE_CONF: dict[str, str] = {
 
 #: Analyzed-plan leaf classes whose content cannot change outside the
 #: facade's invalidation hooks.  LogicalRDD is what register_table binds
-#: list-of-dicts and DataTable input to (``_rows_relation``), and what a
-#: registered ``createDataFrame(list)`` DataFrame binds to (driver-local
-#: data, re-bound only through register_table, which sweeps the caches);
-#: LocalRelation is an inline ``VALUES`` or a registered DataFrame's local
-#: rows; InMemoryRelation is a facade-cached materialization.  Everything else —
+#: list-of-dicts and DataTable input to, and execute_and_register_temp_view
+#: its result (``_rows_relation``), and what a registered
+#: ``createDataFrame(list)`` DataFrame binds to (driver-local data, re-bound
+#: only through register_table, which sweeps the caches); LocalRelation is
+#: an inline ``VALUES`` or a registered DataFrame's local rows;
+#: InMemoryRelation is rows Spark's CacheManager holds, to which the facade
+#: adds none.  Everything else —
 #: file scans, streaming sources, and notably LogicalRelation wrapping an
 #: EXTERNAL relation like JDBC — is rejected: that data can change with no
 #: invalidation hook ever firing.  CTERelationRef / UnionLoopRef are
@@ -179,11 +182,12 @@ def _block_manager(jvm):
 
 
 def _ingress_rows(df: DataFrame):
-    """The output attributes and the JVM rows, as a Scala ``Seq``, of ``df``,
-    an Arrow ingress.  ``createDataFrame`` gives a ``LocalRelation`` below
-    ``spark.sql.execution.arrow.localRelationThreshold``, whose rows are
-    already in the driver, and a ``LogicalRDD`` over Arrow batches above it,
-    whose rows one ``executeCollect`` job decodes into the driver."""
+    """The output attributes and the JVM rows, as a Scala ``Seq``, of ``df``.
+    A ``LocalRelation`` (Arrow ingress below
+    ``spark.sql.execution.arrow.localRelationThreshold``, or a ``VALUES``
+    query) already holds its rows in the driver; any other plan (Arrow
+    batches above that threshold, a query) runs as one ``executeCollect``
+    job that brings its rows into the driver."""
     leaf = df._jdf.logicalPlan()
     if leaf.nodeName() == "LocalRelation":
         return leaf.output(), leaf.data()
@@ -198,7 +202,8 @@ _VIEW_IDS = itertools.count()
 
 
 class _RowView:
-    """The rows a ``register_table`` name binds, in the driver's
+    """The rows a ``register_table`` or ``execute_and_register_temp_view``
+    name binds, in the driver's
     ``BlockManager``: one ``MEMORY_AND_DISK`` block per slice, read through
     one ``BlockRDD`` whose partitions are those blocks.  Block ids are
     ``CacheId(sessionUUID, ...)``, Spark Connect's ids for cached local
@@ -266,14 +271,13 @@ class _RowView:
         return total
 
 
-def _remove_rows_later(row_views: dict[str, _RowView], retired: list[_RowView]) -> None:
-    """Remove, on a new thread, every block of the registered rows of an
-    engine the garbage collector took: those its names bound and the
-    retired ones.  The collector may run inside a py4j call of this thread,
-    whose connection cannot carry another command (py4j hands its own
-    object releases to a worker for the same reason).  Best effort: a
+def _remove_rows_later(row_views: dict[str, _RowView]) -> None:
+    """Remove, on a new thread, the row blocks of an engine the garbage
+    collector took.  The collector may run inside a py4j call of this
+    thread, whose connection cannot carry another command (py4j hands its
+    own object releases to a worker for the same reason).  Best effort: a
     gateway that has shut down took the blocks along."""
-    views = [*row_views.values(), *retired]
+    views = list(row_views.values())
     if not views:
         return
 
@@ -863,21 +867,11 @@ class Engine:
         #: db-qualified temp views by lower-cased name, reference:
         #: DirectSessionCatalog.directTempViews (DirectSessionCatalog.scala:55).
         self._qualified_views: dict[str, DataFrame] = {}
-        #: name -> the .cache()d DataFrame backing an
-        #: execute_and_register_temp_view result, so replacing it can
-        #: unpersist the old storage (reference re-registers freely,
-        #: DirectSparkSession.scala:181-219).
-        self._materialized_views: dict[str, DataFrame] = {}
-        #: name -> the block storage of rows register_table bound to it;
-        #: a same-shape re-registration swaps the rows in place
-        #: (``_swap_rows``), any other rebind or drop removes them.
+        #: name -> the block storage of rows register_table or
+        #: execute_and_register_temp_view bound to it; a same-shape
+        #: re-registration swaps the rows in place (``_swap_rows``), any
+        #: other rebind or drop removes them.
         self._row_views: dict[str, _RowView] = {}
-        #: row storage no name binds that a materialized view still reads:
-        #: rebinding or dropping a view makes Spark uncache the cached plans
-        #: over it, which then recompute from these rows (``_retire``)
-        self._retired_rows: list[_RowView] = []
-        #: materializations counted but not yet bound to their name
-        self._materializing: list[DataFrame] = []
         #: read by facade executions, written by row swaps, rebinds, drops
         self._views = _ViewLock()
         #: plan-cache entries kept across row swaps, summed over swaps
@@ -885,9 +879,7 @@ class Engine:
         #: the rows live as long as the engine: an engine dropped without
         #: ``stop()`` (a ``new_session()`` child) removes its blocks when
         #: collected; at interpreter exit the JVM takes them along
-        self._release_rows = weakref.finalize(
-            self, _remove_rows_later, self._row_views, self._retired_rows
-        )
+        self._release_rows = weakref.finalize(self, _remove_rows_later, self._row_views)
         self._release_rows.atexit = False
         #: (DataFrame, wall_sec, result_rows, job tag, frozen stage
         #: rollup, direct) of the most recent sql_directly — backs last_metrics()
@@ -969,22 +961,30 @@ class Engine:
             if schema is None:
                 raise ValueError("schema is required for list-of-dicts input")
             rows = DataTable.from_list_of_dicts(rows, schema)
-        # The rows are sliced once, here, at ~50k rows per partition: a
-        # small reference table scans as one partition, which a cold call
-        # drains on its own thread (direct.py) or scans in one task, while
-        # large ingress keeps up to defaultParallelism partitions.
+        self._store_rows(name, rows.schema, *_ingress_rows(rows.to_dataframe(self.spark)))
+
+    def _store_rows(self, name: str, schema: T.StructType, output, jrows) -> int:
+        """Store ``jrows``, the JVM rows ``_ingress_rows`` read, with
+        ``output`` and ``schema``, as the rows of view ``name``; returns
+        their count.  A same-shape name swaps its rows in place
+        (``_swap_rows``); any other is bound to a new ``_RowView``.
+
+        The rows are sliced once, here, at ~50k rows per partition: a small
+        view scans as one partition, which a cold call drains on its own
+        thread (direct.py) or scans in one task, while a large one keeps up
+        to defaultParallelism partitions."""
+        n = jrows.size()
         parallelism = self.spark.sparkContext.defaultParallelism
-        slices = max(1, min(parallelism, len(rows) // 50_000))
-        output, jrows = _ingress_rows(rows.to_dataframe(self.spark))
+        slices = max(1, min(parallelism, n // 50_000))
         with self._lock:
             view = self._row_views.get(name.lower())
-        same_shape = view is not None and (view.schema, view.slices) == (rows.schema, slices)
-        if same_shape and self._swap_rows(name, view, output, jrows, len(rows)):
-            return
-        view = _RowView(self.spark, rows.schema, slices)
-        view.put(jrows, len(rows))
-        relation = _rows_relation(self.spark, view, output, len(rows))
-        self._bind_view(name, relation, rows=view)
+        same_shape = view is not None and (view.schema, view.slices) == (schema, slices)
+        if same_shape and self._swap_rows(name, view, output, jrows, n):
+            return n
+        view = _RowView(self.spark, schema, slices)
+        view.put(jrows, n)
+        self._bind_view(name, _rows_relation(self.spark, view, output, n), rows=view)
+        return n
 
     def _swap_rows(self, name: str, view: _RowView, output, jrows, n: int) -> bool:
         """Replace ``view``'s rows with ``jrows`` in place.  When the row
@@ -1028,113 +1028,54 @@ class Engine:
         return True
 
     def _bind_view(
-        self,
-        name: str,
-        df: DataFrame,
-        cached: bool = False,
-        rows: _RowView | None = None,
-        keep=None,
+        self, name: str, df: DataFrame, rows: _RowView | None = None, keep=None
     ) -> None:
         """The only code that binds a view name (reference: createTempView,
         DirectSparkSession.scala:129-137, 181-219); a db-qualified one also
         goes to the side registry (DirectSessionCatalog.scala:130-145).
-        Storage held under the name is released unless it is ``rows``;
-        ``cached`` marks ``df`` as materialized storage, ``rows`` as the
-        block storage of ``df``'s leaf.  Cached plans and results that read
-        the name drop, except plans ``keep(df)`` holds.  Runs under the
-        write side of the view lock.  Names are case-insensitive, as in SQL."""
+        ``rows`` is the block storage of ``df``'s leaf; the blocks held
+        under the name before are removed unless they are ``rows``.  Cached
+        plans and results that read the name drop, except plans ``keep(df)``
+        holds.  Runs under the write side of the view lock.  Names are
+        case-insensitive, as in SQL."""
         key = name.lower()
         with self._views.write():
             with self._lock:
-                displaced = self._materialized_views.pop(key, None)
                 old_rows = self._row_views.pop(key, None)
                 if "." in key:
                     self._qualified_views[key] = df
                 df.createOrReplaceTempView(self._mangle(key))  # identity if bare
-                if cached:
-                    self._materialized_views[key] = df
                 if rows is not None:
                     self._row_views[key] = rows
-            self._release(displaced, df)
             # Cached analyzed plans bound the old binding: drop them, so
             # they re-analyze.  Outside the lock: _lock is not reentrant.
             self._drop_cached_plans_referencing(name, keep)
-            self._retire(old_rows if old_rows is not rows else None)
+            if old_rows is not None and old_rows is not rows:
+                old_rows.remove()
 
     def _stores(self, name: str) -> bool:
         """Whether the engine holds rows or a registry entry under view
         ``name``, which view DDL that drops or rebinds it must release."""
         key = name.lower()
         with self._lock:
-            return (
-                key in self._row_views
-                or key in self._materialized_views
-                or key in self._qualified_views
-            )
+            return key in self._row_views or key in self._qualified_views
 
     def _reads_stored_rows(self, df: DataFrame) -> bool:
-        """Whether ``df`` reads registered row blocks of this engine, also
-        through a materialized view's plan."""
+        """Whether ``df`` reads row blocks of this engine."""
         with self._lock:
-            stored = {v.rdd_id for v in (*self._row_views.values(), *self._retired_rows)}
+            stored = {v.rdd_id for v in self._row_views.values()}
         return not stored.isdisjoint(_leaf_rdd_ids(df))
 
     def _unbind(self, name: str) -> None:
         """Forget the storage of a view name that view DDL dropped or
-        rebound (``_unbound_view``), under the write side of the view lock."""
+        rebound (``_unbound_view``) and remove its blocks, under the write
+        side of the view lock."""
         key = name.lower()
         with self._lock:
             self._qualified_views.pop(key, None)
-            dropped = self._materialized_views.pop(key, None)
             rows = self._row_views.pop(key, None)
-        self._release(dropped)
-        self._retire(rows)
-
-    def _retire(self, rows: _RowView | None) -> None:
-        """Remove the blocks of ``rows``, storage no name binds any more, and
-        of every earlier retired storage, except those a materialized view
-        reads: Spark uncaches a cached plan over a view that is rebound or
-        dropped, so the view's materialization recomputes from them."""
-        with self._lock:
-            if rows is not None:
-                self._retired_rows.append(rows)
-            retired = self._retired_rows[:]
-            self._retired_rows.clear()  # in place: the finalizer holds the list
-            materialized = [*self._materialized_views.values(), *self._materializing]
-        if not retired:
-            return
-        read = set()
-        for df in materialized:
-            read |= _leaf_rdd_ids(df)
-        kept = []
-        for view in retired:
-            if view.rdd_id in read:
-                kept.append(view)
-            else:
-                view.remove()
-        with self._lock:
-            self._retired_rows.extend(kept)
-
-    def _release(self, displaced: DataFrame | None, bound: DataFrame | None = None) -> None:
-        """Unpersist ``displaced``, the storage a name no longer binds, unless
-        a DataFrame still bound shares its cache entry: ``bound``, the new
-        binding of the name, or another materialized view.  CacheManager
-        keys by canonicalized plan, so unpersisting ``displaced`` would also
-        uncache the survivor (a concurrent re-register of the same
-        statement, or the same statement materialized under two names)."""
-        if displaced is None or displaced is bound:
-            return
-        with self._lock:
-            survivors = [*self._materialized_views.values()]
-        if bound is not None:
-            survivors.append(bound)
-        try:
-            plan = displaced._jdf.queryExecution().analyzed()
-            if any(plan.sameResult(s._jdf.queryExecution().analyzed()) for s in survivors):
-                return
-        except Exception:
-            return  # keep: never uncache a survivor
-        displaced.unpersist()
+        if rows is not None:
+            rows.remove()
 
     @staticmethod
     def _mangle(qualified: str) -> str:
@@ -1261,8 +1202,8 @@ class Engine:
         view lock (``_runs_in_analysis``); a query is analyzed outside it,
         since analysis reads no rows.  View DDL that drops or rebinds a
         name under which the engine stores rows (``_unbound_view``,
-        ``_stores``) runs under the write side instead and releases that
-        storage: materialized rows and registered row blocks.
+        ``_stores``) runs under the write side instead and removes that
+        name's row blocks.
         """
         key = self._cache_key(sql)
         df = self._plan_cache.get(key, count_miss=False)
@@ -1451,31 +1392,20 @@ class Engine:
     def execute_and_register_temp_view(self, sql: str, name: str) -> int:
         """Materialize a query into a new (possibly db-qualified) temp view;
         returns the row count (reference: DirectSparkSession.scala:181-219).
-        Spark-first: the result is cached (memory-and-disk) rather than
-        collected to the driver, so multi-step pipelines stay distributed.
 
-        Re-registering unpersists the replaced DataFrame BEFORE the new
-        statement materializes.  Spark's CacheManager keys by canonicalized
-        plan, so only this order makes re-running the SAME statement
-        materialize anew from fresh source data (a refresh, like the
-        reference's new snapshot) instead of reusing the stale cached rows;
-        and a long-lived service loop leaks no cached RDD per call.
+        The result is a snapshot: like the reference, which copies the rows
+        into a new relation under the name, the query runs once and its
+        rows are collected into driver blocks, stored as ``register_table``
+        stores rows (``_store_rows``), so a later change of the views it
+        read leaves it as it is.  ``spark.driver.maxResultSize`` bounds the
+        result: a larger one fails the call, and the name keeps its rows.
+        The query reads one version of every view; a name with a result of
+        the same schema and slice count swaps its rows in place.
         """
-        with self._lock:
-            old = self._materialized_views.pop(name.lower(), None)
-        if old is not None:
-            old.unpersist()
         with self._views.read():  # materializes one version of each view
-            df = self.spark.sql(self._rewrite_qualified(sql)).cache()
-            count = df.count()
-            with self._lock:  # its rows must outlive a rebind before the bind
-                self._materializing.append(df)
-        try:
-            self._bind_view(name, df, cached=True)
-        finally:
-            with self._lock:
-                self._materializing = [m for m in self._materializing if m is not df]
-        return count
+            df = self.spark.sql(self._rewrite_qualified(sql))
+            ingress = _ingress_rows(df)
+        return self._store_rows(name, df.schema, *ingress)
 
     def _register_function_ddl(self, sql: str, parsed) -> DataFrame:
         """JVM UDF DDL surface (reference: CREATE FUNCTION ... AS 'class',
@@ -1529,8 +1459,9 @@ class Engine:
         without a hit-rate signal means flying blind, so the rebuild
         exposes it.  Also the result cache's counts and bytes,
         ``view_bytes``, the memory plus disk bytes the BlockManager holds
-        for this engine's registered rows, and ``plans_kept``, the plan
-        entries kept across row swaps, summed over swaps."""
+        for this engine's views, registered rows and materialized results
+        alike, and ``plans_kept``, the plan entries kept across row swaps,
+        summed over swaps."""
         c = self._plan_cache
         with c._lock:
             out = {
@@ -1712,9 +1643,8 @@ class Engine:
         try:
             if self._release_rows.detach() is not None:
                 with self._lock:
-                    views = [*self._row_views.values(), *self._retired_rows]
+                    views = list(self._row_views.values())
                     self._row_views.clear()
-                    self._retired_rows.clear()
                 for view in views:
                     view.remove()
         finally:

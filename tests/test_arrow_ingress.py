@@ -286,6 +286,21 @@ def test_egress_matches_collect(engine, select, repeats):
     _assert_egress_parity(engine, sql + " LIMIT 2", True)
 
 
+@pytest.mark.parametrize("where", ["", " WHERE id < 0"], ids=["matrix", "empty"])
+def test_materialized_type_matrix_matches_its_statement(engine, where):
+    """A materialized view reads back what its statement answers, value for
+    value and type for type, also with no rows."""
+    engine.register_table(
+        "eg_mv_src", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
+    )
+    sql = f"SELECT * FROM eg_mv_src{where} ORDER BY id"
+    want = engine.sql_directly(sql)
+    assert engine.execute_and_register_temp_view(sql, "eg_mv") == len(want)
+    got = engine.temp_view("eg_mv")
+    assert got.schema == want.schema
+    assert _same(sorted(got.data, key=lambda r: r.id), want.data)
+
+
 @pytest.mark.parametrize("sql", ["SET spark.sql.ansi.enabled", "SHOW TABLES"])
 def test_command_egress_matches_collect(engine, sql):
     _assert_egress_parity(engine, sql, True)

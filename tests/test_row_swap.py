@@ -84,8 +84,7 @@ def _answer(eng: Engine, sql: str) -> list[tuple]:
 @pytest.fixture()
 def eng(spark):
     """An engine on its own session with no Spark-cached data: a swap needs
-    an empty CacheManager, which other suites' materialized views fill
-    (their views stay readable, recomputed from their plans)."""
+    an empty CacheManager, which other suites' ``.cache()`` calls fill."""
     spark.catalog.clearCache()
     e = Engine(spark.newSession())
     e.register_table("accounts", ACCOUNTS, ACCOUNTS_SCHEMA)
@@ -365,25 +364,102 @@ def test_large_swap_keeps_two_partitions(eng):
         assert eng.last_metrics()["direct"] is (parallelism < 2)
 
 
+MV_TEXT = "SELECT kind, count(*) AS n, sum(amount) AS cents FROM fresh GROUP BY kind"
+
+
 def test_materialized_view_keeps_its_snapshot(eng, spark):
     """A view materialized over ``fresh`` keeps its rows when ``fresh`` is
     registered again, while its SQL text over ``fresh`` reads the new ones.
-    Spark uncaches the materialization when ``fresh`` is rebound, so the old
-    rows stay stored until the materialized view is dropped."""
+    The materialization is row blocks of its own, so ``fresh`` swaps in
+    place beside it, and dropping it removes its blocks."""
     v1, v2 = _batch(8), _batch(9)
     eng.register_table("fresh", v1, SCHEMA)
     old = eng._row_views["fresh"]
-    text = "SELECT kind, count(*) AS n, sum(amount) AS cents FROM fresh GROUP BY kind"
+    text = MV_TEXT
     eng.execute_and_register_temp_view(text, "mv")
+    mv = eng._row_views["mv"]
     try:
         eng.register_table("fresh", v2, SCHEMA)
-        assert eng._row_views["fresh"] is not old
+        assert eng._row_views["fresh"] is old
         assert _answer(eng, "SELECT * FROM mv") == _oracle(v1, text)
         assert _answer(eng, text) == _oracle(v2, text)
     finally:
         eng.sql_directly("DROP VIEW mv")
     blocks = _block_manager(spark.sparkContext._jvm)
+    assert all(blocks.getStatus(b).isEmpty() for b in mv.block_ids)
+
+
+def test_clear_cache_leaves_a_materialized_view_its_snapshot(eng):
+    """``CLEAR CACHE`` has nothing of a materialized view to drop: after it,
+    a same-shape refresh of ``fresh`` swaps in place, and ``mv`` still
+    answers the rows ``fresh`` had when it was materialized, in SQL, in a
+    join with the new ``fresh`` and through ``temp_view``.  ``mv_rows``
+    shares ``fresh``'s output attributes, and a join of the two reads both
+    versions."""
+    v1 = [dict(r, amount=1) for r in _batch(60, 10)]
+    v2 = [dict(r, amount=100) for r in v1]
+    eng.register_table("fresh", v1, SCHEMA)
+    old = eng._row_views["fresh"]
+    text = "SELECT sum(amount) AS s FROM fresh"
+    eng.execute_and_register_temp_view(text, "mv")
+    eng.execute_and_register_temp_view("SELECT id, amount FROM fresh", "mv_rows")
+    eng.sql_directly("CLEAR CACHE")
+    eng.register_table("fresh", v2, SCHEMA)
+    assert eng._row_views["fresh"] is old
+    assert _oracle(v1, text) == [(10,)]
+    assert _answer(eng, "SELECT s FROM mv") == _oracle(v1, text)
+    assert sorted(tuple(r) for r in eng.temp_view("mv").data) == _oracle(v1, text)
+    join = "SELECT count(*) AS n, sum(f.amount) AS s FROM fresh f JOIN ({}) m ON f.amount > m.s"
+    want = _oracle(v2, join.format("SELECT 10 AS s"))
+    assert _answer(eng, join.format("SELECT s FROM mv")) == want
+    pairs = (
+        "SELECT count(*) AS n, sum(m.amount) AS old, sum(f.amount) AS new "
+        "FROM mv_rows m JOIN fresh f ON m.id = f.id"
+    )
+    assert _answer(eng, pairs) == [(10, 10, 1000)]
+
+
+def test_rebind_beside_a_materialized_view_removes_the_old_blocks(eng, spark):
+    """A re-registration of ``fresh`` with a new schema removes its old
+    blocks at once: no materialized view reads them, and ``mv`` still
+    answers the old rows."""
+    v1 = _batch(61)
+    eng.register_table("fresh", v1, SCHEMA)
+    old = eng._row_views["fresh"]
+    eng.execute_and_register_temp_view(MV_TEXT, "mv")
+    v2 = _batch(62)
+    eng.register_table("fresh", v2, SCHEMA.replace("account INT", "account BIGINT"))
+    assert eng._row_views["fresh"] is not old
+    blocks = _block_manager(spark.sparkContext._jvm)
     assert all(blocks.getStatus(b).isEmpty() for b in old.block_ids)
+    assert _answer(eng, "SELECT * FROM mv") == _oracle(v1, MV_TEXT)
+    assert _answer(eng, MV_TEXT) == _oracle(v2, MV_TEXT)
+    self_join = "SELECT a.kind, b.n FROM {0} a JOIN {0} b ON a.cents > b.cents"
+    assert _answer(eng, self_join.format("mv")) == _oracle(
+        v1, self_join.format(f"({MV_TEXT})")
+    )
+
+
+def test_refresh_beside_an_unrelated_materialized_view_swaps(eng, spark):
+    """A materialization makes no CacheManager entry and persists no RDD,
+    so a same-shape refresh beside it swaps in place and keeps plans."""
+    eng.register_table("fresh", _batch(63), SCHEMA)
+    view = eng._row_views["fresh"]
+    for sql in AGGREGATES:
+        _answer(eng, sql)
+    jsc = spark.sparkContext._jsc.sc()
+    persistent = jsc.getPersistentRDDs().size()
+    assert eng.execute_and_register_temp_view("SELECT 1 AS one", "mv") == 1
+    assert eng._cache_manager.isEmpty()
+    assert jsc.getPersistentRDDs().size() == persistent
+    kept = eng.cache_stats()["plans_kept"]
+    v2 = _batch(64)
+    eng.register_table("fresh", v2, SCHEMA)
+    assert eng._row_views["fresh"] is view
+    assert eng.cache_stats()["plans_kept"] > kept
+    for sql in AGGREGATES:
+        assert _answer(eng, sql) == _oracle(v2, sql), sql
+    assert _answer(eng, "SELECT one FROM mv") == [(1,)]
 
 
 def test_dataframe_reads_current_rows_after_a_swap(eng):
@@ -458,6 +534,15 @@ def test_cache_stats_report_view_bytes_and_kept_plans(eng):
     assert eng.cache_stats()["plans_kept"] == stats["plans_kept"] + 1
     eng.sql_directly("DROP VIEW fresh")
     assert eng.cache_stats()["view_bytes"] == stats["view_bytes"]
+
+
+def test_view_bytes_count_materialized_views(eng):
+    """``view_bytes`` counts a materialized view's blocks until it is dropped."""
+    before = eng.cache_stats()["view_bytes"]
+    eng.execute_and_register_temp_view("SELECT id, repeat('x', 50) AS s FROM range(200)", "mv")
+    assert eng.cache_stats()["view_bytes"] > before
+    eng.sql_directly("DROP VIEW mv")
+    assert eng.cache_stats()["view_bytes"] == before
 
 
 def test_concurrent_swaps_answer_one_version(spark):

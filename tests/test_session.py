@@ -877,20 +877,26 @@ def test_nondeterministic_statements_bypass_plan_cache(engine):
     assert r1 != r2
 
 
+def _blocks_gone(engine, view) -> bool:
+    blocks = _block_manager(engine.spark.sparkContext._jvm)
+    return all(blocks.getStatus(b).isEmpty() for b in view.block_ids)
+
+
 def test_execute_and_register_unpersists_replaced_view(engine, spark):
-    """Re-registering a materialized view name must not leak one cached
-    RDD per call (service-loop pathology)."""
+    """Re-registering a materialized view name leaks no storage per call
+    (service-loop pathology): a result of the same shape swaps the name's
+    row blocks in place, and no call persists an RDD."""
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()  # context-global: delta-based
+    views = set()
     for i in range(5):
         n = engine.execute_and_register_temp_view(
             f"SELECT {i} AS gen, id FROM range(10)", "mat_view_leak_t"
         )
         assert n == 10
-    # exactly one persisted RDD may remain for this view (the live one);
-    # the four replaced ones must be gone
-    grew = jsc.getPersistentRDDs().size() - before
-    assert grew <= 1, f"{grew} new persistent RDDs after 5 re-registrations"
+        views.add(id(engine._row_views["mat_view_leak_t"]))
+    assert len(views) == 1
+    assert jsc.getPersistentRDDs().size() == before
     got = engine.sql_directly(
         "SELECT DISTINCT gen FROM mat_view_leak_t"
     ).to_list_of_dicts()
@@ -921,51 +927,55 @@ def test_execute_and_register_qualified_name(people_engine):
 
 
 def test_register_table_over_materialized_view_releases_storage(engine, spark):
-    """Rebinding a materialized name through register_table unpersists the
-    storage materialized under it."""
+    """Rebinding a materialized name through register_table removes the
+    row blocks materialized under it (``range``'s ``id`` is NOT NULL, the
+    registered column nullable, so the name cannot swap)."""
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()  # context-global: delta-based
     engine.execute_and_register_temp_view(
         "SELECT id AS rebind_id FROM range(10)", "rebind_t"
     )
-    mat = engine._materialized_views["rebind_t"]
-    assert mat.storageLevel.useMemory
+    mat = engine._row_views["rebind_t"]
     engine.register_table("rebind_t", [{"rebind_id": 7}], "rebind_id bigint")
-    assert not mat.storageLevel.useMemory
-    grew = jsc.getPersistentRDDs().size() - before
-    assert grew <= 0, f"{grew} persistent RDDs still held after the rebind"
+    assert engine._row_views["rebind_t"] is not mat
+    assert _blocks_gone(engine, mat)
+    assert jsc.getPersistentRDDs().size() == before
     got = engine.sql_directly("SELECT rebind_id FROM rebind_t")
     assert _rows(got) == [{"rebind_id": 7}]
 
 
 @pytest.mark.parametrize("name", ["drop_mv_t", "dropdb.mv_t"])
 def test_drop_view_releases_materialized_storage(engine, spark, name):
-    """``DROP VIEW`` of a materialized view unpersists its storage and
-    forgets it, for a bare and for a qualified name."""
+    """``DROP VIEW`` of a materialized view removes its row blocks and
+    forgets them, for a bare and for a qualified name."""
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()  # context-global: delta-based
     engine.execute_and_register_temp_view(
         f"SELECT id * 3 AS x, '{name}' AS n FROM range(10)", name
     )
-    assert jsc.getPersistentRDDs().size() == before + 1
+    mat = engine._row_views[name]
+    assert jsc.getPersistentRDDs().size() == before
     engine.sql_directly(f"DROP VIEW {name}")
     assert jsc.getPersistentRDDs().size() == before
-    assert name not in engine._materialized_views
+    assert name not in engine._row_views
+    assert _blocks_gone(engine, mat)
 
 
 @pytest.mark.parametrize(
     "ddl", ["CREATE OR REPLACE TEMP VIEW {} AS SELECT 1 AS x", "DROP TABLE {}"]
 )
 def test_view_ddl_releases_materialized_storage(engine, spark, ddl):
-    """A view DDL that replaces or drops a materialized view unpersists its
-    storage and forgets it, as ``DROP VIEW`` does."""
+    """A view DDL that replaces or drops a materialized view removes its row
+    blocks and forgets them, as ``DROP VIEW`` does."""
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()  # context-global: delta-based
     engine.execute_and_register_temp_view("SELECT id * 11 AS x FROM range(9)", "ddl_mv")
-    assert jsc.getPersistentRDDs().size() == before + 1
+    mat = engine._row_views["ddl_mv"]
+    assert jsc.getPersistentRDDs().size() == before
     engine.sql_directly(ddl.format("ddl_mv"))
     assert jsc.getPersistentRDDs().size() == before
-    assert "ddl_mv" not in engine._materialized_views
+    assert "ddl_mv" not in engine._row_views
+    assert _blocks_gone(engine, mat)
 
 
 @pytest.mark.parametrize(
@@ -993,13 +1003,14 @@ def test_view_ddl_removes_registered_row_blocks(engine, ddl, name):
 
 
 def test_drop_view_keeps_storage_another_view_shares(engine, spark):
-    """The same statement materialized under two names shares one cache
-    entry, which dropping one of them must not uncache."""
+    """The same statement materialized under two names stores two sets of
+    row blocks: dropping one name removes only its own."""
     sql = "SELECT id * 5 AS x FROM range(12)"
     engine.execute_and_register_temp_view(sql, "drop_share_a")
     engine.execute_and_register_temp_view(sql, "drop_share_b")
+    a, b = engine._row_views["drop_share_a"], engine._row_views["drop_share_b"]
     engine.sql_directly("DROP VIEW drop_share_a")
-    assert engine._materialized_views["drop_share_b"].storageLevel.useMemory
+    assert _blocks_gone(engine, a) and b.nbytes() > 0
     got = engine.sql_directly("SELECT count(*) AS n FROM drop_share_b")
     assert _rows(got) == [{"n": 12}]
 
@@ -1110,13 +1121,15 @@ def test_interval_results_raise(engine, select):
 
 
 def test_reregister_same_sql_keeps_materialization(engine, spark):
-    """CacheManager keys by canonicalized plan: re-registering the SAME
-    statement must not unpersist the shared cache entry out from under
-    the new view (the sameResult guard in execute_and_register)."""
+    """Re-registering the SAME statement swaps the name's row blocks in
+    place and persists no RDD."""
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()  # context-global: delta-based
     engine.execute_and_register_temp_view("SELECT id FROM range(20)", "mat_same_t")
+    view = engine._row_views["mat_same_t"]
     engine.execute_and_register_temp_view("SELECT id FROM range(20)", "mat_same_t")
-    df = engine._materialized_views["mat_same_t"]
-    assert df.storageLevel.useMemory, "shared cache entry was unpersisted"
+    assert engine._row_views["mat_same_t"] is view and view.nbytes() > 0
+    assert jsc.getPersistentRDDs().size() == before
     got = engine.sql_directly(
         "SELECT COUNT(*) AS n FROM mat_same_t"
     ).to_list_of_dicts()
@@ -1126,7 +1139,7 @@ def test_reregister_same_sql_keeps_materialization(engine, spark):
 def test_reregister_same_sql_refreshes_snapshot(engine):
     """Re-registering the SAME statement is a refresh: the new
     materialization must read the source's current data, not serve the
-    previously cached rows (unpersist-before-recache ordering)."""
+    previously materialized rows."""
     engine.register_table("snap_src_t", [{"v": 1}], "v int")
     engine.execute_and_register_temp_view(
         "SELECT SUM(v) AS s FROM snap_src_t", "snap_view_t"
@@ -1141,3 +1154,19 @@ def test_reregister_same_sql_refreshes_snapshot(engine):
     assert engine.sql_directly(
         "SELECT s FROM snap_view_t"
     ).to_list_of_dicts() == [{"s": 11}]
+
+
+def test_failed_materialization_keeps_the_previous_rows(engine):
+    """A materialization that fails at run time stores nothing: the name
+    still answers its previous rows, and ``view_bytes`` is unchanged."""
+    engine.execute_and_register_temp_view("SELECT id FROM range(4)", "mat_err_t")
+    view_bytes = engine.cache_stats()["view_bytes"]
+    failing = (
+        "SELECT CASE WHEN id = 2 THEN CAST(raise_error('mat boom') AS BIGINT) "
+        "ELSE id END AS id FROM range(4)"
+    )
+    with pytest.raises(Exception, match="mat boom"):
+        engine.execute_and_register_temp_view(failing, "mat_err_t")
+    got = engine.sql_directly("SELECT id FROM mat_err_t ORDER BY id").to_list_of_dicts()
+    assert got == [{"id": i} for i in range(4)]
+    assert engine.cache_stats()["view_bytes"] == view_bytes
