@@ -4,9 +4,10 @@ input/output unit of the session facade's ``sql_directly``, convertible to
 and from list-of-dicts with lenient per-field coercion.
 
 A DataTable is its ``schema`` and one immutable ``pyarrow.Table``,
-``arrow``, fetched with ``toArrow()``, on the calling thread without a
-job (``direct.py``), or, where Spark specializes it, ``collect()``.  Rows
-enter as ``createDataFrame(list[Row])`` takes them (verifier, converter,
+``arrow``.  The Engine fetches every result as Arrow in one helper call
+(``direct.py``); only without a JDK, where that helper cannot be built,
+does ``from_dataframe`` fetch with ``collect()``.  Rows enter as
+``createDataFrame(list[Row])`` takes them (verifier, converter,
 ``toInternal``: a naive datetime is process-local).
 ``to_dataframe`` binds the table in-plan, starting no Python worker, as
 the reference does (DirectSparkSession.scala:132-135).  ``data`` builds
@@ -24,18 +25,11 @@ from __future__ import annotations
 from typing import Any, Callable, Iterable
 
 import pyarrow as pa
-from pyspark.errors import UnsupportedOperationException
 from pyspark.sql import DataFrame, Row, SparkSession, types as T
 from pyspark.sql.pandas import types as PT
 from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from direct_spark_sql_spark.coercion import coerce_row
-
-#: Plan roots whose ``executeCollect`` Spark specializes, which ``toArrow()``
-#: (``execute()``) gives up: a command's rows are on the driver, a limit or
-#: top-k takes from the partitions without a shuffle, a local scan runs no job.
-_COLLECT_ROOTS = frozenset({"CommandResult", "CollectLimit", "TakeOrderedAndProject",
-                            "CollectTail", "LocalTableScan"})
 
 #: The integer Spark stores each temporal type as, which ``fromInternal`` takes.
 _STORAGE = {T.DateType: T.IntegerType(), T.TimestampType: T.LongType(),
@@ -46,27 +40,6 @@ _STORAGE = {T.DateType: T.IntegerType(), T.TimestampType: T.LongType(),
 def as_struct_type(schema: T.StructType | str) -> T.StructType:
     """Accept either a StructType or a DDL string ("name string, age int")."""
     return T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
-
-
-def _fetches_rows(df: DataFrame) -> bool:
-    """Whether ``df``'s result comes from ``collect()``: its plan root, also
-    inside ``AdaptiveSparkPlanExec``, is in ``_COLLECT_ROOTS``, or a struct
-    repeats a field name, which ``toArrow()`` refuses.  Memoized on ``df``:
-    both are facts about its plan."""
-    memo = df.__dict__.get("_dss_fetches_rows")
-    if memo is None:
-        try:
-            PT.to_arrow_schema(df.schema, error_on_duplicated_field_names_in_struct=True)
-        except UnsupportedOperationException:
-            memo = True
-        else:
-            root = df._jdf.queryExecution().executedPlan()
-            name = root.nodeName()
-            if name == "AdaptiveSparkPlan":
-                name = root.inputPlan().nodeName()
-            memo = name in _COLLECT_ROOTS
-        df.__dict__["_dss_fetches_rows"] = memo
-    return memo
 
 
 def _map_leaves(dt: T.DataType, fn: Callable[[T.DataType], T.DataType]) -> T.DataType:
@@ -83,12 +56,14 @@ def _map_leaves(dt: T.DataType, fn: Callable[[T.DataType], T.DataType]) -> T.Dat
 
 
 class _FoldAwareTimestamp(T.TimestampType):
-    """TIMESTAMP whose ``toInternal`` keeps a naive datetime's ``fold=1``,
-    which ``collect()`` sets on the second occurrence of a repeated local
-    hour and ``time.mktime`` (PySpark's conversion) ignores."""
+    """TIMESTAMP whose ``toInternal`` converts a naive datetime with
+    ``datetime.timestamp()``, which reads its ``fold`` (PEP 495; ``collect()``
+    sets ``fold=1`` on the second occurrence of a repeated local hour) and
+    keeps no state.  PySpark's ``time.mktime`` ignores ``fold``, and for a
+    repeated hour glibc answers by the previous ``mktime`` call."""
 
     def toInternal(self, dt):
-        if dt is not None and dt.fold and dt.tzinfo is None:
+        if dt is not None and dt.tzinfo is None:
             return int(dt.replace(microsecond=0).timestamp()) * 1_000_000 + dt.microsecond
         return super().toInternal(dt)
 
@@ -170,12 +145,12 @@ class DataTable:
 
     @classmethod
     def from_dataframe(cls, df: DataFrame) -> "DataTable":
-        """``df``'s result, fetched as Spark jobs: with ``collect()`` where
-        Spark specializes it, else with ``toArrow()`` (``direct.DirectFetch``
-        fetches on the calling thread instead)."""
-        if _fetches_rows(df):
-            return cls(df.schema, df.collect())
-        return cls(df.schema, df.toArrow())
+        """``df``'s result, fetched with ``collect()``: the Engine's fetch
+        where the helper of ``direct.py`` cannot be built (no JDK).  Correct
+        for every type ``collect()`` carries, but each row passes through a
+        ``Row`` and back into Arrow, so large results are slower than the
+        helper's Arrow frames."""
+        return cls(df.schema, df.collect())
 
     @classmethod
     def from_list_of_dicts(

@@ -1,28 +1,22 @@
-"""Direct execution: a facade result fetched on the calling thread.
+"""Direct execution: every facade result fetched in one helper call.
 
 The reference evaluates its physical plan as an iterator on the caller's
-thread, "without RDDs, without the DAG scheduler" (DirectPlan.scala:79-83).
-Here ``sql_directly`` does the same for the plans where a Spark job buys
-nothing: every leaf in memory (``_PlanFacts.in_memory``), a result that
-``toArrow()`` fetches, no shuffle exchange, no Python-evaluation node, and
-one partition in the final RDD.  ``register_table`` binds inputs under 100k
-rows as a one-slice ``LogicalRDD`` with ``SinglePartition`` over a
-``BlockRDD``, whose one partition is a block of the driver's
-``BlockManager``; it has no dependencies, so its lineage passes, and the
-drain reads the block the name holds when it runs, also after a
-re-registration swapped the rows in place.  The Java
-helper ``org.dss.direct.DirectExec`` (compiled by
-``functions.jvm.ensure_udf_jar``) executes the plan, drains that
-partition under a private ``TaskContext`` and returns the Arrow batches,
-all in one py4j round trip (``DirectExec.fetch``): it tags the jobs the
-call launches with the call's job tag on the calling JVM thread, and
-returns the batches inline when they total at most 64 KiB, else serves
-them on a local socket, as ``toArrow()`` does (py4j's ``byte[]`` decoding
-costs a Python step per byte).  The result enters the same ``DataTable``
-as ``toArrow()``'s.  Whether a result comes from ``collect()`` and its
-Arrow schema are memoized on the DataFrame, so a cached plan's replay
-makes that one round trip and no other.  Every other plan runs as a
-Spark job, as before.
+thread, "without RDDs, without the DAG scheduler" (DirectPlan.scala:79-83),
+limits and top-k included (directLimit.scala:26-64).  Here the Java helper
+``org.dss.direct.DirectExec`` (built by ``functions.jvm.ensure_udf_jar``)
+fetches every result the Engine returns in one py4j round trip,
+``DirectExec.fetch(ds, tag, direct)``.  With ``direct`` set (every leaf is
+in memory, ``_PlanFacts.in_memory``), a plan with no shuffle and no Python
+node whose final RDD is one partition, such as any plan over a one-slice
+registered view, a ``LIMIT`` or top-k included, is drained on the calling
+thread without a job.  Any other plan runs as Spark's own action would,
+under a new SQL execution id.  Every branch tags its jobs with the call's
+tag and returns the same Arrow frames, inline up to 64 KiB, else on a
+local socket (py4j decodes a ``byte[]`` a Python step per byte); a flags
+byte says whether the drain was direct and whether a job was launched.
+docs/ARCHITECTURE.md §1 (direct mode) has the gate and the job branch.
+Without a JDK the helper cannot be built: ``DataTable.from_dataframe``
+collects instead.
 
 What a direct call does not have:
 
@@ -41,10 +35,8 @@ import warnings
 import pyarrow as pa
 from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import _deduplicate_field_names, to_arrow_schema
 from pyspark.util import _load_from_socket
-
-from direct_spark_sql_spark.datatable import _fetches_rows
 
 HELPER_CLASS = "org.dss.direct.DirectExec"
 
@@ -54,7 +46,7 @@ def load_helper(spark: SparkSession):
     session's jar class loader (``ADD JAR`` would also ship the jar to
     executors, and its class is visible only on the thread that ran it);
     None, with a warning, when the jar cannot be built, which leaves every
-    fetch on the job path."""
+    fetch to ``DataTable.from_dataframe``."""
     from direct_spark_sql_spark.functions.jvm import ensure_udf_jar
 
     try:
@@ -74,7 +66,7 @@ def load_helper(spark: SparkSession):
 
 
 #: Bits of the flags byte that leads a ``DirectExec.fetch`` payload.
-_LAUNCHED_JOBS, _LARGE_VAR_TYPES, _ON_SOCKET = 1, 2, 4
+_LAUNCHED_JOBS, _LARGE_VAR_TYPES, _ON_SOCKET, _DIRECT = 1, 2, 4, 8
 
 
 def _frames(payload: bytearray) -> list[memoryview]:
@@ -91,43 +83,38 @@ def _frames(payload: bytearray) -> list[memoryview]:
 
 
 def _arrow_schema(df: DataFrame, large_types: bool) -> pa.Schema:
-    """The schema ``toArrow()`` casts ``df``'s result to; memoized on ``df``
-    per ``arrowUseLargeVarTypes`` value, since the schema is its plan's."""
+    """The schema a result of ``df`` is cast to: ``toArrow()``'s, with the
+    names of a struct that repeats a field name de-duplicated as the JVM
+    encodes them; memoized on ``df`` per ``arrowUseLargeVarTypes`` value,
+    since the schema is its plan's.  Raises ``PySparkTypeError`` for a type
+    Arrow does not carry to Python (a YEAR-MONTH or calendar INTERVAL)."""
     memo = df.__dict__.setdefault("_dss_arrow_schemas", {})
     schema = memo.get(large_types)
     if schema is None:
         schema = memo[large_types] = to_arrow_schema(
-            df.schema,
-            error_on_duplicated_field_names_in_struct=True,
-            prefers_large_types=large_types,
+            _deduplicate_field_names(df.schema), prefers_large_types=large_types
         )
     return schema
 
 
 class DirectFetch:
-    """One attempt to fetch a DataFrame's result on the calling thread.
+    """One fetch of a DataFrame's result through the helper.
 
-    Called with the DataFrame and a job tag, it returns the result's Arrow
-    table, cast to the schema ``toArrow()`` casts to, or None when the
-    result comes from ``collect()`` (``_fetches_rows``) or the plan must
-    run as a job.  Any job the attempt launches carries the tag.
-    Afterwards ``ran`` says whether the fetch was direct, and
-    ``launched_jobs`` whether any Spark job was submitted meanwhile (False
-    means this call certainly ran none)."""
+    Called with the DataFrame, a job tag and whether the plan may drain
+    direct (its leaves are all in memory), it returns the result's Arrow
+    table, cast to ``_arrow_schema``.  Any job the fetch launches carries
+    the tag.  Afterwards ``ran`` says whether the fetch was drained on the
+    calling thread, and ``launched_jobs`` whether any Spark job was
+    submitted meanwhile (False means this call certainly ran none)."""
 
     __slots__ = ("_helper", "ran", "launched_jobs")
 
     def __init__(self, helper) -> None:
         self._helper = helper
-        self.ran = False
-        self.launched_jobs = False
 
-    def __call__(self, df: DataFrame, tag: str) -> pa.Table | None:
-        if _fetches_rows(df):
-            return None
-        payload = self._helper.fetch(df._jdf, tag)
-        if payload is None:
-            return None
+    def __call__(self, df: DataFrame, tag: str, direct: bool) -> pa.Table:
+        _arrow_schema(df, False)  # an unsupported type raises before any job
+        payload = self._helper.fetch(df._jdf, tag, direct)
         flags = payload[0]
         if flags & _ON_SOCKET:
             conn, secret = payload[1:].decode().split(" ")
@@ -135,11 +122,10 @@ class DirectFetch:
             frames = list(_load_from_socket(sock_info, NoOpSerializer()))
         else:
             frames = _frames(payload)
-        if not frames or len(frames.pop()) != 0:  # the end marker
-            raise ConnectionError("the direct result ended early")
-        self.ran, self.launched_jobs = True, bool(flags & _LAUNCHED_JOBS)
-        schema = _arrow_schema(df, bool(flags & _LARGE_VAR_TYPES))
-        # each frame is one IPC stream: the schema, then one batch
-        batches = [b for frame in frames for b in pa.ipc.open_stream(frame)]
-        table = pa.Table.from_batches(batches) if batches else schema.empty_table()
-        return table.cast(schema)
+        if len(frames) < 2 or len(frames.pop()) != 0:  # the schema, the end marker
+            raise ConnectionError("the result ended early")
+        self.ran, self.launched_jobs = bool(flags & _DIRECT), bool(flags & _LAUNCHED_JOBS)
+        encoded = pa.ipc.read_schema(pa.py_buffer(frames[0]))
+        batches = [pa.ipc.read_record_batch(f, encoded) for f in frames[1:]]
+        table = pa.Table.from_batches(batches, schema=encoded)
+        return table.cast(_arrow_schema(df, bool(flags & _LARGE_VAR_TYPES)))

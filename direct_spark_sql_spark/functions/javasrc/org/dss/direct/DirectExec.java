@@ -1,13 +1,20 @@
 package org.dss.direct;
 
+import java.io.ByteArrayOutputStream;
+import java.io.IOException;
+import java.io.UncheckedIOException;
 import java.nio.ByteBuffer;
+import java.nio.channels.Channels;
 import java.nio.charset.StandardCharsets;
 import java.util.ArrayList;
+import java.util.Arrays;
 import java.util.IdentityHashMap;
 import java.util.List;
 import java.util.Map;
 import java.util.concurrent.atomic.AtomicLong;
 
+import org.apache.arrow.vector.ipc.WriteChannel;
+import org.apache.arrow.vector.ipc.message.MessageSerializer;
 import org.apache.spark.Dependency;
 import org.apache.spark.Partition;
 import org.apache.spark.ShuffleDependency;
@@ -26,32 +33,35 @@ import org.apache.spark.resource.ResourceInformation;
 import org.apache.spark.sql.catalyst.InternalRow;
 import org.apache.spark.sql.classic.Dataset;
 import org.apache.spark.sql.classic.SparkSession;
+import org.apache.spark.sql.execution.CollectLimitExec;
+import org.apache.spark.sql.execution.CollectTailExec;
+import org.apache.spark.sql.execution.CommandResultExec;
+import org.apache.spark.sql.execution.LocalTableScanExec;
 import org.apache.spark.sql.execution.SQLExecution$;
 import org.apache.spark.sql.execution.SparkPlan;
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec;
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec;
 import org.apache.spark.sql.execution.arrow.ArrowConverters$;
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike;
 import org.apache.spark.serializer.SerializerInstance;
 import org.apache.spark.sql.internal.SQLConf;
+import org.apache.spark.sql.types.StructType;
+import org.apache.spark.sql.util.ArrowUtils$;
 import org.apache.spark.storage.BlockManager;
 import org.apache.spark.util.AccumulatorContext;
 import org.apache.spark.util.AccumulatorV2;
 import org.apache.spark.util.Utils$;
 import scala.Option;
 import scala.collection.Iterator;
+import scala.jdk.javaapi.CollectionConverters;
 import scala.reflect.ClassTag;
 import scala.reflect.ClassTag$;
 
 /**
- * Runs a single-partition physical plan on the calling thread, without a
+ * Fetches the result of a facade call as Arrow, in one py4j round trip;
+ * a single-partition physical plan runs on the calling thread, without a
  * Spark job: the reference's "without RDDs, without the DAG scheduler"
  * execution (DirectPlan.scala:79-83), on top of Spark's own RDD iterator.
- *
- * {@link #fetch} executes the plan (a broadcast build or a scalar subquery
- * inside {@code execute()} still runs its own job), drains the one
- * partition under a private task context and returns the result as Arrow
- * IPC streams, one per batch: inline when they are small, else served on a
- * local socket, as {@code toArrow()} serves them.
  * Like a task, the drain runs a deserialized copy of the final RDD: an
  * operator keeps per-execution state in its plan node (SortExec's sorter),
  * which would make the shared plan unserializable for a later job and
@@ -75,60 +85,72 @@ public final class DirectExec {
   static final int LAUNCHED_JOBS = 1;
   static final int LARGE_VAR_TYPES = 2;
   static final int ON_SOCKET = 4;
+  static final int DIRECT = 8;
 
   /**
-   * Fetches the result of {@code ds} in one py4j round trip; null when the
-   * plan is not eligible and must run as a job: its physical plan has a
-   * shuffle exchange or a Python-evaluation node, or its final RDD has more
-   * than one partition, a shuffle dependency or a Python RDD in its lineage.
-   * Every job the call launches (a broadcast build) carries {@code tag},
-   * which is added on the calling thread and removed before it returns.
+   * Fetches the result of {@code ds}.  With {@code direct} set, a plan with
+   * no shuffle exchange and no Python-evaluation node, whose final RDD has
+   * one partition and no shuffle dependency or Python RDD in its lineage,
+   * is drained on the calling thread; any other runs under a new SQL
+   * execution id ({@link #collect}).  Every job the call launches (a
+   * broadcast build) carries {@code tag}, added on the calling thread and
+   * removed before it returns.
    *
    * <p>The payload is a flags byte ({@link #LAUNCHED_JOBS}: a job was
    * submitted during the call; {@link #LARGE_VAR_TYPES}: the session's
-   * {@code arrowUseLargeVarTypes}), then the Arrow IPC streams, one per
-   * batch, each framed as a 4-byte big-endian length and the stream, and
-   * an empty frame that marks the end, so a truncated payload is detected.
-   * When the streams total more than {@link #INLINE_BYTES}, they are
-   * served on a local socket, as {@code toArrow()} serves them, in the same
-   * framing, and the payload is the flags byte with {@link #ON_SOCKET} set,
-   * then {@code "<port> <secret>"}.
+   * {@code arrowUseLargeVarTypes}; {@link #DIRECT}: drained), then the Arrow
+   * IPC schema message, one record-batch message per batch and an empty
+   * end frame, each framed as a 4-byte big-endian
+   * length and the bytes, so a truncated payload is detected.  A struct
+   * that repeats a field name is encoded with de-duplicated names
+   * ({@code a_0}, {@code a_1}).  Frames over {@link #INLINE_BYTES} in total
+   * are served on a local socket instead, as {@code toArrow()} serves them,
+   * and the payload is the flags byte with {@link #ON_SOCKET} set, then
+   * {@code "<port> <secret>"}.
    */
-  public byte[] fetch(Dataset<?> ds, String tag) {
+  public byte[] fetch(Dataset<?> ds, String tag, boolean direct) {
     SparkSession session = ds.sparkSession();
     SparkContext sc = session.sparkContext();
     sc.addJobTag(tag);
     try {
       SparkPlan plan = ds.queryExecution().executedPlan();
-      if (!eligible(plan)) {
-        return null;
-      }
+      SQLConf conf = session.sessionState().conf();
       int firstJobId = sc.dagScheduler().nextJobId().get();
-      List<byte[]> frames = SQLExecution$.MODULE$.withSQLConfPropagated(
-          session, () -> session.withActive(() -> drain(session, plan, ds)));
-      if (frames == null) {
-        return null;
+      List<byte[]> batches = direct && eligible(plan)
+          ? SQLExecution$.MODULE$.withSQLConfPropagated(
+              session, () -> session.withActive(() -> drain(session, conf, plan, ds)))
+          : null;
+      int flags = batches == null ? 0 : DIRECT;
+      if (batches == null) {
+        batches = SQLExecution$.MODULE$.withNewExecutionId(
+            ds.queryExecution(), Option.apply("collectAsArrowToPython"),
+            () -> collect(conf, plan, ds));
       }
-      int flags = (sc.dagScheduler().nextJobId().get() != firstJobId ? LAUNCHED_JOBS : 0)
-          | (session.sessionState().conf().arrowUseLargeVarTypes() ? LARGE_VAR_TYPES : 0);
-      long size = 0;
-      for (byte[] frame : frames) {
-        size += frame.length;
-      }
+      flags |= (sc.dagScheduler().nextJobId().get() != firstJobId ? LAUNCHED_JOBS : 0)
+          | (conf.arrowUseLargeVarTypes() ? LARGE_VAR_TYPES : 0);
+      List<byte[]> frames = new ArrayList<>(batches.size() + 2);
+      frames.add(schemaMessage(ds.schema(), conf));
+      frames.addAll(batches);
       frames.add(new byte[0]);
-      return size <= INLINE_BYTES ? inline(flags, frames) : serve(flags, frames);
+      return payload(flags, frames);
     } finally {
       sc.removeJobTag(tag);
     }
   }
 
-  /** The flags byte, then every frame with its length. */
-  private static byte[] inline(int flags, List<byte[]> frames) {
-    int size = 1;
+  /**
+   * The flags byte, then every frame with its length; served on a local
+   * socket instead when the frames total more than {@link #INLINE_BYTES}.
+   */
+  private static byte[] payload(int flags, List<byte[]> frames) {
+    long size = 0;
     for (byte[] frame : frames) {
-      size += 4 + frame.length;
+      size += frame.length;
     }
-    ByteBuffer out = ByteBuffer.allocate(size);  // big-endian
+    if (size > INLINE_BYTES) {
+      return serve(flags, frames);
+    }
+    ByteBuffer out = ByteBuffer.allocate(1 + 4 * frames.size() + (int) size);  // big-endian
     out.put((byte) flags);
     for (byte[] frame : frames) {
       out.putInt(frame.length).put(frame);
@@ -140,17 +162,84 @@ public final class DirectExec {
   private static byte[] serve(int flags, List<byte[]> frames) {
     @SuppressWarnings("unchecked")
     Iterator<Object> items = (Iterator<Object>) (Iterator<?>)
-        scala.jdk.javaapi.CollectionConverters.asScala(frames.iterator());
+        CollectionConverters.asScala(frames.iterator());
     Object[] served = PythonRDD$.MODULE$.serveIterator(items, "serve-direct-Arrow");
     byte[] where = (served[0] + " " + served[1]).getBytes(StandardCharsets.UTF_8);
     return ByteBuffer.allocate(1 + where.length).put((byte) (flags | ON_SOCKET)).put(where).array();
   }
 
-  /** No shuffle exchange and no Python-evaluation node in the plan. */
-  static boolean eligible(SparkPlan plan) {
-    if (plan instanceof AdaptiveSparkPlanExec) {
-      plan = ((AdaptiveSparkPlanExec) plan).inputPlan();
+  /** The Arrow IPC message of {@code schema}, as the batches encode it. */
+  private static byte[] schemaMessage(StructType schema, SQLConf conf) {
+    ByteArrayOutputStream out = new ByteArrayOutputStream();
+    try {
+      MessageSerializer.serialize(new WriteChannel(Channels.newChannel(out)),
+          ArrowUtils$.MODULE$.toArrowSchema(
+              schema, conf.sessionLocalTimeZone(), false, conf.arrowUseLargeVarTypes()));
+    } catch (IOException e) {
+      throw new UncheckedIOException(e);
     }
+    return out.toByteArray();
+  }
+
+  /** {@code rows} as Arrow record-batch messages, encoded on this thread. */
+  private static List<byte[]> toArrow(
+      Iterator<InternalRow> rows, StructType schema, SQLConf conf, TaskContextImpl ctx) {
+    Iterator<byte[]> batches = ArrowConverters$.MODULE$.toBatchIterator(
+        rows, schema, conf.arrowMaxRecordsPerBatch(), conf.sessionLocalTimeZone(),
+        false, conf.arrowUseLargeVarTypes(), ctx);
+    List<byte[]> out = new ArrayList<>();
+    while (batches.hasNext()) {
+      out.add(batches.next());
+    }
+    return out;
+  }
+
+  /** An adaptive plan's input plan, else {@code plan}. */
+  private static SparkPlan unwrap(SparkPlan plan) {
+    return plan instanceof AdaptiveSparkPlanExec ? ((AdaptiveSparkPlanExec) plan).inputPlan() : plan;
+  }
+
+  /**
+   * A root whose {@code executeCollect} Spark specializes, also inside an
+   * adaptive plan: a command's rows are on the driver, a limit or top-k
+   * takes from the partitions without a shuffle, a local scan runs no job.
+   */
+  static boolean collectsOnDriver(SparkPlan root) {
+    SparkPlan plan = unwrap(root);
+    return plan instanceof CollectLimitExec || plan instanceof TakeOrderedAndProjectExec
+        || plan instanceof CollectTailExec || plan instanceof CommandResultExec
+        || plan instanceof LocalTableScanExec;
+  }
+
+  /**
+   * Whether a struct in {@code schema} repeats a field name, which the Arrow
+   * batch job refuses under the default {@code structHandlingMode}.
+   */
+  static boolean repeatsFieldName(StructType schema) {
+    return schema.existsRecursively(t -> t instanceof StructType
+        && Arrays.stream(((StructType) t).fieldNames()).distinct().count()
+            < ((StructType) t).fields().length);
+  }
+
+  /**
+   * Runs the plan as Spark's collect actions do, as Arrow batches: with
+   * {@code executeCollect} where Spark specializes it or a struct repeats a
+   * field name, else as the per-partition Arrow job of {@code toArrow()}
+   * (the jar is not on the executors' class path: no closure of its own).
+   */
+  private static List<byte[]> collect(SQLConf conf, SparkPlan plan, Dataset<?> ds) {
+    plan.resetMetrics();  // as Dataset.withAction does before every action
+    if (collectsOnDriver(plan) || repeatsFieldName(ds.schema())) {
+      Iterator<InternalRow> rows =
+          CollectionConverters.asScala(Arrays.asList(plan.executeCollect()).iterator());
+      return toArrow(rows, ds.schema(), conf, null);
+    }
+    return Arrays.asList((byte[][]) ds.toArrowBatchRdd(plan).collect());
+  }
+
+  /** No shuffle exchange and no Python-evaluation node in the plan. */
+  static boolean eligible(SparkPlan node) {
+    SparkPlan plan = unwrap(node);
     if (plan instanceof ShuffleExchangeLike
         || plan.getClass().getName().startsWith("org.apache.spark.sql.execution.python.")) {
       return false;
@@ -196,18 +285,18 @@ public final class DirectExec {
   }
 
   /**
-   * Executes the plan and drains its one partition through the Arrow
-   * converter under a private task context, which is released whatever
-   * happens; null when the final RDD is not eligible.
+   * Executes the plan and drains its one partition into Arrow batches
+   * under a private task context, which is released whatever happens;
+   * null when the final RDD is not eligible.
    */
-  private static List<byte[]> drain(SparkSession session, SparkPlan plan, Dataset<?> ds) {
+  private static List<byte[]> drain(
+      SparkSession session, SQLConf conf, SparkPlan plan, Dataset<?> ds) {
     plan.resetMetrics();  // as Dataset.withAction does before every action
     RDD<InternalRow> rdd = plan.execute();
     Partition[] partitions = rdd.partitions();
     if (partitions.length != 1 || !narrowJvmLineage(rdd, new IdentityHashMap<>())) {
       return null;
     }
-    SQLConf conf = session.sessionState().conf();
     SparkEnv env = SparkEnv.get();
     SerializerInstance serializer = env.closureSerializer().newInstance();
     ClassTag<RDD<InternalRow>> rddTag = ClassTag$.MODULE$.apply(RDD.class);
@@ -228,15 +317,7 @@ public final class DirectExec {
       // deserialized under the context, so its metrics register with it
       RDD<InternalRow> task = serializer.deserialize(
           taskBinary, session.sharedState().jarClassLoader(), rddTag);
-      Iterator<byte[]> arrow = ArrowConverters$.MODULE$.toBatchWithSchemaIterator(
-          task.iterator(partitions[0], ctx), ds.schema(),
-          conf.arrowMaxRecordsPerBatch(), conf.arrowMaxBytesPerBatch(),
-          conf.sessionLocalTimeZone(), "legacy".equals(conf.pandasStructHandlingMode()),
-          conf.arrowUseLargeVarTypes());
-      List<byte[]> out = new ArrayList<>();
-      while (arrow.hasNext()) {
-        out.add(arrow.next());
-      }
+      List<byte[]> out = toArrow(task.iterator(partitions[0], ctx), ds.schema(), conf, ctx);
       mergeMetrics(ctx);
       return out;
     } catch (Throwable t) {

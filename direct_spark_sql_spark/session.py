@@ -126,11 +126,14 @@ class _PlanFacts(NamedTuple):
       Only a replayable plan may be cached and re-executed.
     - ``in_memory``: every leaf is in ``_RESULT_CACHE_LEAVES``, so the
       data can only change through the facade's invalidation hooks.
+    - ``rdd_ids``: the ids of the RDDs under the ``LogicalRDD`` leaves,
+      which tell whether the plan reads the engine's row blocks.
     """
 
     names: frozenset
     replayable: bool
     in_memory: bool
+    rdd_ids: frozenset
 
 
 def _each(seq):
@@ -339,6 +342,7 @@ def _plan_facts(df: DataFrame) -> _PlanFacts:
     roots = [analyzed, *_each(analyzed.subqueriesAll())]
     current_like = _jvm_class(df._sc._jvm, _TREE_PATTERN).CURRENT_LIKE()
     names: set[str] = set()
+    rdd_ids: set[int] = set()
     replayable = in_memory = True
     for root in roots:
         replayable = (
@@ -354,29 +358,15 @@ def _plan_facts(df: DataFrame) -> _PlanFacts:
                 names.add(p.identifier().name().lower())
             kids = list(_each(p.children()))
             stack.extend(kids)
-            if not kids and node not in _RESULT_CACHE_LEAVES:
+            if node == "LogicalRDD":
+                rdd_ids.add(p.rdd().id())
+            elif not kids and node not in _RESULT_CACHE_LEAVES:
                 in_memory = False
                 if node == "HiveTableRelation" or (
                     node == "LogicalRelation" and p.catalogTable().isDefined()
                 ):
                     replayable = False
-    return _PlanFacts(frozenset(names), replayable, in_memory)
-
-
-def _leaf_rdd_ids(df: DataFrame) -> set[int]:
-    """The ids of the RDDs under the ``LogicalRDD`` leaves of ``df``'s
-    analyzed plan and of its subquery plans; memoized on ``df``."""
-    ids = df.__dict__.get("_dss_rdd_ids")
-    if ids is None:
-        analyzed = df._jdf.queryExecution().analyzed()
-        ids = {
-            leaf.rdd().id()
-            for root in (analyzed, *_each(analyzed.subqueriesAll()))
-            for leaf in _each(root.collectLeaves())
-            if leaf.nodeName() == "LogicalRDD"
-        }
-        df.__dict__["_dss_rdd_ids"] = ids
-    return ids
+    return _PlanFacts(frozenset(names), replayable, in_memory, frozenset(rdd_ids))
 
 
 def _held_rdd_ids(df: DataFrame) -> frozenset[int] | None:
@@ -909,10 +899,9 @@ class Engine:
         #: cheap always-on sibling of last_metrics()); see metrics_history()
         self._call_history: deque = deque(maxlen=200)
         self._lock = threading.Lock()
-        #: the driver-side helper that fetches single-partition in-memory
-        #: results on the calling thread (``direct.py``); built here, so a
-        #: first javac run lands in Engine start, not in a call.  None when
-        #: its jar cannot be built: every fetch then runs as a job.
+        #: the driver-side helper that fetches every result (``direct.py``);
+        #: built here, so a first javac run lands in Engine start, not in a
+        #: call.  None when its jar cannot be built: ``collect()`` fetches.
         self._direct = load_helper(spark)
         #: UDF surface (reference: DirectSessionCatalog.scala:62-112 Hive
         #: UDF registration): engine functions callable from SQL text.
@@ -1062,9 +1051,10 @@ class Engine:
 
     def _reads_stored_rows(self, df: DataFrame) -> bool:
         """Whether ``df`` reads row blocks of this engine."""
+        facts = df.__dict__.get("_dss_plan_facts") or _plan_facts(df)
         with self._lock:
             stored = {v.rdd_id for v in self._row_views.values()}
-        return not stored.isdisjoint(_leaf_rdd_ids(df))
+        return not stored.isdisjoint(facts.rdd_ids)
 
     def _unbind(self, name: str) -> None:
         """Forget the storage of a view name that view DDL dropped or
@@ -1252,9 +1242,10 @@ class Engine:
         Warm repeated queries take the result cache (see ``__init__``):
         a replayable query over in-memory leaves only, whose referenced
         views haven't changed, returns its previously materialized result
-        without re-running it.  A cold query over in-memory leaves whose
-        plan has one partition and no shuffle or Python node runs on the
-        calling thread, without a Spark job (``direct.py``), the
+        without re-running it.  Any other call is one helper call
+        (``_fetch``): a query over in-memory leaves whose plan has one
+        partition and no shuffle or Python node, a ``LIMIT`` or top-k
+        too, runs on the calling thread without a Spark job, the
         reference's same-thread iterator; any other runs as a job.
 
         The fetch holds the read side of the view lock, so it reads one
@@ -1292,25 +1283,14 @@ class Engine:
                 df = self.dataframe(sql)
                 facts = df.__dict__["_dss_plan_facts"]
                 cacheable = self._cacheable(facts)
-            fetch = (
-                DirectFetch(self._direct)
-                if self._direct is not None and facts is not None and facts.in_memory
-                else None
-            )
             tag = _call_tag()
             t0 = time.perf_counter()
-            # a direct fetch tags its jobs in the helper, in its one round trip
-            arrow = None if fetch is None else fetch(df, tag)
-            if arrow is None:
-                with _job_tag(self.spark.sparkContext, tag):
-                    table = DataTable.from_dataframe(df)
-            else:
-                table = DataTable(df.schema, arrow)
+            in_memory = facts is not None and facts.in_memory
+            table, direct, launched = self._fetch(df, tag, in_memory)
             wall = time.perf_counter() - t0
-        direct = fetch is not None and fetch.ran
-        # a direct call during which no job was submitted has nothing to
-        # read from the status store, so skip the listener-bus drain
-        rollup = _empty_rollup() if direct and not fetch.launched_jobs else None
+        # a call during which no job was submitted has nothing to read
+        # from the status store, so skip the listener-bus drain
+        rollup = None if launched else _empty_rollup()
         self._last_execution = (df, wall, len(table), tag, rollup, direct)
         self._record_call(sql, wall, len(table), False)
         if cacheable:
@@ -1329,6 +1309,17 @@ class Engine:
                         nbytes=table.arrow.nbytes,
                     )
         return table
+
+    def _fetch(self, df: DataFrame, tag: str, direct: bool) -> tuple[DataTable, bool, bool]:
+        """``df``'s result in one helper call (``direct.py``), drained on the
+        calling thread if ``direct`` and the plan allows, every job tagged
+        ``tag``; also whether it drained and whether a job may have run.
+        Without the helper (no JDK), ``DataTable.from_dataframe`` collects."""
+        if self._direct is None:
+            with _job_tag(self.spark.sparkContext, tag):
+                return DataTable.from_dataframe(df), False, True
+        fetch = DirectFetch(self._direct)
+        return DataTable(df.schema, fetch(df, tag, direct)), fetch.ran, fetch.launched_jobs
 
     def _cacheable(self, facts: _PlanFacts | None) -> bool:
         """Whether the result of a plan with ``facts`` may be cached: a
@@ -1510,7 +1501,7 @@ class Engine:
           construction: a re-executed cached plan whose shuffle stages
           Spark reuses reports them as skipped, not as bytes written
           again.  A direct call counts only the jobs ``execute()``
-          launched, such as a broadcast build; one that launched none
+          launched, such as a broadcast build; a call that launched none
           reads zeros without draining the listener bus.  A result-cache
           hit launches no job; it returns the rollup and ``direct`` flag
           frozen when the result was cached;
@@ -1560,14 +1551,15 @@ class Engine:
         codegen | cost | formatted."""
         keyword = "" if mode.lower() == "simple" else mode
         plan = self.spark.sql(f"EXPLAIN {keyword} {self._rewrite_qualified(sql)}")
-        return plan.collect()[0][0]
+        return self._fetch(plan, _call_tag(), False)[0].data[0][0]
 
     def temp_view(self, name: str) -> DataTable:
         """Read a registered view back out (reference:
-        DirectSparkSession.scala:139-154)."""
+        DirectSparkSession.scala:139-154); registered rows drain direct."""
         df = self._qualified_views.get(name.lower())
         with self._views.read():
-            return DataTable.from_dataframe(self.spark.table(name) if df is None else df)
+            df = self.spark.table(name) if df is None else df
+            return self._fetch(df, _call_tag(), _plan_facts(df).in_memory)[0]
 
     def _qualified_names(self) -> tuple[set[str], set[str]]:
         """The registered db-qualified view names, lower-cased, and the

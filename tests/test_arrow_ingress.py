@@ -19,12 +19,18 @@ import time
 from contextlib import contextmanager
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import Row, types as T
 from pyspark.sql.types import VariantVal
 
-from direct_spark_sql_spark.datatable import DataTable, _fetches_rows
+from direct_spark_sql_spark.datatable import DataTable
 from direct_spark_sql_spark.session import _plan_facts
+
+#: Whether the engine drains in-memory results on the calling thread;
+#: ``tests/test_facade_job_path.py`` and the ``collect()`` fallback without
+#: the helper turn it off.
+DRAINS = True
 
 
 @contextmanager
@@ -181,6 +187,18 @@ def test_type_matrix_matches_row_path(engine, tz):
     assert got == want
 
 
+@pytest.mark.parametrize("before", [dt.datetime(2021, 12, 1), dt.datetime(2021, 7, 1)])
+def test_repeated_local_hour_ingests_its_first_occurrence(before):
+    """A naive 01:30 on 2021-11-07 with ``fold=0`` is the first, EDT,
+    occurrence in New York, whatever row came before it: ``time.mktime``
+    answered a repeated hour by its previous call."""
+    with _process_tz("America/New_York"):
+        table = DataTable(T.StructType([T.StructField("ts", T.TimestampType())]),
+                          [Row(ts=before), Row(ts=dt.datetime(2021, 11, 7, 1, 30))])
+    micros = table.arrow.column("ts").cast(pa.int64()).to_pylist()
+    assert micros[1] == 1636263000_000000  # 05:30 UTC
+
+
 @pytest.mark.parametrize(
     "rows, schema",
     [
@@ -234,11 +252,11 @@ def _same(got, want) -> bool:
     return got == want
 
 
-def _assert_egress_parity(engine, sql, fetches_rows):
-    """``fetches_rows``: whether the result comes from ``collect()``
-    rather than ``toArrow()``."""
-    assert _fetches_rows(engine.dataframe(sql)) is fetches_rows, sql
+def _assert_egress_parity(engine, sql, direct):
+    """``direct``: whether the result is drained on the calling thread
+    where the engine drains (``DRAINS``)."""
     got = engine.sql_directly(sql).data
+    assert engine.last_metrics()["direct"] is (direct and DRAINS), sql
     want = engine.spark.sql(sql).collect()
     assert _same(got, want), (sql, got, want)
 
@@ -250,7 +268,7 @@ def test_type_matrix_egress_matches_collect(engine, tz):
             "eg_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
         )
         sql = "SELECT * FROM eg_matrix ORDER BY id"
-        _assert_egress_parity(engine, sql, False)
+        _assert_egress_parity(engine, sql, True)
         _assert_egress_parity(engine, sql + " LIMIT 4", True)
 
 
@@ -263,26 +281,26 @@ def test_repeated_dst_hour_keeps_fold(engine):
             "ts TIMESTAMP",
         )
         sql = "SELECT ts FROM eg_fold ORDER BY ts"
-        _assert_egress_parity(engine, sql, False)
+        _assert_egress_parity(engine, sql, True)
         _assert_egress_parity(engine, sql + " LIMIT 2", True)
         got = engine.sql_directly(sql).data
     assert [(r.ts.hour, r.ts.fold) for r in got] == [(1, 0), (1, 1), (2, 0)]
 
 
 @pytest.mark.parametrize(
-    "select, repeats",
+    "select",
     [
-        ("cast(concat('b', id) AS BINARY) AS b, array(cast('c' AS BINARY)) AS bs", False),
-        ("parse_json(concat('{\"x\": [', id, ']}')) AS v", False),
-        ("named_struct('a', id, 'a', id + 1) AS s", True),
-        ("id FROM eg_src WHERE id < 0", False),
+        "cast(concat('b', id) AS BINARY) AS b, array(cast('c' AS BINARY)) AS bs",
+        "parse_json(concat('{\"x\": [', id, ']}')) AS v",
+        "named_struct('a', id, 'a', id + 1) AS s",
+        "id FROM eg_src WHERE id < 0",
     ],
     ids=["binary", "variant", "repeated-struct-field", "empty"],
 )
-def test_egress_matches_collect(engine, select, repeats):
+def test_egress_matches_collect(engine, select):
     engine.register_table("eg_src", [{"id": i} for i in range(3)], "id INT")
     sql = f"SELECT {select}" if " FROM " in select else f"SELECT {select} FROM eg_src"
-    _assert_egress_parity(engine, sql, repeats)
+    _assert_egress_parity(engine, sql, True)
     _assert_egress_parity(engine, sql + " LIMIT 2", True)
 
 
@@ -303,7 +321,7 @@ def test_materialized_type_matrix_matches_its_statement(engine, where):
 
 @pytest.mark.parametrize("sql", ["SET spark.sql.ansi.enabled", "SHOW TABLES"])
 def test_command_egress_matches_collect(engine, sql):
-    _assert_egress_parity(engine, sql, True)
+    _assert_egress_parity(engine, sql, False)
 
 
 @pytest.mark.parametrize(
@@ -316,9 +334,10 @@ def test_command_egress_matches_collect(engine, sql):
     ids=["limit", "order-by-limit", "set"],
 )
 def test_specialized_collects_keep_their_jobs(engine, sql, counts):
-    """A root CollectLimit or TakeOrderedAndProject, and a command, are
-    fetched as ``collect()`` fetches them: Arrow egress would add a stage
-    and a job's tasks."""
+    """A root CollectLimit or TakeOrderedAndProject over a view of many
+    partitions, and a command, are fetched as ``collect()`` fetches them,
+    through ``executeCollect``: the Arrow batch job would add a stage and a
+    job's tasks."""
     engine.register_table("eg_r8", engine.spark.range(0, 1000, 1, 8))
     engine.sql_directly(sql)
     m = engine.last_metrics()

@@ -1,12 +1,12 @@
 """Direct execution: ``sql_directly`` drains a single-partition in-memory
 plan on the calling thread, without a Spark job (``direct.py``), and gives
-what the job path gives.
+what the helper's job branch gives, and what ``collect()`` gives.
 
-Both paths are driven on the same DataFrame: through a ``DirectFetch``
-(direct) and through ``DataTable.from_dataframe`` (``toArrow()``, a job).
-A direct result up to 64 KiB returns inline, a larger one on a socket;
-both are checked.  ``tests/test_facade_job_path.py`` runs the facade
-suites again with the direct path off.
+Both branches are driven on the same DataFrame through a ``DirectFetch``:
+with ``direct`` set (drained) and unset (a job).  A result up to 64 KiB
+returns inline, a larger one on a socket; both are checked.
+``tests/test_facade_job_path.py`` runs the facade suites again on the job
+branch.
 """
 
 from __future__ import annotations
@@ -19,9 +19,17 @@ from pyspark.sql import types as T
 
 import direct_spark_sql_spark.direct as direct_mod
 import direct_spark_sql_spark.session as session_mod
+import tests.test_arrow_ingress
 from direct_spark_sql_spark.datatable import DataTable
 from direct_spark_sql_spark.direct import DirectFetch
-from tests.test_arrow_ingress import MATRIX_SCHEMA, _matrix_rows, _process_tz, _same
+from direct_spark_sql_spark.session import Engine
+from tests.test_arrow_ingress import (
+    MATRIX_SCHEMA,
+    _assert_egress_parity,
+    _matrix_rows,
+    _process_tz,
+    _same,
+)
 
 
 def _jvm(engine):
@@ -33,20 +41,25 @@ def _next_job_id(engine) -> int:
     return engine.spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-def _direct(engine, df) -> DataTable:
-    """``df``'s result fetched direct; the fetch must not decline."""
+def _fetch(engine, df, direct: bool) -> DataTable:
+    """``df``'s result through the helper; drained on the calling thread
+    exactly when ``direct``."""
     fetch = DirectFetch(engine._direct)
-    table = fetch(df, "dx-test")
-    assert fetch.ran and table is not None
-    return DataTable(df.schema, table)
+    table = DataTable(df.schema, fetch(df, "dx-test", direct))
+    assert fetch.ran is direct
+    return table
+
+
+def _direct(engine, df) -> DataTable:
+    return _fetch(engine, df, True)
 
 
 def _both(engine, sql) -> tuple[DataTable, DataTable]:
-    """``sql``'s result fetched direct, then as a job, then direct again,
-    all from one DataFrame."""
+    """``sql``'s result fetched direct, then on the job branch, then direct
+    again, all from one DataFrame."""
     df = engine.dataframe(sql)
     direct = _direct(engine, df)
-    job = DataTable.from_dataframe(df)
+    job = _fetch(engine, df, False)
     assert _direct(engine, df).arrow.equals(direct.arrow), sql
     return direct, job
 
@@ -55,7 +68,7 @@ def _assert_parity(engine, sql) -> DataTable:
     direct, job = _both(engine, sql)
     assert direct.arrow.schema == job.arrow.schema, sql
     assert direct.arrow.equals(job.arrow), (sql, direct.arrow, job.arrow)
-    assert _same(direct.data, job.data), sql
+    assert _same(direct.data, engine.spark.sql(sql).collect()), sql
     return direct
 
 
@@ -88,7 +101,8 @@ def test_type_matrix_direct_matches_job(engine, tz, socket_reads):
 
 @pytest.mark.parametrize("tz", [None, "America/New_York"])
 def test_type_matrix_on_the_socket_matches_job(engine, tz, socket_reads):
-    """The matrix repeated past 64 KiB is served on the socket."""
+    """The matrix repeated past 64 KiB is served on the socket, by both
+    branches."""
     with _process_tz(tz):
         engine.register_table(
             "dx_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
@@ -97,7 +111,7 @@ def test_type_matrix_on_the_socket_matches_job(engine, tz, socket_reads):
         got = _assert_parity(
             engine, "SELECT m.*, c FROM dx_matrix m CROSS JOIN dx_copies ORDER BY c, id"
         )
-    assert len(got) == 2000 and len(socket_reads) == 2
+    assert len(got) == 2000 and len(socket_reads) == 3
 
 
 @pytest.mark.parametrize(
@@ -106,11 +120,11 @@ def test_type_matrix_on_the_socket_matches_job(engine, tz, socket_reads):
 def test_results_either_side_of_64_kib_match_job(engine, rows, on_socket, socket_reads):
     """A BIGINT column's Arrow frames grow by 8 bytes a row: 7 600 rows
     are about 62 KB and return inline, 8 400 rows about 69 KB and are
-    served on the socket."""
+    served on the socket, by both branches."""
     engine.register_table("dx_pad", [{"id": i} for i in range(9_000)], "id BIGINT")
     got = _assert_parity(engine, f"SELECT id FROM dx_pad WHERE id < {rows}")
     assert len(got) == rows
-    assert socket_reads == ([1, 1] if on_socket else [])
+    assert socket_reads == ([1, 1, 1] if on_socket else [])
 
 
 @pytest.mark.parametrize("cut", [1, 4, 9], ids=["in-end-marker", "end-marker", "in-batch"])
@@ -120,13 +134,13 @@ def test_truncated_inline_payload_raises(engine, cut):
     helper = engine._direct
 
     class Truncating:
-        def fetch(self, jdf, tag):
-            payload = helper.fetch(jdf, tag)
+        def fetch(self, jdf, tag, direct):
+            payload = helper.fetch(jdf, tag, direct)
             assert not payload[0] & direct_mod._ON_SOCKET
             return payload[:-cut]
 
     with pytest.raises(ConnectionError):
-        DirectFetch(Truncating())(df, "dx-test")
+        DirectFetch(Truncating())(df, "dx-test", True)
 
 
 def test_repeated_dst_hour_direct_matches_job(engine):
@@ -224,7 +238,7 @@ def test_runtime_error_raises_what_the_job_raises(engine, expr):
         _direct(engine, df)
     assert _next_job_id(engine) == first_job  # the error came from the drain
     with pytest.raises(PySparkException) as job_err:
-        DataTable.from_dataframe(df)
+        _fetch(engine, df, False)
     assert type(direct_err.value) is type(job_err.value)
     assert direct_err.value.getCondition() == job_err.value.getCondition()
 
@@ -375,11 +389,115 @@ def test_direct_join_counts_only_its_broadcast_job(engine):
     assert (m["jobs"], m["stages_run"], m["tasks"]) == (1, 1, 1)
 
 
-def test_direct_call_without_jobs_skips_the_rollup(engine, monkeypatch):
+def _no_rollup(monkeypatch):
+    """Fail any read of the status store, which drains the listener bus."""
+
     def no_rollup(sc, tag):
-        raise AssertionError("a direct call without jobs read the status store")
+        raise AssertionError("a call without jobs read the status store")
 
     monkeypatch.setattr(session_mod, "_stage_rollup", no_rollup)
+
+
+def test_direct_call_without_jobs_skips_the_rollup(engine, monkeypatch):
+    _no_rollup(monkeypatch)
     engine.register_table("dx_nr", [{"a": i} for i in range(10)], "a INT")
     assert engine.sql_directly("SELECT sum(a) AS s FROM dx_nr").data[0].s == 45
     assert engine.last_metrics()["jobs"] == 0
+
+
+# -- limits, top-k and commands ---------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT id, s FROM dx_lim LIMIT 20",
+        "SELECT id, s FROM dx_lim ORDER BY id DESC LIMIT 20",
+        "SELECT id, s FROM dx_lim LIMIT 20 OFFSET 7",
+        "SELECT id, s FROM dx_lim ORDER BY id LIMIT 5 OFFSET 3",
+        "SELECT id, k FROM dx_lim ORDER BY k LIMIT 20",
+    ],
+    ids=["limit", "order-by-limit", "limit-offset", "order-by-limit-offset", "top-k-ties"],
+)
+def test_limits_over_one_slice_drain_direct(engine, monkeypatch, sql):
+    """A root CollectLimit or TakeOrderedAndProject over a one-slice view
+    drains on the calling thread, and answers what ``collect()`` answers,
+    in its order, also where ``k`` ties across the cut."""
+    engine.register_table(
+        "dx_lim", [{"id": i, "k": i % 3, "s": f"r{i}"} for i in range(2_000)],
+        "id BIGINT, k INT, s STRING",
+    )
+    _no_rollup(monkeypatch)
+    got = engine.sql_directly(sql).data
+    m = engine.last_metrics()
+    assert m["direct"] is True and m["jobs"] == 0, sql
+    assert _same(got, engine.spark.sql(sql).collect()), sql
+
+
+@pytest.mark.parametrize("sql", ["SET spark.sql.ansi.enabled", "SHOW TABLES"])
+def test_commands_run_without_jobs_or_rollup(engine, monkeypatch, sql):
+    _no_rollup(monkeypatch)
+    got = engine.sql_directly(sql).data
+    m = engine.last_metrics()
+    assert m["direct"] is False and m["jobs"] == 0, sql
+    assert _same(got, engine.spark.sql(sql).collect()), sql
+
+
+def test_job_branch_replay_is_one_round_trip(engine, monkeypatch):
+    """A cached parquet aggregate runs as a job from one py4j command sent
+    by the calling thread; py4j's finalizer thread sends its own."""
+    from tests.conftest import SF_DIR
+
+    sql = (
+        f"SELECT l_returnflag, count(*) AS n FROM parquet.`{SF_DIR}/lineitem.parquet` "
+        "GROUP BY l_returnflag ORDER BY l_returnflag"
+    )
+    want = [tuple(r) for r in engine.sql_directly(sql).data]
+    client = engine.spark.sparkContext._gateway._gateway_client
+    send, caller, sent = client.send_command, threading.get_ident(), []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    got = [tuple(r) for r in engine.sql_directly(sql).data]
+    assert len(sent) == 1, sent
+    monkeypatch.undo()
+    assert got == want
+    m = engine.last_metrics()
+    assert m["direct"] is False and m["jobs"] >= 1
+
+
+# -- without the helper -----------------------------------------------------------
+
+
+@pytest.fixture()
+def no_helper(spark, monkeypatch):
+    """An engine without the helper, as where no JDK builds its jar: every
+    result comes from ``DataTable.from_dataframe``'s ``collect()``."""
+    eng = Engine(spark.newSession())
+    eng._direct = None
+    monkeypatch.setattr(tests.test_arrow_ingress, "DRAINS", False)
+    return eng
+
+
+@pytest.mark.parametrize("tz", [None, "America/New_York"])
+def test_without_the_helper_results_match_collect(no_helper, tz):
+    with _process_tz(tz):
+        no_helper.register_table(
+            "nh_matrix", DataTable(T.StructType.fromDDL(MATRIX_SCHEMA), _matrix_rows())
+        )
+        sql = "SELECT * FROM nh_matrix ORDER BY id"
+        _assert_egress_parity(no_helper, sql, True)
+        _assert_egress_parity(no_helper, sql + " LIMIT 4", True)
+        _assert_egress_parity(no_helper, "SET spark.sql.ansi.enabled", False)
+
+
+def test_without_the_helper_intervals_raise_from_collect(no_helper):
+    """``collect()`` refuses a YEAR-MONTH INTERVAL before Arrow sees it."""
+    from pyspark.errors import PySparkNotImplementedError
+
+    with pytest.raises(PySparkNotImplementedError, match="NOT_IMPLEMENTED"):
+        no_helper.sql_directly("SELECT INTERVAL '1' YEAR AS ym")

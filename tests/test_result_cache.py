@@ -591,7 +591,9 @@ def test_result_cache_requires_in_memory_leaves(eng):
 
     eng.register_table("rc_mem", [{"a": 1}], "a BIGINT")
     mem_df = eng.spark.sql("SELECT * FROM rc_mem")
-    assert _plan_facts(mem_df) == (frozenset({"rc_mem"}), True, True)
+    facts = _plan_facts(mem_df)
+    assert facts[:3] == (frozenset({"rc_mem"}), True, True)
+    assert facts.rdd_ids == {eng._row_views["rc_mem"].rdd_id}
 
     # a non-in-memory leaf hiding inside a scalar subquery is caught too
     sub_df = eng.spark.sql(
